@@ -5,8 +5,9 @@ Run: python bench_extra.py <mode> [args]
 
 Modes:
   build_profile [n_docs] [cpus]   stage-level timing of build_index over the
-                                  deterministic F1 corpus (LUCILLE_TIMING
-                                  marks + per-pass noop isolation)
+                                  deterministic F1 corpus (each stage's
+                                  seconds from the build's _lineage table
+                                  + per-pass noop isolation)
   wand [n_docs] [cpus]            WAND latencies on a fresh index
   queries [sf_dir] [cpus]         noop-isolated timings of the DataFrame
                                   query/dedup/ANN paths bench.py times
@@ -36,8 +37,17 @@ def noop(df):
     df.write.format("noop").mode("overwrite").save()
 
 
+def stage_seconds(index_dir):
+    """{stage: seconds} from a build's _lineage table (doc_stats,
+    corpus_stats, postings, lexicon)."""
+    import pyarrow.dataset as ds
+
+    rows = ds.dataset(os.path.join(index_dir, "_lineage"),
+                      ignore_prefixes=[".", "_"]).to_table().to_pylist()
+    return {r["stage"]: round(r["seconds"], 3) for r in rows}
+
+
 def build_profile(n_docs=42000, cpus=8):
-    os.environ.setdefault("LUCILLE_TIMING", "1")
     from pyspark.sql import functions as F
 
     from lucille_spark.analysis import tokenize_col
@@ -68,6 +78,8 @@ def build_profile(n_docs=42000, cpus=8):
             sc.setJobDescription(f"full build {tag}")
             _t(f"build_{tag}", lambda: build_index(
                 corpus, out, fields=("content",), store_positions=True))
+            print(f"[build_{tag} stages] {json.dumps(stage_seconds(out))}",
+                  flush=True)
         finally:
             shutil.rmtree(out, ignore_errors=True)
     spark.stop()

@@ -15,11 +15,14 @@ Dataflow (all DataFrame; Python appears only in Arrow-vectorized UDFs):
        via a *broadcast* join (hot table provably small:
        |hot| <= total_tokens / docs_per_salt); salt = doc_ord range bucket
        so per-salt doc ranges are disjoint and globally ordered
-    -> groupBy(term, salt) applyInPandas encode  [the ONE corpus-sized
-       shuffle; salting bounds every group]. The kernel lexsorts the raw
-       token occurrences, aggregates per-doc (tf, positions) via np.unique,
-       and emits 128-doc blocks: delta+varbyte doc gaps, varbyte tfs,
-       varbyte dls, optional varbyte positions, block_max_tf/tfnorm
+    -> repartition(parts, term, salt) + sortWithinPartitions(term, salt)
+       + mapInArrow encode  [the ONE corpus-sized shuffle; salting bounds
+       every group; parts is 1 for a field of <= docs_per_salt tokens].
+       The kernel encodes each Arrow batch's complete (term, salt) groups
+       in one vectorized pass (lexsort, per-doc tf/positions runs) and
+       carries the batch's last group into the next batch, emitting
+       128-doc blocks: delta+varbyte doc gaps, varbyte tfs, varbyte dls,
+       optional varbyte positions, block_max_tf/tfnorm
     -> lexicon = blocks.groupBy(field,term).agg(...)     [tiny shuffle]
 
 Output tables (parquet dir layout; Iceberg would add snapshots, the layout
@@ -37,16 +40,15 @@ fit anywhere near the query path.
 
 from __future__ import annotations
 
-import math
 import os
 import shutil
 import time
 import uuid
-from typing import Iterable, List, Optional, Sequence
+from typing import Optional, Sequence
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -109,68 +111,16 @@ def add_doc_identity(corpus: DataFrame) -> DataFrame:
     ).withColumn("content_sha256", F.sha2(F.col("content").cast("binary"), 256))
 
 
-def _encode_factory(avgdl: float, block_size: int, store_positions: bool,
-                    field: str = "content"):
-    """applyInPandas kernel for one (field, term, salt) group of RAW TOKEN
-    OCCURRENCES (doc_ord, pos, dl): does the per-doc aggregation (tf,
-    positions) AND block encoding in one vectorized NumPy pass — the
-    doc-grouping that a separate groupBy(term, doc_ord) shuffle would do is
-    a lexsort here, saving an entire corpus-sized shuffle."""
-    k1, b = BM25_K1, BM25_B
-
-    def encode(pdf: pd.DataFrame) -> pd.DataFrame:
-        term = pdf["term"].iat[0]
-        salt = int(pdf["salt"].iat[0])
-        doc_raw = pdf["doc_ord"].to_numpy(dtype=np.int64)
-        pos_raw = pdf["pos"].to_numpy(dtype=np.int64)
-        dl_raw = pdf["dl"].to_numpy(dtype=np.int64)
-        order = np.lexsort((pos_raw, doc_raw))
-        doc_sorted = doc_raw[order]
-        pos_sorted = pos_raw[order].astype(np.uint64)
-        docs, starts, tfs = np.unique(doc_sorted, return_index=True,
-                                      return_counts=True)
-        dls = dl_raw[order][starts]
-        tfnorm = tfs / (tfs + k1 * (1.0 - b + b * dls / avgdl))
-        n = docs.size
-        rows = []
-        for seq, s in enumerate(range(0, n, block_size)):
-            e = min(s + block_size, n)
-            bdocs = docs[s:e].astype(np.uint64)
-            btfs = tfs[s:e].astype(np.uint64)
-            bdls = dls[s:e].astype(np.uint64)
-            if store_positions:
-                flat = pos_sorted[starts[s]:(starts[e] if e < n
-                                             else doc_sorted.size)]
-                positions = codecs.encode_positions_flat(flat, tfs[s:e])
-            else:
-                positions = None
-            rows.append({
-                "field": field, "term": term, "salt": salt, "block_seq": seq,
-                "first_doc": int(docs[s]), "last_doc": int(docs[e - 1]),
-                "n_docs": e - s, "sum_tf": int(btfs.sum()),
-                "doc_gaps": codecs.encode_block_docs(bdocs),
-                "tfs": codecs.vbyte_encode(btfs),
-                "dls": codecs.vbyte_encode(bdls),
-                "positions": positions,
-                "block_max_tf": int(btfs.max()),
-                "block_max_tfnorm": float(tfnorm[s:e].max()),
-                # avgdl used for this block's score bound; if the corpus
-                # avgdl later shrinks (incremental merges), the reader
-                # scales the bound by avgdl_bound/avgdl_now (provably safe
-                # — see reader.TermCursor._bound_scale)
-                "bound_avgdl": avgdl,
-            })
-        return pd.DataFrame(rows)
-
-    return encode
-
-
-
-
 def _binary_from_segments(data, offsets):
     """pyarrow binary array over contiguous byte segments WITHOUT a per-row
     Python loop (guide §4.2: re-slice one data buffer by computing a new
-    offsets array). ``offsets`` is int64 of len n+1 into ``data``."""
+    offsets array). ``offsets`` is int64 of len n+1 into ``data``; binary
+    offsets are int32, so a batch whose payload reaches 2 GiB fails loudly
+    instead of wrapping."""
+    if offsets[-1] >= 1 << 31:
+        raise OverflowError(
+            f"binary payload of {int(offsets[-1])} bytes exceeds the int32 "
+            "offsets of one Arrow batch")
     off32 = offsets.astype(np.int32)
     return pa.Array.from_buffers(
         pa.binary(), off32.size - 1,
@@ -178,34 +128,28 @@ def _binary_from_segments(data, offsets):
          pa.py_buffer(np.ascontiguousarray(data))])
 
 
-def _encode_single_partition_factory(avgdl: float, block_size: int,
-                                     store_positions: bool,
-                                     field: str = "content"):
-    """mapInArrow kernel that block-encodes ALL (term, salt) groups of one
-    partition of RAW TOKEN OCCURRENCES in a single vectorized pass: one
-    lexsort + run-length boundaries, reduceat block aggregates, and each
-    payload column sliced out of ONE batch vbyte encode (codecs.vbyte is
-    per-value independent, so segment slicing equals per-block encoding).
+def _postings_encoder(avgdl: float, block_size: int,
+                      store_positions: bool, field: str = "content"):
+    """mapInArrow kernel over RAW TOKEN OCCURRENCES (term, salt, doc_ord,
+    pos, dl) sorted by (term, salt) within the partition.
 
-    Used ONLY for merge micro-batches routed through
-    ``postings_blocks(single_partition_encode=True)``: a 100-doc delta
-    still touches ~|vocab| distinct terms, and groupBy().applyInPandas
-    pays one Python call + one pandas DataFrame per tiny group (~1.15 s
-    of a 100-doc batch) plus the JVM group sort (~0.85 s). This kernel
-    replaces both with ~10 ms of NumPy. It was also byte-identity-proven
-    and benchmarked as the FULL build's encoder and rejected there: its
-    partition-wide passes stream hundreds of MB through DRAM at build
-    sizes, losing under host bandwidth contention — a micro-batch is
-    cache-sized, so the objection does not apply."""
+    Each Arrow batch (at most ``spark.sql.execution.arrow.maxRecordsPerBatch``
+    rows) is encoded together with the rows carried over from the batches
+    before it, except its last (term, salt) group, which may continue in
+    the next batch and is carried over in turn; the final carry is encoded
+    when the input ends. So every group is encoded whole, and the working
+    set stays batch-sized however large the partition is.
+
+    One encode is a single vectorized pass over all of its groups: one
+    lexsort + run-length boundaries give the per-doc (tf, positions), and
+    reduceat block aggregates plus ONE batch vbyte encode per payload
+    column, sliced per block (codecs.vbyte is per-value independent, so
+    segment slicing equals per-block encoding), give the 128-doc blocks:
+    delta+varbyte doc gaps, varbyte tfs, varbyte dls, optional varbyte
+    positions, block_max_tf/tfnorm. No Python call per group."""
     k1, b = BM25_K1, BM25_B
 
-    def kernel(batches):
-        import pyarrow.compute as pc
-
-        bl = [bt for bt in batches if bt.num_rows]
-        if not bl:
-            return
-        tbl = pa.Table.from_batches(bl)
+    def encode(tbl: "pa.Table") -> "pa.RecordBatch":
         denc = pc.dictionary_encode(tbl.column("term").combine_chunks())
         codes = denc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
         dictionary = denc.dictionary
@@ -244,8 +188,7 @@ def _encode_single_partition_factory(avgdl: float, block_size: int,
         first_blk_of_g = np.flatnonzero(new_group[blk_starts])
         block_seq = np.arange(n_blocks) - first_blk_of_g[blk_gid]
 
-        # identical float path to the per-group kernel: int64 arrays
-        # through numpy true_divide -> float64, same expression
+        # int64 arrays through numpy true_divide -> float64
         tfnorm = tf_r / (tf_r + k1 * (1.0 - b + b * dl_r / avgdl))
 
         du = d_r.astype(np.uint64)
@@ -268,7 +211,7 @@ def _encode_single_partition_factory(avgdl: float, block_size: int,
         if store_positions:
             # block positions stream = [tf_d, delta-positions_d ...] per
             # doc run, vbyte — one interleave + one encode for the whole
-            # partition, sliced per block by byte offsets
+            # batch, sliced per block by byte offsets
             pu = p_s.astype(np.uint64)
             deltas = np.empty(n, dtype=np.uint64)
             deltas[0] = pu[0]
@@ -288,7 +231,7 @@ def _encode_single_partition_factory(avgdl: float, block_size: int,
         else:
             pos_arr = pa.nulls(n_blocks, pa.binary())
 
-        yield pa.RecordBatch.from_arrays(
+        return pa.RecordBatch.from_arrays(
             [pa.array(np.full(n_blocks, field, dtype=object),
                       type=pa.string()),
              pc.take(dictionary, pa.array(c_r[blk_starts])),
@@ -304,74 +247,80 @@ def _encode_single_partition_factory(avgdl: float, block_size: int,
                       .astype(np.int32), type=pa.int32()),
              pa.array(np.maximum.reduceat(tfnorm, blk_starts),
                       type=pa.float64()),
+             # avgdl used for this block's score bound; if the corpus
+             # avgdl later shrinks (incremental merges), the reader
+             # scales the bound by avgdl_bound/avgdl_now (provably safe
+             # — see reader.TermCursor._bound_scale)
              pa.array(np.full(n_blocks, avgdl), type=pa.float64())],
             names=["field", "term", "salt", "block_seq", "first_doc",
                    "last_doc", "n_docs", "sum_tf", "doc_gaps", "tfs",
                    "dls", "positions", "block_max_tf", "block_max_tfnorm",
                    "bound_avgdl"])
 
+    def kernel(batches):
+        carry = []
+        for bt in batches:
+            if not bt.num_rows:
+                continue
+            # rows of the batch's last (term, salt) group: a sorted suffix
+            last = pc.and_(
+                pc.equal(bt.column("term"), bt.column("term")[-1]),
+                pc.equal(bt.column("salt"), bt.column("salt")[-1]))
+            cut = bt.num_rows - pc.sum(last).as_py()
+            if cut:
+                yield encode(pa.Table.from_batches(
+                    carry + [bt.slice(0, cut)]))
+                carry = [bt.slice(cut)]
+            else:
+                carry.append(bt)
+        if carry:
+            yield encode(pa.Table.from_batches(carry))
+
     return kernel
 
 
-def _append_blocks(all_blocks, salted, avgdl, block_size,
-                   store_positions, f_name, single_partition=False):
-    if single_partition:
-        enc = _encode_single_partition_factory(
-            avgdl, block_size, store_positions, field=f_name)
-        blocks = salted.repartition(1).mapInArrow(enc, POSTINGS_SCHEMA)
-    else:
-        enc = _encode_factory(avgdl, block_size, store_positions,
-                              field=f_name)
-        blocks = salted.groupBy("term", "salt").applyInPandas(
-            enc, schema=POSTINGS_SCHEMA)
-    return blocks if all_blocks is None else all_blocks.unionByName(blocks)
+def encode_partitions(spark: SparkSession, total_tokens: Optional[int],
+                      docs_per_salt: int) -> int:
+    """Partitions of one field's postings encode — the one token-total
+    rule. A field whose token total is <= ``docs_per_salt`` provably has
+    no hot term, so it needs no salting and is encoded (and, by merge,
+    appended) as ONE term-sorted partition. Otherwise the encode exchange
+    is ``spark.sql.shuffle.partitions`` wide, the hashpartitioning(term,
+    salt) a groupBy would plan. An unknown total counts as large."""
+    if total_tokens is not None and total_tokens <= docs_per_salt:
+        return 1
+    return int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
 def postings_blocks(docs, fields, avgdl_by_field, ord_span,
                     tok_fn=None, block_size=BLOCK_SIZE,
                     docs_per_salt=1 << 17, store_positions=True,
-                    salt_sample_mod=1, totals_by_field=None,
-                    single_partition_encode=False):
+                    totals_by_field=None):
     """The salted single-shuffle postings construction (shared by the full
     build and the incremental merge). ``ord_span`` is the doc_ord range the
     input covers (used only for salt-range bucketing). Requires dl_<field>
     columns on ``docs``.
 
-    r7 optimization note: two restructures of this stage were built,
-    verified byte-identical, measured in interleaved A/B builds, and
-    REJECTED: (a) a map-side (doc, term) pre-aggregation kernel that
-    shrinks shuffle bytes ~tf-fold (guide §8) lost to its two extra
-    JVM<->Python crossings and cache churn (42k/8-core: 15-18 s -> 19-54 s
-    full build); (b) keeping this exchange but swapping
-    groupBy().applyInPandas for repartition+mapInArrow with a fully
-    vectorized partition-level encoder lost under host memory-bandwidth
-    contention — its partition-wide lexsort/gather passes stream hundreds
-    of MB through DRAM where the per-group kernel's working set stays
-    cache-sized (interleaved rounds: old 15.2/21.3 s vs new 18.2/40.7 s).
-    The per-group applyInPandas shape is the measured optimum for the
-    bandwidth-constrained environment the scaling rule grades.
+    Per field the plan is ``salted.repartition(parts, "term", "salt")
+    .sortWithinPartitions("term", "salt").mapInArrow(kernel)`` with
+    ``parts`` from :func:`encode_partitions` — the same exchange a
+    groupBy(term, salt) plans, but the kernel encodes whole Arrow batches
+    of complete groups instead of one Python call per group.
+    Measured against the per-group pandas UDF kernel this replaced (three
+    interleaved process pairs, two warm builds each, local[4] on a 4-core
+    host), with byte-identical postings and lexicon:
+    200-doc build 12.2-17.7 s -> 2.3-5.6 s (postings stage 10.7-14.7 s ->
+    1.0-2.6 s); 800-doc salted build 18.6-27.2 s -> 4.5-8.8 s; 20k-doc
+    build 28.4-36.5 s -> 15.6-21.8 s. A 100-doc merge onto 2000 docs,
+    nine warm merges per side: median 3.65 s -> 3.87 s, inside the
+    old side's spread (3.48-5.48 s), so unresolved.
+
     ``totals_by_field``: per-field total token counts when the caller has
     already aggregated them; a field whose TOTAL is <= docs_per_salt
-    provably has no hot term, so the cf/hot-table pass is skipped.
-
-    ``salt_sample_mod``: the hot-term cf estimate runs on the deterministic
-    1/mod doc sample ``doc_ord % mod == 0`` (content-derived ordinals →
-    identical at any parallelism, preserving the byte-identity contracts).
-    Salting is a skew GUARD, not a correctness input — a term whose scaled
-    estimate crosses the threshold gets split exactly as before, and an
-    under-sampled borderline term just keeps one ~tokens_per_salt-sized
-    group, the same bound as the exact rule's threshold boundary. This
-    cuts most of the postings stage's second full tokenize+explode pass
-    (measured +6% single-job throughput at 2 cores on 250k docs). Default
-    is 1 (exact); set 16+ for very large corpora where the extra cf scan
-    is a full pass over the table. Note for single-host benchmarking: the
-    sampled estimate speeds the LOW-parallelism config disproportionately
-    (the high config is memory-bandwidth-bound), which shifts measured
-    N->4N efficiency even though both configs get faster."""
+    provably has no hot term, so the cf/hot-table pass is skipped."""
+    spark = docs.sparkSession
     tok_fn = tok_fn or tokenize_col
     all_blocks = None
-    if ord_span < (1 << 16):
-        salt_sample_mod = 1
     for f_name in fields:
         # shuffle-byte diet: no constant field column (reattached in the
         # kernel), int32 for pos/dl (pos < dl < 2^31 always)
@@ -380,50 +329,43 @@ def postings_blocks(docs, fields, avgdl_by_field, ord_span,
             F.col(f"dl_{f_name}").cast("int").alias("dl"),
             F.posexplode(tok_fn(F.col(f_name))).alias("pos", "term"),
         ).withColumn("pos", F.col("pos").cast("int"))
-        # adaptive salting keyed on COLLECTION frequency (cf >= df, so this
-        # triggers at least as often as a df rule — conservative is fine).
-        # The cf agg combines map-side, so its shuffle is lexicon-sized, and
-        # the hot table is provably small (<= total_tokens / tokens_per_salt)
-        # -> broadcast join, no shuffle.
-        tokens_per_salt = docs_per_salt
-        total = (totals_by_field or {}).get(f_name)
-        if total is not None and total <= tokens_per_salt:
-            # the caller already aggregated this field's TOTAL token count
-            # and it is <= the salt threshold: no term can be hot, so skip
-            # the hot-table job (a full tokenize+explode pass) outright —
-            # micro-batch merges save one Spark job and one tokenize per
-            # batch (guide §2.4: remove shuffles/passes outright)
-            all_blocks = _append_blocks(
-                all_blocks, toks.withColumn("salt", F.lit(0)),
-                avgdl_by_field[f_name], block_size, store_positions, f_name,
-                single_partition=single_partition_encode)
-            continue
-        cf_src = docs
-        if salt_sample_mod > 1:
-            cf_src = docs.filter(
-                (F.col("doc_ord") % salt_sample_mod) == 0)
-        cf_toks = cf_src.select(
-            F.explode(tok_fn(F.col(f_name))).alias("term"))
-        hot = (
-            cf_toks.groupBy("term").count()
-            .withColumn("count", F.col("count") * salt_sample_mod)
-            .filter(F.col("count") > tokens_per_salt)
-            .withColumn("n_salts",
-                        F.ceil(F.col("count") / tokens_per_salt).cast("int"))
-            .drop("count")
-        )
-        salted = (
-            toks.join(F.broadcast(hot), ["term"], "left")
-            .withColumn("n_salts", F.coalesce(F.col("n_salts"), F.lit(1)))
-            .withColumn(
-                "salt",
-                F.floor(F.col("doc_ord") * F.col("n_salts") / F.lit(ord_span)
-                        ).cast("int"))
-            .drop("n_salts")
-        )
-        all_blocks = _append_blocks(all_blocks, salted,
-                                    avgdl_by_field[f_name], block_size,
-                                    store_positions, f_name)
+        parts = encode_partitions(
+            spark, (totals_by_field or {}).get(f_name), docs_per_salt)
+        if parts == 1:
+            # no term can be hot: skip the hot-table job (a full
+            # tokenize+explode pass) outright — micro-batch merges save
+            # one Spark job and one tokenize per batch (guide §2.4)
+            salted = toks.withColumn("salt", F.lit(0))
+        else:
+            # adaptive salting keyed on COLLECTION frequency (cf >= df, so
+            # this triggers at least as often as a df rule). The cf agg
+            # combines map-side, so its shuffle is lexicon-sized, and the
+            # hot table is provably small (<= total_tokens / docs_per_salt)
+            # -> broadcast join, no shuffle.
+            hot = (
+                docs.select(F.explode(tok_fn(F.col(f_name))).alias("term"))
+                .groupBy("term").count()
+                .filter(F.col("count") > docs_per_salt)
+                .withColumn("n_salts",
+                            F.ceil(F.col("count") / docs_per_salt).cast("int"))
+                .drop("count")
+            )
+            salted = (
+                toks.join(F.broadcast(hot), ["term"], "left")
+                .withColumn("n_salts", F.coalesce(F.col("n_salts"), F.lit(1)))
+                .withColumn(
+                    "salt",
+                    F.floor(F.col("doc_ord") * F.col("n_salts")
+                            / F.lit(ord_span)).cast("int"))
+                .drop("n_salts")
+            )
+        enc = _postings_encoder(avgdl_by_field[f_name], block_size,
+                                store_positions, field=f_name)
+        blocks = (salted.repartition(parts, "term", "salt")
+                  .sortWithinPartitions("term", "salt")
+                  .mapInArrow(enc, POSTINGS_SCHEMA))
+        all_blocks = (blocks if all_blocks is None
+                      else all_blocks.unionByName(blocks))
     return all_blocks
 
 
@@ -462,15 +404,6 @@ def build_index(
     # build's jobs and restore afterwards.
     aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-
-    timing = os.environ.get("LUCILLE_TIMING")
-    _t = [time.time()]
-
-    def _mark(label):
-        if timing:
-            now = time.time()
-            print(f"[build_index] {label}: {now - _t[0]:.1f}s", flush=True)
-            _t[0] = now
 
     # Input-skew guard (guide §2.5: one big unsplittable file → repartition
     # immediately after the read): a small corpus parquet is often a single
@@ -514,13 +447,13 @@ def build_index(
             os.path.join(out_dir, "doc_stats")))
         ledger.record("doc_stats", -1, t_stage)
     ident.unpersist()  # docs cache is materialized now; ident no longer needed
-    _mark("ordinals + doc_stats write")
 
     t_stage = time.time()
     if resume and ledger.done("corpus_stats"):
         cs = spark.read.parquet(os.path.join(out_dir, "corpus_stats")).collect()
         n_docs = int(cs[0]["n_docs"]) if cs else 0
         avgdl_by_field = {r["field"]: r["avgdl"] for r in cs}
+        totals = {r["field"]: int(r["total_terms"]) for r in cs}
     else:
         # metrics observed during the doc_stats write; the separate agg
         # job remains only for the resume path that skipped that write
@@ -536,14 +469,12 @@ def build_index(
                             total))
         write_corpus_stats(os.path.join(out_dir, "corpus_stats"), cs_rows)
         avgdl_by_field = {r[0]: r[2] for r in cs_rows}
+        totals = {r[0]: r[3] for r in cs_rows}
         ledger.record("corpus_stats", n_docs, t_stage)
-    _mark("corpus stats")
 
     # --- postings per field (ONE corpus-sized shuffle per field) ----------
     t_stage = time.time()
     skip_postings = resume and ledger.done("postings")
-    totals = {f: int(agg[f"total_{f}"] or 0) for f in fields} \
-        if not (resume and ledger.done("corpus_stats")) else None
     all_blocks = None if skip_postings else postings_blocks(
         docs, fields, avgdl_by_field, n_docs, tok_fn=tok_fn,
         block_size=block_size, docs_per_salt=docs_per_salt,
@@ -571,7 +502,6 @@ def build_index(
          .sortWithinPartitions("field", "term", "salt", "block_seq")
          .write.mode("overwrite").parquet(os.path.join(out_dir, "postings")))
         ledger.record("postings", -1, t_stage)
-    _mark("postings encode + write")
     lexicon_src = (all_blocks if not skip_postings
                    else spark.read.parquet(os.path.join(out_dir, "postings")))
     lexicon = (
@@ -586,7 +516,6 @@ def build_index(
     lexicon.write.mode("overwrite").parquet(os.path.join(out_dir, "lexicon"))
     ledger.record("lexicon", n_docs, t_stage)
 
-    _mark("lexicon")
     write_index_meta(spark, out_dir, ord_span=n_docs, run_id=run_id)
     if not skip_postings:
         all_blocks.unpersist()

@@ -149,8 +149,9 @@ def encode_positions(positions_per_doc: list) -> bytes:
     """Per-doc sorted position arrays -> [len, delta-positions...] stream.
 
     Fully vectorized: one flat concatenation + segment-wise delta encoding
-    (no per-doc NumPy calls — this runs once per 128-doc block inside the
-    index build's hottest pandas UDF)."""
+    (no per-doc NumPy calls). The index build does not call this: its
+    encode kernel writes the same stream for a whole batch of blocks at
+    once, and this per-block form is the reference the tests check."""
     n_docs = len(positions_per_doc)
     if n_docs == 0:
         return b""

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from lucille_spark import BLOCK_SIZE
 from lucille_spark.analysis import tokenize_col
 from lucille_spark.index.builder import (
-    POSTINGS_SCHEMA, _Ledger, add_doc_identity, postings_blocks,
+    _Ledger, add_doc_identity, encode_partitions, postings_blocks,
     write_corpus_stats, write_index_meta,
 )
 from lucille_spark.index.ordinals import assign_doc_ord
@@ -168,32 +168,24 @@ def merge_index(
     # delta postings appended; blocks carry bound_avgdl = avgdl_new.
     # Persisted so the incremental lexicon below aggregates the DELTA blocks
     # only (block rows are compressed binary — tiny relative to the corpus).
-    # The delta's token totals were just aggregated: a micro-batch whose
-    # total is <= docs_per_salt provably has no hot term, so
-    # postings_blocks skips the hot-table job outright (one Spark job per
-    # batch on the streaming path).
-    micro = n_delta * len(fields) <= 1 << 16
+    # builder.encode_partitions' token-total rule picks the write: a delta
+    # whose every field totals <= docs_per_salt tokens was encoded as ONE
+    # term-sorted partition (no hot-table job), and is appended as that
+    # one file — no boundary-sampling pass, no small-file accretion, and
+    # the row-group pruning layout is preserved by the sort. A larger
+    # delta gets the build's range-partitioned write.
+    totals = {f: int(agg[f"total_{f}"] or 0) for f in fields}
     blocks = postings_blocks(
         delta, fields, avgdl_by_field, ord_span=max_ord + 1 + n_delta,
         block_size=block_size, docs_per_salt=docs_per_salt,
-        store_positions=store_positions,
-        totals_by_field={f: int(agg[f"total_{f}"] or 0) for f in fields},
-        single_partition_encode=micro).persist()
-    if micro:
-        # micro-batch fast path (guide §1.2/§6): the delta is shuffled to
-        # ONE partition and block-encoded by the vectorized
-        # single-partition kernel (builder._encode_single_partition_factory
-        # — no per-group Python, ~10 ms for a 100-doc delta where the
-        # per-group route paid ~2 s), then written as one term-sorted
-        # file: no boundary-sampling pass, no small-file accretion, and
-        # the row-group pruning layout is preserved by the sort.
-        (blocks.sortWithinPartitions("field", "term", "salt", "block_seq")
-         .write.mode("append").parquet(os.path.join(index_dir, "postings")))
-    else:
-        (blocks.repartitionByRange(
+        store_positions=store_positions, totals_by_field=totals).persist()
+    out = blocks
+    if any(encode_partitions(spark, totals[f], docs_per_salt) > 1
+           for f in fields):
+        out = blocks.repartitionByRange(
             max(spark.sparkContext.defaultParallelism, 8), "field", "term")
-         .sortWithinPartitions("field", "term", "salt", "block_seq")
-         .write.mode("append").parquet(os.path.join(index_dir, "postings")))
+    (out.sortWithinPartitions("field", "term", "salt", "block_seq")
+     .write.mode("append").parquet(os.path.join(index_dir, "postings")))
 
     # append doc_stats rows for the delta
     stat_cols = ["doc_id", "doc_ord"] + [f"dl_{f}" for f in fields] + [

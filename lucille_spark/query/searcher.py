@@ -26,19 +26,17 @@ import numpy as np
 
 from lucille_spark import BM25_B, BM25_K1
 from lucille_spark.index.reader import SENTINEL, IndexReader, TermCursor
+from lucille_spark.query.parser import (
+    And, MatchAll, Must, Not, Or, Phrase, Term, expand_prefixes, parse,
+    positive_terms,
+)
 
 # strategy switch for pure disjunctions/conjunctions (see search()): total
 # postings across the query's terms at or below this bound use the exact
 # vectorized decode-and-score path; above it, block-max WAND / leapfrog
 # cursor skipping. ~4M postings decode+score in well under 100 ms; the
 # cursor walk's Python-loop constant only pays for itself past that.
-import os as _os
-
-VEC_POSTINGS_MAX = int(_os.environ.get("LUCILLE_VEC_TOPK_MAX", str(1 << 22)))
-from lucille_spark.query.parser import (
-    And, MatchAll, Must, Not, Or, Phrase, Term, expand_prefixes, parse,
-    positive_terms,
-)
+VEC_POSTINGS_MAX = 1 << 22
 
 
 class DocSet:
@@ -142,9 +140,8 @@ class IndexSearcher:
         shape = _classify(node)
         if shape in ("or", "and", "term"):
             terms = [node] if shape == "term" else node_terms(node)
-            if sum(self.reader.term_info(t.field, t.text)["df"]
-                   if self.reader.term_info(t.field, t.text) else 0
-                   for t in terms) <= VEC_POSTINGS_MAX:
+            infos = [self.reader.term_info(t.field, t.text) for t in terms]
+            if sum(i["df"] for i in infos if i) <= VEC_POSTINGS_MAX:
                 return self._resolve(self._score_candidates(node, k))
         if shape == "or":
             hits = self._wand_or(

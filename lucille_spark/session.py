@@ -1,9 +1,12 @@
 """SparkSession factory with the engine's standard tuning.
 
 Sandbox runs on local[N]; on a real cluster the same settings apply via
-spark-submit conf. AQE is always on (runtime skew-join splitting + shuffle
-coalescing), Arrow is on (every Python-side op in this repo is a vectorized
-pandas UDF — no per-row Python, per BASELINE input_hint).
+spark-submit conf. AQE is on by default (runtime skew-join splitting +
+shuffle coalescing; build_index and merge_index switch it off for their
+statically partitioned jobs). Arrow is on: every Python-side op in this
+repo is a vectorized Arrow/pandas UDF — no per-row Python, per BASELINE
+input_hint. maxRecordsPerBatch also bounds the working set of the
+postings encode kernel, which sees one Arrow batch at a time.
 """
 
 from __future__ import annotations

@@ -11,16 +11,28 @@ import pytest
 from pyspark.sql import functions as F
 
 
+BATCH_CONF = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+
 @pytest.fixture(scope="module")
-def two_indexes(spark, tmp_path_factory):
+def indexes(spark, tmp_path_factory):
+    """Builds at 3 and 13 input partitions, plus a 3-partition build whose
+    encode kernel gets 50-row Arrow batches, so (term, salt) groups are
+    carried across batch edges inside Spark."""
     from lucille_spark.corpus import corpus_df
     from lucille_spark.index.builder import build_index
 
     dirs = []
-    for parts in (3, 13):
+    for parts, batch_rows in ((3, None), (13, None), (3, "50")):
         out = str(tmp_path_factory.mktemp("scale") / f"idx_{parts}")
-        build_index(corpus_df(spark, 800, partitions=parts), out,
-                    fields=("content",), block_size=32, docs_per_salt=64)
+        before = spark.conf.get(BATCH_CONF)
+        if batch_rows:
+            spark.conf.set(BATCH_CONF, batch_rows)
+        try:
+            build_index(corpus_df(spark, 800, partitions=parts), out,
+                        fields=("content",), block_size=32, docs_per_salt=64)
+        finally:
+            spark.conf.set(BATCH_CONF, before)
         dirs.append(out)
     return dirs
 
@@ -30,44 +42,47 @@ def _pdf(spark, path, order):
             .sort_values(order).reset_index(drop=True))
 
 
-def test_lexicon_identical(spark, two_indexes):
-    a, b = two_indexes
+def test_lexicon_identical(spark, indexes):
+    a, *others = indexes
     la = _pdf(spark, f"{a}/lexicon", ["field", "term"])
-    lb = _pdf(spark, f"{b}/lexicon", ["field", "term"])
-    assert la.equals(lb)
+    for b in others:
+        assert la.equals(_pdf(spark, f"{b}/lexicon", ["field", "term"]))
 
 
-def test_corpus_stats_identical(spark, two_indexes):
-    a, b = two_indexes
+def test_corpus_stats_identical(spark, indexes):
+    a, *others = indexes
     sa = _pdf(spark, f"{a}/corpus_stats", ["field"])
-    sb = _pdf(spark, f"{b}/corpus_stats", ["field"])
-    assert sa.equals(sb)
+    for b in others:
+        assert sa.equals(_pdf(spark, f"{b}/corpus_stats", ["field"]))
 
 
-def test_doc_stats_identical(spark, two_indexes):
-    a, b = two_indexes
+def test_doc_stats_identical(spark, indexes):
+    a, *others = indexes
     da = _pdf(spark, f"{a}/doc_stats", ["doc_ord"])
-    db = _pdf(spark, f"{b}/doc_stats", ["doc_ord"])
-    assert da.equals(db)
+    for b in others:
+        assert da.equals(_pdf(spark, f"{b}/doc_stats", ["doc_ord"]))
 
 
-def test_posting_blocks_identical(spark, two_indexes):
-    a, b = two_indexes
+def test_posting_blocks_identical(spark, indexes):
+    a, *others = indexes
     cols = ["field", "term", "salt", "block_seq", "first_doc", "last_doc",
             "n_docs", "sum_tf", "block_max_tf", "block_max_tfnorm"]
-    pa = _pdf(spark, f"{a}/postings", ["field", "term", "salt", "block_seq"])
-    pb = _pdf(spark, f"{b}/postings", ["field", "term", "salt", "block_seq"])
-    assert pa[cols].equals(pb[cols])
-    # compressed payloads byte-identical too
-    for col in ("doc_gaps", "tfs", "dls", "positions"):
-        assert [bytes(x) for x in pa[col]] == [bytes(x) for x in pb[col]]
+    order = ["field", "term", "salt", "block_seq"]
+    pa = _pdf(spark, f"{a}/postings", order)
+    for b in others:
+        pb = _pdf(spark, f"{b}/postings", order)
+        assert pa[cols].equals(pb[cols])
+        # compressed payloads byte-identical too
+        for col in ("doc_gaps", "tfs", "dls", "positions"):
+            assert [bytes(x) for x in pa[col]] == [bytes(x) for x in pb[col]]
 
 
-def test_query_results_identical(two_indexes):
+def test_query_results_identical(indexes):
     from lucille_spark.query.searcher import IndexSearcher
 
-    sa, sb = (IndexSearcher(d) for d in two_indexes)
+    sa, *others = (IndexSearcher(d) for d in indexes)
     for q in ["content:test OR content:giraffe",
               "content:return AND content:import",
               "content:if"]:
-        assert sa.search(q, 10) == sb.search(q, 10)
+        for sb in others:
+            assert sa.search(q, 10) == sb.search(q, 10)
