@@ -10,6 +10,7 @@ Driver-side pyarrow reads only — no Spark session needed:
     python jobs/status_job.py --index /path/to/index --runs      # history
     python jobs/status_job.py --index /path/to/index --run-id m1 # one run
     python jobs/status_job.py --index /path --json               # machine
+    python jobs/status_job.py --index /path --bytes              # storage
 
 Exit code 0 when the latest run completed its final stage, 1 otherwise
 (the `runStatus` answer RunnerManager gives the REST layer)."""
@@ -68,15 +69,67 @@ def gather(index_dir: str) -> dict:
     }
 
 
+def table_bytes(index_dir: str) -> dict:
+    """Where the index's bytes go, from parquet metadata alone: per table
+    its data files, bytes, footer bytes (the serialized file metadata),
+    page codecs, and per column the compressed and uncompressed bytes
+    summed over row groups. Hidden and underscore files (checksums,
+    _SUCCESS markers, in-flight writes) are not data files."""
+    import pyarrow.parquet as pq
+
+    out = {}
+    for table in sorted(os.listdir(index_dir)):
+        tdir = os.path.join(index_dir, table)
+        if not os.path.isdir(tdir):
+            continue
+        t = {"files": 0, "bytes": 0, "footer_bytes": 0, "codecs": set(),
+             "columns": {}}
+        for dirpath, _, names in os.walk(tdir):
+            for name in sorted(names):
+                if name.startswith((".", "_")):
+                    continue
+                path = os.path.join(dirpath, name)
+                md = pq.ParquetFile(path).metadata
+                t["files"] += 1
+                t["bytes"] += os.path.getsize(path)
+                t["footer_bytes"] += md.serialized_size
+                for rg in range(md.num_row_groups):
+                    group = md.row_group(rg)
+                    for c in range(group.num_columns):
+                        col = group.column(c)
+                        t["codecs"].add(col.compression)
+                        acc = t["columns"].setdefault(
+                            col.path_in_schema,
+                            {"compressed": 0, "uncompressed": 0})
+                        acc["compressed"] += col.total_compressed_size
+                        acc["uncompressed"] += col.total_uncompressed_size
+        t["codecs"] = sorted(t["codecs"])
+        out[table] = t
+    return out
+
+
+def print_bytes(tables: dict) -> None:
+    for table, t in tables.items():
+        print(f"{table:<14} files={t['files']:<4} bytes={t['bytes']:<10} "
+              f"footer={t['footer_bytes']:<8} codec={','.join(t['codecs'])}")
+        for col, c in t["columns"].items():
+            print(f"  {col:<18} compressed={c['compressed']:<10} "
+                  f"uncompressed={c['uncompressed']}")
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--index", required=True)
     ap.add_argument("--runs", action="store_true", help="full run history")
     ap.add_argument("--run-id", help="one run's stage detail")
+    ap.add_argument("--bytes", action="store_true",
+                    help="per-table and per-column storage breakdown")
     ap.add_argument("--json", action="store_true")
     args = ap.parse_args()
 
     st = gather(args.index)
+    if args.bytes:
+        st["bytes"] = table_bytes(args.index)
     if args.json:
         print(json.dumps(st, default=str))
     elif args.run_id:
@@ -90,6 +143,8 @@ def main():
         for s in run["stages"]:
             print(f"  {s['stage']:<14} {s['status']:<10} "
                   f"rows={s['n_rows']:<10} {s['seconds']}s")
+    elif args.bytes:
+        print_bytes(st["bytes"])
     elif args.runs:
         for rid, run in st["runs"].items():
             stages = ",".join(s["stage"] for s in run["stages"])

@@ -166,23 +166,39 @@ def spread_small_input(df, min_parts: int | None = None,
     +0.15-0.2 s per query from the exchange, no compute win; at
     sf1.0/5.9 MB the same exchange buys 2-4x). Multi-pass consumers (the
     index build tokenizes the cached spread result three times) leave it
-    None and always spread. Unknown input size (non-file sources) spreads."""
+    None and always spread. Unknown input size (non-file sources, a
+    filesystem pyarrow cannot open) spreads."""
     sc = df.sparkSession.sparkContext
     target = min_parts or sc.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     if min_bytes:
-        try:
-            import os as _os
-
-            files = df.inputFiles()
-            total = sum(_os.path.getsize(f.replace("file:", ""))
-                        for f in files) if files else None
-            if total is not None and total < min_bytes:
-                return df
-        except Exception:
-            pass  # size unknown -> spread
+        total = _input_bytes(df.inputFiles())
+        if total is not None and total < min_bytes:
+            return df
     return df.repartition(target)
+
+
+def _input_bytes(uris) -> int | None:
+    """Total size of the files behind ``uris`` (Spark's ``inputFiles()``:
+    percent-encoded URIs on any filesystem), or None when there are none
+    or a size is unknown."""
+    import pyarrow as pa
+    from pyarrow import fs as pafs
+
+    if not uris:
+        return None
+    total = 0
+    for uri in uris:
+        try:
+            fs, path = pafs.FileSystem.from_uri(uri)
+            size = fs.get_file_info(path).size
+        except (pa.ArrowException, OSError):
+            return None
+        if size is None:
+            return None
+        total += size
+    return total
 
 
 def documents_as_corpus(spark, sf_dir: str):

@@ -26,12 +26,16 @@ Dataflow (all DataFrame; Python appears only in Arrow-vectorized UDFs):
     -> lexicon = blocks.groupBy(field,term).agg(...)     [tiny shuffle]
 
 Output tables (parquet dir layout; Iceberg would add snapshots, the layout
-is Iceberg-compatible):
+is Iceberg-compatible), every one written by :func:`write_index_table`:
+zstd pages, no statistics on the opaque postings payload columns
+(doc_gaps, tfs, dls, positions), min/max kept on every other column:
   postings/      term-sorted, row-group pruning serves point lookups
   lexicon/       (field,term,df,cf,n_blocks,max_tfnorm)
   doc_stats/     (doc_id,doc_ord,dl_<field>...,repo,path,commit,lang,content_sha256)
   corpus_stats/  (field,n_docs,avgdl,total_terms)
-  _lineage/      per-partition build provenance (checkpoint/resume)
+  _meta/         (ord_span,version,updated_at)
+  _lineage/      per-stage build provenance (checkpoint/resume)
+Merges add _tombstones/ (doc_ord) through the same writer.
 
 Blocks are self-contained for scoring (they carry dls), so the query plane
 never needs a doc_ord->dl lookup — at 10^12 docs that lookup table would not
@@ -49,6 +53,7 @@ from typing import Optional, Sequence
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -67,14 +72,36 @@ POSTINGS_SCHEMA = (
 )
 
 
-def write_small_parquet(path: str, table: "pa.Table",
-                        mode: str = "overwrite") -> None:
-    """Driver-side write for TINY metadata tables (_meta, _lineage,
-    corpus_stats — a handful of rows each). Launching a Spark job for a
-    1-row table costs ~0.3-0.5 s of scheduling per write and several such
-    writes ride on every build/merge; at any scale these tables are
-    driver-sized by construction, so pyarrow writes them directly.
-    Spark (and pyarrow.dataset) reads the dirs exactly as before."""
+# postings payload columns: opaque varbyte streams that nothing prunes on,
+# so min/max and size statistics on them would be dead footer bytes
+PAYLOAD_COLUMNS = ("doc_gaps", "tfs", "dls", "positions")
+
+
+def write_index_table(data, path: str, mode: str = "overwrite") -> None:
+    """The one writer of every index table, so every table gets the same
+    parquet options whatever the session config says: zstd pages, and no
+    min/max or size statistics on the :data:`PAYLOAD_COLUMNS`. Every other
+    column keeps its min/max, which is what row-group pruning on term,
+    field, first_doc/last_doc and doc_ord reads. Readers need no option:
+    parquet records the codec per file, so an index whose files use
+    another codec (Spark's default snappy) stays readable and mergeable.
+
+    ``data`` is a Spark DataFrame, or a pyarrow Table for the TINY
+    metadata tables (_meta, _lineage, corpus_stats — a handful of rows
+    each). Launching a Spark job for a 1-row table costs ~0.3-0.5 s of
+    scheduling per write and several such writes ride on every build/
+    merge; at any scale these tables are driver-sized by construction, so
+    pyarrow writes them directly."""
+    if not isinstance(data, pa.Table):
+        w = (data.write.mode(mode).option("compression", "zstd")
+             .option("parquet.column.statistics.enabled", "true")
+             .option("parquet.size.statistics.enabled", "false"))
+        for col in PAYLOAD_COLUMNS:
+            if col in data.columns:
+                w = w.option(f"parquet.column.statistics.enabled#{col}",
+                             "false")
+        w.parquet(path)
+        return
     if mode == "overwrite":
         shutil.rmtree(path, ignore_errors=True)
     os.makedirs(path, exist_ok=True)
@@ -84,8 +111,15 @@ def write_small_parquet(path: str, table: "pa.Table",
     # reader stress test: "Parquet magic bytes not found")
     name = f"part-{uuid.uuid4().hex}.parquet"
     tmp = os.path.join(path, "." + name)
-    pq.write_table(table, tmp)
+    pq.write_table(data, tmp, compression="zstd", write_statistics=[
+        c for c in data.column_names if c not in PAYLOAD_COLUMNS])
     os.rename(tmp, os.path.join(path, name))
+
+
+def read_small_table(path: str) -> list:
+    """Driver-side read of a tiny metadata table as a list of row dicts
+    (no Spark job); raises FileNotFoundError when the table is absent."""
+    return ds.dataset(path, ignore_prefixes=[".", "_"]).to_table().to_pylist()
 
 
 def write_index_meta(spark: SparkSession, out_dir: str, ord_span: int,
@@ -95,11 +129,11 @@ def write_index_meta(spark: SparkSession, out_dir: str, ord_span: int,
     stamp that invalidates per-worker searcher caches after any build/merge
     (executor_df.search_batch keys its cache on it)."""
     now = time.time()
-    write_small_parquet(os.path.join(out_dir, "_meta"), pa.table({
+    write_index_table(pa.table({
         "ord_span": pa.array([int(ord_span)], pa.int64()),
         "version": pa.array([f"{run_id}@{now:.6f}"], pa.string()),
         "updated_at": pa.array([float(now)], pa.float64()),
-    }))
+    }), os.path.join(out_dir, "_meta"))
 
 
 def add_doc_identity(corpus: DataFrame) -> DataFrame:
@@ -393,9 +427,9 @@ def build_index(
     with the standard analyzer and match sub-tokens directly).
     """
     spark = corpus.sparkSession
-    ledger = _Ledger(spark, out_dir, run_id)
+    ledger = _Ledger(out_dir, run_id)
     if resume and ledger.done("lexicon"):
-        return _read_stats(spark, out_dir)
+        return _read_stats(out_dir)
 
     # AQE's stage-at-a-time execution inserts a driver planning pause after
     # every shuffle — measured ~50s of pure driver latency on a 100k-doc
@@ -440,17 +474,17 @@ def build_index(
         from pyspark.sql import Observation
 
         obs = Observation()
-        (docs.observe(obs, F.count(F.lit(1)).alias("n"),
-                      *[F.sum(f"dl_{f}").alias(f"total_{f}")
-                        for f in fields])
-         .select(*stat_cols).write.mode("overwrite").parquet(
-            os.path.join(out_dir, "doc_stats")))
+        write_index_table(
+            docs.observe(obs, F.count(F.lit(1)).alias("n"),
+                         *[F.sum(f"dl_{f}").alias(f"total_{f}")
+                           for f in fields]).select(*stat_cols),
+            os.path.join(out_dir, "doc_stats"))
         ledger.record("doc_stats", -1, t_stage)
     ident.unpersist()  # docs cache is materialized now; ident no longer needed
 
     t_stage = time.time()
     if resume and ledger.done("corpus_stats"):
-        cs = spark.read.parquet(os.path.join(out_dir, "corpus_stats")).collect()
+        cs = read_small_table(os.path.join(out_dir, "corpus_stats"))
         n_docs = int(cs[0]["n_docs"]) if cs else 0
         avgdl_by_field = {r["field"]: r["avgdl"] for r in cs}
         totals = {r["field"]: int(r["total_terms"]) for r in cs}
@@ -497,10 +531,11 @@ def build_index(
         from pyspark import StorageLevel
 
         all_blocks = all_blocks.persist(StorageLevel.MEMORY_AND_DISK)
-        (all_blocks.repartitionByRange(
-            max(spark.sparkContext.defaultParallelism, 8), "field", "term")
-         .sortWithinPartitions("field", "term", "salt", "block_seq")
-         .write.mode("overwrite").parquet(os.path.join(out_dir, "postings")))
+        write_index_table(
+            all_blocks.repartitionByRange(
+                max(spark.sparkContext.defaultParallelism, 8), "field", "term")
+            .sortWithinPartitions("field", "term", "salt", "block_seq"),
+            os.path.join(out_dir, "postings"))
         ledger.record("postings", -1, t_stage)
     lexicon_src = (all_blocks if not skip_postings
                    else spark.read.parquet(os.path.join(out_dir, "postings")))
@@ -513,7 +548,7 @@ def build_index(
              F.min("bound_avgdl").alias("bound_avgdl"))
     )
     t_stage = time.time()
-    lexicon.write.mode("overwrite").parquet(os.path.join(out_dir, "lexicon"))
+    write_index_table(lexicon, os.path.join(out_dir, "lexicon"))
     ledger.record("lexicon", n_docs, t_stage)
 
     write_index_meta(spark, out_dir, ord_span=n_docs, run_id=run_id)
@@ -534,43 +569,35 @@ def build_index(
 # WITHIN a stage, per-partition recovery is Spark's native task retry.
 # ``resume=True`` + same run_id skips stages whose lineage row is complete.
 
-LINEAGE_SCHEMA = ("run_id string, stage string, n_rows long, status string, "
-                  "started_at double, finished_at double, seconds double")
-
 
 def write_corpus_stats(path: str, cs_rows) -> None:
     """cs_rows: [(field, n_docs, avgdl, total_terms), ...]."""
-    write_small_parquet(path, pa.table({
+    write_index_table(pa.table({
         "field": pa.array([r[0] for r in cs_rows], pa.string()),
         "n_docs": pa.array([int(r[1]) for r in cs_rows], pa.int64()),
         "avgdl": pa.array([float(r[2]) for r in cs_rows], pa.float64()),
         "total_terms": pa.array([int(r[3]) for r in cs_rows], pa.int64()),
-    }))
-
-
-def _lineage_path(out_dir: str) -> str:
-    return os.path.join(out_dir, "_lineage")
+    }), path)
 
 
 class _Ledger:
-    def __init__(self, spark: SparkSession, out_dir: str, run_id: str):
-        self.spark, self.run_id = spark, run_id
-        self.path = _lineage_path(out_dir)
-        self.done_stages = set()
+    def __init__(self, out_dir: str, run_id: str):
+        self.run_id = run_id
+        self.path = os.path.join(out_dir, "_lineage")
         try:
-            rows = (spark.read.parquet(self.path)
-                    .filter((F.col("run_id") == run_id)
-                            & (F.col("status") == "complete")).collect())
-            self.done_stages = {r["stage"] for r in rows}
-        except Exception:
-            pass
+            rows = read_small_table(self.path)
+        except FileNotFoundError:
+            rows = []  # first run on this index
+        self.done_stages = {r["stage"] for r in rows
+                            if r["run_id"] == run_id
+                            and r["status"] == "complete"}
 
     def done(self, stage: str) -> bool:
         return stage in self.done_stages
 
     def record(self, stage: str, n_rows: int, started: float) -> None:
         now = time.time()
-        write_small_parquet(self.path, pa.table({
+        write_index_table(pa.table({
             "run_id": pa.array([self.run_id], pa.string()),
             "stage": pa.array([stage], pa.string()),
             "n_rows": pa.array([int(n_rows)], pa.int64()),
@@ -578,12 +605,12 @@ class _Ledger:
             "started_at": pa.array([float(started)], pa.float64()),
             "finished_at": pa.array([float(now)], pa.float64()),
             "seconds": pa.array([now - started], pa.float64()),
-        }), mode="append")
+        }), self.path, mode="append")
         self.done_stages.add(stage)
 
 
-def _read_stats(spark: SparkSession, out_dir: str) -> dict:
-    cs = spark.read.parquet(os.path.join(out_dir, "corpus_stats")).collect()
+def _read_stats(out_dir: str) -> dict:
+    cs = read_small_table(os.path.join(out_dir, "corpus_stats"))
     return {"n_docs": cs[0]["n_docs"] if cs else 0,
             "avgdl": {r["field"]: r["avgdl"] for r in cs},
             "fields": [r["field"] for r in cs], "out_dir": out_dir}

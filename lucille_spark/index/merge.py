@@ -33,7 +33,7 @@ from lucille_spark import BLOCK_SIZE
 from lucille_spark.analysis import tokenize_col
 from lucille_spark.index.builder import (
     _Ledger, add_doc_identity, encode_partitions, postings_blocks,
-    write_corpus_stats, write_index_meta,
+    read_small_table, write_corpus_stats, write_index_meta, write_index_table,
 )
 from lucille_spark.index.ordinals import assign_doc_ord
 
@@ -66,14 +66,11 @@ def merge_index(
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     t0 = time.time()
 
-    # corpus_stats is a driver-written handful-of-rows table
-    # (write_small_parquet): read it driver-side — launching a Spark job
-    # costs ~0.3-0.5 s of scheduling per micro-batch for a 1-row read
-    import pyarrow.dataset as _ds
-
-    old_stats = {r["field"]: r for r in _ds.dataset(
-        os.path.join(index_dir, "corpus_stats"),
-        ignore_prefixes=[".", "_"]).to_table().to_pylist()}
+    # corpus_stats is a driver-written handful-of-rows table: read it
+    # driver-side — launching a Spark job costs ~0.3-0.5 s of scheduling
+    # per micro-batch for a 1-row read
+    old_stats = {r["field"]: r for r in read_small_table(
+        os.path.join(index_dir, "corpus_stats"))}
     doc_stats = spark.read.parquet(os.path.join(index_dir, "doc_stats"))
     # ordinal high-water mark from _meta (1-row read) — scanning the
     # corpus-sized doc_stats for max(doc_ord) on every microbatch is the
@@ -184,20 +181,22 @@ def merge_index(
            for f in fields):
         out = blocks.repartitionByRange(
             max(spark.sparkContext.defaultParallelism, 8), "field", "term")
-    (out.sortWithinPartitions("field", "term", "salt", "block_seq")
-     .write.mode("append").parquet(os.path.join(index_dir, "postings")))
+    write_index_table(
+        out.sortWithinPartitions("field", "term", "salt", "block_seq"),
+        os.path.join(index_dir, "postings"), mode="append")
 
     # append doc_stats rows for the delta
     stat_cols = ["doc_id", "doc_ord"] + [f"dl_{f}" for f in fields] + [
         c for c in ("repo", "path", "commit", "lang")
         if c in new_corpus.columns] + ["content_sha256"]
-    delta.select(*stat_cols).write.mode("append").parquet(
-        os.path.join(index_dir, "doc_stats"))
+    write_index_table(delta.select(*stat_cols),
+                      os.path.join(index_dir, "doc_stats"), mode="append")
 
     # tombstones + corpus_stats + lexicon rebuild (tiny agg over postings)
     if n_tomb:
-        tombs.select("doc_ord").write.mode("append").parquet(
-            os.path.join(index_dir, "_tombstones"))
+        write_index_table(tombs.select("doc_ord"),
+                          os.path.join(index_dir, "_tombstones"),
+                          mode="append")
     write_corpus_stats(os.path.join(index_dir, "corpus_stats"), cs_rows)
 
     # incremental lexicon: aggregate the DELTA blocks only and fold into the
@@ -228,7 +227,7 @@ def merge_index(
     # store / Iceberg this is a snapshot commit instead.
     lex_tmp = lex_dir + "_tmp"
     lex_old = lex_dir + "_old"
-    merged_lex.write.mode("overwrite").parquet(lex_tmp)
+    write_index_table(merged_lex, lex_tmp)
     shutil.rmtree(lex_old, ignore_errors=True)
     os.rename(lex_dir, lex_old)
     os.rename(lex_tmp, lex_dir)
@@ -237,8 +236,7 @@ def merge_index(
 
     write_index_meta(spark, index_dir, ord_span=max_ord + 1 + n_delta,
                      run_id=run_id)
-    _Ledger(spark, index_dir, run_id).record(
-        "merge", n_delta, t0)
+    _Ledger(index_dir, run_id).record("merge", n_delta, t0)
     delta_base.unpersist()
     spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
     return {"added": n_delta, "tombstoned": n_tomb,

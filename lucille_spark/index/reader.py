@@ -81,7 +81,7 @@ def _open_lexicon_readonly(index_dir: str):
 def _retry_fnf(fn, attempts: int = 4, base_sleep: float = 0.05):
     """Run ``fn`` retrying on FileNotFoundError and ArrowInvalid — rides
     out the milliseconds-wide windows where a concurrent merge rewrites a
-    tiny metadata dir (write_small_parquet: rmtree -> atomic-rename write)
+    tiny metadata dir (write_index_table: rmtree -> atomic-rename write)
     or swaps the lexicon; ArrowInvalid covers a dataset whose discovered
     file list went stale mid-rewrite. Never masks a genuinely missing or
     corrupt table: the final attempt's error propagates."""

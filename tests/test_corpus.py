@@ -36,3 +36,43 @@ def test_lengths_in_range():
     lens = pdf["content"].str.split().map(len)
     assert lens.min() >= 30
     assert lens.max() <= 604  # 600 + planted markers
+
+
+def _one_file_scan(spark, directory):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    directory.mkdir(parents=True)
+    pq.write_table(pa.Table.from_pandas(corpus_pdf(np.arange(20)),
+                                        preserve_index=False),
+                   str(directory / "part-0.parquet"))
+    df = spark.read.parquet(str(directory))
+    assert df.rdd.getNumPartitions() == 1
+    return df
+
+
+def test_spread_small_input_keeps_tiny_input_under_floor(spark, tmp_path):
+    """Spark lists the file as a percent-encoded URI; the size probe must
+    still find it, so an input under the floor is left alone."""
+    from lucille_spark.corpus import spread_small_input
+
+    df = _one_file_scan(spark, tmp_path / "with space")
+    assert "%20" in df.inputFiles()[0]
+    assert spread_small_input(df, min_parts=4, min_bytes=1 << 20) is df
+
+
+def test_spread_small_input_spreads_input_above_floor(spark, tmp_path):
+    from lucille_spark.corpus import spread_small_input
+
+    df = _one_file_scan(spark, tmp_path / "big")
+    out = spread_small_input(df, min_parts=4, min_bytes=1)
+    assert out is not df and out.rdd.getNumPartitions() == 4
+    assert out.count() == df.count()
+
+
+def test_spread_small_input_leaves_parallel_scan(spark):
+    from lucille_spark.corpus import spread_small_input
+
+    df = spark.range(0, 100, 1, 4)
+    assert spread_small_input(df, min_parts=4) is df
+    assert spread_small_input(df, min_parts=4, min_bytes=1) is df
