@@ -23,13 +23,21 @@ Dataflow (all DataFrame; Python appears only in Arrow-vectorized UDFs):
        carries the batch's last group into the next batch, emitting
        128-doc blocks: delta+varbyte doc gaps, varbyte tfs, varbyte dls,
        optional varbyte positions, block_max_tf/tfnorm
+    -> postings write (postings_layout): as the encode left it when every
+       field is one partition, else repartitionByRange(field, term)
+       + sortWithinPartitions                            [small indexes:
+                                                          no exchange]
     -> lexicon = blocks.groupBy(field,term).agg(...)     [tiny shuffle]
 
 Output tables (parquet dir layout; Iceberg would add snapshots, the layout
 is Iceberg-compatible), every one written by :func:`write_index_table`:
 zstd pages, no statistics on the opaque postings payload columns
 (doc_gaps, tfs, dls, positions), min/max kept on every other column:
-  postings/      term-sorted, row-group pruning serves point lookups
+  postings/      term-sorted, row-group pruning serves point lookups:
+                 one file per field when every field has <= docs_per_salt
+                 tokens, else range-partitioned on (field, term) into
+                 max(defaultParallelism, 8) files; merges append files
+                 by the same rule (:func:`postings_layout`)
   lexicon/       (field,term,df,cf,n_blocks,max_tfnorm)
   doc_stats/     (doc_id,doc_ord,dl_<field>...,repo,path,commit,lang,content_sha256)
   corpus_stats/  (field,n_docs,avgdl,total_terms)
@@ -48,6 +56,7 @@ import os
 import shutil
 import time
 import uuid
+from contextlib import contextmanager
 from typing import Optional, Sequence
 
 import numpy as np
@@ -317,8 +326,9 @@ def encode_partitions(spark: SparkSession, total_tokens: Optional[int],
                       docs_per_salt: int) -> int:
     """Partitions of one field's postings encode — the one token-total
     rule. A field whose token total is <= ``docs_per_salt`` provably has
-    no hot term, so it needs no salting and is encoded (and, by merge,
-    appended) as ONE term-sorted partition. Otherwise the encode exchange
+    no hot term, so it needs no salting and is encoded (and, when every
+    field is, written by :func:`postings_layout`) as ONE term-sorted
+    partition. Otherwise the encode exchange
     is ``spark.sql.shuffle.partitions`` wide, the hashpartitioning(term,
     salt) a groupBy would plan. An unknown total counts as large."""
     if total_tokens is not None and total_tokens <= docs_per_salt:
@@ -403,6 +413,66 @@ def postings_blocks(docs, fields, avgdl_by_field, ord_span,
     return all_blocks
 
 
+def postings_layout(blocks: DataFrame, fields: Sequence[str],
+                    totals_by_field: dict, docs_per_salt: int) -> DataFrame:
+    """The one postings write rule, shared by :func:`build_index` and
+    ``merge.merge_index``: lays ``blocks`` (from :func:`postings_blocks`)
+    out for :func:`write_index_table`, term-sorted, so row-group min/max
+    on term prunes lookups within a file and across files.
+
+    When :func:`encode_partitions` gives every field ONE partition, the
+    encode output already is one partition per field, sorted by (field,
+    term, salt, block_seq), and it is written as it is: one file per
+    field, no boundary-sampling job, no range exchange. At the perfbench
+    seed-1 corpus (200 docs) that writes postings of 231,238 bytes in one
+    file instead of 279,828 in 8 (2,910 instead of 23,164 footer bytes).
+
+    Otherwise (some field has more than ``docs_per_salt`` tokens, or an
+    unknown total) the blocks are range-partitioned on (field, term) into
+    ``max(defaultParallelism, 8)`` files, each sorted within. That
+    repartitionByRange runs a BOUNDARY-SAMPLING job over its child first,
+    and the job recomputes the whole encode stage unless ``blocks`` is
+    persisted (the shuffle map side is reused, the post-shuffle vbyte
+    encode is not): measured 22.5 s vs 16.2 s on a warm 42k-doc 8-core
+    build. With the blocks persisted the sample pass is the ONLY full
+    computation — it materializes the cache (reservoir sampling touches
+    every partition) — and the range+sort+write replays from the cache.
+    Both callers persist ``blocks``; their lexicon aggregates reuse it."""
+    spark = blocks.sparkSession
+    if all(encode_partitions(spark, totals_by_field.get(f), docs_per_salt)
+           == 1 for f in fields):
+        return blocks
+    return (blocks.repartitionByRange(
+        max(spark.sparkContext.defaultParallelism, 8), "field", "term")
+        .sortWithinPartitions("field", "term", "salt", "block_seq"))
+
+
+@contextmanager
+def _job_scope(spark: SparkSession):
+    """Session scope of one build or merge, restored however it ends.
+
+    AQE's stage-at-a-time execution inserts a driver planning pause after
+    every shuffle — measured ~50s of pure driver latency on a 100k-doc
+    build. Builds and merges handle skew explicitly (salting) and choose
+    partition counts statically, so AQE buys nothing: it is off inside
+    the scope. Yields ``cache(df, level=None)``, which persists ``df``
+    and unpersists it when the scope ends, failed or not."""
+    aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    cached = []
+
+    def cache(df: DataFrame, level=None) -> DataFrame:
+        cached.append(df.persist() if level is None else df.persist(level))
+        return cached[-1]
+
+    try:
+        yield cache
+    finally:
+        for df in cached:
+            df.unpersist()
+        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
+
+
 def build_index(
     corpus: DataFrame,
     out_dir: str,
@@ -431,133 +501,117 @@ def build_index(
     if resume and ledger.done("lexicon"):
         return _read_stats(out_dir)
 
-    # AQE's stage-at-a-time execution inserts a driver planning pause after
-    # every shuffle — measured ~50s of pure driver latency on a 100k-doc
-    # build. The build handles skew explicitly (salting), partition counts
-    # are chosen statically, so AQE buys nothing here. Disable for the
-    # build's jobs and restore afterwards.
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    with _job_scope(spark) as cache:
+        # Input-skew guard (guide §2.5: one big unsplittable file →
+        # repartition immediately after the read): a small corpus parquet is
+        # often a single row group, so every narrow map stage (sha256,
+        # tokenize, explode) would run on ONE core. No-op when the scan is
+        # already parallel.
+        from lucille_spark.corpus import spread_small_input
 
-    # Input-skew guard (guide §2.5: one big unsplittable file → repartition
-    # immediately after the read): a small corpus parquet is often a single
-    # row group, so every narrow map stage (sha256, tokenize, explode)
-    # would run on ONE core. No-op when the scan is already parallel.
-    from lucille_spark.corpus import spread_small_input
+        corpus = spread_small_input(corpus)
 
-    corpus = spread_small_input(corpus)
-
-    # Cache discipline: persist ONLY narrow-ish data (source columns + ids,
-    # never token arrays — caching 100s of tokens/doc costs more than
-    # re-running the codegen'd lower+split). ident materializes on the
-    # ordinal bucket-count pass; docs (with doc_ord attached) materializes on
-    # the doc_stats write, so the ordinal window shuffle runs exactly once.
-    tok_fn = tokenize_code_col if analyzer == "code" else tokenize_col
-    ident = add_doc_identity(corpus).persist()
-    docs = assign_doc_ord(ident, "doc_id")
-    for f_name in fields:
-        docs = docs.withColumn(f"dl_{f_name}",
-                               F.size(tok_fn(F.col(f_name))).cast("long"))
-    docs = docs.persist()
-
-    # --- doc_stats + corpus_stats ---------------------------------------
-    stat_cols = ["doc_id", "doc_ord"] + [f"dl_{f}" for f in fields] + [
-        c for c in ("repo", "path", "commit", "lang") if c in corpus.columns
-    ] + ["content_sha256"]
-    t_stage = time.time()
-    obs = None
-    if not (resume and ledger.done("doc_stats")):
-        # the corpus stats (N + per-field token sums) ride the doc_stats
-        # write job as observed metrics — one full pass over the docs
-        # cache instead of two (guide §1.2: fewer passes). Exact integer
-        # count/sum, so the values are identical to the old separate agg.
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        write_index_table(
-            docs.observe(obs, F.count(F.lit(1)).alias("n"),
-                         *[F.sum(f"dl_{f}").alias(f"total_{f}")
-                           for f in fields]).select(*stat_cols),
-            os.path.join(out_dir, "doc_stats"))
-        ledger.record("doc_stats", -1, t_stage)
-    ident.unpersist()  # docs cache is materialized now; ident no longer needed
-
-    t_stage = time.time()
-    if resume and ledger.done("corpus_stats"):
-        cs = read_small_table(os.path.join(out_dir, "corpus_stats"))
-        n_docs = int(cs[0]["n_docs"]) if cs else 0
-        avgdl_by_field = {r["field"]: r["avgdl"] for r in cs}
-        totals = {r["field"]: int(r["total_terms"]) for r in cs}
-    else:
-        # metrics observed during the doc_stats write; the separate agg
-        # job remains only for the resume path that skipped that write
-        agg = obs.get if obs is not None else docs.agg(
-            F.count("*").alias("n"),
-            *[F.sum(f"dl_{f}").alias(f"total_{f}") for f in fields]).collect()[0]
-        n_docs = int(agg["n"])
-        cs_rows = []
+        # Cache discipline: persist ONLY narrow-ish data (source columns +
+        # ids, never token arrays — caching 100s of tokens/doc costs more
+        # than re-running the codegen'd lower+split). ident materializes on
+        # the ordinal bucket-count pass; docs (with doc_ord attached)
+        # materializes on the doc_stats write, so the ordinal window shuffle
+        # runs exactly once.
+        tok_fn = tokenize_code_col if analyzer == "code" else tokenize_col
+        ident = cache(add_doc_identity(corpus))
+        docs = assign_doc_ord(ident, "doc_id")
         for f_name in fields:
-            total = int(agg[f"total_{f_name}"] or 0)
-            # exact integer sum / count: avgdl bit-identical at any parallelism
-            cs_rows.append((f_name, n_docs, total / n_docs if n_docs else 0.0,
-                            total))
-        write_corpus_stats(os.path.join(out_dir, "corpus_stats"), cs_rows)
-        avgdl_by_field = {r[0]: r[2] for r in cs_rows}
-        totals = {r[0]: r[3] for r in cs_rows}
-        ledger.record("corpus_stats", n_docs, t_stage)
+            docs = docs.withColumn(
+                f"dl_{f_name}", F.size(tok_fn(F.col(f_name))).cast("long"))
+        docs = cache(docs)
 
-    # --- postings per field (ONE corpus-sized shuffle per field) ----------
-    t_stage = time.time()
-    skip_postings = resume and ledger.done("postings")
-    all_blocks = None if skip_postings else postings_blocks(
-        docs, fields, avgdl_by_field, n_docs, tok_fn=tok_fn,
-        block_size=block_size, docs_per_salt=docs_per_salt,
-        store_positions=store_positions, totals_by_field=totals)
+        # --- doc_stats + corpus_stats -----------------------------------
+        stat_cols = ["doc_id", "doc_ord"] + [f"dl_{f}" for f in fields] + [
+            c for c in ("repo", "path", "commit", "lang")
+            if c in corpus.columns] + ["content_sha256"]
+        t_stage = time.time()
+        obs = None
+        if not (resume and ledger.done("doc_stats")):
+            # the corpus stats (N + per-field token sums) ride the doc_stats
+            # write job as observed metrics — one full pass over the docs
+            # cache instead of two (guide §1.2: fewer passes). Exact integer
+            # count/sum, so the values equal the old separate agg.
+            from pyspark.sql import Observation
 
-    if not skip_postings:
-        # term-sorted layout → parquet row-group min/max stats prune
-        # lookups. repartitionByRange runs a BOUNDARY-SAMPLING job over
-        # its child first, and that job recomputes the entire encode
-        # stage (the shuffle map side is reused, the post-shuffle vbyte
-        # encode is not): measured 22.5 s vs 16.2 s on a warm 42k-doc
-        # 8-core build (r6). Persisting the encoded blocks makes the
-        # sample pass the ONLY full computation — it materializes the
-        # cache (reservoir sampling touches every partition), and the
-        # range+sort+write then replays from cache in <1 s.
-        # MEMORY_AND_DISK: at 100 TB the encoded blocks are index-sized
-        # (a fraction of the corpus) and spill to executor disk — still
-        # strictly cheaper than encoding twice. The lexicon aggregate
-        # below reuses the same cache before it is released.
-        from pyspark import StorageLevel
+            obs = Observation()
+            write_index_table(
+                docs.observe(obs, F.count(F.lit(1)).alias("n"),
+                             *[F.sum(f"dl_{f}").alias(f"total_{f}")
+                               for f in fields]).select(*stat_cols),
+                os.path.join(out_dir, "doc_stats"))
+            ledger.record("doc_stats", -1, t_stage)
+        # the docs cache is materialized now; ident is no longer needed
+        ident.unpersist()
 
-        all_blocks = all_blocks.persist(StorageLevel.MEMORY_AND_DISK)
-        write_index_table(
-            all_blocks.repartitionByRange(
-                max(spark.sparkContext.defaultParallelism, 8), "field", "term")
-            .sortWithinPartitions("field", "term", "salt", "block_seq"),
-            os.path.join(out_dir, "postings"))
-        ledger.record("postings", -1, t_stage)
-    lexicon_src = (all_blocks if not skip_postings
-                   else spark.read.parquet(os.path.join(out_dir, "postings")))
-    lexicon = (
-        lexicon_src.groupBy("field", "term")
-        .agg(F.sum("n_docs").cast("long").alias("df"),
-             F.sum("sum_tf").cast("long").alias("cf"),
-             F.count("*").cast("int").alias("n_blocks"),
-             F.max("block_max_tfnorm").alias("max_tfnorm"),
-             F.min("bound_avgdl").alias("bound_avgdl"))
-    )
-    t_stage = time.time()
-    write_index_table(lexicon, os.path.join(out_dir, "lexicon"))
-    ledger.record("lexicon", n_docs, t_stage)
+        t_stage = time.time()
+        if resume and ledger.done("corpus_stats"):
+            cs = read_small_table(os.path.join(out_dir, "corpus_stats"))
+            n_docs = int(cs[0]["n_docs"]) if cs else 0
+            avgdl_by_field = {r["field"]: r["avgdl"] for r in cs}
+            totals = {r["field"]: int(r["total_terms"]) for r in cs}
+        else:
+            # metrics observed during the doc_stats write; the separate agg
+            # job remains only for the resume path that skipped that write
+            agg = obs.get if obs is not None else docs.agg(
+                F.count("*").alias("n"),
+                *[F.sum(f"dl_{f}").alias(f"total_{f}")
+                  for f in fields]).collect()[0]
+            n_docs = int(agg["n"])
+            cs_rows = []
+            for f_name in fields:
+                total = int(agg[f"total_{f_name}"] or 0)
+                # exact integer sum / count: avgdl bit-identical at any
+                # parallelism
+                cs_rows.append((f_name, n_docs,
+                                total / n_docs if n_docs else 0.0, total))
+            write_corpus_stats(os.path.join(out_dir, "corpus_stats"), cs_rows)
+            avgdl_by_field = {r[0]: r[2] for r in cs_rows}
+            totals = {r[0]: r[3] for r in cs_rows}
+            ledger.record("corpus_stats", n_docs, t_stage)
 
-    write_index_meta(spark, out_dir, ord_span=n_docs, run_id=run_id)
-    if not skip_postings:
-        all_blocks.unpersist()
-    docs.unpersist()
-    spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
-    return {"n_docs": n_docs, "avgdl": avgdl_by_field,
-            "fields": list(fields), "out_dir": out_dir}
+        # --- postings per field (ONE corpus-sized shuffle per field) ------
+        t_stage = time.time()
+        skip_postings = resume and ledger.done("postings")
+        all_blocks = None if skip_postings else postings_blocks(
+            docs, fields, avgdl_by_field, n_docs, tok_fn=tok_fn,
+            block_size=block_size, docs_per_salt=docs_per_salt,
+            store_positions=store_positions, totals_by_field=totals)
+
+        if not skip_postings:
+            # MEMORY_AND_DISK: at 100 TB the encoded blocks are index-sized
+            # (a fraction of the corpus) and spill to executor disk — still
+            # strictly cheaper than encoding twice. The lexicon aggregate
+            # below reuses the cache, and so does the range route's
+            # boundary-sampling job (see postings_layout).
+            from pyspark import StorageLevel
+
+            all_blocks = cache(all_blocks, StorageLevel.MEMORY_AND_DISK)
+            write_index_table(
+                postings_layout(all_blocks, fields, totals, docs_per_salt),
+                os.path.join(out_dir, "postings"))
+            ledger.record("postings", -1, t_stage)
+        lexicon_src = (all_blocks if not skip_postings else
+                       spark.read.parquet(os.path.join(out_dir, "postings")))
+        lexicon = (
+            lexicon_src.groupBy("field", "term")
+            .agg(F.sum("n_docs").cast("long").alias("df"),
+                 F.sum("sum_tf").cast("long").alias("cf"),
+                 F.count("*").cast("int").alias("n_blocks"),
+                 F.max("block_max_tfnorm").alias("max_tfnorm"),
+                 F.min("bound_avgdl").alias("bound_avgdl"))
+        )
+        t_stage = time.time()
+        write_index_table(lexicon, os.path.join(out_dir, "lexicon"))
+        ledger.record("lexicon", n_docs, t_stage)
+
+        write_index_meta(spark, out_dir, ord_span=n_docs, run_id=run_id)
+        return {"n_docs": n_docs, "avgdl": avgdl_by_field,
+                "fields": list(fields), "out_dir": out_dir}
 
 
 # --- lineage / metrics / resume ---------------------------------------------

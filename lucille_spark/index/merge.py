@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from lucille_spark import BLOCK_SIZE
 from lucille_spark.analysis import tokenize_col
 from lucille_spark.index.builder import (
-    _Ledger, add_doc_identity, encode_partitions, postings_blocks,
+    _job_scope, _Ledger, add_doc_identity, postings_blocks, postings_layout,
     read_small_table, write_corpus_stats, write_index_meta, write_index_table,
 )
 from lucille_spark.index.ordinals import assign_doc_ord
@@ -62,185 +62,179 @@ def merge_index(
     """
     spark = new_corpus.sparkSession
     _recover_lexicon(index_dir)
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    t0 = time.time()
+    with _job_scope(spark) as cache:
+        t0 = time.time()
 
-    # corpus_stats is a driver-written handful-of-rows table: read it
-    # driver-side — launching a Spark job costs ~0.3-0.5 s of scheduling
-    # per micro-batch for a 1-row read
-    old_stats = {r["field"]: r for r in read_small_table(
-        os.path.join(index_dir, "corpus_stats"))}
-    doc_stats = spark.read.parquet(os.path.join(index_dir, "doc_stats"))
-    # ordinal high-water mark from _meta (1-row read) — scanning the
-    # corpus-sized doc_stats for max(doc_ord) on every microbatch is the
-    # kind of O(index) step this path must not have
-    from lucille_spark.index.reader import read_meta
+        # corpus_stats is a driver-written handful-of-rows table: read it
+        # driver-side — launching a Spark job costs ~0.3-0.5 s of scheduling
+        # per micro-batch for a 1-row read
+        old_stats = {r["field"]: r for r in read_small_table(
+            os.path.join(index_dir, "corpus_stats"))}
+        doc_stats = spark.read.parquet(os.path.join(index_dir, "doc_stats"))
+        # ordinal high-water mark from _meta (1-row read) — scanning the
+        # corpus-sized doc_stats for max(doc_ord) on every microbatch is the
+        # kind of O(index) step this path must not have
+        from lucille_spark.index.reader import read_meta
 
-    meta = read_meta(index_dir)
-    if meta is not None:
-        max_ord = int(meta["ord_span"]) - 1
-    else:
-        max_ord = doc_stats.agg(F.max("doc_ord")).collect()[0][0] or -1
+        meta = read_meta(index_dir)
+        if meta is not None:
+            max_ord = int(meta["ord_span"]) - 1
+        else:
+            max_ord = doc_stats.agg(F.max("doc_ord")).collect()[0][0] or -1
 
-    # delta rows (ordinals attached AFTER the stats job below, so the
-    # batch size can pick the cheap ordinal path)
-    delta = add_doc_identity(new_corpus)
-    order_expr = (F.col(order_col).desc_nulls_last() if order_col
-                  else F.col("content_sha256").desc())
-    w = Window.partitionBy("doc_id").orderBy(order_expr)
-    delta = (delta.withColumn("_rn", F.row_number().over(w))
-             .filter(F.col("_rn") == 1).drop("_rn"))
-    for f_name in fields:
-        delta = delta.withColumn(
-            f"dl_{f_name}", F.size(tokenize_col(F.col(f_name))).cast("long"))
-    delta_base = delta = delta.persist()
+        # delta rows (ordinals attached AFTER the stats job below, so the
+        # batch size can pick the cheap ordinal path)
+        delta = add_doc_identity(new_corpus)
+        order_expr = (F.col(order_col).desc_nulls_last() if order_col
+                      else F.col("content_sha256").desc())
+        w = Window.partitionBy("doc_id").orderBy(order_expr)
+        delta = (delta.withColumn("_rn", F.row_number().over(w))
+                 .filter(F.col("_rn") == 1).drop("_rn"))
+        for f_name in fields:
+            delta = delta.withColumn(
+                f"dl_{f_name}",
+                F.size(tokenize_col(F.col(f_name))).cast("long"))
+        delta = cache(delta)
 
-    # tombstones: superseded versions of upserted ids + explicit deletes.
-    # Only LIVE rows are tombstoned: doc_stats is append-only, so a doc_id
-    # upserted twice has a dead row whose ordinal is ALREADY in _tombstones —
-    # counting it again would re-subtract its dl and corrupt corpus_stats
-    # (n_docs/avgdl and hence every idf). Anti-join the existing tombstones.
-    gone_ids = delta.select("doc_id")
-    if deletes is not None:
-        gone_ids = gone_ids.unionByName(deletes.select("doc_id"))
-    tomb_dir = os.path.join(index_dir, "_tombstones")
-    live_stats = doc_stats
-    if os.path.exists(tomb_dir):
-        dead = spark.read.parquet(tomb_dir).select("doc_ord").distinct()
-        live_stats = doc_stats.join(dead, "doc_ord", "left_anti")
-    # localCheckpoint: the doc_stats append below invalidates any cached
-    # plan that reads the doc_stats path, and a recompute after the append
-    # would see the delta's fresh rows and tombstone them — checkpointing
-    # severs the lineage so the pre-append snapshot is final. LAZY
-    # (eager=False): the combined stats job below is the first action, so
-    # materializing here would just spend an extra Spark job per
-    # micro-batch on the same work (guide §1.2: fewer passes).
-    tombs = (live_stats.join(F.broadcast(gone_ids.distinct()), "doc_id")
-             .select("doc_ord", *[f"dl_{f}" for f in fields])
-             ).localCheckpoint(eager=False)
+        # tombstones: superseded versions of upserted ids + explicit
+        # deletes. Only LIVE rows are tombstoned: doc_stats is append-only,
+        # so a doc_id upserted twice has a dead row whose ordinal is ALREADY
+        # in _tombstones — counting it again would re-subtract its dl and
+        # corrupt corpus_stats (n_docs/avgdl and hence every idf).
+        # Anti-join the existing tombstones.
+        gone_ids = delta.select("doc_id")
+        if deletes is not None:
+            gone_ids = gone_ids.unionByName(deletes.select("doc_id"))
+        tomb_dir = os.path.join(index_dir, "_tombstones")
+        live_stats = doc_stats
+        if os.path.exists(tomb_dir):
+            dead = spark.read.parquet(tomb_dir).select("doc_ord").distinct()
+            live_stats = doc_stats.join(dead, "doc_ord", "left_anti")
+        # localCheckpoint: the doc_stats append below invalidates any cached
+        # plan that reads the doc_stats path, and a recompute after the append
+        # would see the delta's fresh rows and tombstone them — checkpointing
+        # severs the lineage so the pre-append snapshot is final. LAZY
+        # (eager=False): the combined stats job below is the first action, so
+        # materializing here would just spend an extra Spark job per
+        # micro-batch on the same work (guide §1.2: fewer passes).
+        tombs = (live_stats.join(F.broadcast(gone_ids.distinct()), "doc_id")
+                 .select("doc_ord", *[f"dl_{f}" for f in fields])
+                 ).localCheckpoint(eager=False)
 
-    # ONE combined stats job for what used to be three (checkpoint
-    # materialize + tombstone agg + delta agg): a micro-batch pays
-    # ~0.3-0.5 s of scheduling per Spark job, which dominates 100-doc
-    # merges. The union also materializes the delta cache and the
-    # tombstone checkpoint in the same pass.
-    stats_u = (delta.select(
-        F.lit(1).alias("_is_delta"),
-        *[F.col(f"dl_{f}").alias(f"dl_{f}") for f in fields])
-        .unionByName(tombs.select(
-            F.lit(0).alias("_is_delta"),
-            *[F.col(f"dl_{f}") for f in fields])))
-    srows = {int(r["_is_delta"]): r for r in (
-        stats_u.groupBy("_is_delta").agg(
-            F.count("*").alias("n"),
-            *[F.sum(f"dl_{f}").alias(f"total_{f}") for f in fields])
-        .collect())}
-    _empty = {"n": 0, **{f"total_{f}": 0 for f in fields}}
-    agg = srows.get(1, _empty)
-    tomb_agg = srows.get(0, _empty)
-    n_tomb = int(tomb_agg["n"])
-    n_delta = int(agg["n"])
+        # ONE combined stats job for what used to be three (checkpoint
+        # materialize + tombstone agg + delta agg): a micro-batch pays
+        # ~0.3-0.5 s of scheduling per Spark job, which dominates 100-doc
+        # merges. The union also materializes the delta cache and the
+        # tombstone checkpoint in the same pass.
+        stats_u = (delta.select(
+            F.lit(1).alias("_is_delta"),
+            *[F.col(f"dl_{f}").alias(f"dl_{f}") for f in fields])
+            .unionByName(tombs.select(
+                F.lit(0).alias("_is_delta"),
+                *[F.col(f"dl_{f}") for f in fields])))
+        srows = {int(r["_is_delta"]): r for r in (
+            stats_u.groupBy("_is_delta").agg(
+                F.count("*").alias("n"),
+                *[F.sum(f"dl_{f}").alias(f"total_{f}") for f in fields])
+            .collect())}
+        _empty = {"n": 0, **{f"total_{f}": 0 for f in fields}}
+        agg = srows.get(1, _empty)
+        tomb_agg = srows.get(0, _empty)
+        n_tomb = int(tomb_agg["n"])
+        n_delta = int(agg["n"])
 
-    # fresh ordinals above everything existing. (r7 note: a "cheap"
-    # global-window rank — provably the same ordinals, since the bucket
-    # prefix is monotone in doc_id — was tried for small batches and
-    # REJECTED on measurement: the SinglePartition exchange it forces
-    # under the postings plan made the 100-doc postings write 16-20 s vs
-    # 3.2-3.6 s with the bucketed path.)
-    delta = assign_doc_ord(delta, "doc_id")
-    delta = delta.withColumn("doc_ord", F.col("doc_ord") + F.lit(max_ord + 1))
+        # fresh ordinals above everything existing. (r7 note: a "cheap"
+        # global-window rank — provably the same ordinals, since the bucket
+        # prefix is monotone in doc_id — was tried for small batches and
+        # REJECTED on measurement: the SinglePartition exchange it forces
+        # under the postings plan made the 100-doc postings write 16-20 s vs
+        # 3.2-3.6 s with the bucketed path.)
+        delta = assign_doc_ord(delta, "doc_id")
+        delta = delta.withColumn("doc_ord",
+                                 F.col("doc_ord") + F.lit(max_ord + 1))
 
-    # live corpus stats: subtract tombstoned dls, add delta dls
-    cs_rows, avgdl_by_field = [], {}
-    for f_name in fields:
-        dead_total = int(tomb_agg[f"total_{f_name}"] or 0)
-        live_n = int(old_stats[f_name]["n_docs"]) - n_tomb + n_delta
-        live_total = (int(old_stats[f_name]["total_terms"]) - dead_total
-                      + int(agg[f"total_{f_name}"] or 0))
-        avgdl = live_total / live_n if live_n else 0.0
-        avgdl_by_field[f_name] = avgdl
-        cs_rows.append((f_name, live_n, avgdl, live_total))
+        # live corpus stats: subtract tombstoned dls, add delta dls
+        cs_rows, avgdl_by_field = [], {}
+        for f_name in fields:
+            dead_total = int(tomb_agg[f"total_{f_name}"] or 0)
+            live_n = int(old_stats[f_name]["n_docs"]) - n_tomb + n_delta
+            live_total = (int(old_stats[f_name]["total_terms"]) - dead_total
+                          + int(agg[f"total_{f_name}"] or 0))
+            avgdl = live_total / live_n if live_n else 0.0
+            avgdl_by_field[f_name] = avgdl
+            cs_rows.append((f_name, live_n, avgdl, live_total))
 
-    # delta postings appended; blocks carry bound_avgdl = avgdl_new.
-    # Persisted so the incremental lexicon below aggregates the DELTA blocks
-    # only (block rows are compressed binary — tiny relative to the corpus).
-    # builder.encode_partitions' token-total rule picks the write: a delta
-    # whose every field totals <= docs_per_salt tokens was encoded as ONE
-    # term-sorted partition (no hot-table job), and is appended as that
-    # one file — no boundary-sampling pass, no small-file accretion, and
-    # the row-group pruning layout is preserved by the sort. A larger
-    # delta gets the build's range-partitioned write.
-    totals = {f: int(agg[f"total_{f}"] or 0) for f in fields}
-    blocks = postings_blocks(
-        delta, fields, avgdl_by_field, ord_span=max_ord + 1 + n_delta,
-        block_size=block_size, docs_per_salt=docs_per_salt,
-        store_positions=store_positions, totals_by_field=totals).persist()
-    out = blocks
-    if any(encode_partitions(spark, totals[f], docs_per_salt) > 1
-           for f in fields):
-        out = blocks.repartitionByRange(
-            max(spark.sparkContext.defaultParallelism, 8), "field", "term")
-    write_index_table(
-        out.sortWithinPartitions("field", "term", "salt", "block_seq"),
-        os.path.join(index_dir, "postings"), mode="append")
+        # delta postings appended; blocks carry bound_avgdl = avgdl_new.
+        # Persisted so the incremental lexicon below aggregates the DELTA
+        # blocks only (block rows are compressed binary — tiny relative to
+        # the corpus). builder.postings_layout is the build's write rule: a
+        # delta whose every field totals <= docs_per_salt tokens is
+        # appended as its one term-sorted encode partition (no hot-table
+        # job, no boundary-sampling pass, no small-file accretion); a
+        # larger delta gets the range-partitioned write.
+        totals = {f: int(agg[f"total_{f}"] or 0) for f in fields}
+        blocks = cache(postings_blocks(
+            delta, fields, avgdl_by_field, ord_span=max_ord + 1 + n_delta,
+            block_size=block_size, docs_per_salt=docs_per_salt,
+            store_positions=store_positions, totals_by_field=totals))
+        write_index_table(
+            postings_layout(blocks, fields, totals, docs_per_salt),
+            os.path.join(index_dir, "postings"), mode="append")
 
-    # append doc_stats rows for the delta
-    stat_cols = ["doc_id", "doc_ord"] + [f"dl_{f}" for f in fields] + [
-        c for c in ("repo", "path", "commit", "lang")
-        if c in new_corpus.columns] + ["content_sha256"]
-    write_index_table(delta.select(*stat_cols),
-                      os.path.join(index_dir, "doc_stats"), mode="append")
+        # append doc_stats rows for the delta
+        stat_cols = ["doc_id", "doc_ord"] + [f"dl_{f}" for f in fields] + [
+            c for c in ("repo", "path", "commit", "lang")
+            if c in new_corpus.columns] + ["content_sha256"]
+        write_index_table(delta.select(*stat_cols),
+                          os.path.join(index_dir, "doc_stats"), mode="append")
 
-    # tombstones + corpus_stats + lexicon rebuild (tiny agg over postings)
-    if n_tomb:
-        write_index_table(tombs.select("doc_ord"),
-                          os.path.join(index_dir, "_tombstones"),
-                          mode="append")
-    write_corpus_stats(os.path.join(index_dir, "corpus_stats"), cs_rows)
+        # tombstones + corpus_stats + lexicon rebuild (tiny agg over postings)
+        if n_tomb:
+            write_index_table(tombs.select("doc_ord"),
+                              os.path.join(index_dir, "_tombstones"),
+                              mode="append")
+        write_corpus_stats(os.path.join(index_dir, "corpus_stats"), cs_rows)
 
-    # incremental lexicon: aggregate the DELTA blocks only and fold into the
-    # existing lexicon (df/cf/n_blocks are additive across blocks,
-    # max_tfnorm a max, bound_avgdl a min). The old full-postings rescan made
-    # every streaming microbatch O(index); this is O(delta + lexicon).
-    delta_lex = (blocks.groupBy("field", "term")
-                 .agg(F.sum("n_docs").cast("long").alias("df"),
-                      F.sum("sum_tf").cast("long").alias("cf"),
-                      F.count("*").cast("long").alias("n_blocks"),
-                      F.max("block_max_tfnorm").alias("max_tfnorm"),
-                      F.min("bound_avgdl").alias("bound_avgdl")))
-    lex_dir = os.path.join(index_dir, "lexicon")
-    old_lex = spark.read.parquet(lex_dir).withColumn(
-        "n_blocks", F.col("n_blocks").cast("long"))
-    merged_lex = (old_lex.unionByName(delta_lex)
-                  .groupBy("field", "term")
-                  .agg(F.sum("df").cast("long").alias("df"),
-                       F.sum("cf").cast("long").alias("cf"),
-                       F.sum("n_blocks").cast("int").alias("n_blocks"),
-                       F.max("max_tfnorm").alias("max_tfnorm"),
-                       F.min("bound_avgdl").alias("bound_avgdl")))
-    # can't overwrite a path being read → write aside, then swap.
-    # Crash-safe order (ADVICE r2): rename the live dir ASIDE first, then
-    # tmp into place, then drop the aside copy — at no point is the index
-    # without a recoverable lexicon (_recover_lexicon restores from
-    # lexicon_old if a crash lands between the renames). On an object
-    # store / Iceberg this is a snapshot commit instead.
-    lex_tmp = lex_dir + "_tmp"
-    lex_old = lex_dir + "_old"
-    write_index_table(merged_lex, lex_tmp)
-    shutil.rmtree(lex_old, ignore_errors=True)
-    os.rename(lex_dir, lex_old)
-    os.rename(lex_tmp, lex_dir)
-    shutil.rmtree(lex_old, ignore_errors=True)
-    blocks.unpersist()
+        # incremental lexicon: aggregate the DELTA blocks only and fold into
+        # the existing lexicon (df/cf/n_blocks are additive across blocks,
+        # max_tfnorm a max, bound_avgdl a min). The old full-postings rescan
+        # made every streaming microbatch O(index); this is O(delta +
+        # lexicon).
+        delta_lex = (blocks.groupBy("field", "term")
+                     .agg(F.sum("n_docs").cast("long").alias("df"),
+                          F.sum("sum_tf").cast("long").alias("cf"),
+                          F.count("*").cast("long").alias("n_blocks"),
+                          F.max("block_max_tfnorm").alias("max_tfnorm"),
+                          F.min("bound_avgdl").alias("bound_avgdl")))
+        lex_dir = os.path.join(index_dir, "lexicon")
+        old_lex = spark.read.parquet(lex_dir).withColumn(
+            "n_blocks", F.col("n_blocks").cast("long"))
+        merged_lex = (old_lex.unionByName(delta_lex)
+                      .groupBy("field", "term")
+                      .agg(F.sum("df").cast("long").alias("df"),
+                           F.sum("cf").cast("long").alias("cf"),
+                           F.sum("n_blocks").cast("int").alias("n_blocks"),
+                           F.max("max_tfnorm").alias("max_tfnorm"),
+                           F.min("bound_avgdl").alias("bound_avgdl")))
+        # can't overwrite a path being read → write aside, then swap.
+        # Crash-safe order (ADVICE r2): rename the live dir ASIDE first, then
+        # tmp into place, then drop the aside copy — at no point is the index
+        # without a recoverable lexicon (_recover_lexicon restores from
+        # lexicon_old if a crash lands between the renames). On an object
+        # store / Iceberg this is a snapshot commit instead.
+        lex_tmp = lex_dir + "_tmp"
+        lex_old = lex_dir + "_old"
+        write_index_table(merged_lex, lex_tmp)
+        shutil.rmtree(lex_old, ignore_errors=True)
+        os.rename(lex_dir, lex_old)
+        os.rename(lex_tmp, lex_dir)
+        shutil.rmtree(lex_old, ignore_errors=True)
 
-    write_index_meta(spark, index_dir, ord_span=max_ord + 1 + n_delta,
-                     run_id=run_id)
-    _Ledger(index_dir, run_id).record("merge", n_delta, t0)
-    delta_base.unpersist()
-    spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
-    return {"added": n_delta, "tombstoned": n_tomb,
-            "avgdl": avgdl_by_field}
+        write_index_meta(spark, index_dir, ord_span=max_ord + 1 + n_delta,
+                         run_id=run_id)
+        _Ledger(index_dir, run_id).record("merge", n_delta, t0)
+        return {"added": n_delta, "tombstoned": n_tomb,
+                "avgdl": avgdl_by_field}
 
 
 def compact(index_dir: str, live_corpus: DataFrame, out_dir: str,

@@ -2,8 +2,11 @@
 ``builder.write_index_table`` with zstd pages and no statistics on the
 postings payload columns, while every other column keeps the min/max that
 row-group pruning reads. Indexes written with another codec (Spark's
-default snappy) stay readable and mergeable."""
+default snappy) stay readable and mergeable. Postings follow
+``builder.postings_layout``: a build under ``docs_per_salt`` tokens is one
+term-sorted file, a salted build is range-partitioned on term."""
 
+import hashlib
 import math
 import os
 import shutil
@@ -15,6 +18,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from lucille_spark.corpus import corpus_pdf
+from lucille_spark.query.oracle import OracleIndex
 
 TABLES = ("postings", "lexicon", "doc_stats", "_tombstones", "corpus_stats",
           "_meta", "_lineage")
@@ -24,6 +28,7 @@ QUERIES = ["content:test OR content:giraffe",
            "content:return AND content:import",
            'content:"import test"', "content:if", "content:imp*",
            "content:koala OR content:ident_collide"]
+UPDATED = "zzzupdated content words"
 
 
 def _data_files(table_dir):
@@ -55,30 +60,165 @@ def base_index(spark, tmp_path_factory):
 
 
 @pytest.fixture(scope="module")
-def merged_with_deletes(spark, base_index, tmp_path_factory):
-    """The base index plus a delta of new docs, upserts and deletes."""
+def small_index(spark, tmp_path_factory):
+    """A build of fewer than ``docs_per_salt`` tokens, written with 16 KB
+    row groups so that its one postings file holds many of them."""
+    from lucille_spark.index.builder import build_index
+
+    out = str(tmp_path_factory.mktemp("storage") / "small")
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    before = hconf.get("parquet.block.size")
+    hconf.set("parquet.block.size", str(16 << 10))
+    try:
+        build_index(_frame(spark, range(N_BASE)), out, block_size=32)
+    finally:
+        if before is None:
+            hconf.unset("parquet.block.size")
+        else:
+            hconf.set("parquet.block.size", before)
+    return out
+
+
+def _merge_with_deletes(spark, base, idx, docs_per_salt):
+    """Copy ``base`` to ``idx`` and merge a delta of new docs, 2 upserts
+    and 2 deletes into it."""
     from lucille_spark.index.builder import add_doc_identity
     from lucille_spark.index.merge import merge_index
 
-    idx = str(tmp_path_factory.mktemp("storage") / "deletes")
-    shutil.copytree(base_index, idx)
+    shutil.copytree(base, idx)
     old = corpus_pdf(np.arange(4))
-    old["content"] = "zzzupdated content words"
+    old["content"] = UPDATED
     delta = spark.createDataFrame(pd.concat(
         [corpus_pdf(np.arange(N_BASE, N_BASE + N_NEW)), old.iloc[:2]],
         ignore_index=True))
     gone = add_doc_identity(spark.createDataFrame(old.iloc[2:])) \
         .select("doc_id")
     res = merge_index(delta, idx, deletes=gone, block_size=32,
-                      docs_per_salt=64)
+                      docs_per_salt=docs_per_salt)
     assert res["tombstoned"] == 4
     return idx
 
 
-def test_every_index_table_is_zstd(merged_with_deletes):
+@pytest.fixture(scope="module")
+def merged_with_deletes(spark, base_index, tmp_path_factory):
+    """The salted base index plus a delta of new docs, upserts and
+    deletes."""
+    return _merge_with_deletes(
+        spark, base_index,
+        str(tmp_path_factory.mktemp("storage") / "deletes"), 64)
+
+
+@pytest.fixture(scope="module")
+def small_merged_with_deletes(spark, small_index, tmp_path_factory):
+    return _merge_with_deletes(
+        spark, small_index,
+        str(tmp_path_factory.mktemp("storage") / "small_deletes"), 1 << 17)
+
+
+def _term_ranges(path):
+    """(min, max) term statistics of each row group of a postings file."""
+    md = pq.ParquetFile(path).metadata
+    out = []
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        col = next(rg.column(c) for c in range(md.num_columns)
+                   if rg.column(c).path_in_schema == "term")
+        out.append((col.statistics.min, col.statistics.max))
+    return out
+
+
+def test_small_build_is_one_term_sorted_file(small_index):
+    files = list(_data_files(os.path.join(small_index, "postings")))
+    assert len(files) == 1
+    ranges = _term_ranges(files[0])
+    assert len(ranges) > 1
+    bounds = [t for r in ranges for t in r]
+    assert bounds == sorted(bounds)
+    rows = pq.read_table(files[0], columns=[
+        "field", "term", "salt", "block_seq"]).to_pylist()
+    keys = [(r["field"], r["term"], r["salt"], r["block_seq"])
+            for r in rows]
+    assert keys == sorted(keys)
+
+
+def test_salted_build_keeps_range_layout(base_index):
+    spans = []
+    for path in _data_files(os.path.join(base_index, "postings")):
+        ranges = _term_ranges(path)
+        if ranges:  # a Spark write may add a row-group-less schema file
+            spans.append((min(lo for lo, _ in ranges),
+                          max(hi for _, hi in ranges)))
+    assert len(spans) > 1
+    spans.sort()
+    for (_, hi), (lo, _) in zip(spans, spans[1:]):
+        assert hi < lo, spans
+
+
+def test_postings_layout_routes(spark):
+    """One term-sorted encode partition per field is written as it is;
+    otherwise the write is range-partitioned on (field, term)."""
+    from lucille_spark.index.builder import POSTINGS_SCHEMA, postings_layout
+
+    blocks = spark.createDataFrame(
+        [("content", t, 0, 0, 0, 0, 1, 1, b"", b"", b"", None, 1, 0.5, 1.0)
+         for t in ("a", "b")], POSTINGS_SCHEMA)
+
+    def plan(totals, docs_per_salt):
+        return postings_layout(blocks, ("content",), totals, docs_per_salt) \
+            ._jdf.queryExecution().executedPlan().toString()
+
+    assert "rangepartitioning" not in plan({"content": 64}, 64)
+    assert "rangepartitioning" in plan({"content": 65}, 64)
+    assert "rangepartitioning" in plan({}, 64)  # an unknown total
+
+
+def _doc_id(row):
+    return hashlib.sha256(
+        f"{row.repo}\x00{row.path}\x00{row.commit}".encode()).hexdigest()
+
+
+def _oracle_after_deletes():
+    """OracleIndex over the live docs after :func:`_merge_with_deletes`.
+    The index keeps counting replaced and deleted docs in df until a
+    compaction, as Lucene does, so df comes from the ingest history."""
+    pdf = corpus_pdf(np.arange(N_BASE + N_NEW))
+    new = pdf.iloc[:2].copy()
+    new["content"] = UPDATED
+
+    def index(frame):
+        return OracleIndex([{"id": _doc_id(r), "content": r.content}
+                            for r in frame.itertuples()],
+                           fields=("content",))
+
+    live = index(pd.concat([pdf.iloc[4:], new]))
+    live.df = index(pd.concat([pdf, new])).df
+    return live
+
+
+@pytest.mark.parametrize("route", ["small", "salted"])
+def test_merged_layouts_match_oracle(route, request):
+    from lucille_spark.query.searcher import IndexSearcher
+
+    idx = request.getfixturevalue(
+        {"small": "small_merged_with_deletes",
+         "salted": "merged_with_deletes"}[route])
+    if route == "small":  # the build's file plus the delta's one file
+        assert len(list(_data_files(os.path.join(idx, "postings")))) == 2
+    oracle, searcher = _oracle_after_deletes(), IndexSearcher(idx)
+    for q in QUERIES + [f"content:{UPDATED.split()[0]}"]:
+        got, want = searcher.search(q, 10), oracle.search(q, 10)
+        assert [d for d, _ in got] == [d for d, _ in want], q
+        for (_, gs), (_, ws) in zip(got, want):
+            assert math.isclose(gs, ws, rel_tol=1e-9), q
+
+
+def test_every_index_table_is_zstd(merged_with_deletes,
+                                   small_merged_with_deletes):
     for table in TABLES:
         codecs = set()
-        for path in _data_files(os.path.join(merged_with_deletes, table)):
+        for path in [*_data_files(os.path.join(merged_with_deletes, table)),
+                     *_data_files(os.path.join(small_merged_with_deletes,
+                                               table))]:
             # a Spark write may add a row-group-less file for the schema
             md = pq.ParquetFile(path).metadata
             codecs |= {md.row_group(g).column(c).compression
@@ -87,9 +227,12 @@ def test_every_index_table_is_zstd(merged_with_deletes):
         assert codecs == {"ZSTD"}, (table, codecs)
 
 
-def test_payload_columns_carry_no_statistics(merged_with_deletes):
-    files = list(_data_files(os.path.join(merged_with_deletes, "postings")))
-    for path in files:
+def test_payload_columns_carry_no_statistics(merged_with_deletes,
+                                             small_merged_with_deletes):
+    for path in [
+            *_data_files(os.path.join(merged_with_deletes, "postings")),
+            *_data_files(os.path.join(small_merged_with_deletes,
+                                      "postings"))]:
         md = pq.ParquetFile(path).metadata
         for g in range(md.num_row_groups):
             cols = {md.row_group(g).column(c).path_in_schema:
@@ -129,7 +272,6 @@ def _rewrite_snappy(index_dir):
 
 def test_snappy_index_merges_like_zstd(spark, base_index, tmp_path):
     from lucille_spark.index.builder import add_doc_identity
-    from lucille_spark.query.oracle import OracleIndex
     from lucille_spark.query.searcher import IndexSearcher
 
     zstd_idx, mixed_idx = str(tmp_path / "zstd"), str(tmp_path / "mixed")

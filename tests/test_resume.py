@@ -97,3 +97,53 @@ def test_lineage_metrics_rows(spark, tmp_path):
     assert stages == {"doc_stats", "corpus_stats", "postings", "lexicon"}
     assert (lin.seconds >= 0).all()
     assert (lin.status == "complete").all()
+
+
+def _cache_is_empty(spark):
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize("aqe", ["true", "false"])
+def test_failed_build_restores_session(spark, tmp_path, aqe):
+    """A build that fails leaves AQE as it found it and nothing cached."""
+    import numpy as np
+
+    from lucille_spark.corpus import corpus_pdf
+    from lucille_spark.index.builder import build_index
+
+    corpus = spark.createDataFrame(
+        corpus_pdf(np.arange(20)).drop(columns=["content"]))
+    spark.catalog.clearCache()
+    spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    try:
+        with pytest.raises(Exception, match="content"):
+            build_index(corpus, str(tmp_path / "idx"))
+        assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
+        assert _cache_is_empty(spark)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+
+
+@pytest.mark.parametrize("aqe", ["true", "false"])
+def test_failed_merge_restores_session(spark, tmp_path, aqe):
+    """A merge that fails (its deletes frame has no doc_id column) leaves
+    AQE as it found it and unpersists the delta it had cached."""
+    import numpy as np
+
+    from lucille_spark.corpus import corpus_pdf
+    from lucille_spark.index.builder import build_index
+    from lucille_spark.index.merge import merge_index
+
+    idx = str(tmp_path / "idx")
+    build_index(spark.createDataFrame(corpus_pdf(np.arange(20))), idx)
+    delta = spark.createDataFrame(corpus_pdf(np.arange(20, 25)))
+    bad_deletes = spark.createDataFrame([("x",)], "id string")
+    spark.catalog.clearCache()
+    spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    try:
+        with pytest.raises(Exception, match="doc_id"):
+            merge_index(delta, idx, deletes=bad_deletes)
+        assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
+        assert _cache_is_empty(spark)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")

@@ -33,7 +33,7 @@ def main():
     from lucille_spark import gate
     from lucille_spark.corpus import documents_as_corpus
     from lucille_spark.index.builder import (
-        add_doc_identity, build_index, postings_blocks)
+        add_doc_identity, build_index, postings_blocks, postings_layout)
     from lucille_spark.query.executor_df import search_batch
     from lucille_spark.session import get_spark
 
@@ -65,13 +65,20 @@ def main():
     n, total = docs.agg(F.count("*"), F.sum("dl_content")).first()
     # build_index and merge_index plan these with AQE off
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    postings = [explain(postings_blocks(
-        docs, ("content",), {"content": total / n}, n,
-        docs_per_salt=dps, totals_by_field={"content": total}))
-        for dps in (total - 1, total)]
+    postings = []
+    for dps in (total - 1, total):
+        totals = {"content": total}
+        blocks = postings_blocks(
+            docs, ("content",), {"content": total / n}, n,
+            docs_per_salt=dps, totals_by_field=totals)
+        postings.append(explain(
+            postings_layout(blocks, ("content",), totals, dps)))
     spark.conf.set("spark.sql.adaptive.enabled", "true")
+    assert "rangepartitioning" in postings[0]
+    assert "rangepartitioning" not in postings[1]
     sections.append((
-        "Index build: postings pipeline (postings_blocks)",
+        "Index build: postings pipeline and range write (postings_blocks, "
+        "postings_layout)",
         "The token explode is narrow and whole-stage codegen'd. The hot-term "
         "cf aggregate combines map-side and is broadcast-joined, so it adds "
         "no corpus-sized shuffle. The ONE corpus-sized exchange is "
@@ -81,17 +88,26 @@ def main():
         "occurrences and carries the last group of each batch into the "
         "next. No FlatMapGroupsInPandas and no per-group Python call. "
         "Shown with docs_per_salt just under the field's token total, so "
-        "the token-total rule picks the shuffle-partition route. The "
-        "doc_ord assignment below the explode (ordinals.py: count, window) "
-        "is the docs cache that build_index persists and reuses.",
+        "the token-total rule picks the shuffle-partition route, and the "
+        "write (postings_layout) adds Exchange rangepartitioning(field, "
+        "term, max(defaultParallelism, 8)) -> Sort [field, term, salt, "
+        "block_seq]: one term range per file. That range exchange runs a "
+        "boundary-sampling job, which is why build_index persists the "
+        "encoded blocks between the two (the persist is left out here so "
+        "the whole pipeline shows in one plan). The doc_ord assignment "
+        "below the explode (ordinals.py: count, window) is the docs cache "
+        "that build_index persists and reuses.",
         postings[0]))
     sections.append((
-        "Merge micro-batch: postings pipeline (one partition)",
-        "The same plan when the field's token total is <= docs_per_salt "
+        "Small build and merge micro-batch: one term-sorted partition, "
+        "written as it is",
+        "The same plan when every field's token total is <= docs_per_salt "
         "(builder.encode_partitions): no hot-term job, and the exchange is "
         "SinglePartition -> Sort [term] (salt is the constant 0) -> "
-        "MapInArrow, so merge "
-        "appends the delta's blocks as one term-sorted file.",
+        "MapInArrow. postings_layout writes that output as it is: no "
+        "rangepartitioning exchange and no Sort above the MapInArrow, so "
+        "build_index writes the postings as one term-sorted file and "
+        "merge_index appends the delta's blocks as one file.",
         postings[1]))
 
     sections.append((
