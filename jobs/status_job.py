@@ -4,7 +4,9 @@ tracks run ids, in-flight status and run history; our runs checkpoint into
 the per-index ``_lineage`` parquet table instead of an in-memory map, so
 status survives the driver).
 
-Driver-side pyarrow reads only — no Spark session needed:
+The summary is the latest version manifest (``_meta/<version>.json``):
+its version, run_id, analyzer and data files per table. Driver-side reads
+only — no Spark session needed:
 
     python jobs/status_job.py --index /path/to/index             # summary
     python jobs/status_job.py --index /path/to/index --runs      # history
@@ -35,16 +37,17 @@ def read_table(path):
 
 
 def gather(index_dir: str) -> dict:
+    import pyarrow.parquet as pq
+
+    from lucille_spark.index import snapshot
+
     lineage = read_table(os.path.join(index_dir, "_lineage"))
     lineage.sort(key=lambda r: r.get("finished_at") or 0.0)
     runs: dict = {}
     for r in lineage:
         runs.setdefault(r["run_id"], []).append(r)
-    meta = read_table(os.path.join(index_dir, "_meta"))
-    meta_row = (max(meta, key=lambda r: r.get("updated_at", 0.0))
-                if meta else None)
-    stats = read_table(os.path.join(index_dir, "corpus_stats"))
-    tombs = read_table(os.path.join(index_dir, "_tombstones"))
+    m = snapshot.latest(index_dir) or {"stats": {}, "files": {}}
+    stats = m["stats"]
     return {
         "index_dir": index_dir,
         "runs": {
@@ -61,11 +64,16 @@ def gather(index_dir: str) -> dict:
             for rid, rows in runs.items()
         },
         "latest_run": lineage[-1]["run_id"] if lineage else None,
-        "version": meta_row["version"] if meta_row else None,
-        "ord_span": meta_row["ord_span"] if meta_row else None,
-        "live_docs": stats[0]["n_docs"] if stats else None,
-        "tombstones": len(tombs),
-        "fields": [r["field"] for r in stats],
+        "version": m.get("version"),
+        "run_id": m.get("run_id"),
+        "analyzer": m.get("analyzer"),
+        "ord_span": m.get("ord_span"),
+        "live_docs": next(iter(stats.values()))["n_docs"] if stats else None,
+        "tombstones": sum(
+            pq.ParquetFile(os.path.join(index_dir, "_tombstones", name))
+            .metadata.num_rows for name in m["files"].get("_tombstones", ())),
+        "fields": sorted(stats),
+        "files": {t: len(names) for t, names in m["files"].items()},
     }
 
 
@@ -73,8 +81,9 @@ def table_bytes(index_dir: str) -> dict:
     """Where the index's bytes go, from parquet metadata alone: per table
     its data files, bytes, footer bytes (the serialized file metadata),
     page codecs, and per column the compressed and uncompressed bytes
-    summed over row groups. Hidden and underscore files (checksums,
-    _SUCCESS markers, in-flight writes) are not data files."""
+    summed over row groups. Only ``.parquet`` files count: hidden and
+    underscore files (checksums, _SUCCESS markers, in-flight writes) and
+    the JSON manifests are not data files."""
     import pyarrow.parquet as pq
 
     out = {}
@@ -86,7 +95,8 @@ def table_bytes(index_dir: str) -> dict:
              "columns": {}}
         for dirpath, _, names in os.walk(tdir):
             for name in sorted(names):
-                if name.startswith((".", "_")):
+                if (name.startswith((".", "_"))
+                        or not name.endswith(".parquet")):
                     continue
                 path = os.path.join(dirpath, name)
                 md = pq.ParquetFile(path).metadata
@@ -153,7 +163,10 @@ def main():
     else:
         latest = st["runs"].get(st["latest_run"], {})
         print(f"index       : {st['index_dir']}")
-        print(f"version     : {st['version']}")
+        print(f"version     : {st['version']}  (run_id={st['run_id']}, "
+              f"analyzer={st['analyzer']})")
+        print("files       : " + ", ".join(
+            f"{t}={n}" for t, n in st["files"].items()))
         print(f"live docs   : {st['live_docs']}  "
               f"(ord_span={st['ord_span']}, tombstones={st['tombstones']})")
         print(f"fields      : {','.join(st['fields'])}")

@@ -320,7 +320,7 @@ ORDER BY raw_score DESC, doc_id LIMIT 10
 
 def _gate_index_dir(sf_dir: str) -> str:
     tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:10]
-    return os.path.join(tempfile.gettempdir(), f"lucille_gate_idx_v3_{tag}")
+    return os.path.join(tempfile.gettempdir(), f"lucille_gate_idx_v4_{tag}")
 
 
 def _ensure_gate_index(spark, sf_dir: str) -> str:

@@ -29,19 +29,23 @@ Dataflow (all DataFrame; Python appears only in Arrow-vectorized UDFs):
                                                           no exchange]
     -> lexicon = blocks.groupBy(field,term).agg(...)     [tiny shuffle]
 
-Output tables (parquet dir layout; Iceberg would add snapshots, the layout
-is Iceberg-compatible), every one written by :func:`write_index_table`:
-zstd pages, no statistics on the opaque postings payload columns
-(doc_gaps, tfs, dls, positions), min/max kept on every other column:
+Output tables (parquet dir layout), every one written by
+:func:`write_index_table`: zstd pages, no statistics on the opaque postings
+payload columns (doc_gaps, tfs, dls, positions), min/max kept on every
+other column:
   postings/      term-sorted, row-group pruning serves point lookups:
                  one file per field when every field has <= docs_per_salt
                  tokens, else range-partitioned on (field, term) into
                  max(defaultParallelism, 8) files; merges append files
                  by the same rule (:func:`postings_layout`)
-  lexicon/       (field,term,df,cf,n_blocks,max_tfnorm)
+  lexicon/       (field,term,df,cf,n_blocks,max_tfnorm,bound_avgdl),
+                 sorted by (field, term) within each file
   doc_stats/     (doc_id,doc_ord,dl_<field>...,repo,path,commit,lang,content_sha256)
-  corpus_stats/  (field,n_docs,avgdl,total_terms)
-  _meta/         (ord_span,version,updated_at)
+  _meta/         one JSON manifest per version (:mod:`snapshot`): the
+                 files of every table that version sees, its ord_span,
+                 analyzer and per-field corpus stats (n_docs, avgdl,
+                 total_terms). Publishing it is the commit; readers open
+                 exactly the files it lists.
   _lineage/      per-stage build provenance (checkpoint/resume)
 Merges add _tombstones/ (doc_ord) through the same writer.
 
@@ -53,7 +57,6 @@ fit anywhere near the query path.
 from __future__ import annotations
 
 import os
-import shutil
 import time
 import uuid
 from contextlib import contextmanager
@@ -70,7 +73,7 @@ from pyspark.sql import functions as F
 from lucille_spark import BLOCK_SIZE, BM25_B, BM25_K1
 from lucille_spark.analysis import tokenize_col
 from lucille_spark.analysis.analyzers import tokenize_code_col
-from lucille_spark.index import codecs
+from lucille_spark.index import codecs, snapshot
 from lucille_spark.index.ordinals import assign_doc_ord
 
 POSTINGS_SCHEMA = (
@@ -86,7 +89,7 @@ POSTINGS_SCHEMA = (
 PAYLOAD_COLUMNS = ("doc_gaps", "tfs", "dls", "positions")
 
 
-def write_index_table(data, path: str, mode: str = "overwrite") -> None:
+def write_index_table(data, path: str, mode: str = "overwrite") -> list:
     """The one writer of every index table, so every table gets the same
     parquet options whatever the session config says: zstd pages, and no
     min/max or size statistics on the :data:`PAYLOAD_COLUMNS`. Every other
@@ -96,11 +99,13 @@ def write_index_table(data, path: str, mode: str = "overwrite") -> None:
     another codec (Spark's default snappy) stays readable and mergeable.
 
     ``data`` is a Spark DataFrame, or a pyarrow Table for the TINY
-    metadata tables (_meta, _lineage, corpus_stats — a handful of rows
-    each). Launching a Spark job for a 1-row table costs ~0.3-0.5 s of
-    scheduling per write and several such writes ride on every build/
-    merge; at any scale these tables are driver-sized by construction, so
-    pyarrow writes them directly."""
+    ``_lineage`` rows, which pyarrow appends directly: launching a Spark
+    job for a 1-row table costs ~0.3-0.5 s of scheduling per write.
+
+    Returns the names of the data files the write added, from a listing
+    of ``path`` before and after it: what a commit lists for the table
+    (:mod:`snapshot`)."""
+    before = snapshot.data_files(path)
     if not isinstance(data, pa.Table):
         w = (data.write.mode(mode).option("compression", "zstd")
              .option("parquet.column.statistics.enabled", "true")
@@ -110,39 +115,16 @@ def write_index_table(data, path: str, mode: str = "overwrite") -> None:
                 w = w.option(f"parquet.column.statistics.enabled#{col}",
                              "false")
         w.parquet(path)
-        return
-    if mode == "overwrite":
-        shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path, exist_ok=True)
-    # write-then-rename: pyarrow dataset discovery ignores dot-prefixed
-    # files, and rename is atomic, so a concurrent reader never sees a
-    # half-written footer (it saw exactly that in the round-4 merge/
-    # reader stress test: "Parquet magic bytes not found")
-    name = f"part-{uuid.uuid4().hex}.parquet"
-    tmp = os.path.join(path, "." + name)
-    pq.write_table(data, tmp, compression="zstd", write_statistics=[
-        c for c in data.column_names if c not in PAYLOAD_COLUMNS])
-    os.rename(tmp, os.path.join(path, name))
-
-
-def read_small_table(path: str) -> list:
-    """Driver-side read of a tiny metadata table as a list of row dicts
-    (no Spark job); raises FileNotFoundError when the table is absent."""
-    return ds.dataset(path, ignore_prefixes=[".", "_"]).to_table().to_pylist()
-
-
-def write_index_meta(spark: SparkSession, out_dir: str, ord_span: int,
-                     run_id: str) -> None:
-    """Overwrite the 1-row ``_meta`` table: the ordinal span (NOT-complement
-    universe for the searcher — includes tombstoned ordinals) and a version
-    stamp that invalidates per-worker searcher caches after any build/merge
-    (executor_df.search_batch keys its cache on it)."""
-    now = time.time()
-    write_index_table(pa.table({
-        "ord_span": pa.array([int(ord_span)], pa.int64()),
-        "version": pa.array([f"{run_id}@{now:.6f}"], pa.string()),
-        "updated_at": pa.array([float(now)], pa.float64()),
-    }), os.path.join(out_dir, "_meta"))
+    else:
+        os.makedirs(path, exist_ok=True)
+        # write-then-rename: listings ignore dot-prefixed files, and
+        # rename is atomic, so no reader sees a half-written footer
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(path, "." + name)
+        pq.write_table(data, tmp, compression="zstd", write_statistics=[
+            c for c in data.column_names if c not in PAYLOAD_COLUMNS])
+        os.rename(tmp, os.path.join(path, name))
+    return sorted(snapshot.data_files(path) - before)
 
 
 def add_doc_identity(corpus: DataFrame) -> DataFrame:
@@ -498,8 +480,11 @@ def build_index(
     """
     spark = corpus.sparkSession
     ledger = _Ledger(out_dir, run_id)
-    if resume and ledger.done("lexicon"):
-        return _read_stats(out_dir)
+    if resume and ledger.done("lexicon"):  # recorded once published
+        stats = snapshot.load(out_dir)["stats"]
+        return {"n_docs": stats[fields[0]]["n_docs"],
+                "avgdl": {f: stats[f]["avgdl"] for f in fields},
+                "fields": list(fields), "out_dir": out_dir}
 
     with _job_scope(spark) as cache:
         # Input-skew guard (guide §2.5: one big unsplittable file →
@@ -525,7 +510,7 @@ def build_index(
                 f"dl_{f_name}", F.size(tok_fn(F.col(f_name))).cast("long"))
         docs = cache(docs)
 
-        # --- doc_stats + corpus_stats -----------------------------------
+        # --- doc_stats + corpus stats ------------------------------------
         stat_cols = ["doc_id", "doc_ord"] + [f"dl_{f}" for f in fields] + [
             c for c in ("repo", "path", "commit", "lang")
             if c in corpus.columns] + ["content_sha256"]
@@ -549,29 +534,18 @@ def build_index(
         ident.unpersist()
 
         t_stage = time.time()
-        if resume and ledger.done("corpus_stats"):
-            cs = read_small_table(os.path.join(out_dir, "corpus_stats"))
-            n_docs = int(cs[0]["n_docs"]) if cs else 0
-            avgdl_by_field = {r["field"]: r["avgdl"] for r in cs}
-            totals = {r["field"]: int(r["total_terms"]) for r in cs}
-        else:
-            # metrics observed during the doc_stats write; the separate agg
-            # job remains only for the resume path that skipped that write
-            agg = obs.get if obs is not None else docs.agg(
-                F.count("*").alias("n"),
-                *[F.sum(f"dl_{f}").alias(f"total_{f}")
-                  for f in fields]).collect()[0]
-            n_docs = int(agg["n"])
-            cs_rows = []
-            for f_name in fields:
-                total = int(agg[f"total_{f_name}"] or 0)
-                # exact integer sum / count: avgdl bit-identical at any
-                # parallelism
-                cs_rows.append((f_name, n_docs,
-                                total / n_docs if n_docs else 0.0, total))
-            write_corpus_stats(os.path.join(out_dir, "corpus_stats"), cs_rows)
-            avgdl_by_field = {r[0]: r[2] for r in cs_rows}
-            totals = {r[0]: r[3] for r in cs_rows}
+        # metrics observed during the doc_stats write; the separate agg job
+        # runs only on the resume path that skipped that write
+        agg = obs.get if obs is not None else docs.agg(
+            F.count("*").alias("n"),
+            *[F.sum(f"dl_{f}").alias(f"total_{f}")
+              for f in fields]).collect()[0]
+        n_docs = int(agg["n"])
+        totals = {f: int(agg[f"total_{f}"] or 0) for f in fields}
+        # exact integer sum / count: avgdl bit-identical at any parallelism
+        avgdl_by_field = {f: totals[f] / n_docs if n_docs else 0.0
+                          for f in fields}
+        if not (resume and ledger.done("corpus_stats")):
             ledger.record("corpus_stats", n_docs, t_stage)
 
         # --- postings per field (ONE corpus-sized shuffle per field) ------
@@ -597,6 +571,8 @@ def build_index(
             ledger.record("postings", -1, t_stage)
         lexicon_src = (all_blocks if not skip_postings else
                        spark.read.parquet(os.path.join(out_dir, "postings")))
+        # sorted within each file, so row-group min/max on term prunes
+        # lookups (no extra job: the sort rides the aggregate's stage)
         lexicon = (
             lexicon_src.groupBy("field", "term")
             .agg(F.sum("n_docs").cast("long").alias("df"),
@@ -604,12 +580,23 @@ def build_index(
                  F.count("*").cast("int").alias("n_blocks"),
                  F.max("block_max_tfnorm").alias("max_tfnorm"),
                  F.min("bound_avgdl").alias("bound_avgdl"))
+            .sortWithinPartitions("field", "term")
         )
         t_stage = time.time()
         write_index_table(lexicon, os.path.join(out_dir, "lexicon"))
-        ledger.record("lexicon", n_docs, t_stage)
 
-        write_index_meta(spark, out_dir, ord_span=n_docs, run_id=run_id)
+        # the commit: every table was overwritten (or, resumed, written by
+        # this run), so its directory holds exactly this version's files.
+        # A build over an existing index publishes the version after it.
+        snapshot.publish(
+            out_dir, snapshot.latest(out_dir), run_id=run_id, ord_span=n_docs,
+            analyzer=analyzer,
+            stats={f: {"n_docs": n_docs, "avgdl": avgdl_by_field[f],
+                       "total_terms": totals[f]} for f in fields},
+            files={t: snapshot.data_files(os.path.join(out_dir, t))
+                   for t in ("postings", "lexicon", "doc_stats")},
+            added=n_docs, tombstoned=0)
+        ledger.record("lexicon", n_docs, t_stage)
         return {"n_docs": n_docs, "avgdl": avgdl_by_field,
                 "fields": list(fields), "out_dir": out_dir}
 
@@ -621,25 +608,17 @@ def build_index(
 # (connector/FileConnectorStateManager.java:1-315). Granularity here is the
 # STAGE (each stage's parquet overwrite is atomic via the commit protocol);
 # WITHIN a stage, per-partition recovery is Spark's native task retry.
-# ``resume=True`` + same run_id skips stages whose lineage row is complete.
-
-
-def write_corpus_stats(path: str, cs_rows) -> None:
-    """cs_rows: [(field, n_docs, avgdl, total_terms), ...]."""
-    write_index_table(pa.table({
-        "field": pa.array([r[0] for r in cs_rows], pa.string()),
-        "n_docs": pa.array([int(r[1]) for r in cs_rows], pa.int64()),
-        "avgdl": pa.array([float(r[2]) for r in cs_rows], pa.float64()),
-        "total_terms": pa.array([int(r[3]) for r in cs_rows], pa.int64()),
-    }), path)
+# ``resume=True`` + same run_id skips stages whose lineage row is complete,
+# and the whole build once its manifest is published.
 
 
 class _Ledger:
     def __init__(self, out_dir: str, run_id: str):
         self.run_id = run_id
         self.path = os.path.join(out_dir, "_lineage")
-        try:
-            rows = read_small_table(self.path)
+        try:  # driver-side pyarrow read of the tiny table, no Spark job
+            rows = ds.dataset(self.path, ignore_prefixes=[".", "_"]) \
+                .to_table().to_pylist()
         except FileNotFoundError:
             rows = []  # first run on this index
         self.done_stages = {r["stage"] for r in rows
@@ -662,9 +641,3 @@ class _Ledger:
         }), self.path, mode="append")
         self.done_stages.add(stage)
 
-
-def _read_stats(out_dir: str) -> dict:
-    cs = read_small_table(os.path.join(out_dir, "corpus_stats"))
-    return {"n_docs": cs[0]["n_docs"] if cs else 0,
-            "avgdl": {r["field"]: r["avgdl"] for r in cs},
-            "fields": [r["field"] for r in cs], "out_dir": out_dir}

@@ -10,8 +10,16 @@ Mechanics (Lucene-segment-like):
   after existing blocks per term — append-only postings, no rewrite.
 - superseded ordinals (upserts) and deleted doc_ids become tombstones;
   the searcher excludes them everywhere. As in Lucene, corpus statistics
-  keep counting tombstoned postings until compaction; corpus_stats
-  (N, avgdl) however track LIVE docs exactly.
+  keep counting tombstoned postings until compaction; the manifest's
+  corpus stats (N, avgdl) however track LIVE docs exactly.
+- one commit point (snapshot.py): the merge reads the latest manifest's
+  files, stages its postings/doc_stats/tombstones appends and a new set
+  of lexicon files, and publishes the next manifest. A crash before the
+  publish leaves the previous version exactly as it was; the retry
+  ignores the crashed attempt's unlisted files. A merge with the run_id
+  of the latest manifest is a replay: it returns that commit's counts
+  and writes nothing. Delta docs are tokenized with the analyzer the
+  manifest records.
 - avgdl drift safety: blocks record the avgdl their score bounds were
   computed with (``bound_avgdl``); the reader scales bounds by
   max(1, avgdl_now/bound_avgdl) — provably an upper bound (mediant
@@ -22,8 +30,8 @@ Mechanics (Lucene-segment-like):
 from __future__ import annotations
 
 import os
-import shutil
 import time
+import uuid
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -31,14 +39,13 @@ from pyspark.sql import functions as F
 
 from lucille_spark import BLOCK_SIZE
 from lucille_spark.analysis import tokenize_col
+from lucille_spark.analysis.analyzers import tokenize_code_col
+from lucille_spark.index import snapshot
 from lucille_spark.index.builder import (
     _job_scope, _Ledger, add_doc_identity, postings_blocks, postings_layout,
-    read_small_table, write_corpus_stats, write_index_meta, write_index_table,
+    write_index_table,
 )
 from lucille_spark.index.ordinals import assign_doc_ord
-
-
-from lucille_spark.index.reader import recover_lexicon as _recover_lexicon
 
 
 def merge_index(
@@ -49,7 +56,7 @@ def merge_index(
     store_positions: bool = True,
     block_size: int = BLOCK_SIZE,
     docs_per_salt: int = 1 << 17,
-    run_id: str = "merge-0",
+    run_id: Optional[str] = None,
     order_col: Optional[str] = None,
 ) -> dict:
     """Upsert ``new_corpus`` rows (and apply ``deletes``) into the index.
@@ -59,28 +66,28 @@ def merge_index(
     double postings): last write wins by ``order_col`` when given (a source
     offset/sequence column — Indexer.java sendToIndex order), else by a
     deterministic content_sha256 tiebreak.
+
+    ``run_id`` None means a fresh id. With the run_id of the latest
+    manifest the call is a replay (a re-run micro-batch): it returns that
+    commit's ``added``/``tombstoned`` and writes nothing.
     """
     spark = new_corpus.sparkSession
-    _recover_lexicon(index_dir)
+    base = snapshot.load(index_dir)
+    old_stats = base["stats"]
+    if run_id == base["run_id"]:
+        return {"added": base["added"], "tombstoned": base["tombstoned"],
+                "avgdl": {f: old_stats[f]["avgdl"] for f in fields}}
+    run_id = run_id or f"merge-{uuid.uuid4().hex[:12]}"
+    tok_fn = (tokenize_code_col if base["analyzer"] == "code"
+              else tokenize_col)
     with _job_scope(spark) as cache:
         t0 = time.time()
 
-        # corpus_stats is a driver-written handful-of-rows table: read it
-        # driver-side — launching a Spark job costs ~0.3-0.5 s of scheduling
-        # per micro-batch for a 1-row read
-        old_stats = {r["field"]: r for r in read_small_table(
-            os.path.join(index_dir, "corpus_stats"))}
-        doc_stats = spark.read.parquet(os.path.join(index_dir, "doc_stats"))
-        # ordinal high-water mark from _meta (1-row read) — scanning the
-        # corpus-sized doc_stats for max(doc_ord) on every microbatch is the
-        # kind of O(index) step this path must not have
-        from lucille_spark.index.reader import read_meta
-
-        meta = read_meta(index_dir)
-        if meta is not None:
-            max_ord = int(meta["ord_span"]) - 1
-        else:
-            max_ord = doc_stats.agg(F.max("doc_ord")).collect()[0][0] or -1
+        # everything old comes from the manifest: the corpus stats, the
+        # ordinal high-water mark, and exactly the files of its version
+        doc_stats = spark.read.parquet(
+            *snapshot.paths(index_dir, base, "doc_stats"))
+        max_ord = base["ord_span"] - 1
 
         # delta rows (ordinals attached AFTER the stats job below, so the
         # batch size can pick the cheap ordinal path)
@@ -93,30 +100,28 @@ def merge_index(
         for f_name in fields:
             delta = delta.withColumn(
                 f"dl_{f_name}",
-                F.size(tokenize_col(F.col(f_name))).cast("long"))
+                F.size(tok_fn(F.col(f_name))).cast("long"))
         delta = cache(delta)
 
         # tombstones: superseded versions of upserted ids + explicit
         # deletes. Only LIVE rows are tombstoned: doc_stats is append-only,
         # so a doc_id upserted twice has a dead row whose ordinal is ALREADY
         # in _tombstones — counting it again would re-subtract its dl and
-        # corrupt corpus_stats (n_docs/avgdl and hence every idf).
+        # corrupt the corpus stats (n_docs/avgdl and hence every idf).
         # Anti-join the existing tombstones.
         gone_ids = delta.select("doc_id")
         if deletes is not None:
             gone_ids = gone_ids.unionByName(deletes.select("doc_id"))
-        tomb_dir = os.path.join(index_dir, "_tombstones")
+        tomb_paths = snapshot.paths(index_dir, base, "_tombstones")
         live_stats = doc_stats
-        if os.path.exists(tomb_dir):
-            dead = spark.read.parquet(tomb_dir).select("doc_ord").distinct()
+        if tomb_paths:
+            dead = spark.read.parquet(*tomb_paths).select("doc_ord").distinct()
             live_stats = doc_stats.join(dead, "doc_ord", "left_anti")
-        # localCheckpoint: the doc_stats append below invalidates any cached
-        # plan that reads the doc_stats path, and a recompute after the append
-        # would see the delta's fresh rows and tombstone them — checkpointing
-        # severs the lineage so the pre-append snapshot is final. LAZY
-        # (eager=False): the combined stats job below is the first action, so
-        # materializing here would just spend an extra Spark job per
-        # micro-batch on the same work (guide §1.2: fewer passes).
+        # localCheckpoint: the tombstones feed the stats job and their own
+        # write below; checkpointing makes both see one materialization.
+        # LAZY (eager=False): the combined stats job below is the first
+        # action, so materializing here would just spend an extra Spark job
+        # per micro-batch on the same work (guide §1.2: fewer passes).
         tombs = (live_stats.join(F.broadcast(gone_ids.distinct()), "doc_id")
                  .select("doc_ord", *[f"dl_{f}" for f in fields])
                  ).localCheckpoint(eager=False)
@@ -154,7 +159,7 @@ def merge_index(
                                  F.col("doc_ord") + F.lit(max_ord + 1))
 
         # live corpus stats: subtract tombstoned dls, add delta dls
-        cs_rows, avgdl_by_field = [], {}
+        stats, avgdl_by_field = {}, {}
         for f_name in fields:
             dead_total = int(tomb_agg[f"total_{f_name}"] or 0)
             live_n = int(old_stats[f_name]["n_docs"]) - n_tomb + n_delta
@@ -162,7 +167,8 @@ def merge_index(
                           + int(agg[f"total_{f_name}"] or 0))
             avgdl = live_total / live_n if live_n else 0.0
             avgdl_by_field[f_name] = avgdl
-            cs_rows.append((f_name, live_n, avgdl, live_total))
+            stats[f_name] = {"n_docs": live_n, "avgdl": avgdl,
+                             "total_terms": live_total}
 
         # delta postings appended; blocks carry bound_avgdl = avgdl_new.
         # Persisted so the incremental lexicon below aggregates the DELTA
@@ -175,25 +181,28 @@ def merge_index(
         totals = {f: int(agg[f"total_{f}"] or 0) for f in fields}
         blocks = cache(postings_blocks(
             delta, fields, avgdl_by_field, ord_span=max_ord + 1 + n_delta,
-            block_size=block_size, docs_per_salt=docs_per_salt,
-            store_positions=store_positions, totals_by_field=totals))
-        write_index_table(
-            postings_layout(blocks, fields, totals, docs_per_salt),
-            os.path.join(index_dir, "postings"), mode="append")
+            tok_fn=tok_fn, block_size=block_size,
+            docs_per_salt=docs_per_salt, store_positions=store_positions,
+            totals_by_field=totals))
+
+        files = dict(base["files"])
+
+        def append(data, table):
+            """Stage ``data`` as new files of ``table``, which the new
+            manifest lists after the old ones."""
+            files[table] = files[table] + write_index_table(
+                data, os.path.join(index_dir, table), mode="append")
+
+        append(postings_layout(blocks, fields, totals, docs_per_salt),
+               "postings")
 
         # append doc_stats rows for the delta
         stat_cols = ["doc_id", "doc_ord"] + [f"dl_{f}" for f in fields] + [
             c for c in ("repo", "path", "commit", "lang")
             if c in new_corpus.columns] + ["content_sha256"]
-        write_index_table(delta.select(*stat_cols),
-                          os.path.join(index_dir, "doc_stats"), mode="append")
-
-        # tombstones + corpus_stats + lexicon rebuild (tiny agg over postings)
+        append(delta.select(*stat_cols), "doc_stats")
         if n_tomb:
-            write_index_table(tombs.select("doc_ord"),
-                              os.path.join(index_dir, "_tombstones"),
-                              mode="append")
-        write_corpus_stats(os.path.join(index_dir, "corpus_stats"), cs_rows)
+            append(tombs.select("doc_ord"), "_tombstones")
 
         # incremental lexicon: aggregate the DELTA blocks only and fold into
         # the existing lexicon (df/cf/n_blocks are additive across blocks,
@@ -206,32 +215,28 @@ def merge_index(
                           F.count("*").cast("long").alias("n_blocks"),
                           F.max("block_max_tfnorm").alias("max_tfnorm"),
                           F.min("bound_avgdl").alias("bound_avgdl")))
-        lex_dir = os.path.join(index_dir, "lexicon")
-        old_lex = spark.read.parquet(lex_dir).withColumn(
+        old_lex = spark.read.parquet(
+            *snapshot.paths(index_dir, base, "lexicon")).withColumn(
             "n_blocks", F.col("n_blocks").cast("long"))
+        # a new set of lexicon files, as many as the version it replaces
+        # and each sorted by (field, term), so row-group min/max on term
+        # prunes lookups: coalesce and the sort are narrow, no new job
         merged_lex = (old_lex.unionByName(delta_lex)
                       .groupBy("field", "term")
                       .agg(F.sum("df").cast("long").alias("df"),
                            F.sum("cf").cast("long").alias("cf"),
                            F.sum("n_blocks").cast("int").alias("n_blocks"),
                            F.max("max_tfnorm").alias("max_tfnorm"),
-                           F.min("bound_avgdl").alias("bound_avgdl")))
-        # can't overwrite a path being read → write aside, then swap.
-        # Crash-safe order (ADVICE r2): rename the live dir ASIDE first, then
-        # tmp into place, then drop the aside copy — at no point is the index
-        # without a recoverable lexicon (_recover_lexicon restores from
-        # lexicon_old if a crash lands between the renames). On an object
-        # store / Iceberg this is a snapshot commit instead.
-        lex_tmp = lex_dir + "_tmp"
-        lex_old = lex_dir + "_old"
-        write_index_table(merged_lex, lex_tmp)
-        shutil.rmtree(lex_old, ignore_errors=True)
-        os.rename(lex_dir, lex_old)
-        os.rename(lex_tmp, lex_dir)
-        shutil.rmtree(lex_old, ignore_errors=True)
+                           F.min("bound_avgdl").alias("bound_avgdl"))
+                      .coalesce(max(len(base["files"]["lexicon"]), 1))
+                      .sortWithinPartitions("field", "term"))
+        files["lexicon"] = write_index_table(
+            merged_lex, os.path.join(index_dir, "lexicon"), mode="append")
 
-        write_index_meta(spark, index_dir, ord_span=max_ord + 1 + n_delta,
-                         run_id=run_id)
+        snapshot.publish(
+            index_dir, base, run_id=run_id, ord_span=max_ord + 1 + n_delta,
+            analyzer=base["analyzer"], stats=stats, files=files,
+            added=n_delta, tombstoned=n_tomb)
         _Ledger(index_dir, run_id).record("merge", n_delta, t0)
         return {"added": n_delta, "tombstoned": n_tomb,
                 "avgdl": avgdl_by_field}

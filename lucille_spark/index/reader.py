@@ -1,17 +1,19 @@
 """Driver-side index reader: lexicon lookups + lazily-decoded block cursors.
 
-Reads the parquet tables written by ``builder.build_index`` through
-pyarrow.dataset with predicate pushdown (term-sorted layout → row-group
-pruning), so a single-query lookup touches only the row groups holding the
-query's terms — no Spark job, millisecond-scale latency. This is the moral
-equivalent of Lucene's term dictionary + skip lists, which the reference
-gets by delegating to Solr/ES (SURVEY.md §2.9).
+Opens one index version, the latest manifest (``snapshot.load``), and
+reads exactly the parquet files it lists through pyarrow.dataset with
+predicate pushdown (term-sorted layout → row-group pruning), so a
+single-query lookup touches only the row groups holding the query's terms
+— no Spark job, millisecond-scale latency. This is the moral equivalent of
+Lucene's term dictionary + skip lists, which the reference gets by
+delegating to Solr/ES (SURVEY.md §2.9). The corpus stats, ordinal span and
+version come from the manifest; a concurrent merge's files stay unseen
+until its manifest is published, and the reader keeps its own version.
 """
 
 from __future__ import annotations
 
 import math
-import os
 import re
 from typing import Dict, List, Optional
 
@@ -19,146 +21,26 @@ import numpy as np
 import pyarrow.dataset as ds
 
 from lucille_spark import BM25_B, BM25_K1
-from lucille_spark.index import codecs
+from lucille_spark.index import codecs, snapshot
 
 SENTINEL = 1 << 62
-
-
-def recover_lexicon(index_dir: str) -> None:
-    """WRITER-ONLY recovery from a crash mid lexicon swap (merge_index
-    writes aside as ``lexicon_old`` before renaming the new dir in): if
-    ``lexicon`` is missing but ``lexicon_old`` exists, restore it; a
-    leftover ``lexicon_old`` NEXT TO a live ``lexicon`` is post-swap
-    debris and is dropped. Only merge_index (which holds the write role)
-    may call this — readers must never mutate the index dir, or a reader
-    opening during a live merge's swap window would rename lexicon_old
-    back and break the merge's final rename (ENOTEMPTY with the delta
-    terms already on disk). Renames are guarded: a concurrent writer may
-    have completed the same step first."""
-    import shutil
-
-    lex_dir = os.path.join(index_dir, "lexicon")
-    lex_old = lex_dir + "_old"
-    if not os.path.exists(lex_old):
-        return
-    if os.path.exists(lex_dir):
-        shutil.rmtree(lex_old, ignore_errors=True)
-    else:
-        try:
-            os.rename(lex_old, lex_dir)
-        except OSError:
-            # another recovery finished the rename between our existence
-            # check and the rename — the lexicon is live either way
-            if not os.path.exists(lex_dir):
-                raise
-    shutil.rmtree(lex_dir + "_tmp", ignore_errors=True)
-
-
-def _open_lexicon_readonly(index_dir: str):
-    """Open the lexicon WITHOUT mutating the directory. Normally just
-    ``lexicon/``; if a merge crashed (or is mid-swap) the live data may sit
-    in ``lexicon_old`` — fall back to reading that aside copy in place,
-    retrying once to ride out the nanoseconds-wide rename window of a live
-    merge. Recovery renames stay writer-only (merge_index)."""
-    import time
-
-    import pyarrow as pa
-
-    lex_dir = os.path.join(index_dir, "lexicon")
-    lex_old = lex_dir + "_old"
-    for attempt in range(3):
-        for cand in (lex_dir, lex_old):
-            if os.path.isdir(cand):
-                try:
-                    return ds.dataset(cand, ignore_prefixes=[".", "_"])
-                except (FileNotFoundError, pa.lib.ArrowInvalid):
-                    continue  # swept out from under us mid-open; retry
-        time.sleep(0.05 * (attempt + 1))
-    # final attempt surfaces the real error
-    return ds.dataset(lex_dir, ignore_prefixes=[".", "_"])
-
-
-def _retry_fnf(fn, attempts: int = 4, base_sleep: float = 0.05):
-    """Run ``fn`` retrying on FileNotFoundError and ArrowInvalid — rides
-    out the milliseconds-wide windows where a concurrent merge rewrites a
-    tiny metadata dir (write_index_table: rmtree -> atomic-rename write)
-    or swaps the lexicon; ArrowInvalid covers a dataset whose discovered
-    file list went stale mid-rewrite. Never masks a genuinely missing or
-    corrupt table: the final attempt's error propagates."""
-    import time
-
-    import pyarrow as pa
-
-    for a in range(attempts - 1):
-        try:
-            return fn()
-        except (FileNotFoundError, pa.lib.ArrowInvalid):
-            time.sleep(base_sleep * (a + 1))
-    return fn()
-
-
-def read_meta(index_dir: str) -> Optional[dict]:
-    """Read the 1-row ``_meta`` table (ord_span, version, updated_at);
-    None when absent (pre-round-2 index layout). Retries mid-rewrite
-    races; only a truly absent table returns None."""
-    path = os.path.join(index_dir, "_meta")
-
-    def _read():
-        rows = ds.dataset(path).to_table().to_pylist()
-        if not rows:
-            # dir exists but reads empty: the writer's dot-prefixed temp
-            # file is the only content (mid-rewrite window) — retryable,
-            # same rule as corpus_stats; a truly absent table raises
-            # FileNotFoundError from ds.dataset above instead
-            raise FileNotFoundError("_meta mid-rewrite (empty read)")
-        # several appends may exist; the newest updated_at wins
-        return max(rows, key=lambda r: r.get("updated_at", 0.0))
-
-    try:
-        return _retry_fnf(_read)
-    except Exception:
-        return None
 
 
 class IndexReader:
     def __init__(self, index_dir: str):
         self.index_dir = index_dir
-        # every dataset open retries: discovery can race a concurrent
-        # merge's in-flight Spark append (a vanishing _temporary commit
-        # dir raises FileNotFoundError mid-listing); ignore_prefixes
-        # keeps half-written dot/underscore files out of the file list
-        self._postings = _retry_fnf(lambda: ds.dataset(
-            os.path.join(index_dir, "postings"),
-            ignore_prefixes=[".", "_"]))
-        # a crash mid lexicon swap (merge_index) may have left the live
-        # lexicon aside as lexicon_old — open it read-only; actual
-        # recovery renames are writer-only (merge_index calls
-        # recover_lexicon), so concurrent readers can't race a live merge
-        self._lexicon = _open_lexicon_readonly(index_dir)
-        self._doc_stats = _retry_fnf(lambda: ds.dataset(
-            os.path.join(index_dir, "doc_stats"),
-            ignore_prefixes=[".", "_"]))
-        # corpus_stats is driver-rewritten by merges (rmtree -> write);
-        # ride out the window instead of failing construction. The window
-        # has TWO shapes: the dir is briefly absent (FileNotFoundError,
-        # handled by _retry_fnf) or it exists holding only the writer's
-        # dot-prefixed temp file, in which case the dataset reads as an
-        # EMPTY/field-less table — treat that as retryable too, or the
-        # reader silently constructs with stats == {} and every later
-        # n_docs/idf/avgdl lookup raises KeyError
-        def _read_corpus_stats():
-            t = ds.dataset(
-                os.path.join(index_dir, "corpus_stats"),
-                ignore_prefixes=[".", "_"]).to_table()
-            if t.num_rows == 0 or "field" not in t.schema.names:
-                raise FileNotFoundError(
-                    "corpus_stats mid-rewrite (empty/field-less read)")
-            return t
+        # one version: the latest manifest and exactly the files it lists
+        # (snapshot.py), so a concurrent merge's staged files stay unseen
+        m = self.manifest = snapshot.load(index_dir)
 
-        stats = _retry_fnf(_read_corpus_stats)
-        self.stats = {
-            r["field"]: r for r in stats.to_pylist()
-        }
+        def table(name):
+            return ds.dataset(snapshot.paths(index_dir, m, name),
+                              format="parquet")
+
+        self._postings = table("postings")
+        self._lexicon = table("lexicon")
+        self._doc_stats = table("doc_stats")
+        self.stats = m["stats"]
         self._term_cache: Dict = {}
         self._decode_cache: Dict = {}
         self._fuzzy_stats: Dict = {}
@@ -166,49 +48,24 @@ class IndexReader:
         # Stored as a SORTED int64 array, not a Python set: at 10^9 docs with
         # 1% deletes a set of ints is ~GBs; the array is 8B/entry and
         # membership is one searchsorted.
-        tomb_dir = os.path.join(index_dir, "_tombstones")
-        if os.path.isdir(tomb_dir):
-            # dir exists -> the table is real; retry mid-rewrite races
-            # rather than silently serving EMPTY tombstones (which would
-            # resurrect deleted docs)
-            t = _retry_fnf(lambda: ds.dataset(
-                tomb_dir, ignore_prefixes=[".", "_"]).to_table(
-                columns=["doc_ord"]))
+        arr = np.empty(0, dtype=np.int64)
+        if m["files"]["_tombstones"]:
+            t = table("_tombstones").to_table(columns=["doc_ord"])
             arr = np.unique(np.asarray(t["doc_ord"].to_pylist(),
                                        dtype=np.int64))
-        else:
-            arr = np.empty(0, dtype=np.int64)
         self.tombstones = arr
-        # _meta carries the ordinal SPAN (max doc_ord + 1, including
-        # tombstoned ordinals) and a version stamp for cache invalidation.
-        # Written by build_index/merge_index; legacy indexes fall back to a
-        # single-column doc_stats scan (driver-side, projected read).
-        self._meta = read_meta(index_dir)
-        if self._meta is None:
-            t = self._doc_stats.to_table(columns=["doc_ord"])
-            col = t["doc_ord"]
-            mx = -1 if len(col) == 0 else int(
-                max(c for c in col.to_pylist()))
-            self._meta = {"ord_span": mx + 1, "version": "legacy"}
 
     def _lex_table(self, flt, columns=None):
-        """Lexicon read that survives a concurrent merge's directory swap:
-        a pyarrow dataset resolves file PATHS lazily, so a swap between
-        dataset discovery and to_table() raises FileNotFoundError — on
-        that, reopen the lexicon (current dir or aside copy, read-only)
-        and retry. Postings/doc_stats/tombstones are append-only, so only
-        the lexicon needs this."""
-        import time
-
-        import pyarrow as pa
-
-        for attempt in range(3):
-            try:
-                return self._lexicon.to_table(filter=flt, columns=columns)
-            except (FileNotFoundError, pa.lib.ArrowInvalid):
-                time.sleep(0.05 * (attempt + 1))
-                self._lexicon = _open_lexicon_readonly(self.index_dir)
-        return self._lexicon.to_table(filter=flt, columns=columns)
+        """Lexicon read of this reader's version. Each commit replaces the
+        lexicon files, and the version before the latest keeps its own;
+        a reader two commits behind finds them gone."""
+        try:
+            return self._lexicon.to_table(filter=flt, columns=columns)
+        except FileNotFoundError as e:
+            raise snapshot.StaleVersionError(
+                f"{self.index_dir}: version {self.version()} is two or more "
+                "commits old and its lexicon files are gone; reopen the "
+                "index") from e
 
     # --- stats -----------------------------------------------------------
     def n_docs(self, field: str = "content") -> int:
@@ -217,10 +74,10 @@ class IndexReader:
     def ord_span(self) -> int:
         """max doc_ord + 1 — the NOT-complement universe. This is NOT
         n_docs: after merges, live count < span (tombstoned ordinals)."""
-        return int(self._meta["ord_span"])
+        return int(self.manifest["ord_span"])
 
     def version(self) -> str:
-        return str(self._meta.get("version", "legacy"))
+        return str(self.manifest["version"])
 
     def has_tombstone(self, doc_ord: int) -> bool:
         t = self.tombstones
@@ -448,10 +305,10 @@ class IndexReader:
         if field not in self._doc_stats.schema.names:
             return None
         lo, hi = int(ords[0]), int(ords[-1])
-        t = _retry_fnf(lambda: self._doc_stats.to_table(
+        t = self._doc_stats.to_table(
             filter=(ds.field("doc_ord") >= lo)
             & (ds.field("doc_ord") <= hi),
-            columns=["doc_ord", field]))
+            columns=["doc_ord", field])
         do = np.asarray(t["doc_ord"].to_pylist(), dtype=np.int64)
         out = np.full(ords.size, None, dtype=object)
         if do.size == 0:

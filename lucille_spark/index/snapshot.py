@@ -1,0 +1,131 @@
+"""Index versions: the one module that knows the commit protocol.
+
+An index version is one small JSON manifest, ``_meta/<version>.json``,
+in the spirit of an Iceberg snapshot (https://iceberg.apache.org/spec/).
+It holds the version number, the run_id that committed it, the ordinal
+span, the analyzer, the per-field corpus stats, the commit's
+``added``/``tombstoned`` counts, and the visible data files of every
+table in :data:`TABLES`.
+
+Writers (``builder.build_index``, ``merge.merge_index``) stage data
+files into the table directories, where nothing lists them yet, and then
+:func:`publish` the manifest with a no-replace link: the one atomic step
+of a build or merge. A crash before it leaves the previous version
+exactly as it was (the staged files are orphans no manifest lists), and
+a second writer racing for the same version fails instead of
+overwriting. Readers open :func:`load` and read exactly the files it
+lists, so they see one whole version.
+
+Postings, doc_stats and tombstones are append-only: a merge's manifest
+lists the old files plus the new ones. The lexicon is replaced: every
+commit writes a new set of lexicon files. Publishing version ``v``
+deletes the lexicon files and the manifests that neither ``v`` nor
+``v - 1`` lists, so a reader still on ``v - 1`` keeps working through
+one more commit; a reader two commits behind fails with
+:class:`StaleVersionError`, which names its version.
+
+One writer at a time is the model; publishing is what makes a racing
+second writer fail. Indexes written before manifests have none, and
+:func:`load` tells the caller to rebuild them.
+"""
+
+from __future__ import annotations
+
+import json
+import os
+import re
+import uuid
+from typing import Optional
+
+TABLES = ("postings", "lexicon", "doc_stats", "_tombstones")
+META = "_meta"
+_MANIFEST = re.compile(r"^(\d+)\.json$")
+
+
+class StaleVersionError(RuntimeError):
+    """A reader's version lost its lexicon files to two later commits."""
+
+
+def data_files(table_dir: str) -> set:
+    """Names of the data files in a table directory: hidden and underscore
+    entries (checksums, _SUCCESS markers, in-flight writes) are not."""
+    try:
+        names = os.listdir(table_dir)
+    except FileNotFoundError:
+        return set()
+    return {n for n in names if not n.startswith((".", "_"))}
+
+
+def _versions(index_dir: str) -> list:
+    return sorted(int(m.group(1)) for m in map(
+        _MANIFEST.match, data_files(os.path.join(index_dir, META))) if m)
+
+
+def _path(index_dir: str, version: int) -> str:
+    return os.path.join(index_dir, META, f"{version:010d}.json")
+
+
+def latest(index_dir: str) -> Optional[dict]:
+    """The latest published manifest, or None when there is none."""
+    versions = _versions(index_dir)
+    if not versions:
+        return None
+    with open(_path(index_dir, versions[-1])) as f:
+        return json.load(f)
+
+
+def load(index_dir: str) -> dict:
+    """The latest manifest; raises when the directory has none."""
+    manifest = latest(index_dir)
+    if manifest is None:
+        raise FileNotFoundError(
+            f"{index_dir}: no index manifest in {META}/. An index written "
+            "before version manifests must be rebuilt with build_index.")
+    return manifest
+
+
+def paths(index_dir: str, manifest: dict, table: str) -> list:
+    """Absolute paths of the files ``manifest`` lists for ``table``."""
+    return [os.path.join(index_dir, table, name)
+            for name in manifest["files"][table]]
+
+
+def publish(index_dir: str, base: Optional[dict], *, run_id: str,
+            ord_span: int, analyzer: str, stats: dict, files: dict,
+            added: int, tombstoned: int) -> dict:
+    """Publish the version after ``base`` (None: the first) and drop what
+    no reader of it or of ``base`` can need. ``stats`` maps each field to
+    {n_docs, avgdl, total_terms}; ``files`` maps every table in
+    :data:`TABLES` to its visible file names. Raises FileExistsError when
+    another writer published that version first."""
+    version = (base["version"] if base else 0) + 1
+    manifest = {"version": version, "run_id": run_id,
+                "ord_span": int(ord_span), "analyzer": analyzer,
+                "stats": stats, "added": int(added),
+                "tombstoned": int(tombstoned),
+                "files": {t: sorted(files.get(t, ())) for t in TABLES}}
+    meta = os.path.join(index_dir, META)
+    os.makedirs(meta, exist_ok=True)
+    tmp = os.path.join(meta, f".{uuid.uuid4().hex}.json")
+    with open(tmp, "w") as f:
+        json.dump(manifest, f, sort_keys=True)
+        f.flush()
+        os.fsync(f.fileno())
+    try:
+        os.link(tmp, _path(index_dir, version))
+    finally:
+        os.remove(tmp)
+
+    keep = set(manifest["files"]["lexicon"])
+    if base:
+        keep |= set(base["files"]["lexicon"])
+    lex_dir = os.path.join(index_dir, "lexicon")
+    for name in data_files(lex_dir) - keep:
+        for path in (os.path.join(lex_dir, name),
+                     os.path.join(lex_dir, f".{name}.crc")):
+            if os.path.exists(path):
+                os.remove(path)
+    for v in _versions(index_dir):
+        if v < version - 1:
+            os.remove(_path(index_dir, v))
+    return manifest

@@ -2313,14 +2313,14 @@ class IndexLookup(Stage):
     broadcast: bool = False      # doc_stats is corpus-sized by default
 
     def apply(self, df):
-        import os
+        from lucille_spark.index import snapshot
 
         if len(self.source) != len(self.dest):
             raise ValueError("source and dest must pair up "
                              "(ElasticsearchLookup.java:108-114)")
         spark = df.sparkSession
-        ds_path = os.path.join(self.index_dir, "doc_stats")
-        stats = spark.read.parquet(ds_path)
+        stats = spark.read.parquet(*snapshot.paths(
+            self.index_dir, snapshot.load(self.index_dir), "doc_stats"))
         cols = [F.col("doc_id").alias("_il_id")]
         for s, d in zip(self.source, self.dest):
             src = (F.col(s).cast("string") if s in stats.columns

@@ -268,12 +268,13 @@ def suggest_batch_df(spark: SparkSession, index_dir: str,
     One narrow shuffle on ``word`` for the per-word rank window (words
     are the partition key: thousands of tiny groups, never skewed).
     Output: (word, suggestion, rank)."""
-    import os
-
     from pyspark.sql.window import Window
 
-    lex = (spark.read.parquet(os.path.join(index_dir, "lexicon"))
-           .filter(F.col("field") == field).select("term"))
+    from lucille_spark.index import snapshot
+
+    lex = (spark.read.parquet(*snapshot.paths(
+        index_dir, snapshot.load(index_dir), "lexicon"))
+        .filter(F.col("field") == field).select("term"))
     words_df = spark.createDataFrame([(w,) for w in words], "word string")
     # r7: the length band is an EQUI-join — each word explodes into its
     # 2*max_edits+1 admissible term lengths and the join key is
@@ -582,30 +583,28 @@ def search_batch(
         spark.sparkContext.defaultParallelism)
 
     def run(batches):
-        from lucille_spark.index.reader import read_meta
+        from lucille_spark.index import snapshot
         from lucille_spark.query.searcher import IndexSearcher
 
         # one searcher per (reused) python worker process — the pyarrow
         # dataset open + lexicon warm-up amortizes across all tasks the
         # worker serves, like any search-tier process would. The cache is
-        # keyed on the index VERSION from _meta (bumped by every
-        # build/merge), so long-lived workers never serve stale postings
-        # after a StreamingIndexer microbatch; the version probe is one
-        # 1-row parquet read per task.
+        # keyed on the latest manifest (a new one for every build/merge),
+        # so long-lived workers never serve stale postings after a
+        # StreamingIndexer microbatch; the probe is one small JSON read
+        # per task.
         import builtins
 
         cache = getattr(builtins, "_lucille_searchers", None)
         if cache is None:
             cache = builtins._lucille_searchers = {}
-        meta = read_meta(index_dir)
-        version = meta["version"] if meta else "legacy"
         key = (index_dir, default_field)
         cached = cache.get(key)
-        if cached is not None and cached[0] == version:
+        if cached is not None and cached[0] == snapshot.load(index_dir):
             searcher = cached[1]
         else:
             searcher = IndexSearcher(index_dir, default_field)
-            cache[key] = (version, searcher)
+            cache[key] = (searcher.reader.manifest, searcher)
         for pdf in batches:
             rows = []
             for qid, q in zip(pdf["query_id"], pdf["query"]):

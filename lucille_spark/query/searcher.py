@@ -430,7 +430,7 @@ class IndexSearcher:
         builds a range(n_docs) universe: negation just flips the complement
         flag, and the algebra pushes it into setdiffs. Crucially the
         universe, when a pure negation IS materialized, is the ordinal SPAN
-        (max doc_ord + 1, from _meta) — NOT the live n_docs, which undercounts
+        (max doc_ord + 1, from the manifest) — NOT the live n_docs, which undercounts
         after incremental merges and would silently drop freshly merged
         high-ordinal docs from NOT results."""
         if isinstance(node, Term):

@@ -27,6 +27,7 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lucille_spark.index import snapshot
 from lucille_spark.pipeline import Pipeline
 from lucille_spark.sinks.index_sink import IndexSink
 
@@ -185,7 +186,7 @@ class StreamingIndexer(StreamingIngest):
                     out.filter(is_del)).select("doc_id")
                 out = out.filter(~is_del)
             corpus = out.select(*cols)
-            if not os.path.exists(os.path.join(index_dir, "corpus_stats")):
+            if snapshot.latest(index_dir) is None:
                 # bootstrap: the first microbatch creates the index.
                 # Dedup per doc_id first (merge_index does this itself for
                 # later batches): duplicate ids would multiply rows through
@@ -205,10 +206,13 @@ class StreamingIndexer(StreamingIngest):
                             run_id=f"{run_id}-b{batch_id}", **merge_kwargs)
                 res = {"added": -1, "tombstoned": 0}
             else:
+                # the merge tokenizes with the analyzer the manifest
+                # records; a replayed batch_id is a no-op replay
                 res = merge_index(corpus, index_dir, fields=fields,
                                   deletes=deletes,
                                   run_id=f"{run_id}-b{batch_id}",
-                                  **merge_kwargs)
+                                  **{k: v for k, v in merge_kwargs.items()
+                                     if k != "analyzer"})
             if metrics_dir:
                 batch_df.sparkSession.createDataFrame(
                     [(run_id, int(batch_id), int(res["added"]),

@@ -4,7 +4,8 @@ postings payload columns, while every other column keeps the min/max that
 row-group pruning reads. Indexes written with another codec (Spark's
 default snappy) stay readable and mergeable. Postings follow
 ``builder.postings_layout``: a build under ``docs_per_salt`` tokens is one
-term-sorted file, a salted build is range-partitioned on term."""
+term-sorted file, a salted build is range-partitioned on term. Every
+lexicon file is sorted by (field, term)."""
 
 import hashlib
 import math
@@ -20,8 +21,7 @@ import pytest
 from lucille_spark.corpus import corpus_pdf
 from lucille_spark.query.oracle import OracleIndex
 
-TABLES = ("postings", "lexicon", "doc_stats", "_tombstones", "corpus_stats",
-          "_meta", "_lineage")
+TABLES = ("postings", "lexicon", "doc_stats", "_tombstones", "_lineage")
 PAYLOAD = ("doc_gaps", "tfs", "dls", "positions")
 N_BASE, N_NEW = 300, 60
 QUERIES = ["content:test OR content:giraffe",
@@ -32,9 +32,10 @@ UPDATED = "zzzupdated content words"
 
 
 def _data_files(table_dir):
+    """The parquet data files of a table (the _meta manifests are JSON)."""
     for dirpath, _, names in os.walk(table_dir):
         for name in sorted(names):
-            if not name.startswith((".", "_")):
+            if not name.startswith((".", "_")) and name.endswith(".parquet"):
                 yield os.path.join(dirpath, name)
 
 
@@ -170,6 +171,25 @@ def test_postings_layout_routes(spark):
     assert "rangepartitioning" not in plan({"content": 64}, 64)
     assert "rangepartitioning" in plan({"content": 65}, 64)
     assert "rangepartitioning" in plan({}, 64)  # an unknown total
+
+
+def test_lexicon_files_are_term_sorted(base_index, merged_with_deletes,
+                                       small_index,
+                                       small_merged_with_deletes):
+    """Every lexicon file of a build and of a merge is sorted by (field,
+    term), and a merge writes as many lexicon files as it replaces."""
+    from lucille_spark.index import snapshot
+
+    def files(idx):
+        return snapshot.paths(idx, snapshot.load(idx), "lexicon")
+
+    for build, merged in ((base_index, merged_with_deletes),
+                          (small_index, small_merged_with_deletes)):
+        assert len(files(merged)) == len(files(build))
+        for path in files(build) + files(merged):
+            rows = pq.read_table(path, columns=["field", "term"]).to_pylist()
+            keys = [(r["field"], r["term"]) for r in rows]
+            assert keys == sorted(keys), path
 
 
 def _doc_id(row):
@@ -318,6 +338,7 @@ def test_status_bytes_breakdown(tmp_path):
     meta = tmp_path / "idx" / "_meta"
     meta.mkdir()
     pq.write_table(pa.table({"ord_span": [3]}), str(meta / "m.parquet"))
+    (meta / "0000000001.json").write_text("{}")  # a manifest is not parquet
 
     got = status_job.table_bytes(str(tmp_path / "idx"))
     assert sorted(got) == ["_meta", "postings"]

@@ -48,10 +48,14 @@ def test_merge_skips_hot_pass_keeps_results(spark, tmp_path):
     pb = ds.dataset(f"{b}/doc_stats", ignore_prefixes=[".", "_"]) \
         .to_table().to_pandas().sort_values("doc_ord").reset_index(drop=True)
     assert pa_.equals(pb)
-    la = ds.dataset(f"{a}/lexicon", ignore_prefixes=[".", "_"]).to_table() \
-        .to_pandas().sort_values(["field", "term"]).reset_index(drop=True)
-    lb = ds.dataset(f"{b}/lexicon", ignore_prefixes=[".", "_"]).to_table() \
-        .to_pandas().sort_values(["field", "term"]).reset_index(drop=True)
+    from lucille_spark.index import snapshot
+
+    def lexicon(idx):  # the merged version's files
+        return ds.dataset(snapshot.paths(idx, snapshot.load(idx), "lexicon")) \
+            .to_table().to_pandas().sort_values(["field", "term"]) \
+            .reset_index(drop=True)
+
+    la, lb = lexicon(a), lexicon(b)
     # identical term statistics; block counts may differ only via salting
     assert la[["field", "term", "df", "cf"]].equals(
         lb[["field", "term", "df", "cf"]])

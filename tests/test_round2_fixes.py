@@ -104,6 +104,7 @@ def test_double_upsert_same_id_keeps_corpus_stats_exact(spark, tmp_path):
     double-subtract the dead row's dl (ADVICE r1 high #2): corpus_stats
     must equal a fresh build over the final live corpus."""
     from lucille_spark.corpus import corpus_df
+    from lucille_spark.index import snapshot
     from lucille_spark.index.builder import build_index
     from lucille_spark.index.merge import merge_index
 
@@ -123,8 +124,7 @@ def test_double_upsert_same_id_keeps_corpus_stats_exact(spark, tmp_path):
     assert r1["tombstoned"] == 5
     assert r2["tombstoned"] == 5  # the v1 rows — NOT 10
 
-    got = {r["field"]: r for r in spark.read.parquet(
-        os.path.join(idx, "corpus_stats")).collect()}
+    got = snapshot.load(idx)["stats"]
     # ground truth: fresh build over the final live corpus
     final = base.join(victim.select("repo", "path", "commit"),
                       ["repo", "path", "commit"], "left_anti") \
@@ -132,8 +132,7 @@ def test_double_upsert_same_id_keeps_corpus_stats_exact(spark, tmp_path):
     ref_dir = str(tmp_path / "ref")
     build_index(final, ref_dir, fields=("content",), block_size=32,
                 docs_per_salt=64)
-    want = {r["field"]: r for r in spark.read.parquet(
-        os.path.join(ref_dir, "corpus_stats")).collect()}
+    want = snapshot.load(ref_dir)["stats"]
     assert got["content"]["n_docs"] == want["content"]["n_docs"] == 100
     assert got["content"]["total_terms"] == want["content"]["total_terms"]
     assert got["content"]["avgdl"] == pytest.approx(

@@ -4,7 +4,6 @@ cleanup) and VERDICT r2 items (join-mode ExtractEntities parity + plan-size
 bound, O(n) chunk offsets, agg-side tombstones)."""
 
 import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -148,31 +147,6 @@ def test_extract_entities_join_without_id(spark):
     assert len(out["the hash join wins"]) >= 1
 
 
-# ------------------------------------------------ crash-safe lexicon swap
-def test_lexicon_swap_recovery(spark, tmp_path):
-    from lucille_spark.corpus import corpus_df
-    from lucille_spark.index.builder import build_index
-    from lucille_spark.index.merge import _recover_lexicon
-    from lucille_spark.query.searcher import IndexSearcher
-
-    idx = str(tmp_path / "idx")
-    build_index(corpus_df(spark, 60, partitions=3), idx, block_size=32,
-                docs_per_salt=64)
-    lex, lex_old = os.path.join(idx, "lexicon"), os.path.join(
-        idx, "lexicon_old")
-    # simulate a crash BETWEEN the two renames: live dir renamed aside,
-    # tmp not yet moved into place
-    os.rename(lex, lex_old)
-    assert not os.path.exists(lex)
-    _recover_lexicon(idx)
-    assert os.path.exists(lex) and not os.path.exists(lex_old)
-    assert IndexSearcher(idx).search("content:return", 3)
-    # debris case: old copy left NEXT TO a live lexicon -> dropped
-    shutil.copytree(lex, lex_old)
-    _recover_lexicon(idx)
-    assert os.path.exists(lex) and not os.path.exists(lex_old)
-
-
 # ------------------------------------------- legacy sink migration cleanup
 def test_index_sink_legacy_migration_drops_root_files(spark, tmp_path):
     from lucille_spark.sinks.index_sink import IndexSink
@@ -245,11 +219,12 @@ def test_dedup_hash_ids_same_verdicts(spark, tmp_path):
 def test_compact_matches_fresh_build(spark, tmp_path):
     """VERDICT r2 #4: after merges with upserts+deletes, compact() over the
     live corpus must equal a from-scratch build table-for-table (lexicon /
-    corpus_stats / doc_stats / postings), tombstones gone, and the merged
+    corpus stats / doc_stats / postings), tombstones gone, and the merged
     index must agree with the compacted one on live-doc results."""
     import hashlib
 
     from lucille_spark.corpus import CORPUS_SCHEMA, corpus_df
+    from lucille_spark.index import snapshot
     from lucille_spark.index.builder import build_index
     from lucille_spark.index.merge import compact, merge_index
     from lucille_spark.query.searcher import IndexSearcher
@@ -288,10 +263,11 @@ def test_compact_matches_fresh_build(spark, tmp_path):
     compact(idx, live, cdir, block_size=32, docs_per_salt=64)
     build_index(live, fdir, block_size=32, docs_per_salt=64)
 
-    for tbl in ("lexicon", "corpus_stats", "doc_stats", "postings"):
+    for tbl in ("lexicon", "doc_stats", "postings"):
         a = sorted(map(tuple, spark.read.parquet(f"{cdir}/{tbl}").collect()))
         b = sorted(map(tuple, spark.read.parquet(f"{fdir}/{tbl}").collect()))
         assert a == b, f"{tbl} differs between compact() and fresh build"
+    assert snapshot.load(cdir)["stats"] == snapshot.load(fdir)["stats"]
     assert not os.path.exists(os.path.join(cdir, "_tombstones"))
 
     sc, sf, sm = IndexSearcher(cdir), IndexSearcher(fdir), IndexSearcher(idx)

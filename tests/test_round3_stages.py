@@ -335,4 +335,5 @@ def test_status_job_gather(spark, index_dir):
     assert st["live_docs"] == 1000 and st["ord_span"] == 1000
     assert st["tombstones"] == 0
     assert "content" in st["fields"]
-    assert st["version"] and "@" in st["version"]
+    assert st["version"] == 1 and st["run_id"] == st["latest_run"]
+    assert st["analyzer"] == "standard" and st["files"]["postings"] >= 1

@@ -1,0 +1,286 @@
+"""Index versions (``index/snapshot.py``): a build or merge becomes visible
+only when its manifest is published. A merge that fails after any of its
+writes leaves the previous version exactly as it was, and its retry gives
+the uninterrupted merge's index. A merge replayed with the run_id of the
+latest manifest writes nothing, and merges tokenize with the analyzer the
+build recorded."""
+
+import json
+import math
+import os
+import shutil
+
+import numpy as np
+import pandas as pd
+import pytest
+
+from lucille_spark.corpus import corpus_pdf
+from lucille_spark.index import snapshot
+from test_index_storage import (N_BASE, N_NEW, QUERIES, UPDATED,
+                                _oracle_after_deletes)
+
+# merge_index's table writes, in order; the manifest is published last
+WRITES = ("postings", "doc_stats", "_tombstones", "lexicon")
+ALL_QUERIES = QUERIES + [f"content:{UPDATED.split()[0]}"]
+KW = {"block_size": 32, "docs_per_salt": 64}
+
+
+def _merge(spark, idx, run_id="m1"):
+    """The delta of test_index_storage: new docs, 2 upserts, 2 deletes."""
+    from lucille_spark.index.builder import add_doc_identity
+    from lucille_spark.index.merge import merge_index
+
+    old = corpus_pdf(np.arange(4))
+    old["content"] = UPDATED
+    delta = pd.concat([corpus_pdf(np.arange(N_BASE, N_BASE + N_NEW)),
+                       old.iloc[:2]], ignore_index=True)
+    gone = add_doc_identity(spark.createDataFrame(old.iloc[2:])) \
+        .select("doc_id")
+    return merge_index(spark.createDataFrame(delta), idx, deletes=gone,
+                       run_id=run_id, **KW)
+
+
+def _topk(idx):
+    from lucille_spark.query.searcher import IndexSearcher
+
+    searcher = IndexSearcher(idx)
+    return {q: searcher.search(q, 10) for q in ALL_QUERIES}
+
+
+def _assert_matches_oracle(got):
+    oracle = _oracle_after_deletes()
+    for q, hits in got.items():
+        want = oracle.search(q, 10)
+        assert [d for d, _ in hits] == [d for d, _ in want], q
+        for (_, gs), (_, ws) in zip(hits, want):
+            assert math.isclose(gs, ws, rel_tol=1e-9), q
+
+
+def _copy(src, tmp_path, name="idx"):
+    dst = str(tmp_path / name)
+    shutil.copytree(src, dst)
+    return dst
+
+
+@pytest.fixture(scope="module")
+def base(spark, tmp_path_factory):
+    from lucille_spark.index.builder import build_index
+
+    out = str(tmp_path_factory.mktemp("snapshot") / "base")
+    build_index(spark.createDataFrame(corpus_pdf(np.arange(N_BASE))), out,
+                **KW)
+    return out
+
+
+@pytest.fixture(scope="module")
+def base_topk(base):
+    return _topk(base)
+
+
+@pytest.fixture(scope="module")
+def merged(spark, base, tmp_path_factory):
+    """The uninterrupted merge."""
+    idx = str(tmp_path_factory.mktemp("snapshot") / "merged")
+    shutil.copytree(base, idx)
+    _merge(spark, idx)
+    return idx
+
+
+@pytest.mark.parametrize("step", [*WRITES, "manifest"])
+def test_crash_after_each_merge_write(spark, base, base_topk, merged,
+                                      tmp_path, monkeypatch, step):
+    import lucille_spark.index.merge as merge_mod
+
+    idx = _copy(base, tmp_path)
+    version = snapshot.load(idx)["version"]
+    written = []
+    if step == "manifest":
+        def link(src, dst):  # the manifest is staged, its link fails
+            raise OSError("crash before the manifest link")
+
+        monkeypatch.setattr(snapshot.os, "link", link)
+    else:
+        real = merge_mod.write_index_table
+
+        def write(data, path, *args, **kwargs):
+            out = real(data, path, *args, **kwargs)
+            written.append(os.path.basename(path))
+            if len(written) == WRITES.index(step) + 1:
+                raise RuntimeError(f"crash after the {step} write")
+            return out
+
+        monkeypatch.setattr(merge_mod, "write_index_table", write)
+    with pytest.raises((RuntimeError, OSError), match="crash"):
+        _merge(spark, idx)
+    monkeypatch.undo()
+    assert written == list(WRITES[:len(written)])
+
+    # the crash left staged files behind, but no reader sees them
+    m = snapshot.load(idx)
+    assert m["version"] == version
+    assert len(snapshot.data_files(os.path.join(idx, "postings"))) > len(
+        m["files"]["postings"])
+    assert os.listdir(os.path.join(idx, "_meta")) == [
+        f"{version:010d}.json"]
+    assert _topk(idx) == base_topk
+
+    # the retry (same run_id) gives the uninterrupted merge's index
+    _merge(spark, idx)
+    assert snapshot.load(idx)["version"] == version + 1
+    got = _topk(idx)
+    assert got == _topk(merged)
+    _assert_matches_oracle(got)
+
+
+def test_crash_after_publish_keeps_the_new_version(spark, base, merged,
+                                                   tmp_path, monkeypatch):
+    import lucille_spark.index.builder as builder
+
+    idx = _copy(base, tmp_path)
+
+    def record(self, *args):
+        raise RuntimeError("crash after the publish")
+
+    monkeypatch.setattr(builder._Ledger, "record", record)
+    with pytest.raises(RuntimeError, match="crash"):
+        _merge(spark, idx)
+    monkeypatch.undo()
+    published = snapshot.load(idx)
+    assert published["run_id"] == "m1"
+    assert _topk(idx) == _topk(merged)
+    # the retry is a replay: the recorded counts, nothing written
+    assert _merge(spark, idx)["tombstoned"] == 4
+    assert snapshot.load(idx) == published
+
+
+def test_replayed_merge_is_a_noop(spark, base, tmp_path):
+    from lucille_spark.index.merge import merge_index
+
+    idx = _copy(base, tmp_path)
+    first = _merge(spark, idx, run_id="b7")
+    once = snapshot.load(idx)
+    assert (first["added"], first["tombstoned"]) == (N_NEW + 2, 4)
+    again = _merge(spark, idx, run_id="b7")
+    assert snapshot.load(idx) == once
+    assert (again["added"], again["tombstoned"]) == (N_NEW + 2, 4)
+    assert again["avgdl"] == first["avgdl"]
+    tomb_dir = os.path.join(idx, "_tombstones")
+    assert sorted(snapshot.data_files(tomb_dir)) == \
+        once["files"]["_tombstones"]
+    _assert_matches_oracle(_topk(idx))
+
+    # merges without a run_id get fresh ones, so both apply
+    new = spark.createDataFrame(
+        corpus_pdf(np.arange(N_BASE + N_NEW, N_BASE + N_NEW + 5)))
+    merge_index(new, idx, **KW)
+    res = merge_index(new, idx, **KW)
+    m = snapshot.load(idx)
+    assert m["version"] == once["version"] + 2
+    assert res["tombstoned"] == 5
+    assert m["ord_span"] == once["ord_span"] + 10
+
+
+def test_reader_keeps_its_version_for_one_commit(spark, base, tmp_path):
+    from lucille_spark.index.merge import merge_index
+    from lucille_spark.index.reader import IndexReader
+
+    idx = _copy(base, tmp_path)
+    reader = IndexReader(idx)
+    version = reader.version()
+    for i in range(2):
+        merge_index(spark.createDataFrame(corpus_pdf(
+            np.arange(N_BASE + 10 * i, N_BASE + 10 * i + 10))), idx, **KW)
+        if i == 0:  # one commit behind: its own version, whole
+            assert reader.term_info("content", "import") == IndexReader(
+                base).term_info("content", "import")
+    # two commits behind: its lexicon files are gone, and it says so
+    with pytest.raises(snapshot.StaleVersionError,
+                       match=f"version {version} "):
+        reader.term_info("content", "test")
+    assert IndexReader(idx).version() == str(int(version) + 2)
+
+
+def test_index_without_manifest_must_be_rebuilt(base, tmp_path):
+    from lucille_spark.index.reader import IndexReader
+
+    idx = _copy(base, tmp_path)
+    shutil.rmtree(os.path.join(idx, "_meta"))
+    with pytest.raises(FileNotFoundError, match="rebuilt"):
+        IndexReader(idx)
+
+
+def test_publish_is_no_replace_and_keeps_one_previous_version(tmp_path):
+    idx = str(tmp_path / "idx")
+    lex = tmp_path / "idx" / "lexicon"
+    lex.mkdir(parents=True)
+
+    def publish(base, run_id, lexicon):
+        for name in lexicon:
+            (lex / name).write_bytes(b"")
+        return snapshot.publish(
+            idx, base, run_id=run_id, ord_span=0, analyzer="standard",
+            stats={}, files={"lexicon": lexicon}, added=0, tombstoned=0)
+
+    v1 = publish(None, "a", ["l1"])
+    v2 = publish(v1, "b", ["l2"])
+    with pytest.raises(FileExistsError):  # a racing writer of version 2
+        publish(v1, "c", ["l3"])
+    assert snapshot.load(idx) == v2
+    v3 = publish(v2, "d", ["l4"])
+    # version 1's manifest and its lexicon are gone (and the racer's
+    # unlisted file); versions 2 and 3 stay whole
+    assert sorted(os.listdir(os.path.join(idx, "_meta"))) == [
+        "0000000002.json", "0000000003.json"]
+    assert sorted(os.listdir(lex)) == ["l2", "l4"]
+    with open(os.path.join(idx, "_meta", "0000000003.json")) as f:
+        assert json.load(f) == v3
+    assert v3["files"] == {"postings": [], "lexicon": ["l4"],
+                           "doc_stats": [], "_tombstones": []}
+
+
+CODE_DOC = "def bazQux(): return fooBar"
+
+
+def test_merge_tokenizes_with_the_build_analyzer(spark, tmp_path):
+    from lucille_spark.index.builder import add_doc_identity, build_index
+    from lucille_spark.index.merge import merge_index
+    from lucille_spark.query.searcher import IndexSearcher
+
+    idx = str(tmp_path / "code")
+    build_index(spark.createDataFrame(corpus_pdf(np.arange(50))), idx,
+                analyzer="code")
+    doc = corpus_pdf(np.arange(50, 51))
+    doc["content"] = CODE_DOC
+    merge_index(spark.createDataFrame(doc), idx)
+    assert snapshot.load(idx)["analyzer"] == "code"
+    want = add_doc_identity(spark.createDataFrame(doc)).first()["doc_id"]
+    for q in ("content:qux", "content:baz", "content:bar"):
+        assert [d for d, _ in IndexSearcher(idx).search(q, 5)] == [want], q
+
+
+def test_streaming_indexer_code_analyzer_every_batch(spark, tmp_path):
+    from lucille_spark.pipeline import Pipeline
+    from lucille_spark.query.searcher import IndexSearcher
+    from lucille_spark.streaming import StreamingIndexer
+
+    inbox = tmp_path / "inbox"
+    inbox.mkdir()
+    idx = str(tmp_path / "live")
+    schema = ("repo string, path string, commit string, lang string, "
+              "content string")
+    indexer = StreamingIndexer(
+        spark, Pipeline([]), index_dir=idx,
+        checkpoint_dir=str(tmp_path / "chk"), analyzer="code")
+
+    def batch(n, content):
+        (inbox / f"b{n}.jsonl").write_text(json.dumps(
+            {"repo": "o/r", "path": f"f{n}.py", "commit": "c0",
+             "lang": "py", "content": content}) + "\n")
+        indexer.from_json_files(str(inbox), schema)
+
+    batch(1, "class alphaBeta: pass")
+    batch(2, CODE_DOC)
+    s = IndexSearcher(idx)
+    assert snapshot.load(idx)["analyzer"] == "code"
+    assert len(s.search("content:beta", 5)) == 1
+    assert len(s.search("content:qux", 5)) == 1
