@@ -47,8 +47,7 @@ def register(name: str, sql: str | None = None):
 
 # one-pass gate queries only earn the spread exchange back above this
 # input size (see corpus.spread_small_input's cost-model note)
-_SPREAD_MIN_BYTES = int(os.environ.get("LUCILLE_SPREAD_MIN_BYTES",
-                                       str(4 << 20)))
+_SPREAD_MIN_BYTES = 4 << 20
 
 
 def _docs(spark: SparkSession, sf_dir: str,
@@ -320,7 +319,7 @@ ORDER BY raw_score DESC, doc_id LIMIT 10
 
 def _gate_index_dir(sf_dir: str) -> str:
     tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:10]
-    return os.path.join(tempfile.gettempdir(), f"lucille_gate_idx_v4_{tag}")
+    return os.path.join(tempfile.gettempdir(), f"lucille_gate_idx_v5_{tag}")
 
 
 def _ensure_gate_index(spark, sf_dir: str) -> str:

@@ -21,8 +21,8 @@ Dataflow (all DataFrame; Python appears only in Arrow-vectorized UDFs):
        The kernel encodes each Arrow batch's complete (term, salt) groups
        in one vectorized pass (lexsort, per-doc tf/positions runs) and
        carries the batch's last group into the next batch, emitting
-       128-doc blocks: delta+varbyte doc gaps, varbyte tfs, varbyte dls,
-       optional varbyte positions, block_max_tf/tfnorm
+       128-doc blocks: delta+varbyte doc gaps, varbyte tfs, optional
+       varbyte position gaps, block_max_tf/tfnorm
     -> postings write (postings_layout): as the encode left it when every
        field is one partition, else repartitionByRange(field, term)
        + sortWithinPartitions                            [small indexes:
@@ -31,8 +31,8 @@ Dataflow (all DataFrame; Python appears only in Arrow-vectorized UDFs):
 
 Output tables (parquet dir layout), every one written by
 :func:`write_index_table`: zstd pages, no statistics on the opaque postings
-payload columns (doc_gaps, tfs, dls, positions), min/max kept on every
-other column:
+payload columns (doc_gaps, tfs, positions), min/max kept on every other
+column:
   postings/      term-sorted, row-group pruning serves point lookups:
                  one file per field when every field has <= docs_per_salt
                  tokens, else range-partitioned on (field, term) into
@@ -41,17 +41,24 @@ other column:
   lexicon/       (field,term,df,cf,n_blocks,max_tfnorm,bound_avgdl),
                  sorted by (field, term) within each file
   doc_stats/     (doc_id,doc_ord,dl_<field>...,repo,path,commit,lang,content_sha256)
+                 the ONE home of a doc's length per field
   _meta/         one JSON manifest per version (:mod:`snapshot`): the
-                 files of every table that version sees, its ord_span,
-                 analyzer and per-field corpus stats (n_docs, avgdl,
-                 total_terms). Publishing it is the commit; readers open
-                 exactly the files it lists.
+                 index format, the files of every table that version
+                 sees, its ord_span, analyzer and per-field corpus stats
+                 (n_docs, avgdl, total_terms). Publishing it is the
+                 commit; readers open exactly the files it lists.
   _lineage/      per-stage build provenance (checkpoint/resume)
 Merges add _tombstones/ (doc_ord) through the same writer.
 
-Blocks are self-contained for scoring (they carry dls), so the query plane
-never needs a doc_ord->dl lookup — at 10^12 docs that lookup table would not
-fit anywhere near the query path.
+Each fact is stored once (format 2). A posting's tf lives in ``tfs`` and
+nowhere else: the positions stream holds only position gaps, and its
+per-doc counts are the tfs. A doc's length lives in ``doc_stats`` and not
+in its postings: the reader loads one dense int32 ``doc_ord -> dl`` array
+per scored field, 4 bytes x ord_span, and gathers from it when it scores.
+That is the trade-off of Lucene's norms: per-posting lengths cost one
+value per (term, doc), about 48 KB of the 231 KB postings of the 200-doc
+perfbench corpus, while the array costs one per doc and fits any index a
+single driver can search (10^8 ordinals are 400 MB per field).
 """
 
 from __future__ import annotations
@@ -79,14 +86,14 @@ from lucille_spark.index.ordinals import assign_doc_ord
 POSTINGS_SCHEMA = (
     "field string, term string, salt int, block_seq int, first_doc long, "
     "last_doc long, n_docs int, sum_tf long, doc_gaps binary, tfs binary, "
-    "dls binary, positions binary, block_max_tf int, block_max_tfnorm double, "
+    "positions binary, block_max_tf int, block_max_tfnorm double, "
     "bound_avgdl double"
 )
 
 
 # postings payload columns: opaque varbyte streams that nothing prunes on,
 # so min/max and size statistics on them would be dead footer bytes
-PAYLOAD_COLUMNS = ("doc_gaps", "tfs", "dls", "positions")
+PAYLOAD_COLUMNS = ("doc_gaps", "tfs", "positions")
 
 
 def write_index_table(data, path: str, mode: str = "overwrite") -> list:
@@ -170,8 +177,9 @@ def _postings_encoder(avgdl: float, block_size: int,
     reduceat block aggregates plus ONE batch vbyte encode per payload
     column, sliced per block (codecs.vbyte is per-value independent, so
     segment slicing equals per-block encoding), give the 128-doc blocks:
-    delta+varbyte doc gaps, varbyte tfs, varbyte dls, optional varbyte
-    positions, block_max_tf/tfnorm. No Python call per group."""
+    delta+varbyte doc gaps, varbyte tfs, optional varbyte position gaps,
+    block_max_tf/tfnorm. ``dl`` enters only the tfnorm bounds: the reader
+    takes a posting's dl from doc_stats. No Python call per group."""
     k1, b = BM25_K1, BM25_B
 
     def encode(tbl: "pa.Table") -> "pa.RecordBatch":
@@ -222,37 +230,26 @@ def _postings_encoder(avgdl: float, block_size: int,
         np.subtract(du[1:], du[:-1], out=gaps[1:])
         gaps[blk_starts] = du[blk_starts]  # absolute restart per block
 
-        def vb_blocks(vals):
+        def vb_blocks(vals, starts):
             data = np.frombuffer(codecs.vbyte_encode(vals), dtype=np.uint8)
             byte_off = np.concatenate(
                 ([0], np.cumsum(codecs.vbyte_nbytes(vals))))
             return _binary_from_segments(
-                data, np.append(byte_off[blk_starts], data.size))
+                data, np.append(byte_off[starts], data.size))
 
-        doc_gaps_arr = vb_blocks(gaps)
-        tfs_arr = vb_blocks(tf_r.astype(np.uint64))
-        dls_arr = vb_blocks(dl_r.astype(np.uint64))
+        doc_gaps_arr = vb_blocks(gaps, blk_starts)
+        tfs_arr = vb_blocks(tf_r.astype(np.uint64), blk_starts)
 
         if store_positions:
-            # block positions stream = [tf_d, delta-positions_d ...] per
-            # doc run, vbyte — one interleave + one encode for the whole
-            # batch, sliced per block by byte offsets
+            # block positions stream = delta-positions per doc run, vbyte
+            # (codecs.encode_positions_flat) — one encode for the whole
+            # batch, sliced at each block's first occurrence
             pu = p_s.astype(np.uint64)
             deltas = np.empty(n, dtype=np.uint64)
             deltas[0] = pu[0]
             np.subtract(pu[1:], pu[:-1], out=deltas[1:])
             deltas[run_starts] = pu[run_starts]  # absolute per doc run
-            inter = np.empty(n + nr, dtype=np.uint64)
-            seg_starts = run_starts + np.arange(nr)
-            inter[seg_starts] = tf_r.astype(np.uint64)
-            mask = np.ones(inter.size, dtype=bool)
-            mask[seg_starts] = False
-            inter[mask] = deltas
-            data = np.frombuffer(codecs.vbyte_encode(inter), dtype=np.uint8)
-            byte_off = np.concatenate(
-                ([0], np.cumsum(codecs.vbyte_nbytes(inter))))
-            pos_arr = _binary_from_segments(
-                data, np.append(byte_off[seg_starts[blk_starts]], data.size))
+            pos_arr = vb_blocks(deltas, run_starts[blk_starts])
         else:
             pos_arr = pa.nulls(n_blocks, pa.binary())
 
@@ -267,7 +264,7 @@ def _postings_encoder(avgdl: float, block_size: int,
              pa.array((blk_ends - blk_starts).astype(np.int32),
                       type=pa.int32()),
              pa.array(np.add.reduceat(tf_r, blk_starts), type=pa.int64()),
-             doc_gaps_arr, tfs_arr, dls_arr, pos_arr,
+             doc_gaps_arr, tfs_arr, pos_arr,
              pa.array(np.maximum.reduceat(tf_r, blk_starts)
                       .astype(np.int32), type=pa.int32()),
              pa.array(np.maximum.reduceat(tfnorm, blk_starts),
@@ -279,7 +276,7 @@ def _postings_encoder(avgdl: float, block_size: int,
              pa.array(np.full(n_blocks, avgdl), type=pa.float64())],
             names=["field", "term", "salt", "block_seq", "first_doc",
                    "last_doc", "n_docs", "sum_tf", "doc_gaps", "tfs",
-                   "dls", "positions", "block_max_tf", "block_max_tfnorm",
+                   "positions", "block_max_tf", "block_max_tfnorm",
                    "bound_avgdl"])
 
     def kernel(batches):

@@ -11,13 +11,15 @@ bit of a byte is 1 on every byte except the last byte of a value ("more"
 flag inverted relative to some conventions — the *terminator* byte has
 high bit 0).
 
+Positions layout: per doc, its first position absolute, then gaps. The
+stream holds no per-doc count: that count is the doc's tf, which the tfs
+column already stores, and every decode passes the tfs back as ``lens``.
+
 All encode/decode paths are vectorized NumPy so they can run inside Arrow
 pandas UDFs without per-row Python overhead (BASELINE input_hint).
 """
 
 from __future__ import annotations
-
-from typing import Optional
 
 import numpy as np
 
@@ -120,81 +122,46 @@ def decode_block_tfs(data: bytes) -> np.ndarray:
 
 
 def encode_positions_flat(flat: np.ndarray, lens: np.ndarray) -> bytes:
-    """[len, delta-positions...] stream from a flat sorted-position array and
-    per-doc lengths — the zero-copy variant used by the index build."""
-    n_docs = int(lens.size)
-    if n_docs == 0:
-        return b""
+    """Delta-positions stream from a flat sorted-position array and per-doc
+    lengths: each doc's positions restart with an absolute value, then
+    gaps. The stream holds no per-doc length: those are the tfs, stored
+    once in their own column, and every decode passes them back."""
     lens = np.ascontiguousarray(lens, dtype=np.int64)
     flat = np.ascontiguousarray(flat, dtype=np.uint64)
-    total = int(lens.sum())
-    if total == 0:
-        return vbyte_encode(np.zeros(n_docs, dtype=np.uint64))
-    starts = np.cumsum(lens) - lens
-    deltas = np.empty(total, dtype=np.uint64)
+    if flat.size == 0:
+        return b""
+    deltas = np.empty(flat.size, dtype=np.uint64)
     deltas[0] = flat[0]
     np.subtract(flat[1:], flat[:-1], out=deltas[1:])
-    nz = starts[lens > 0]
-    deltas[nz] = flat[nz]
-    out = np.empty(total + n_docs, dtype=np.uint64)
-    out_starts = starts + np.arange(n_docs)
-    out[out_starts] = lens.astype(np.uint64)
-    mask = np.ones(total + n_docs, dtype=bool)
-    mask[out_starts] = False
-    out[mask] = deltas
-    return vbyte_encode(out)
+    starts = (np.cumsum(lens) - lens)[lens > 0]
+    deltas[starts] = flat[starts]  # absolute per doc
+    return vbyte_encode(deltas)
 
 
 def encode_positions(positions_per_doc: list) -> bytes:
-    """Per-doc sorted position arrays -> [len, delta-positions...] stream.
+    """Per-doc sorted position arrays -> delta-positions stream.
 
     Fully vectorized: one flat concatenation + segment-wise delta encoding
     (no per-doc NumPy calls). The index build does not call this: its
     encode kernel writes the same stream for a whole batch of blocks at
     once, and this per-block form is the reference the tests check."""
-    n_docs = len(positions_per_doc)
-    if n_docs == 0:
-        return b""
     lens = np.fromiter((len(p) for p in positions_per_doc), dtype=np.int64,
-                       count=n_docs)
+                       count=len(positions_per_doc))
     if int(lens.sum()) == 0:
-        flat = np.empty(0, dtype=np.uint64)
-    else:
-        flat = np.concatenate([np.asarray(p, dtype=np.uint64)
-                               for p in positions_per_doc if len(p)])
+        return b""
+    flat = np.concatenate([np.asarray(p, dtype=np.uint64)
+                           for p in positions_per_doc if len(p)])
     return encode_positions_flat(flat, lens)
 
 
-def decode_positions_flat(data: bytes, n_docs: int,
-                          lens: Optional[np.ndarray] = None):
+def decode_positions_flat(data: bytes, lens: np.ndarray):
     """Inverse of encode_positions, vectorized -> (flat_positions, lens).
-
-    When the caller already knows the per-doc position counts (they are
-    by construction the tf values stored alongside — encode side writes
-    ``[tf_d, delta-positions_d ...]``), pass them as ``lens`` and the
-    marker walk becomes one cumsum; otherwise the markers are located
-    with a cheap sequential int loop (each marker's position depends on
-    the previous doc's length)."""
-    flat = vbyte_decode(data)
-    if lens is not None:
-        lens = np.ascontiguousarray(lens, dtype=np.int64)
-        step = lens + 1
-        markers = np.cumsum(step) - step
-    else:
-        lens = np.empty(n_docs, dtype=np.int64)
-        markers = np.empty(n_docs, dtype=np.int64)
-        m = 0
-        fl = flat.tolist()
-        for i in range(n_docs):
-            markers[i] = m
-            n = fl[m]
-            lens[i] = n
-            m += n + 1
-    mask = np.ones(flat.size, dtype=bool)
-    mask[markers] = False
-    deltas = flat[mask]
+    ``lens`` are the per-doc position counts, i.e. the tfs stored beside
+    the stream: one grouped cumsum undoes the per-doc restarts."""
+    lens = np.ascontiguousarray(lens, dtype=np.int64)
+    deltas = vbyte_decode(data)
     if deltas.size == 0:
-        return np.empty(0, dtype=np.uint64), lens
+        return deltas, lens
     abs_ = np.cumsum(deltas, dtype=np.uint64)
     nz = lens > 0
     starts = (np.cumsum(lens) - lens)[nz]
@@ -202,10 +169,9 @@ def decode_positions_flat(data: bytes, n_docs: int,
     return abs_ - corr, lens
 
 
-def decode_positions(data: bytes, n_docs: int,
-                     lens: Optional[np.ndarray] = None) -> list:
-    """Inverse of encode_positions -> list of uint64 arrays, len == n_docs."""
-    if n_docs == 0:
+def decode_positions(data: bytes, lens: np.ndarray) -> list:
+    """Inverse of encode_positions -> list of uint64 arrays, one per doc."""
+    if len(lens) == 0:
         return []
-    flat, lens = decode_positions_flat(data, n_docs, lens=lens)
+    flat, lens = decode_positions_flat(data, lens)
     return np.split(flat, np.cumsum(lens)[:-1])

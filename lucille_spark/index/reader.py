@@ -9,6 +9,11 @@ Lucene's term dictionary + skip lists, which the reference gets by
 delegating to Solr/ES (SURVEY.md §2.9). The corpus stats, ordinal span and
 version come from the manifest; a concurrent merge's files stay unseen
 until its manifest is published, and the reader keeps its own version.
+
+Postings carry no doc lengths (index format 2): scoring gathers a
+posting's dl from :meth:`IndexReader.doc_lengths`, one dense int32
+``doc_ord -> dl`` array per field loaded from this version's doc_stats,
+as Lucene scores with per-document norms.
 """
 
 from __future__ import annotations
@@ -43,6 +48,7 @@ class IndexReader:
         self.stats = m["stats"]
         self._term_cache: Dict = {}
         self._decode_cache: Dict = {}
+        self._doc_lengths: Dict = {}
         self._fuzzy_stats: Dict = {}
         # deleted docs (incremental upserts/deletes): ordinals to exclude.
         # Stored as a SORTED int64 array, not a Python set: at 10^9 docs with
@@ -88,6 +94,20 @@ class IndexReader:
 
     def avgdl(self, field: str = "content") -> float:
         return float(self.stats[field]["avgdl"])
+
+    def doc_lengths(self, field: str = "content") -> np.ndarray:
+        """Dense ``doc_ord -> dl`` of ``field`` over the ordinal span:
+        int32, 4 bytes per ordinal (tombstoned ones included). Loaded on
+        first use with one projected read of this version's doc_stats and
+        a scatter; doc_stats files are append-only, so it stays valid for
+        as long as the reader does."""
+        arr = self._doc_lengths.get(field)
+        if arr is None:
+            t = self._doc_stats.to_table(columns=["doc_ord", f"dl_{field}"])
+            arr = np.zeros(self.ord_span(), dtype=np.int32)
+            arr[t["doc_ord"].to_numpy()] = t[f"dl_{field}"].to_numpy()
+            self._doc_lengths[field] = arr
+        return arr
 
     def term_info(self, field: str, term: str) -> Optional[dict]:
         key = (field, term)
@@ -234,7 +254,7 @@ class IndexReader:
         """All block rows for a term, ordered by first_doc (salt ranges are
         disjoint in doc_ord, so (salt, block_seq) order == first_doc order)."""
         cols = columns or ["salt", "block_seq", "first_doc", "last_doc",
-                           "n_docs", "doc_gaps", "tfs", "dls", "positions",
+                           "n_docs", "doc_gaps", "tfs", "positions",
                            "block_max_tf", "block_max_tfnorm", "bound_avgdl"]
         t = self._postings.to_table(
             filter=(ds.field("field") == field) & (ds.field("term") == term),
@@ -243,28 +263,29 @@ class IndexReader:
         return pdf.sort_values(["first_doc"]).reset_index(drop=True)
 
     def decode_term(self, field: str, term: str, positions: bool = False):
-        """Full uncompressed postings: (doc_ords, tfs, dls[, positions])."""
+        """Full uncompressed postings: (doc_ords, tfs[, positions]). A
+        posting's dl is ``doc_lengths(field)[doc_ord]``."""
         if positions:
-            docs, tfs, dls, flat, lens = self.decode_term_flat(field, term)
-            return docs, tfs, dls, np.split(flat, np.cumsum(lens)[:-1])
-        docs, tfs, dls, _, _ = self.decode_term_flat(field, term,
-                                                     positions=False)
-        return docs, tfs, dls
+            docs, tfs, flat, lens = self.decode_term_flat(field, term)
+            return docs, tfs, np.split(flat, np.cumsum(lens)[:-1])
+        docs, tfs, _, _ = self.decode_term_flat(field, term, positions=False)
+        return docs, tfs
 
     def decode_term_flat(self, field: str, term: str, positions: bool = True):
-        """(doc_ords, tfs, dls, flat_positions, lens) — decoded with ONE
-        vbyte pass per column: every payload format in this index is
-        block-concatenable by construction (gap streams restart with an
-        absolute value per block, undone by a grouped cumsum; tf/dl/positions
-        streams are self-delimiting), so a term's whole posting list decodes
-        in ~4 NumPy calls regardless of block count."""
+        """(doc_ords, tfs, flat_positions, lens) — decoded with ONE vbyte
+        pass per column: every payload format in this index is
+        block-concatenable by construction (doc and position gap streams
+        restart with an absolute value per block and per doc, undone by a
+        grouped cumsum; tfs are self-delimiting and are the position
+        counts), so a term's whole posting list decodes in ~4 NumPy calls
+        regardless of block count."""
         key = (field, term, positions)
         if key in self._decode_cache:
             return self._decode_cache[key]
         pdf = self.blocks(field, term)
         empty = np.empty(0, dtype=np.uint64)
         if pdf.empty:
-            out = (empty, empty, empty, empty, np.empty(0, np.int64))
+            out = (empty, empty, empty, np.empty(0, np.int64))
         else:
             counts = pdf["n_docs"].to_numpy(dtype=np.int64)
             gaps = codecs.vbyte_decode(b"".join(pdf["doc_gaps"]))
@@ -273,17 +294,12 @@ class IndexReader:
             corr = np.repeat(abs_[starts] - gaps[starts], counts)
             docs = abs_ - corr
             tfs = codecs.vbyte_decode(b"".join(pdf["tfs"]))
-            dls = codecs.vbyte_decode(b"".join(pdf["dls"]))
             if positions and pdf["positions"].iloc[0] is not None:
-                # the positions stream's per-doc lengths ARE the tfs just
-                # decoded — pass them so the marker walk is one cumsum
-                # instead of a per-doc Python loop
                 flat, lens = codecs.decode_positions_flat(
-                    b"".join(pdf["positions"]), int(counts.sum()),
-                    lens=tfs.astype(np.int64))
+                    b"".join(pdf["positions"]), tfs)
             else:
                 flat, lens = empty, np.empty(0, np.int64)
-            out = (docs, tfs, dls, flat, lens)
+            out = (docs, tfs, flat, lens)
         if len(self._decode_cache) > 16:
             self._decode_cache.clear()
         self._decode_cache[key] = out
@@ -337,14 +353,19 @@ class TermCursor:
     first_doc/last_doc fences, the skip-list equivalent)."""
 
     def __init__(self, reader: IndexReader, field: str, term: str,
-                 need_positions: bool = False, boost: float = 1.0):
+                 boost: float = 1.0):
         self.field, self.term = field, term
         # clause boost folds into idf: score(), max_score and the
         # block-max bounds all scale together, so WAND stays exact
         self.idf = reader.idf(field, term) * boost
+        # df counts dead postings until a compaction, so after merges it
+        # can pass the live N and turn idf negative: every contribution
+        # is then below 0, which bounds them (idf * max_tfnorm would not)
+        self._bound_idf = max(self.idf, 0.0)
         info = reader.term_info(field, term)
         self.df = info["df"] if info else 0
         self.avgdl = reader.avgdl(field)
+        self._dl = reader.doc_lengths(field)
         # Score bounds were computed with the avgdl at encode time. If the
         # corpus avgdl has since GROWN (incremental merges with longer
         # docs), actual tfnorms can exceed stored bounds by at most
@@ -354,8 +375,8 @@ class TermCursor:
         lex_scale = 1.0
         if info and info.get("bound_avgdl"):
             lex_scale = max(1.0, self.avgdl / float(info["bound_avgdl"]))
-        self.max_score = (self.idf * float(info["max_tfnorm"]) * lex_scale
-                          if info else 0.0)
+        self.max_score = (self._bound_idf * float(info["max_tfnorm"])
+                          * lex_scale if info else 0.0)
         self._blocks = reader.blocks(field, term)
         self._nblocks = len(self._blocks)
         self._first = self._blocks["first_doc"].to_numpy() if self._nblocks else np.empty(0)
@@ -368,7 +389,7 @@ class TermCursor:
             self._bmax = np.empty(0)
         self.bi = -1
         self.pos = 0
-        self._docs = self._tfs = self._dls = None
+        self._docs = self._tfs = None
         self.doc = SENTINEL
         if self._nblocks:
             self._load(0)
@@ -378,18 +399,8 @@ class TermCursor:
         row = self._blocks.iloc[bi]
         self._docs = codecs.decode_block_docs(row["doc_gaps"]).astype(np.int64)
         self._tfs = codecs.vbyte_decode(row["tfs"]).astype(np.int64)
-        self._dls = codecs.vbyte_decode(row["dls"]).astype(np.int64)
-        self._poss = None  # positions decoded lazily per block
         self.pos = 0
         self.doc = int(self._docs[0])
-
-    def positions(self) -> np.ndarray:
-        """Positions of the current doc (block-lazily decoded)."""
-        if self._poss is None:
-            raw = self._blocks.iloc[self.bi]["positions"]
-            self._poss = codecs.decode_positions(raw, len(self._docs),
-                                                 lens=self._tfs)
-        return self._poss[self.pos]
 
     def next(self):
         if self.doc == SENTINEL:
@@ -423,7 +434,7 @@ class TermCursor:
 
     def score(self) -> float:
         tf = float(self._tfs[self.pos])
-        dl = float(self._dls[self.pos])
+        dl = float(self._dl[self.doc])
         return self.idf * (tf / (tf + BM25_K1 * (1.0 - BM25_B
                                                  + BM25_B * dl / self.avgdl)))
 
@@ -437,7 +448,7 @@ class TermCursor:
             bi = int(np.searchsorted(self._last, target, side="left"))
             if bi >= self._nblocks:
                 return 0.0
-        return self.idf * float(self._bmax[bi])
+        return self._bound_idf * float(self._bmax[bi])
 
     def block_last_at(self, target: int) -> int:
         """last_doc fence of the block that covers/follows target."""

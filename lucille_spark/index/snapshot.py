@@ -2,10 +2,10 @@
 
 An index version is one small JSON manifest, ``_meta/<version>.json``,
 in the spirit of an Iceberg snapshot (https://iceberg.apache.org/spec/).
-It holds the version number, the run_id that committed it, the ordinal
-span, the analyzer, the per-field corpus stats, the commit's
-``added``/``tombstoned`` counts, and the visible data files of every
-table in :data:`TABLES`.
+It holds the index format, the version number, the run_id that
+committed it, the ordinal span, the analyzer, the per-field corpus stats,
+the commit's ``added``/``tombstoned`` counts, and the visible data files
+of every table in :data:`TABLES`.
 
 Writers (``builder.build_index``, ``merge.merge_index``) stage data
 files into the table directories, where nothing lists them yet, and then
@@ -25,8 +25,10 @@ one more commit; a reader two commits behind fails with
 :class:`StaleVersionError`, which names its version.
 
 One writer at a time is the model; publishing is what makes a racing
-second writer fail. Indexes written before manifests have none, and
-:func:`load` tells the caller to rebuild them.
+second writer fail. Every manifest records the index :data:`FORMAT` its
+files are written in. :func:`load` tells the caller to rebuild an index
+without a manifest or of another format, so no reader or merge keeps a
+decode path for older bytes.
 """
 
 from __future__ import annotations
@@ -38,6 +40,9 @@ import uuid
 from typing import Optional
 
 TABLES = ("postings", "lexicon", "doc_stats", "_tombstones")
+# 2: postings carry no per-posting doc length (doc_stats holds it) and the
+# positions stream no per-doc tf prefix (the tfs column holds it)
+FORMAT = 2
 META = "_meta"
 _MANIFEST = re.compile(r"^(\d+)\.json$")
 
@@ -75,12 +80,14 @@ def latest(index_dir: str) -> Optional[dict]:
 
 
 def load(index_dir: str) -> dict:
-    """The latest manifest; raises when the directory has none."""
+    """The latest manifest; raises when the directory has none or it is
+    not of this :data:`FORMAT`."""
     manifest = latest(index_dir)
-    if manifest is None:
+    if manifest is None or manifest.get("format") != FORMAT:
         raise FileNotFoundError(
-            f"{index_dir}: no index manifest in {META}/. An index written "
-            "before version manifests must be rebuilt with build_index.")
+            f"{index_dir}: no format-{FORMAT} index manifest in {META}/. "
+            "An index written in an older format must be rebuilt with "
+            "build_index.")
     return manifest
 
 
@@ -99,7 +106,7 @@ def publish(index_dir: str, base: Optional[dict], *, run_id: str,
     :data:`TABLES` to its visible file names. Raises FileExistsError when
     another writer published that version first."""
     version = (base["version"] if base else 0) + 1
-    manifest = {"version": version, "run_id": run_id,
+    manifest = {"format": FORMAT, "version": version, "run_id": run_id,
                 "ord_span": int(ord_span), "analyzer": analyzer,
                 "stats": stats, "added": int(added),
                 "tombstoned": int(tombstoned),

@@ -205,7 +205,7 @@ class IndexSearcher:
         out = []
         for term in self.reader.terms_in_range(facet_field, None, None,
                                                limit=1 << 20):
-            docs, _, _ = self._term_postings(facet_field, term)
+            docs, _ = self._term_postings(facet_field, term)
             if docs.size == 0:
                 continue
             docs = docs.astype(np.int64)
@@ -434,7 +434,7 @@ class IndexSearcher:
         after incremental merges and would silently drop freshly merged
         high-ordinal docs from NOT results."""
         if isinstance(node, Term):
-            docs, _, _ = self._term_postings(node.field, node.text)
+            docs, _ = self._term_postings(node.field, node.text)
             return DocSet(np.asarray(docs, dtype=np.int64))
         if isinstance(node, MatchAll):
             return ~DocSet.empty()   # the lazy universe
@@ -495,7 +495,7 @@ class IndexSearcher:
         terms = list(p.terms)
         decoded = {}
         for t in set(terms):
-            docs, _, _, flat, lens = self.reader.decode_term_flat(p.field, t)
+            docs, _, flat, lens = self.reader.decode_term_flat(p.field, t)
             if docs.size == 0:
                 return DocSet.empty()
             flat_docs = np.repeat(docs.astype(np.int64), lens)
@@ -532,7 +532,7 @@ class IndexSearcher:
         n = len(p.terms)
         per, cand = [], None
         for i, t in enumerate(p.terms):
-            docs, _, _, flat, lens = self.reader.decode_term_flat(p.field, t)
+            docs, _, flat, lens = self.reader.decode_term_flat(p.field, t)
             if docs.size == 0:
                 return DocSet.empty()
             fd = np.repeat(docs.astype(np.int64), lens)
@@ -574,7 +574,7 @@ class IndexSearcher:
             return []
         scores = np.zeros(cand.size, dtype=np.float64)
         for t in positive_terms(node):
-            docs, tfs, dls = self._term_postings(t.field, t.text)
+            docs, tfs = self._term_postings(t.field, t.text)
             if docs.size == 0:
                 continue
             docs = docs.astype(np.int64)
@@ -585,7 +585,8 @@ class IndexSearcher:
             hit = np.zeros(docs.size, dtype=bool)
             hit[pos_ok] = cand[pos[pos_ok]] == docs[pos_ok]
             tf = tfs[hit].astype(np.float64)
-            dl = dls[hit].astype(np.float64)
+            dl = self.reader.doc_lengths(t.field)[docs[hit]].astype(
+                np.float64)
             contrib = idf * (tf / (tf + BM25_K1 * (
                 1.0 - BM25_B + BM25_B * dl / avgdl)))
             scores[pos[hit]] += contrib

@@ -55,5 +55,5 @@ def test_block_docs_roundtrip():
 def test_positions_roundtrip():
     pos = [[0, 5, 9], [2], [], [1, 2, 3, 1000]]
     data = codecs.encode_positions(pos)
-    back = codecs.decode_positions(data, len(pos))
+    back = codecs.decode_positions(data, [len(p) for p in pos])
     assert [list(map(int, p)) for p in back] == pos

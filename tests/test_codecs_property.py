@@ -34,9 +34,10 @@ def test_delta_roundtrip_sorted(ids):
     max_size=60))
 def test_positions_roundtrip(poslists):
     data = codecs.encode_positions(poslists)
-    back = codecs.decode_positions(data, len(poslists))
+    tfs = np.array([len(p) for p in poslists], dtype=np.int64)
+    back = codecs.decode_positions(data, tfs)
     assert [list(map(int, p)) for p in back] == poslists
-    flat, lens = codecs.decode_positions_flat(data, len(poslists))
+    flat, lens = codecs.decode_positions_flat(data, tfs)
     assert lens.tolist() == [len(p) for p in poslists]
     assert flat.tolist() == [x for p in poslists for x in p]
 

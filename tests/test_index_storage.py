@@ -22,7 +22,7 @@ from lucille_spark.corpus import corpus_pdf
 from lucille_spark.query.oracle import OracleIndex
 
 TABLES = ("postings", "lexicon", "doc_stats", "_tombstones", "_lineage")
-PAYLOAD = ("doc_gaps", "tfs", "dls", "positions")
+PAYLOAD = ("doc_gaps", "tfs", "positions")
 N_BASE, N_NEW = 300, 60
 QUERIES = ["content:test OR content:giraffe",
            "content:return AND content:import",
@@ -161,7 +161,7 @@ def test_postings_layout_routes(spark):
     from lucille_spark.index.builder import POSTINGS_SCHEMA, postings_layout
 
     blocks = spark.createDataFrame(
-        [("content", t, 0, 0, 0, 0, 1, 1, b"", b"", b"", None, 1, 0.5, 1.0)
+        [("content", t, 0, 0, 0, 0, 1, 1, b"", b"", None, 1, 0.5, 1.0)
          for t in ("a", "b")], POSTINGS_SCHEMA)
 
     def plan(totals, docs_per_salt):
@@ -232,6 +232,68 @@ def test_merged_layouts_match_oracle(route, request):
             assert math.isclose(gs, ws, rel_tol=1e-9), q
 
 
+def test_merged_index_scores_with_doc_stats_lengths(
+        spark, merged_with_deletes, monkeypatch):
+    """Postings carry no doc lengths: after a merge with upserts that
+    change a doc's length, and deletes, every strategy scores each
+    posting with the dl of its own ordinal from doc_stats. Forced
+    vectorized and forced WAND/leapfrog return bit-equal hits on term, OR,
+    AND and phrase queries, search_batch returns the same, and all of them
+    agree with the oracle over the live docs."""
+    import lucille_spark.query.searcher as S
+    import pyarrow.dataset as ds
+
+    from lucille_spark import BM25_B, BM25_K1
+    from lucille_spark.index import snapshot
+    from lucille_spark.query.executor_df import search_batch
+
+    word = UPDATED.split()[0]
+    queries = QUERIES + [f"content:{word}", f"content:{word} OR content:if",
+                         f"content:{word} AND content:words",
+                         f'content:"{word} content"']
+    got = {}
+    for q in queries:
+        monkeypatch.setattr(S, "VEC_POSTINGS_MAX", 1 << 62)
+        vec = S.IndexSearcher(merged_with_deletes).search(q, 10)
+        monkeypatch.setattr(S, "VEC_POSTINGS_MAX", 0)
+        cursor = S.IndexSearcher(merged_with_deletes).search(q, 10)
+        assert vec == cursor, q
+        got[q] = vec
+    monkeypatch.undo()
+
+    rows = search_batch(spark, merged_with_deletes,
+                        list(zip(map(str, range(len(queries))), queries)),
+                        k=10).collect()
+    batch = {q: [] for q in queries}
+    for r in sorted(rows, key=lambda r: (int(r["query_id"]), r["rank"])):
+        batch[queries[int(r["query_id"])]].append((r["doc_id"], r["score"]))
+    assert batch == got
+
+    oracle = _oracle_after_deletes()
+    for q, hits in got.items():
+        want = oracle.search(q, 10)
+        assert [d for d, _ in hits] == [d for d, _ in want], q
+        for (_, gs), (_, ws) in zip(hits, want):
+            assert math.isclose(gs, ws, rel_tol=1e-9), q
+
+    # the two upserted docs score with their new ordinals' length
+    reader = S.IndexSearcher(merged_with_deletes).reader
+    dl = len(UPDATED.split())
+    norm = 1 / (1 + BM25_K1 * (1 - BM25_B + BM25_B * dl
+                               / reader.avgdl("content")))
+    want = reader.idf("content", word) * norm
+    assert [s for _, s in got[f"content:{word}"]] == [want, want]
+    ids = [d for d, _ in got[f"content:{word}"]]
+    stats = ds.dataset(snapshot.paths(
+        merged_with_deletes, reader.manifest, "doc_stats")).to_table(
+        columns=["doc_id", "doc_ord"]).to_pandas()
+    for doc_id in ids:  # the old ordinal is dead, and its dl stays its own
+        old, new = sorted(stats.loc[stats["doc_id"] == doc_id, "doc_ord"])
+        assert reader.has_tombstone(old) and not reader.has_tombstone(new)
+        lengths = reader.doc_lengths("content")[[old, new]].tolist()
+        assert lengths[1] == dl != lengths[0]
+
+
 def test_every_index_table_is_zstd(merged_with_deletes,
                                    small_merged_with_deletes):
     for table in TABLES:
@@ -258,6 +320,7 @@ def test_payload_columns_carry_no_statistics(merged_with_deletes,
             cols = {md.row_group(g).column(c).path_in_schema:
                     md.row_group(g).column(c)
                     for c in range(md.num_columns)}
+            assert "dls" not in cols, path  # format 2: dl is in doc_stats
             for name in PAYLOAD:
                 assert not cols[name].is_stats_set, (path, name)
             for name in ("field", "term", "first_doc", "last_doc"):

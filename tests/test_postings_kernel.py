@@ -1,7 +1,8 @@
 """The postings encode kernel, without Spark: fed a (term, salt)-sorted
 occurrence table in small Arrow batches, it must encode every group whole
 (carrying groups across batch edges) and its blocks must decode to the
-per-(term, salt, doc) truth computed directly with NumPy."""
+per-(term, salt, doc) truth computed directly with NumPy. Blocks carry no
+doc lengths: their tfnorm bounds must match the truth's dl."""
 
 import numpy as np
 import pandas as pd
@@ -60,32 +61,31 @@ def test_kernel_blocks_decode_to_truth():
     truth = _truth(df)
     assert set(zip(got["term"], got["salt"])) == set(truth)
     assert (got["field"] == "content").all()
+    assert "dls" not in got.columns
     for key, blocks in got.groupby(["term", "salt"]):
         blocks = blocks.sort_values("block_seq")
         assert list(blocks["block_seq"]) == list(range(len(blocks)))
-        docs, tfs, dls, positions = [], [], [], []
+        want = truth[key]
+        dl_of = {d: dl for d, _, dl in want}
+        docs, tfs, positions = [], [], []
         for r in blocks.itertuples():
             bdocs = codecs.decode_block_docs(r.doc_gaps).astype(np.int64)
             btfs = codecs.decode_block_tfs(r.tfs).astype(np.int64)
-            flat, _ = codecs.decode_positions_flat(r.positions, r.n_docs,
-                                                   lens=btfs)
+            flat, _ = codecs.decode_positions_flat(r.positions, btfs)
             assert bdocs.size == r.n_docs <= BLOCK
             assert (r.first_doc, r.last_doc) == (bdocs[0], bdocs[-1])
             assert r.sum_tf == btfs.sum() and r.block_max_tf == btfs.max()
-            bdls = codecs.vbyte_decode(r.dls).astype(np.int64)
+            bdls = np.array([dl_of[d] for d in bdocs], dtype=np.int64)
             tfnorm = btfs / (btfs + BM25_K1 * (1 - BM25_B + BM25_B * bdls
                                                / 10.0))
             assert r.block_max_tfnorm == tfnorm.max()
             assert r.bound_avgdl == 10.0
             docs += bdocs.tolist()
             tfs += btfs.tolist()
-            dls += bdls.tolist()
             positions += np.split(flat.astype(np.int64),
                                   np.cumsum(btfs)[:-1])
-        want = truth[key]
         assert docs == [d for d, _, _ in want]
         assert tfs == [p.size for _, p, _ in want]
-        assert dls == [dl for _, _, dl in want]
         for got_p, (_, want_p, _) in zip(positions, want):
             np.testing.assert_array_equal(got_p, want_p)
 

@@ -209,6 +209,29 @@ def test_index_without_manifest_must_be_rebuilt(base, tmp_path):
         IndexReader(idx)
 
 
+def test_index_of_an_older_format_must_be_rebuilt(spark, base, tmp_path):
+    """A manifest without the current format (one written before the
+    postings dropped their dl and tf-prefix payloads) is refused by the
+    reader and by a merge alike, before either reads a data file."""
+    from lucille_spark.index.merge import merge_index
+    from lucille_spark.index.reader import IndexReader
+
+    idx = _copy(base, tmp_path)
+    path = os.path.join(idx, "_meta", sorted(os.listdir(
+        os.path.join(idx, "_meta")))[-1])
+    with open(path) as f:
+        manifest = json.load(f)
+    assert manifest.pop("format") == snapshot.FORMAT == 2
+    with open(path, "w") as f:
+        json.dump(manifest, f)
+    with pytest.raises(FileNotFoundError, match="rebuilt"):
+        IndexReader(idx)
+    with pytest.raises(FileNotFoundError, match="rebuilt"):
+        merge_index(spark.createDataFrame(corpus_pdf(np.arange(
+            N_BASE, N_BASE + 5))), idx, **KW)
+    assert snapshot.latest(idx) == manifest  # the merge published nothing
+
+
 def test_publish_is_no_replace_and_keeps_one_previous_version(tmp_path):
     idx = str(tmp_path / "idx")
     lex = tmp_path / "idx" / "lexicon"
