@@ -33,7 +33,7 @@ Output tables (parquet dir layout), every one written by
 :func:`write_index_table`: zstd pages, no statistics on the opaque postings
 payload columns (doc_gaps, tfs, positions), min/max kept on every other
 column:
-  postings/      term-sorted, row-group pruning serves point lookups:
+  postings/      (field, term)-sorted in every file, which lookups slice:
                  one file per field when every field has <= docs_per_salt
                  tokens, else range-partitioned on (field, term) into
                  max(defaultParallelism, 8) files; merges append files
@@ -100,8 +100,8 @@ def write_index_table(data, path: str, mode: str = "overwrite") -> list:
     """The one writer of every index table, so every table gets the same
     parquet options whatever the session config says: zstd pages, and no
     min/max or size statistics on the :data:`PAYLOAD_COLUMNS`. Every other
-    column keeps its min/max, which is what row-group pruning on term,
-    field, first_doc/last_doc and doc_ord reads. Readers need no option:
+    column keeps its min/max; the reader picks postings row groups by those
+    of field and term. Readers need no option:
     parquet records the codec per file, so an index whose files use
     another codec (Spark's default snappy) stays readable and mergeable.
 
@@ -315,6 +315,14 @@ def encode_partitions(spark: SparkSession, total_tokens: Optional[int],
     return int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
+def one_partition(spark: SparkSession, fields: Sequence[str],
+                  totals_by_field: dict, docs_per_salt: int) -> bool:
+    """Whether :func:`encode_partitions` gives every field ONE partition,
+    so that each postings field, doc_stats and tombstones is one file."""
+    return all(encode_partitions(spark, totals_by_field.get(f),
+                                 docs_per_salt) == 1 for f in fields)
+
+
 def postings_blocks(docs, fields, avgdl_by_field, ord_span,
                     tok_fn=None, block_size=BLOCK_SIZE,
                     docs_per_salt=1 << 17, store_positions=True,
@@ -418,8 +426,7 @@ def postings_layout(blocks: DataFrame, fields: Sequence[str],
     every partition) — and the range+sort+write replays from the cache.
     Both callers persist ``blocks``; their lexicon aggregates reuse it."""
     spark = blocks.sparkSession
-    if all(encode_partitions(spark, totals_by_field.get(f), docs_per_salt)
-           == 1 for f in fields):
+    if one_partition(spark, fields, totals_by_field, docs_per_salt):
         return blocks
     return (blocks.repartitionByRange(
         max(spark.sparkContext.defaultParallelism, 8), "field", "term")
@@ -568,8 +575,8 @@ def build_index(
             ledger.record("postings", -1, t_stage)
         lexicon_src = (all_blocks if not skip_postings else
                        spark.read.parquet(os.path.join(out_dir, "postings")))
-        # sorted within each file, so row-group min/max on term prunes
-        # lookups (no extra job: the sort rides the aggregate's stage)
+        # sorted within each file (no extra job: the sort rides the
+        # aggregate's stage)
         lexicon = (
             lexicon_src.groupBy("field", "term")
             .agg(F.sum("n_docs").cast("long").alias("df"),

@@ -42,8 +42,8 @@ from lucille_spark.analysis import tokenize_col
 from lucille_spark.analysis.analyzers import tokenize_code_col
 from lucille_spark.index import snapshot
 from lucille_spark.index.builder import (
-    _job_scope, _Ledger, add_doc_identity, postings_blocks, postings_layout,
-    write_index_table,
+    _job_scope, _Ledger, add_doc_identity, one_partition, postings_blocks,
+    postings_layout, write_index_table,
 )
 from lucille_spark.index.ordinals import assign_doc_ord
 
@@ -196,13 +196,19 @@ def merge_index(
         append(postings_layout(blocks, fields, totals, docs_per_salt),
                "postings")
 
-        # append doc_stats rows for the delta
+        # one doc_stats and one tombstone file for a small delta: coalesce
+        # over the cached delta and the checkpoint is narrow, no job added
+        small = one_partition(spark, fields, totals, docs_per_salt)
+
+        def rows(df):
+            return df.coalesce(1) if small else df
+
         stat_cols = ["doc_id", "doc_ord"] + [f"dl_{f}" for f in fields] + [
             c for c in ("repo", "path", "commit", "lang")
             if c in new_corpus.columns] + ["content_sha256"]
-        append(delta.select(*stat_cols), "doc_stats")
+        append(rows(delta.select(*stat_cols)), "doc_stats")
         if n_tomb:
-            append(tombs.select("doc_ord"), "_tombstones")
+            append(rows(tombs.select("doc_ord")), "_tombstones")
 
         # incremental lexicon: aggregate the DELTA blocks only and fold into
         # the existing lexicon (df/cf/n_blocks are additive across blocks,
@@ -219,8 +225,8 @@ def merge_index(
             *snapshot.paths(index_dir, base, "lexicon")).withColumn(
             "n_blocks", F.col("n_blocks").cast("long"))
         # a new set of lexicon files, as many as the version it replaces
-        # and each sorted by (field, term), so row-group min/max on term
-        # prunes lookups: coalesce and the sort are narrow, no new job
+        # and each sorted by (field, term) like the build's: coalesce and
+        # the sort are narrow, no new job
         merged_lex = (old_lex.unionByName(delta_lex)
                       .groupBy("field", "term")
                       .agg(F.sum("df").cast("long").alias("df"),

@@ -1,34 +1,70 @@
 """Driver-side index reader: lexicon lookups + lazily-decoded block cursors.
 
-Opens one index version, the latest manifest (``snapshot.load``), and
-reads exactly the parquet files it lists through pyarrow.dataset with
-predicate pushdown (term-sorted layout → row-group pruning), so a
-single-query lookup touches only the row groups holding the query's terms
-— no Spark job, millisecond-scale latency. This is the moral equivalent of
-Lucene's term dictionary + skip lists, which the reference gets by
-delegating to Solr/ES (SURVEY.md §2.9). The corpus stats, ordinal span and
-version come from the manifest; a concurrent merge's files stay unseen
-until its manifest is published, and the reader keeps its own version.
+Opens one index version, the latest manifest (``snapshot.load``), reads
+each row group of the files it lists at most once, and answers every
+lookup with a binary search and a slice — no scan predicate, no Spark
+job — as Lucene's terms dictionary points into the postings (SURVEY.md
+§2.9). The lexicon is read whole at open, sorted by (field, term). A
+postings row group is read when a lookup first needs it, picked by its
+footer min/max on field and term; every postings file is sorted by
+(field, term) (``builder.postings_layout``), so a term's blocks are a
+slice of it. A doc_stats column loads on first use as one doc_ord-indexed
+array; scoring gathers each posting's dl from :meth:`doc_lengths`.
 
-Postings carry no doc lengths (index format 2): scoring gathers a
-posting's dl from :meth:`IndexReader.doc_lengths`, one dense int32
-``doc_ord -> dl`` array per field loaded from this version's doc_stats,
-as Lucene scores with per-document norms.
+Memory: a reader holds its lexicon, the row groups and the doc_stats
+columns it used, decompressed, with their search keys as Python strings:
+at most its version's data in that form. It reads no lexicon file after
+open, and the other tables are append-only, so it serves its version
+through any number of later commits.
 """
 
 from __future__ import annotations
 
+import fnmatch
 import math
 import re
+from functools import cached_property
 from typing import Dict, List, Optional
 
 import numpy as np
-import pyarrow.dataset as ds
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 
 from lucille_spark import BM25_B, BM25_K1
 from lucille_spark.index import codecs, snapshot
 
 SENTINEL = 1 << 62
+
+
+class _SortedRows:
+    """A table sorted by (field, term), its two key columns held as
+    arrays for binary search."""
+
+    def __init__(self, table: pa.Table):
+        self.table = table
+        self.fields = table["field"].to_numpy(zero_copy_only=False)
+        self.terms = table["term"].to_numpy(zero_copy_only=False)
+
+    def span(self, field: str, lo: Optional[str] = None,
+             hi: Optional[str] = None, include_lo: bool = True,
+             include_hi: bool = True):
+        """Rows [i, j) of ``field`` whose term lies between ``lo`` and
+        ``hi`` (None: unbounded)."""
+        a = int(np.searchsorted(self.fields, field, "left"))
+        terms = self.terms[a:int(np.searchsorted(self.fields, field,
+                                                 "right"))]
+        i = a + (0 if lo is None else int(np.searchsorted(
+            terms, lo, "left" if include_lo else "right")))
+        j = a + (terms.size if hi is None else int(np.searchsorted(
+            terms, hi, "right" if include_hi else "left")))
+        return i, max(i, j)
+
+
+def _admits(stats, value: str) -> bool:
+    """Whether a row group whose column has ``stats`` may hold ``value``."""
+    return (stats is None or not stats.has_min_max
+            or stats.min <= value <= stats.max)
 
 
 class IndexReader:
@@ -37,41 +73,31 @@ class IndexReader:
         # one version: the latest manifest and exactly the files it lists
         # (snapshot.py), so a concurrent merge's staged files stay unseen
         m = self.manifest = snapshot.load(index_dir)
-
-        def table(name):
-            return ds.dataset(snapshot.paths(index_dir, m, name),
-                              format="parquet")
-
-        self._postings = table("postings")
-        self._lexicon = table("lexicon")
-        self._doc_stats = table("doc_stats")
         self.stats = m["stats"]
-        self._term_cache: Dict = {}
-        self._decode_cache: Dict = {}
-        self._doc_lengths: Dict = {}
+        try:
+            lexicon = pa.concat_tables(
+                [pq.read_table(p) for p in self._files("lexicon")])
+        except FileNotFoundError as e:
+            raise snapshot.StaleVersionError(
+                f"{index_dir}: version {self.version()} lost its lexicon "
+                "files to two commits published while it opened; reopen "
+                "the index") from e
+        # a merged lexicon is sorted within each of its files only
+        self._lexicon = _SortedRows(lexicon.sort_by(
+            [("field", "ascending"), ("term", "ascending")]))
+        self._row_groups: Dict = {}
+        self._doc_columns: Dict = {}
         self._fuzzy_stats: Dict = {}
         # deleted docs (incremental upserts/deletes): ordinals to exclude.
         # Stored as a SORTED int64 array, not a Python set: at 10^9 docs with
         # 1% deletes a set of ints is ~GBs; the array is 8B/entry and
         # membership is one searchsorted.
-        arr = np.empty(0, dtype=np.int64)
-        if m["files"]["_tombstones"]:
-            t = table("_tombstones").to_table(columns=["doc_ord"])
-            arr = np.unique(np.asarray(t["doc_ord"].to_pylist(),
-                                       dtype=np.int64))
-        self.tombstones = arr
+        self.tombstones = np.unique(np.concatenate([
+            pq.read_table(p, columns=["doc_ord"])["doc_ord"].to_numpy()
+            for p in self._files("_tombstones")] or [np.empty(0, np.int64)]))
 
-    def _lex_table(self, flt, columns=None):
-        """Lexicon read of this reader's version. Each commit replaces the
-        lexicon files, and the version before the latest keeps its own;
-        a reader two commits behind finds them gone."""
-        try:
-            return self._lexicon.to_table(filter=flt, columns=columns)
-        except FileNotFoundError as e:
-            raise snapshot.StaleVersionError(
-                f"{self.index_dir}: version {self.version()} is two or more "
-                "commits old and its lexicon files are gone; reopen the "
-                "index") from e
+    def _files(self, table: str) -> List[str]:
+        return snapshot.paths(self.index_dir, self.manifest, table)
 
     # --- stats -----------------------------------------------------------
     def n_docs(self, field: str = "content") -> int:
@@ -95,83 +121,75 @@ class IndexReader:
     def avgdl(self, field: str = "content") -> float:
         return float(self.stats[field]["avgdl"])
 
+    def _doc_column(self, name: str, dtype=object) -> Optional[np.ndarray]:
+        """doc_stats column ``name`` as a dense ``doc_ord -> value`` array
+        over the ordinal span, read on first use. Ordinals without a row
+        hold None, or 0 for a numeric ``dtype``; None when no file stores
+        the column."""
+        key = (name, dtype)
+        if key not in self._doc_columns:
+            parts = [pq.read_table(p, columns=["doc_ord", name])
+                     for p in self._files("doc_stats")
+                     if name in pq.read_schema(p).names]
+            arr = None
+            if parts:
+                t = pa.concat_tables(parts)
+                arr = np.full(self.ord_span(), None if dtype is object else 0,
+                              dtype=dtype)
+                arr[t["doc_ord"].to_numpy()] = t[name].to_numpy(
+                    zero_copy_only=False)
+            self._doc_columns[key] = arr
+        return self._doc_columns[key]
+
     def doc_lengths(self, field: str = "content") -> np.ndarray:
         """Dense ``doc_ord -> dl`` of ``field`` over the ordinal span:
-        int32, 4 bytes per ordinal (tombstoned ones included). Loaded on
-        first use with one projected read of this version's doc_stats and
-        a scatter; doc_stats files are append-only, so it stays valid for
-        as long as the reader does."""
-        arr = self._doc_lengths.get(field)
-        if arr is None:
-            t = self._doc_stats.to_table(columns=["doc_ord", f"dl_{field}"])
-            arr = np.zeros(self.ord_span(), dtype=np.int32)
-            arr[t["doc_ord"].to_numpy()] = t[f"dl_{field}"].to_numpy()
-            self._doc_lengths[field] = arr
-        return arr
+        int32, 4 bytes per ordinal (tombstoned ones included)."""
+        return self._doc_column(f"dl_{field}", np.int32)
 
+    # --- lexicon ------------------------------------------------------------
     def term_info(self, field: str, term: str) -> Optional[dict]:
-        key = (field, term)
-        if key not in self._term_cache:
-            t = self._lex_table(
-                (ds.field("field") == field) & (ds.field("term") == term))
-            rows = t.to_pylist()
-            self._term_cache[key] = rows[0] if rows else None
-        return self._term_cache[key]
+        i, j = self._lexicon.span(field, term, term)
+        return self._lexicon.table.slice(i, 1).to_pylist()[0] if j > i \
+            else None
+
+    def _prefix_span(self, field: str, prefix: str):
+        """Lexicon rows of ``field`` whose term starts with ``prefix``:
+        [prefix, prefix with its last character bumped), the seek of
+        Lucene's TermsEnum."""
+        if not prefix:
+            return self._lexicon.span(field)
+        return self._lexicon.span(field, prefix, prefix[:-1] + chr(
+            ord(prefix[-1]) + 1), include_hi=False)
 
     def terms_with_prefix(self, field: str, prefix: str,
                           limit: int = 1024) -> List[str]:
-        """Dictionary terms starting with ``prefix``, ascending, capped.
-        The lexicon is term-sorted parquet, so the range predicate
-        [prefix, prefix+0x7F) prunes to the row groups covering the prefix
-        — the skip-list seek of Lucene's TermsEnum (analyzer alphabet is
-        ASCII, so 0x7F upper-bounds every continuation)."""
-        t = self._lex_table(
-            (ds.field("field") == field)
-            & (ds.field("term") >= prefix)
-            & (ds.field("term") < prefix + "\x7f"),
-            columns=["term"])
-        terms = sorted(x for x in t["term"].to_pylist()
-                       if x.startswith(prefix))
-        return terms[:limit]
+        """Dictionary terms starting with ``prefix``, ascending, capped."""
+        i, j = self._prefix_span(field, prefix)
+        return self._lexicon.terms[i:min(j, i + limit)].tolist()
 
     def terms_in_range(self, field: str, lower: Optional[str],
                        upper: Optional[str], include_lower: bool = True,
                        include_upper: bool = True,
                        limit: int = 1024) -> List[str]:
         """Dictionary terms in the lexicographic range, ascending, capped
-        — TermRangeQuery's expansion. The bounds push straight into the
-        Arrow scan over the term-sorted lexicon (row-group pruning), the
-        same seek the prefix scan does."""
-        f = ds.field("term")
-        cond = ds.field("field") == field
-        if lower is not None:
-            cond = cond & (f >= lower if include_lower else f > lower)
-        if upper is not None:
-            cond = cond & (f <= upper if include_upper else f < upper)
-        t = self._lex_table(cond, columns=["term"])
-        return sorted(t["term"].to_pylist())[:limit]
+        — TermRangeQuery's expansion."""
+        i, j = self._lexicon.span(field, lower, upper, include_lower,
+                                  include_upper)
+        return self._lexicon.terms[i:min(j, i + limit)].tolist()
 
     def terms_wildcard(self, field: str, pattern: str,
                        limit: int = 1024) -> List[str]:
         """Dictionary terms matching a `?`/`*` wildcard pattern,
         ascending, capped — WildcardQuery's expansion. The literal prefix
-        before the first wildcard prunes the scan to its range (same
-        seek as terms_with_prefix); the residual match is one compiled
-        regex over the banded candidates. A LEADING wildcard scans the
-        field's whole dictionary — Lucene documents the same cost."""
-        import fnmatch
-
-        i = min((pattern.index(c) for c in "*?" if c in pattern),
+        before the first wildcard narrows the candidates to its terms;
+        the residual match is one compiled regex over them. A LEADING
+        wildcard tests the field's whole dictionary — Lucene documents
+        the same cost."""
+        k = min((pattern.index(c) for c in "*?" if c in pattern),
                 default=len(pattern))
-        prefix = pattern[:i]
-        cond = ds.field("field") == field
-        if prefix:
-            cond = (cond & (ds.field("term") >= prefix)
-                    & (ds.field("term") < prefix + "\x7f"))
-        t = self._lex_table(cond, columns=["term"])
+        i, j = self._prefix_span(field, pattern[:k])
         rx = re.compile(fnmatch.translate(pattern))
-        return sorted(x for x in t["term"].to_pylist()
-                      if rx.match(x))[:limit]
+        return [t for t in self._lexicon.terms[i:j] if rx.match(t)][:limit]
 
     def terms_fuzzy(self, field: str, text: str, max_edits: int = 2,
                     limit: int = 50) -> List[str]:
@@ -183,26 +201,22 @@ class IndexReader:
         The expansion is bounded in three sound stages, so the per-term
         Python DP runs on a tiny survivor set instead of the whole
         dictionary:
-          1. length band |len(t) - len(q)| <= max_edits evaluated INSIDE
-             the Arrow scan (utf8_length expression filter — vectorized
-             C++, nothing outside the band is materialized to Python);
+          1. length band |len(t) - len(q)| <= max_edits over the field's
+             sorted terms (one vectorized utf8_length; nothing outside the
+             band is materialized to Python);
           2. bag-distance lower bound (multiset character diff <= lev,
              Navarro 2001) computed as one NumPy 128-bin histogram matmul
              over the banded candidates;
           3. exact banded Levenshtein only on bag-distance survivors.
         ``_fuzzy_stats`` records (banded, bag_survivors) per call so tests
         can assert the DP touches a small fraction of the dictionary."""
-        import pyarrow.compute as pc
-
         from lucille_spark.query.parser import levenshtein
 
-        qlen = len(text)
-        t = self._lex_table(
-            (ds.field("field") == field)
-            & (pc.utf8_length(ds.field("term")) >= qlen - max_edits)
-            & (pc.utf8_length(ds.field("term")) <= qlen + max_edits),
-            columns=["term"])
-        terms = t["term"].to_pylist()
+        i, j = self._lexicon.span(field)
+        lens = pc.utf8_length(
+            self._lexicon.table["term"].slice(i, j - i)).to_numpy()
+        terms = self._lexicon.terms[i:j][
+            np.abs(lens - len(text)) <= max_edits].tolist()
         survivors = terms
         # byte-level bag distance is only a valid lower bound when the
         # QUERY is pure ASCII: a multi-byte query char inflates the query
@@ -250,26 +264,39 @@ class IndexReader:
         return math.log(1.0 + (n - df + 0.5) / (df + 0.5))
 
     # --- postings ---------------------------------------------------------
-    def blocks(self, field: str, term: str, columns: Optional[List[str]] = None):
-        """All block rows for a term, ordered by first_doc (salt ranges are
-        disjoint in doc_ord, so (salt, block_seq) order == first_doc order)."""
-        cols = columns or ["salt", "block_seq", "first_doc", "last_doc",
-                           "n_docs", "doc_gaps", "tfs", "positions",
-                           "block_max_tf", "block_max_tfnorm", "bound_avgdl"]
-        t = self._postings.to_table(
-            filter=(ds.field("field") == field) & (ds.field("term") == term),
-            columns=cols)
-        pdf = t.to_pandas()
-        return pdf.sort_values(["first_doc"]).reset_index(drop=True)
+    @cached_property
+    def _postings(self):
+        """The postings schema, and (path, row group, field stats, term
+        stats) of every postings row group, from the file footers."""
+        groups, schema = [], None
+        for path in self._files("postings"):
+            md = pq.read_metadata(path)
+            schema = md.schema.to_arrow_schema()
+            f, t = map(schema.get_field_index, ("field", "term"))
+            groups += [(path, g, md.row_group(g).column(f).statistics,
+                        md.row_group(g).column(t).statistics)
+                       for g in range(md.num_row_groups)]
+        return schema, groups
 
-    def decode_term(self, field: str, term: str, positions: bool = False):
-        """Full uncompressed postings: (doc_ords, tfs[, positions]). A
-        posting's dl is ``doc_lengths(field)[doc_ord]``."""
-        if positions:
-            docs, tfs, flat, lens = self.decode_term_flat(field, term)
-            return docs, tfs, np.split(flat, np.cumsum(lens)[:-1])
-        docs, tfs, _, _ = self.decode_term_flat(field, term, positions=False)
-        return docs, tfs
+    def blocks(self, field: str, term: str) -> pa.Table:
+        """All block rows for a term, ordered by first_doc: its slice of
+        every postings row group whose footer min/max admit (field, term),
+        each row group read once per reader."""
+        schema, groups = self._postings
+        parts = []
+        for path, g, fstats, tstats in groups:
+            if _admits(fstats, field) and _admits(tstats, term):
+                rows = self._row_groups.get((path, g))
+                if rows is None:
+                    with pq.ParquetFile(path) as f:
+                        rows = self._row_groups[path, g] = _SortedRows(
+                            f.read_row_group(g))
+                i, j = rows.span(field, term, term)
+                parts.append(rows.table.slice(i, j - i))
+        if not parts:
+            return schema.empty_table()
+        t = pa.concat_tables(parts)
+        return t.take(pc.sort_indices(t["first_doc"]))
 
     def decode_term_flat(self, field: str, term: str, positions: bool = True):
         """(doc_ords, tfs, flat_positions, lens) — decoded with ONE vbyte
@@ -279,72 +306,44 @@ class IndexReader:
         grouped cumsum; tfs are self-delimiting and are the position
         counts), so a term's whole posting list decodes in ~4 NumPy calls
         regardless of block count."""
-        key = (field, term, positions)
-        if key in self._decode_cache:
-            return self._decode_cache[key]
-        pdf = self.blocks(field, term)
+        b = self.blocks(field, term)
         empty = np.empty(0, dtype=np.uint64)
-        if pdf.empty:
-            out = (empty, empty, empty, np.empty(0, np.int64))
-        else:
-            counts = pdf["n_docs"].to_numpy(dtype=np.int64)
-            gaps = codecs.vbyte_decode(b"".join(pdf["doc_gaps"]))
-            abs_ = np.cumsum(gaps, dtype=np.uint64)
-            starts = np.cumsum(counts) - counts
-            corr = np.repeat(abs_[starts] - gaps[starts], counts)
-            docs = abs_ - corr
-            tfs = codecs.vbyte_decode(b"".join(pdf["tfs"]))
-            if positions and pdf["positions"].iloc[0] is not None:
-                flat, lens = codecs.decode_positions_flat(
-                    b"".join(pdf["positions"]), tfs)
-            else:
-                flat, lens = empty, np.empty(0, np.int64)
-            out = (docs, tfs, flat, lens)
-        if len(self._decode_cache) > 16:
-            self._decode_cache.clear()
-        self._decode_cache[key] = out
-        return out
+        if b.num_rows == 0:
+            return empty, empty, empty, np.empty(0, np.int64)
+        counts = b["n_docs"].to_numpy().astype(np.int64)
+        gaps = codecs.vbyte_decode(b"".join(b["doc_gaps"].to_pylist()))
+        abs_ = np.cumsum(gaps, dtype=np.uint64)
+        starts = np.cumsum(counts) - counts
+        corr = np.repeat(abs_[starts] - gaps[starts], counts)
+        docs = abs_ - corr
+        tfs = codecs.vbyte_decode(b"".join(b["tfs"].to_pylist()))
+        flat, lens = empty, np.empty(0, np.int64)
+        if positions and b["positions"].null_count == 0:
+            flat, lens = codecs.decode_positions_flat(
+                b"".join(b["positions"].to_pylist()), tfs)
+        return docs, tfs, flat, lens
 
     def doc_values(self, field: str,
                    ords: np.ndarray) -> Optional[np.ndarray]:
         """Doc-values analogue (Lucene SortedDocValues): the stored
-        single-valued field column for the given SORTED doc ords,
-        POSITIONALLY aligned to them — always ``ords.size`` entries,
-        with None at positions whose ord has no doc_stats row, so
-        callers may zip(ords, vals) safely. doc_stats is written in
-        doc_ord order, so the range filter prunes to the row groups
-        covering the match span — one projected sequential read of two
-        columns, never a per-term posting decode. Returns None when the
-        field isn't stored (the caller falls back to postings)."""
+        single-valued field column for the given doc ords, POSITIONALLY
+        aligned to them — always ``ords.size`` entries, with None at
+        positions whose ord has no doc_stats row, so callers may
+        zip(ords, vals) safely. Returns None when the field isn't stored
+        (the caller falls back to postings)."""
         if ords.size == 0:
             return np.empty(0, dtype=object)
-        if field not in self._doc_stats.schema.names:
+        col = self._doc_column(field)
+        if col is None:
             return None
-        lo, hi = int(ords[0]), int(ords[-1])
-        t = self._doc_stats.to_table(
-            filter=(ds.field("doc_ord") >= lo)
-            & (ds.field("doc_ord") <= hi),
-            columns=["doc_ord", field])
-        do = np.asarray(t["doc_ord"].to_pylist(), dtype=np.int64)
         out = np.full(ords.size, None, dtype=object)
-        if do.size == 0:
-            return out
-        order = np.argsort(do, kind="stable")
-        do = do[order]
-        vals = np.asarray(t[field].to_pylist(), dtype=object)[order]
-        pos = np.searchsorted(do, ords)
-        pos_c = np.minimum(pos, do.size - 1)
-        ok = (pos < do.size) & (do[pos_c] == ords)
-        out[ok] = vals[pos_c[ok]]
+        ok = ords < col.size
+        out[ok] = col[ords[ok]]
         return out
 
     def doc_ids_for_ords(self, ords: List[int]) -> Dict[int, str]:
-        if not ords:
-            return {}
-        t = self._doc_stats.to_table(
-            filter=ds.field("doc_ord").isin([int(o) for o in ords]),
-            columns=["doc_ord", "doc_id"])
-        return dict(zip(t["doc_ord"].to_pylist(), t["doc_id"].to_pylist()))
+        ids = self._doc_column("doc_id")
+        return {o: ids[o] for o in map(int, ords) if ids[o] is not None}
 
 
 class TermCursor:
@@ -377,16 +376,13 @@ class TermCursor:
             lex_scale = max(1.0, self.avgdl / float(info["bound_avgdl"]))
         self.max_score = (self._bound_idf * float(info["max_tfnorm"])
                           * lex_scale if info else 0.0)
-        self._blocks = reader.blocks(field, term)
-        self._nblocks = len(self._blocks)
-        self._first = self._blocks["first_doc"].to_numpy() if self._nblocks else np.empty(0)
-        self._last = self._blocks["last_doc"].to_numpy() if self._nblocks else np.empty(0)
-        if self._nblocks:
-            bavg = self._blocks["bound_avgdl"].to_numpy()
-            scale = np.maximum(1.0, self.avgdl / bavg)
-            self._bmax = self._blocks["block_max_tfnorm"].to_numpy() * scale
-        else:
-            self._bmax = np.empty(0)
+        b = reader.blocks(field, term)
+        self._nblocks = b.num_rows
+        self._last = b["last_doc"].to_numpy()
+        self._bmax = b["block_max_tfnorm"].to_numpy() * np.maximum(
+            1.0, self.avgdl / b["bound_avgdl"].to_numpy())
+        self._gaps = b["doc_gaps"].to_pylist()
+        self._block_tfs = b["tfs"].to_pylist()
         self.bi = -1
         self.pos = 0
         self._docs = self._tfs = None
@@ -396,9 +392,8 @@ class TermCursor:
 
     def _load(self, bi: int):
         self.bi = bi
-        row = self._blocks.iloc[bi]
-        self._docs = codecs.decode_block_docs(row["doc_gaps"]).astype(np.int64)
-        self._tfs = codecs.vbyte_decode(row["tfs"]).astype(np.int64)
+        self._docs = codecs.decode_block_docs(self._gaps[bi]).astype(np.int64)
+        self._tfs = codecs.vbyte_decode(self._block_tfs[bi]).astype(np.int64)
         self.pos = 0
         self.doc = int(self._docs[0])
 

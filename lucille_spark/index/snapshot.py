@@ -20,8 +20,9 @@ Postings, doc_stats and tombstones are append-only: a merge's manifest
 lists the old files plus the new ones. The lexicon is replaced: every
 commit writes a new set of lexicon files. Publishing version ``v``
 deletes the lexicon files and the manifests that neither ``v`` nor
-``v - 1`` lists, so a reader still on ``v - 1`` keeps working through
-one more commit; a reader two commits behind fails with
+``v - 1`` lists. A reader reads no lexicon file after its open, so it
+keeps its version through any number of commits; only an open that
+races two commits between :func:`load` and its lexicon read fails, with
 :class:`StaleVersionError`, which names its version.
 
 One writer at a time is the model; publishing is what makes a racing
@@ -48,7 +49,7 @@ _MANIFEST = re.compile(r"^(\d+)\.json$")
 
 
 class StaleVersionError(RuntimeError):
-    """A reader's version lost its lexicon files to two later commits."""
+    """A reader's lexicon files went to two commits while it opened."""
 
 
 def data_files(table_dir: str) -> set:

@@ -567,13 +567,13 @@ def search_batch(
     One WAND searcher per executor task; queries are the unit of parallelism
     (the index is shared storage, as in any search tier).
 
-    ``min_queries_per_task`` bounds the cold-searcher fan-out: a searcher
-    open (pyarrow dataset discovery + lexicon warm-up) costs far more than
-    one WAND query, so small batches are grouped rather than spread one
-    query per task — 30 queries open ~8 searchers, not 30. Large batches
-    still use every core (partitions = parallelism once the batch is big
-    enough), and warm workers skip the open entirely via the version-keyed
-    cache below.
+    ``min_queries_per_task`` bounds the cold-searcher fan-out: a cold
+    searcher (lexicon read at open, row groups and doc_stats columns on
+    first use) costs far more than one WAND query, so small batches are
+    grouped rather than spread one query per task — 30 queries open ~8
+    searchers, not 30. Large batches still use every core (partitions =
+    parallelism once the batch is big enough), and warm workers skip the
+    open entirely via the version-keyed cache below.
     """
     import pandas as pd
 
@@ -586,13 +586,13 @@ def search_batch(
         from lucille_spark.index import snapshot
         from lucille_spark.query.searcher import IndexSearcher
 
-        # one searcher per (reused) python worker process — the pyarrow
-        # dataset open + lexicon warm-up amortizes across all tasks the
-        # worker serves, like any search-tier process would. The cache is
-        # keyed on the latest manifest (a new one for every build/merge),
-        # so long-lived workers never serve stale postings after a
-        # StreamingIndexer microbatch; the probe is one small JSON read
-        # per task.
+        # one searcher per (reused) python worker process — the reader's
+        # lexicon read and the row groups it keeps amortize across all
+        # tasks the worker serves, like any search-tier process would.
+        # The cache is keyed on the latest manifest (a new one for every
+        # build/merge), so long-lived workers never serve stale postings
+        # after a StreamingIndexer microbatch; the probe is one small JSON
+        # read per task.
         import builtins
 
         cache = getattr(builtins, "_lucille_searchers", None)

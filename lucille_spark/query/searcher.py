@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import heapq
 import math
-from typing import Dict, List, Optional, Set, Tuple
+from typing import Dict, List, Optional, Tuple
 
 import numpy as np
 
@@ -113,9 +113,10 @@ class IndexSearcher:
     def _parse(self, query: str):
         """Parse + rewrite multi-term nodes (Prefix/Fuzzy/Wildcard/
         TermRange) against the lexicon (scoring boolean rewrite; prefix,
-        range and wildcard-with-literal-prefix seeks are row-group-pruned
-        range scans over the term-sorted lexicon, fuzzy is a banded
-        closest-first dictionary scan)."""
+        range and wildcard-with-literal-prefix seeks are slices of the
+        sorted lexicon, fuzzy a banded closest-first scan). Every query
+        parses first, so this also starts its decode memo."""
+        self._decoded = {}
         node = parse(query, self.default_field)
         return expand_prefixes(node, self.reader.terms_with_prefix,
                                fuzzy_expander=self.reader.terms_fuzzy,
@@ -205,7 +206,7 @@ class IndexSearcher:
         out = []
         for term in self.reader.terms_in_range(facet_field, None, None,
                                                limit=1 << 20):
-            docs, _ = self._term_postings(facet_field, term)
+            docs = self.reader.decode_term_flat(facet_field, term, False)[0]
             if docs.size == 0:
                 continue
             docs = docs.astype(np.int64)
@@ -315,13 +316,6 @@ class IndexSearcher:
         id_map = self.reader.doc_ids_for_ords(ords)
         return sorted(id_map[o] for o in ords)
 
-    def _deleted(self, doc_ord: int) -> bool:
-        t = self.tombstones
-        if t.size == 0:
-            return False
-        i = int(np.searchsorted(t, doc_ord))
-        return i < t.size and int(t[i]) == doc_ord
-
     def _resolve(self, hits: List[Tuple[int, float]]) -> List[Tuple[str, float]]:
         id_map = self.reader.doc_ids_for_ords([d for d, _ in hits])
         return [(id_map[d], s) for d, s in hits]
@@ -331,10 +325,6 @@ class IndexSearcher:
         cursors = [c for c in cursors if c.df > 0]
         heap: List[Tuple[float, int]] = []  # (score, -doc_ord) min-heap
         theta = -math.inf
-        # hoist the tombstone fast path out of the per-pivot call: the
-        # common case (no merges yet) pays zero per-eval work
-        tomb = self.tombstones
-        has_tombs = tomb.size > 0
         active = list(cursors)
         while True:
             active = [c for c in active if c.doc != SENTINEL]
@@ -370,7 +360,7 @@ class IndexSearcher:
             if order[0].doc == pivot:
                 # full eval — accumulate in ORIGINAL term order so the float
                 # sum matches the oracle bit-for-bit
-                if not (has_tombs and self._deleted(pivot)):
+                if not self.reader.has_tombstone(pivot):
                     s = 0.0
                     for c in cursors:
                         if c.doc == pivot:
@@ -395,7 +385,6 @@ class IndexSearcher:
             return []
         heap: List[Tuple[float, int]] = []
         theta = -math.inf
-        has_tombs = self.tombstones.size > 0
         d = max(c.doc for c in cursors)
         while d < SENTINEL:
             aligned = True
@@ -413,7 +402,7 @@ class IndexSearcher:
                     fence = min(c.block_last_at(d) for c in cursors) + 1
                     d = max(fence, d + 1)
                     continue
-            if not (has_tombs and self._deleted(d)):
+            if not self.reader.has_tombstone(d):
                 s = 0.0
                 for c in cursors_eval:
                     s += c.score()
@@ -422,8 +411,14 @@ class IndexSearcher:
         return _heap_to_hits(heap)
 
     # ----------------------------------------- general boolean + exhaustive
-    def _term_postings(self, field: str, term: str, positions: bool = False):
-        return self.reader.decode_term(field, term, positions=positions)
+    def _decode(self, field: str, term: str, positions: bool = False):
+        """``reader.decode_term_flat`` at most once per query and term: a
+        decode with positions also serves one without them."""
+        hit = self._decoded.get((field, term))
+        if hit is None or (positions and not hit[0]):
+            out = self.reader.decode_term_flat(field, term, positions)
+            hit = self._decoded[field, term] = (positions, out)
+        return hit[1]
 
     def _matching(self, node) -> DocSet:
         """Boolean evaluation over lazy-complement DocSets. NOT never
@@ -434,7 +429,7 @@ class IndexSearcher:
         after incremental merges and would silently drop freshly merged
         high-ordinal docs from NOT results."""
         if isinstance(node, Term):
-            docs, _ = self._term_postings(node.field, node.text)
+            docs = self._decode(node.field, node.text)[0]
             return DocSet(np.asarray(docs, dtype=np.int64))
         if isinstance(node, MatchAll):
             return ~DocSet.empty()   # the lazy universe
@@ -482,20 +477,17 @@ class IndexSearcher:
         raise TypeError(f"unknown node {node!r}")
 
     def _phrase_docs(self, p: Phrase) -> DocSet:
-        """Positional phrase match, block-vectorized: the rarest term's
-        postings are decoded block-by-block; other terms' positions are
-        fetched as flat (doc, pos) arrays for just the doc range each block
-        covers; adjacency is checked with one np.isin over (doc*MAXPOS +
-        pos) keys per term — no per-document python loop. Sloppy phrases
-        (slop > 0) route to the window matcher."""
-        import numpy as np
-
+        """Positional phrase match, vectorized: each distinct term is
+        decoded once (the query's memo) to flat (doc, pos) arrays, and
+        adjacency is one searchsorted probe per term over sorted
+        (doc*MAXPOS + pos) keys — no per-document python loop. Sloppy
+        phrases (slop > 0) route to the window matcher."""
         if p.slop:
             return self._phrase_docs_sloppy(p)
         terms = list(p.terms)
         decoded = {}
         for t in set(terms):
-            docs, _, flat, lens = self.reader.decode_term_flat(p.field, t)
+            docs, _, flat, lens = self._decode(p.field, t, positions=True)
             if docs.size == 0:
                 return DocSet.empty()
             flat_docs = np.repeat(docs.astype(np.int64), lens)
@@ -527,12 +519,10 @@ class IndexSearcher:
         each candidate one two-pointer pass over the merged
         position-adjusted occurrence list finds a covering window —
         O(total occurrences) per doc, no pairwise position products."""
-        import numpy as np
-
         n = len(p.terms)
         per, cand = [], None
         for i, t in enumerate(p.terms):
-            docs, _, flat, lens = self.reader.decode_term_flat(p.field, t)
+            docs, _, flat, lens = self._decode(p.field, t, positions=True)
             if docs.size == 0:
                 return DocSet.empty()
             fd = np.repeat(docs.astype(np.int64), lens)
@@ -566,15 +556,13 @@ class IndexSearcher:
         maps its postings onto the sorted candidate array and accumulates
         BM25 contributions (in term order, so float summation matches the
         oracle); tie-break via lexsort on (-score, doc_ord)."""
-        import numpy as np
-
         cand = self._matching(node).materialize(
             self.reader.ord_span(), self.tombstones)
         if cand.size == 0:
             return []
         scores = np.zeros(cand.size, dtype=np.float64)
         for t in positive_terms(node):
-            docs, tfs = self._term_postings(t.field, t.text)
+            docs, tfs, _, _ = self._decode(t.field, t.text)
             if docs.size == 0:
                 continue
             docs = docs.astype(np.int64)

@@ -14,11 +14,17 @@ def test_fuzzy_expansion_bounded_and_correct(index_dir):
     whole dictionary. The length band runs inside the Arrow scan and the
     bag-distance prefilter cuts the survivors further; results must equal
     the brute-force scan's closest-first list."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lucille_spark.index import snapshot
     from lucille_spark.index.reader import IndexReader
     from lucille_spark.query.parser import levenshtein
 
     rd = IndexReader(index_dir)
-    lex = rd._lexicon.to_table(columns=["term", "field"])
+    lex = pa.concat_tables([
+        pq.read_table(p, columns=["term", "field"])
+        for p in snapshot.paths(index_dir, rd.manifest, "lexicon")])
     all_terms = [t for t, f in zip(lex["term"].to_pylist(),
                                    lex["field"].to_pylist())
                  if f == "content"]

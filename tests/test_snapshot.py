@@ -180,24 +180,51 @@ def test_replayed_merge_is_a_noop(spark, base, tmp_path):
     assert m["ord_span"] == once["ord_span"] + 10
 
 
-def test_reader_keeps_its_version_for_one_commit(spark, base, tmp_path):
+def test_reader_keeps_its_version_through_two_commits(spark, base,
+                                                      tmp_path, monkeypatch):
+    """After open a reader reads no lexicon file, so two commits that
+    delete its version's lexicon leave it answering as a reader on a copy
+    of that version. Only an open that races two commits between
+    snapshot.load and its lexicon read fails, naming its version."""
     from lucille_spark.index.merge import merge_index
     from lucille_spark.index.reader import IndexReader
+    from lucille_spark.query.searcher import IndexSearcher
 
     idx = _copy(base, tmp_path)
-    reader = IndexReader(idx)
-    version = reader.version()
-    for i in range(2):
+    searcher = IndexSearcher(idx)
+    version = int(searcher.reader.version())
+
+    def commit(i):
         merge_index(spark.createDataFrame(corpus_pdf(
             np.arange(N_BASE + 10 * i, N_BASE + 10 * i + 10))), idx, **KW)
-        if i == 0:  # one commit behind: its own version, whole
-            assert reader.term_info("content", "import") == IndexReader(
-                base).term_info("content", "import")
-    # two commits behind: its lexicon files are gone, and it says so
+
+    commit(0)
+    commit(1)
+    assert not any(map(os.path.exists, snapshot.paths(
+        idx, searcher.reader.manifest, "lexicon")))
+    same = IndexSearcher(base)
+    for term in ("import", "test", "return", "no_such_term"):
+        assert searcher.reader.term_info("content", term) == \
+            same.reader.term_info("content", term)
+        assert searcher.reader.blocks("content", term).equals(
+            same.reader.blocks("content", term))
+    for q in ALL_QUERIES:
+        assert searcher.search(q, 10) == same.search(q, 10), q
+    assert IndexReader(idx).version() == str(version + 2)
+
+    real = snapshot.load
+
+    def load_racing_two_commits(index_dir):
+        manifest = real(index_dir)
+        monkeypatch.setattr(snapshot, "load", real)
+        commit(2)
+        commit(3)
+        return manifest
+
+    monkeypatch.setattr(snapshot, "load", load_racing_two_commits)
     with pytest.raises(snapshot.StaleVersionError,
-                       match=f"version {version} "):
-        reader.term_info("content", "test")
-    assert IndexReader(idx).version() == str(int(version) + 2)
+                       match=f"version {version + 2} "):
+        IndexReader(idx)
 
 
 def test_index_without_manifest_must_be_rebuilt(base, tmp_path):
