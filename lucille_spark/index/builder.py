@@ -27,7 +27,7 @@ Dataflow (all DataFrame; Python appears only in Arrow-vectorized UDFs):
        field is one partition, else repartitionByRange(field, term)
        + sortWithinPartitions                            [small indexes:
                                                           no exchange]
-    -> lexicon = blocks.groupBy(field,term).agg(...)     [tiny shuffle]
+    -> lexicon = lexicon_rows(blocks): groupBy(field,term)  [tiny shuffle]
 
 Output tables (parquet dir layout), every one written by
 :func:`write_index_table`: zstd pages, no statistics on the opaque postings
@@ -39,7 +39,8 @@ column:
                  max(defaultParallelism, 8) files; merges append files
                  by the same rule (:func:`postings_layout`)
   lexicon/       (field,term,df,cf,n_blocks,max_tfnorm,bound_avgdl),
-                 sorted by (field, term) within each file
+                 sorted by (field, term) within each file; a merge
+                 appends its delta's rows (:func:`lexicon_rows`)
   doc_stats/     (doc_id,doc_ord,dl_<field>...,repo,path,commit,lang,content_sha256)
                  the ONE home of a doc's length per field
   _meta/         one JSON manifest per version (:mod:`snapshot`): the
@@ -433,6 +434,33 @@ def postings_layout(blocks: DataFrame, fields: Sequence[str],
         .sortWithinPartitions("field", "term", "salt", "block_seq"))
 
 
+def lexicon_rows(blocks: DataFrame, one_file: bool = False) -> DataFrame:
+    """The lexicon rows of ``blocks``, one per (field, term), for build and
+    merge alike. Each column folds across blocks, so ``IndexReader`` folds
+    a term's rows from several commits the same way. ``one_file``
+    coalesces them into one file (narrow: no job added)."""
+    lexicon = (blocks.groupBy("field", "term")
+               .agg(F.sum("n_docs").cast("long").alias("df"),
+                    F.sum("sum_tf").cast("long").alias("cf"),
+                    F.count("*").cast("int").alias("n_blocks"),
+                    F.max("block_max_tfnorm").alias("max_tfnorm"),
+                    F.min("bound_avgdl").alias("bound_avgdl")))
+    if one_file:
+        lexicon = lexicon.coalesce(1)
+    # no reader needs the order (IndexReader sorts at open); it stays as
+    # zstd packs sorted terms smaller: the seed-1 perfbench lexicon is
+    # 22,077 bytes sorted, 29,680 in hash order, and 22,191 unsorted only
+    # because the aggregate keeps its term-sorted input's order. No job.
+    return lexicon.sortWithinPartitions("field", "term")
+
+
+def doc_stats_columns(columns: Sequence[str], fields: Sequence[str]) -> list:
+    """The doc_stats columns written for a corpus with ``columns``."""
+    return ["doc_id", "doc_ord"] + [f"dl_{f}" for f in fields] + [
+        c for c in ("repo", "path", "commit", "lang")
+        if c in columns] + ["content_sha256"]
+
+
 @contextmanager
 def _job_scope(spark: SparkSession):
     """Session scope of one build or merge, restored however it ends.
@@ -515,9 +543,7 @@ def build_index(
         docs = cache(docs)
 
         # --- doc_stats + corpus stats ------------------------------------
-        stat_cols = ["doc_id", "doc_ord"] + [f"dl_{f}" for f in fields] + [
-            c for c in ("repo", "path", "commit", "lang")
-            if c in corpus.columns] + ["content_sha256"]
+        stat_cols = doc_stats_columns(corpus.columns, fields)
         t_stage = time.time()
         obs = None
         if not (resume and ledger.done("doc_stats")):
@@ -573,19 +599,9 @@ def build_index(
                 postings_layout(all_blocks, fields, totals, docs_per_salt),
                 os.path.join(out_dir, "postings"))
             ledger.record("postings", -1, t_stage)
-        lexicon_src = (all_blocks if not skip_postings else
-                       spark.read.parquet(os.path.join(out_dir, "postings")))
-        # sorted within each file (no extra job: the sort rides the
-        # aggregate's stage)
-        lexicon = (
-            lexicon_src.groupBy("field", "term")
-            .agg(F.sum("n_docs").cast("long").alias("df"),
-                 F.sum("sum_tf").cast("long").alias("cf"),
-                 F.count("*").cast("int").alias("n_blocks"),
-                 F.max("block_max_tfnorm").alias("max_tfnorm"),
-                 F.min("bound_avgdl").alias("bound_avgdl"))
-            .sortWithinPartitions("field", "term")
-        )
+        lexicon = lexicon_rows(
+            all_blocks if not skip_postings else
+            spark.read.parquet(os.path.join(out_dir, "postings")))
         t_stage = time.time()
         write_index_table(lexicon, os.path.join(out_dir, "lexicon"))
 

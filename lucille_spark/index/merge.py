@@ -13,13 +13,15 @@ Mechanics (Lucene-segment-like):
   keep counting tombstoned postings until compaction; the manifest's
   corpus stats (N, avgdl) however track LIVE docs exactly.
 - one commit point (snapshot.py): the merge reads the latest manifest's
-  files, stages its postings/doc_stats/tombstones appends and a new set
-  of lexicon files, and publishes the next manifest. A crash before the
-  publish leaves the previous version exactly as it was; the retry
-  ignores the crashed attempt's unlisted files. A merge with the run_id
-  of the latest manifest is a replay: it returns that commit's counts
-  and writes nothing. Delta docs are tokenized with the analyzer the
-  manifest records.
+  files, stages its postings/doc_stats/tombstones/lexicon appends, and
+  publishes the next manifest. The lexicon append holds the rows of the
+  delta blocks only: the merge reads no lexicon file, and the reader
+  folds a term's rows across commits, as Lucene sums term statistics
+  across segments. A crash before the publish leaves the previous
+  version exactly as it was; the retry ignores the crashed attempt's
+  unlisted files. A merge with the run_id of the latest manifest is a
+  replay: it returns that commit's counts and writes nothing. Delta docs
+  are tokenized with the analyzer the manifest records.
 - avgdl drift safety: blocks record the avgdl their score bounds were
   computed with (``bound_avgdl``); the reader scales bounds by
   max(1, avgdl_now/bound_avgdl) — provably an upper bound (mediant
@@ -42,8 +44,8 @@ from lucille_spark.analysis import tokenize_col
 from lucille_spark.analysis.analyzers import tokenize_code_col
 from lucille_spark.index import snapshot
 from lucille_spark.index.builder import (
-    _job_scope, _Ledger, add_doc_identity, one_partition, postings_blocks,
-    postings_layout, write_index_table,
+    _job_scope, _Ledger, add_doc_identity, doc_stats_columns, lexicon_rows,
+    one_partition, postings_blocks, postings_layout, write_index_table,
 )
 from lucille_spark.index.ordinals import assign_doc_ord
 
@@ -171,13 +173,13 @@ def merge_index(
                              "total_terms": live_total}
 
         # delta postings appended; blocks carry bound_avgdl = avgdl_new.
-        # Persisted so the incremental lexicon below aggregates the DELTA
-        # blocks only (block rows are compressed binary — tiny relative to
-        # the corpus). builder.postings_layout is the build's write rule: a
-        # delta whose every field totals <= docs_per_salt tokens is
-        # appended as its one term-sorted encode partition (no hot-table
-        # job, no boundary-sampling pass, no small-file accretion); a
-        # larger delta gets the range-partitioned write.
+        # Persisted so the lexicon append below aggregates the delta
+        # blocks without encoding them again. builder.postings_layout is
+        # the build's write rule: a delta whose every field totals
+        # <= docs_per_salt tokens is appended as its one term-sorted
+        # encode partition (no hot-table job, no boundary-sampling pass,
+        # no small-file accretion); a larger delta gets the
+        # range-partitioned write.
         totals = {f: int(agg[f"total_{f}"] or 0) for f in fields}
         blocks = cache(postings_blocks(
             delta, fields, avgdl_by_field, ord_span=max_ord + 1 + n_delta,
@@ -196,48 +198,19 @@ def merge_index(
         append(postings_layout(blocks, fields, totals, docs_per_salt),
                "postings")
 
-        # one doc_stats and one tombstone file for a small delta: coalesce
-        # over the cached delta and the checkpoint is narrow, no job added
+        # one doc_stats, tombstone and lexicon file for a small delta:
+        # coalesce over the cached delta, the checkpoint and the blocks
+        # is narrow, no job added
         small = one_partition(spark, fields, totals, docs_per_salt)
 
         def rows(df):
             return df.coalesce(1) if small else df
 
-        stat_cols = ["doc_id", "doc_ord"] + [f"dl_{f}" for f in fields] + [
-            c for c in ("repo", "path", "commit", "lang")
-            if c in new_corpus.columns] + ["content_sha256"]
-        append(rows(delta.select(*stat_cols)), "doc_stats")
+        append(rows(delta.select(*doc_stats_columns(new_corpus.columns,
+                                                    fields))), "doc_stats")
         if n_tomb:
             append(rows(tombs.select("doc_ord")), "_tombstones")
-
-        # incremental lexicon: aggregate the DELTA blocks only and fold into
-        # the existing lexicon (df/cf/n_blocks are additive across blocks,
-        # max_tfnorm a max, bound_avgdl a min). The old full-postings rescan
-        # made every streaming microbatch O(index); this is O(delta +
-        # lexicon).
-        delta_lex = (blocks.groupBy("field", "term")
-                     .agg(F.sum("n_docs").cast("long").alias("df"),
-                          F.sum("sum_tf").cast("long").alias("cf"),
-                          F.count("*").cast("long").alias("n_blocks"),
-                          F.max("block_max_tfnorm").alias("max_tfnorm"),
-                          F.min("bound_avgdl").alias("bound_avgdl")))
-        old_lex = spark.read.parquet(
-            *snapshot.paths(index_dir, base, "lexicon")).withColumn(
-            "n_blocks", F.col("n_blocks").cast("long"))
-        # a new set of lexicon files, as many as the version it replaces
-        # and each sorted by (field, term) like the build's: coalesce and
-        # the sort are narrow, no new job
-        merged_lex = (old_lex.unionByName(delta_lex)
-                      .groupBy("field", "term")
-                      .agg(F.sum("df").cast("long").alias("df"),
-                           F.sum("cf").cast("long").alias("cf"),
-                           F.sum("n_blocks").cast("int").alias("n_blocks"),
-                           F.max("max_tfnorm").alias("max_tfnorm"),
-                           F.min("bound_avgdl").alias("bound_avgdl"))
-                      .coalesce(max(len(base["files"]["lexicon"]), 1))
-                      .sortWithinPartitions("field", "term"))
-        files["lexicon"] = write_index_table(
-            merged_lex, os.path.join(index_dir, "lexicon"), mode="append")
+        append(lexicon_rows(blocks, one_file=small), "lexicon")
 
         snapshot.publish(
             index_dir, base, run_id=run_id, ord_span=max_ord + 1 + n_delta,

@@ -31,13 +31,23 @@ def assign_doc_ord(df: DataFrame, id_col: str = "doc_id",
     broadcast join (ids are ~70B/row; fine into the tens of millions of
     docs). At 10^12 docs flip ``broadcast_ords=False``: both sides hash on
     doc_id and Catalyst picks a shuffle join — still only id-sized data
-    plus one pass of the wide rows.
+    plus one pass of the wide rows. Raises ValueError when an id repeats.
     """
     spark = df.sparkSession
     bucket = F.conv(F.substring(F.col(id_col), 1, bucket_hex_digits), 16, 10
                     ).cast("long")
     narrow = df.select(F.col(id_col)).withColumn("_bucket", bucket)
-    counts = narrow.groupBy("_bucket").count().toPandas().sort_values("_bucket")
+    # a repeated id would get an ordinal per row and multiply in the join
+    counts = (narrow.groupBy("_bucket")
+              .agg(F.count("*").alias("count"),
+                   F.countDistinct(id_col).alias("ids"))
+              .toPandas().sort_values("_bucket"))
+    repeats = int(counts["count"].sum() - counts["ids"].sum())
+    if repeats:
+        raise ValueError(
+            f"{repeats} rows repeat an earlier {id_col}; ordinals need "
+            "unique ids. For last-wins ingest of repeated ids use "
+            "merge_index(order_col=...).")
     counts["base"] = counts["count"].cumsum().shift(fill_value=0)
     bases = spark.createDataFrame(counts[["_bucket", "base"]])
     w = Window.partitionBy("_bucket").orderBy(id_col)

@@ -4,18 +4,20 @@ Opens one index version, the latest manifest (``snapshot.load``), reads
 each row group of the files it lists at most once, and answers every
 lookup with a binary search and a slice — no scan predicate, no Spark
 job — as Lucene's terms dictionary points into the postings (SURVEY.md
-§2.9). The lexicon is read whole at open, sorted by (field, term). A
-postings row group is read when a lookup first needs it, picked by its
-footer min/max on field and term; every postings file is sorted by
-(field, term) (``builder.postings_layout``), so a term's blocks are a
-slice of it. A doc_stats column loads on first use as one doc_ord-indexed
-array; scoring gathers each posting's dl from :meth:`doc_lengths`.
+§2.9). The lexicon is read whole at open, a term's rows from several
+commits folded into one as Lucene's ``termStatistics`` sums a term over
+segments, and sorted by (field, term). A postings row group is read when
+a lookup first needs it, picked by its footer min/max on field and term;
+every postings file is sorted by (field, term)
+(``builder.postings_layout``), so a term's blocks are a slice of it. A
+doc_stats column loads on first use as one doc_ord-indexed array;
+scoring gathers each posting's dl from :meth:`doc_lengths`.
 
 Memory: a reader holds its lexicon, the row groups and the doc_stats
 columns it used, decompressed, with their search keys as Python strings:
-at most its version's data in that form. It reads no lexicon file after
-open, and the other tables are append-only, so it serves its version
-through any number of later commits.
+at most its version's data in that form. No merge deletes a data file
+(``snapshot``), so it serves its version through any number of later
+commits.
 """
 
 from __future__ import annotations
@@ -35,6 +37,9 @@ from lucille_spark import BM25_B, BM25_K1
 from lucille_spark.index import codecs, snapshot
 
 SENTINEL = 1 << 62
+# how a term's lexicon rows fold: as builder.lexicon_rows folds blocks
+_FOLD = {"df": "sum", "cf": "sum", "n_blocks": "sum", "max_tfnorm": "max",
+         "bound_avgdl": "min"}
 
 
 class _SortedRows:
@@ -74,15 +79,16 @@ class IndexReader:
         # (snapshot.py), so a concurrent merge's staged files stay unseen
         m = self.manifest = snapshot.load(index_dir)
         self.stats = m["stats"]
-        try:
-            lexicon = pa.concat_tables(
-                [pq.read_table(p) for p in self._files("lexicon")])
-        except FileNotFoundError as e:
-            raise snapshot.StaleVersionError(
-                f"{index_dir}: version {self.version()} lost its lexicon "
-                "files to two commits published while it opened; reopen "
-                "the index") from e
-        # a merged lexicon is sorted within each of its files only
+        # one threaded read of every file (no partition columns from the
+        # path): a merge adds lexicon files, and a read per file is 3x
+        # slower at 21 files
+        rows = pq.read_table(self._files("lexicon"), partitioning=None)
+        folded = rows.group_by(["field", "term"]).aggregate(
+            list(_FOLD.items()))
+        lexicon = pa.table(
+            [folded[f"{c}_{_FOLD[c]}" if c in _FOLD else c]
+             for c in rows.column_names], names=rows.column_names
+        ).cast(rows.schema)
         self._lexicon = _SortedRows(lexicon.sort_by(
             [("field", "ascending"), ("term", "ascending")]))
         self._row_groups: Dict = {}

@@ -16,14 +16,14 @@ a second writer racing for the same version fails instead of
 overwriting. Readers open :func:`load` and read exactly the files it
 lists, so they see one whole version.
 
-Postings, doc_stats and tombstones are append-only: a merge's manifest
-lists the old files plus the new ones. The lexicon is replaced: every
-commit writes a new set of lexicon files. Publishing version ``v``
-deletes the lexicon files and the manifests that neither ``v`` nor
-``v - 1`` lists. A reader reads no lexicon file after its open, so it
-keeps its version through any number of commits; only an open that
-races two commits between :func:`load` and its lexicon read fails, with
-:class:`StaleVersionError`, which names its version.
+Every table is append-only: a merge's manifest lists the old files plus
+the new ones, and a merge deletes no data file. It adds the lexicon rows
+of its own delta blocks; ``IndexReader`` folds the rows of one (field,
+term) at open, as Lucene sums a term's statistics across segments.
+Publishing version ``v`` deletes only the manifests older than ``v - 1``.
+A reader therefore keeps its version through any number of merges,
+whether it has opened yet or not (a build over an existing index
+overwrites its tables).
 
 One writer at a time is the model; publishing is what makes a racing
 second writer fail. Every manifest records the index :data:`FORMAT` its
@@ -43,13 +43,10 @@ from typing import Optional
 TABLES = ("postings", "lexicon", "doc_stats", "_tombstones")
 # 2: postings carry no per-posting doc length (doc_stats holds it) and the
 # positions stream no per-doc tf prefix (the tfs column holds it)
-FORMAT = 2
+# 3: a merge appends lexicon rows, so a term may have one row per commit
+FORMAT = 3
 META = "_meta"
 _MANIFEST = re.compile(r"^(\d+)\.json$")
-
-
-class StaleVersionError(RuntimeError):
-    """A reader's lexicon files went to two commits while it opened."""
 
 
 def data_files(table_dir: str) -> set:
@@ -101,8 +98,8 @@ def paths(index_dir: str, manifest: dict, table: str) -> list:
 def publish(index_dir: str, base: Optional[dict], *, run_id: str,
             ord_span: int, analyzer: str, stats: dict, files: dict,
             added: int, tombstoned: int) -> dict:
-    """Publish the version after ``base`` (None: the first) and drop what
-    no reader of it or of ``base`` can need. ``stats`` maps each field to
+    """Publish the version after ``base`` (None: the first) and delete the
+    manifests before ``base``. ``stats`` maps each field to
     {n_docs, avgdl, total_terms}; ``files`` maps every table in
     :data:`TABLES` to its visible file names. Raises FileExistsError when
     another writer published that version first."""
@@ -124,15 +121,6 @@ def publish(index_dir: str, base: Optional[dict], *, run_id: str,
     finally:
         os.remove(tmp)
 
-    keep = set(manifest["files"]["lexicon"])
-    if base:
-        keep |= set(base["files"]["lexicon"])
-    lex_dir = os.path.join(index_dir, "lexicon")
-    for name in data_files(lex_dir) - keep:
-        for path in (os.path.join(lex_dir, name),
-                     os.path.join(lex_dir, f".{name}.crc")):
-            if os.path.exists(path):
-                os.remove(path)
     for v in _versions(index_dir):
         if v < version - 1:
             os.remove(_path(index_dir, v))

@@ -261,7 +261,7 @@ def suggest_batch_df(spark: SparkSession, index_dir: str,
 
     Plan shape for a 100 TB-corpus lexicon (millions of terms) x a
     query-log batch: the lexicon parquet is scanned ONCE, column-pruned
-    to ``term``; the word batch is broadcast and joined under the
+    to distinct ``term``; the word batch is broadcast and joined under the
     LENGTH-BAND condition (|len(term) - len(word)| <= max_edits), so the
     quadratic edit-distance DP runs only on band survivors — and via
     ``levenshtein(..., threshold)``, which early-exits past the bound.
@@ -272,9 +272,10 @@ def suggest_batch_df(spark: SparkSession, index_dir: str,
 
     from lucille_spark.index import snapshot
 
+    # distinct: a merged term has one lexicon row per commit that wrote it
     lex = (spark.read.parquet(*snapshot.paths(
         index_dir, snapshot.load(index_dir), "lexicon"))
-        .filter(F.col("field") == field).select("term"))
+        .filter(F.col("field") == field).select("term").distinct())
     words_df = spark.createDataFrame([(w,) for w in words], "word string")
     # r7: the length band is an EQUI-join — each word explodes into its
     # 2*max_edits+1 admissible term lengths and the join key is

@@ -69,6 +69,25 @@ def test_doc_ord_dense_and_id_ordered(spark, index_dir):
     assert list(s.doc_id) == sorted(s.doc_id)  # ord order == id order
 
 
+def test_build_refuses_repeated_doc_ids(spark, tmp_path):
+    """A repeated (repo, path, commit) would get one ordinal per row, and
+    the ordinal join back would multiply its rows (21 rows with one repeat
+    gave 23 doc_stats rows on 21 ordinals): the build refuses it before it
+    writes, and names merge_index's last-wins path."""
+    import pandas as pd
+
+    from lucille_spark.corpus import corpus_pdf
+    from lucille_spark.index import snapshot
+    from lucille_spark.index.builder import build_index
+
+    pdf = corpus_pdf(list(range(20)))
+    pdf = pd.concat([pdf, pdf.iloc[[7]]], ignore_index=True)
+    out = str(tmp_path / "idx")
+    with pytest.raises(ValueError, match=r"^1 rows repeat .*order_col"):
+        build_index(spark.createDataFrame(pdf), out)
+    assert snapshot.latest(out) is None
+
+
 def test_corpus_stats_match_oracle(index_dir, oracle):
     from lucille_spark.index import snapshot
 

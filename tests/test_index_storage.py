@@ -5,7 +5,7 @@ row-group pruning reads. Indexes written with another codec (Spark's
 default snappy) stay readable and mergeable. Postings follow
 ``builder.postings_layout``: a build under ``docs_per_salt`` tokens is one
 term-sorted file, a salted build is range-partitioned on term. Every
-lexicon file is sorted by (field, term)."""
+lexicon file is sorted by (field, term), and a merge appends its own."""
 
 import hashlib
 import math
@@ -177,16 +177,21 @@ def test_lexicon_files_are_term_sorted(base_index, merged_with_deletes,
                                        small_index,
                                        small_merged_with_deletes):
     """Every lexicon file of a build and of a merge is sorted by (field,
-    term), and a merge writes as many lexicon files as it replaces."""
+    term), a merge keeps the files of the version it merges into, and a
+    small merge adds one lexicon file."""
     from lucille_spark.index import snapshot
 
     def files(idx):
         return snapshot.paths(idx, snapshot.load(idx), "lexicon")
 
+    def names(idx):
+        return {os.path.basename(p) for p in files(idx)}
+
+    assert len(files(small_merged_with_deletes)) == len(files(small_index)) + 1
     for build, merged in ((base_index, merged_with_deletes),
                           (small_index, small_merged_with_deletes)):
-        assert len(files(merged)) == len(files(build))
-        for path in files(build) + files(merged):
+        assert names(build) < names(merged)
+        for path in files(merged):
             rows = pq.read_table(path, columns=["field", "term"]).to_pylist()
             keys = [(r["field"], r["term"]) for r in rows]
             assert keys == sorted(keys), path

@@ -1,5 +1,6 @@
 """Round-7 optimization guards: changed internals keep their contracts."""
 
+import pandas as pd
 import pytest
 
 
@@ -48,12 +49,12 @@ def test_merge_skips_hot_pass_keeps_results(spark, tmp_path):
     pb = ds.dataset(f"{b}/doc_stats", ignore_prefixes=[".", "_"]) \
         .to_table().to_pandas().sort_values("doc_ord").reset_index(drop=True)
     assert pa_.equals(pb)
-    from lucille_spark.index import snapshot
+    from lucille_spark.index.reader import IndexReader
 
-    def lexicon(idx):  # the merged version's files
-        return ds.dataset(snapshot.paths(idx, snapshot.load(idx), "lexicon")) \
-            .to_table().to_pandas().sort_values(["field", "term"]) \
-            .reset_index(drop=True)
+    def lexicon(idx):  # the merged version's terms, as a reader folds them
+        rd = IndexReader(idx)
+        terms = rd.terms_with_prefix("content", "", limit=1 << 30)
+        return pd.DataFrame([rd.term_info("content", t) for t in terms])
 
     la, lb = lexicon(a), lexicon(b)
     # identical term statistics; block counts may differ only via salting

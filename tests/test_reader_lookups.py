@@ -2,10 +2,13 @@
 
 The index is the 800-doc range-layout build (``docs_per_salt=64``,
 ``block_size=32``) over two fields, with two merges on it, so postings,
-lexicon and doc_stats each span several files, merged lexicons are sorted
-only within each file, and row groups hold more than one field."""
+lexicon and doc_stats each span several files, a merged term has one
+lexicon row per commit that wrote it, and row groups hold more than one
+field. The expected lexicon is folded from the postings, not read from
+the lexicon files."""
 
 import fnmatch
+import os
 from collections import defaultdict
 
 import numpy as np
@@ -22,12 +25,14 @@ UNSTORED = "no_such_field"
 
 
 @pytest.fixture(scope="module")
-def index(spark, tmp_path_factory):
+def commits(spark, tmp_path_factory):
+    """The index and its manifest after the build and after each merge."""
     from lucille_spark.index.builder import add_doc_identity, build_index
     from lucille_spark.index.merge import merge_index
 
     idx = str(tmp_path_factory.mktemp("lookups") / "idx")
     build_index(spark.createDataFrame(corpus_pdf(np.arange(800))), idx, **KW)
+    manifests = [snapshot.load(idx)]
     for lo, hi, upserts, deletes in ((800, 860, range(4), range(4, 8)),
                                      (860, 900, range(800, 803), [8])):
         old = corpus_pdf(np.array([*upserts, *deletes]))
@@ -37,7 +42,13 @@ def index(spark, tmp_path_factory):
         gone = add_doc_identity(spark.createDataFrame(
             old.iloc[len(upserts):])).select("doc_id")
         merge_index(spark.createDataFrame(delta), idx, deletes=gone, **KW)
-    return idx
+        manifests.append(snapshot.load(idx))
+    return idx, manifests
+
+
+@pytest.fixture(scope="module")
+def index(commits):
+    return commits[0]
 
 
 def _read(idx, table):
@@ -48,9 +59,22 @@ def _read(idx, table):
 
 @pytest.fixture(scope="module")
 def lexicon(index):
+    """Each (field, term)'s lexicon row, folded from its postings rows."""
     by_field = defaultdict(dict)
-    for row in _read(index, "lexicon").to_pylist():
-        by_field[row["field"]][row["term"]] = row
+    for r in _read(index, "postings").to_pylist():
+        row = by_field[r["field"]].get(r["term"])
+        if row is None:
+            by_field[r["field"]][r["term"]] = {
+                "field": r["field"], "term": r["term"], "df": r["n_docs"],
+                "cf": r["sum_tf"], "n_blocks": 1,
+                "max_tfnorm": r["block_max_tfnorm"],
+                "bound_avgdl": r["bound_avgdl"]}
+        else:
+            row["df"] += r["n_docs"]
+            row["cf"] += r["sum_tf"]
+            row["n_blocks"] += 1
+            row["max_tfnorm"] = max(row["max_tfnorm"], r["block_max_tfnorm"])
+            row["bound_avgdl"] = min(row["bound_avgdl"], r["bound_avgdl"])
     return by_field
 
 
@@ -58,6 +82,27 @@ def test_index_spans_several_files(index):
     files = snapshot.load(index)["files"]
     for table in ("postings", "lexicon", "doc_stats", "_tombstones"):
         assert len(files[table]) > 1, (table, files[table])
+
+
+def test_a_merge_adds_the_lexicon_rows_of_its_blocks(commits):
+    """The lexicon files a merge adds hold one row per (field, term) of
+    the postings blocks it adds, and the files it merges into stay."""
+    idx, manifests = commits
+
+    def added(old, new, table):
+        """(field, term) of every row of the files ``new`` adds."""
+        kept = set(old["files"][table])
+        assert kept < set(new["files"][table])
+        rows = pa.concat_tables([
+            pq.read_table(os.path.join(idx, table, name),
+                          columns=["field", "term"])
+            for name in new["files"][table] if name not in kept])
+        return list(zip(rows["field"].to_pylist(), rows["term"].to_pylist()))
+
+    for old, new in zip(manifests, manifests[1:]):
+        keys = added(old, new, "lexicon")
+        assert len(keys) == len(set(keys))
+        assert set(keys) == set(added(old, new, "postings"))
 
 
 def test_term_info_and_blocks(index, lexicon, monkeypatch):

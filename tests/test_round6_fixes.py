@@ -420,34 +420,51 @@ def test_r6_script_block_breadth(spark):
 # --------------------------------------- distributed spell-check twin
 
 
-def test_suggest_batch_df_twin_of_searcher(spark, index_dir):
+def test_suggest_batch_df_twin_of_searcher(spark, index_dir, tmp_path):
     """suggest_batch_df must reproduce IndexSearcher.suggest exactly per
-    word (same candidates, same (dist, term) order, same exact-hit rule)
+    word (same candidates, same (dist, term) order, same exact-hit rule),
+    also after two merges, whose terms have one lexicon row per commit,
     while staying a single-scan broadcast-join plan."""
+    import shutil
+
+    import numpy as np
+
+    from lucille_spark.corpus import corpus_pdf
+    from lucille_spark.index.merge import merge_index
     from lucille_spark.query.executor_df import suggest_batch_df
     from lucille_spark.query.searcher import IndexSearcher
 
-    s = IndexSearcher(index_dir)
-    lex_sample = list(s.reader.terms_in_range("content", None, None,
-                                              limit=3))
-    words = ["xqzzy", lex_sample[0],                  # no-hit + exact
-             lex_sample[1][:-1] + "x",                # 1-edit neighbour
-             lex_sample[2] + "zz"]                    # 2-edit neighbour
-    df = suggest_batch_df(spark, index_dir, words, k=5, max_edits=2)
-    got = {}
-    for r in df.collect():
-        got.setdefault(r["word"], []).append((r["rank"], r["suggestion"]))
-    for w in words:
-        want = s.suggest(w, k=5, max_edits=2)
-        have = [t for _, t in sorted(got.get(w, []))]
-        assert have == want, (w, have, want)
+    merged = str(tmp_path / "merged")
+    shutil.copytree(index_dir, merged)
+    for lo in (1000, 1040):
+        merge_index(spark.createDataFrame(corpus_pdf(np.arange(lo, lo + 40))),
+                    merged, fields=("content", "lang"), block_size=32,
+                    docs_per_salt=64)
+    for idx in (index_dir, merged):
+        s = IndexSearcher(idx)
+        lex_sample = list(s.reader.terms_in_range("content", None, None,
+                                                  limit=3))
+        words = ["xqzzy", lex_sample[0],                  # no-hit + exact
+                 lex_sample[1][:-1] + "x",                # 1-edit neighbour
+                 lex_sample[2] + "zz", "imprt"]           # 2-edit neighbour
+        df = suggest_batch_df(spark, idx, words, k=5, max_edits=2)
+        got = {}
+        for r in df.collect():
+            got.setdefault(r["word"], []).append((r["rank"], r["suggestion"]))
+        for w in words:
+            want = s.suggest(w, k=5, max_edits=2)
+            have = [t for _, t in sorted(got.get(w, []))]
+            assert have == want, (idx, w, have, want)
 
     # AQE's toString appends the pre-adaptive "Initial Plan" — audit the
     # final plan section only
     plan = (df._jdf.queryExecution().executedPlan().toString()
             .split("== Initial Plan ==")[0])
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-    assert plan.count("Exchange hashpartitioning") == 1  # one word window
+    # one exchange for the word window, one for the lexicon's distinct terms
+    assert plan.count("Exchange hashpartitioning") == 2
+    assert plan.count("Exchange hashpartitioning(word") == 1
+    assert plan.count("Exchange hashpartitioning(term") == 1
     assert plan.count("Window") == 1   # best+rank share one Window op
 
 

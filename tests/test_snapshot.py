@@ -182,12 +182,11 @@ def test_replayed_merge_is_a_noop(spark, base, tmp_path):
 
 def test_reader_keeps_its_version_through_two_commits(spark, base,
                                                       tmp_path, monkeypatch):
-    """After open a reader reads no lexicon file, so two commits that
-    delete its version's lexicon leave it answering as a reader on a copy
-    of that version. Only an open that races two commits between
-    snapshot.load and its lexicon read fails, naming its version."""
+    """No commit deletes a data file, so a reader keeps answering as a
+    reader on a copy of its version through two commits, and an open that
+    races two commits between snapshot.load and its lexicon read answers
+    as the version it loaded."""
     from lucille_spark.index.merge import merge_index
-    from lucille_spark.index.reader import IndexReader
     from lucille_spark.query.searcher import IndexSearcher
 
     idx = _copy(base, tmp_path)
@@ -200,7 +199,7 @@ def test_reader_keeps_its_version_through_two_commits(spark, base,
 
     commit(0)
     commit(1)
-    assert not any(map(os.path.exists, snapshot.paths(
+    assert all(map(os.path.exists, snapshot.paths(
         idx, searcher.reader.manifest, "lexicon")))
     same = IndexSearcher(base)
     for term in ("import", "test", "return", "no_such_term"):
@@ -210,7 +209,8 @@ def test_reader_keeps_its_version_through_two_commits(spark, base,
             same.reader.blocks("content", term))
     for q in ALL_QUERIES:
         assert searcher.search(q, 10) == same.search(q, 10), q
-    assert IndexReader(idx).version() == str(version + 2)
+    loaded = IndexSearcher(idx)
+    assert loaded.reader.version() == str(version + 2)
 
     real = snapshot.load
 
@@ -222,9 +222,14 @@ def test_reader_keeps_its_version_through_two_commits(spark, base,
         return manifest
 
     monkeypatch.setattr(snapshot, "load", load_racing_two_commits)
-    with pytest.raises(snapshot.StaleVersionError,
-                       match=f"version {version + 2} "):
-        IndexReader(idx)
+    raced = IndexSearcher(idx)
+    assert snapshot.load(idx)["version"] == version + 4
+    assert raced.reader.version() == str(version + 2)
+    for term in ("import", "test", "return", "no_such_term"):
+        assert raced.reader.term_info("content", term) == \
+            loaded.reader.term_info("content", term)
+    for q in ALL_QUERIES:
+        assert raced.search(q, 10) == loaded.search(q, 10), q
 
 
 def test_index_without_manifest_must_be_rebuilt(base, tmp_path):
@@ -237,9 +242,9 @@ def test_index_without_manifest_must_be_rebuilt(base, tmp_path):
 
 
 def test_index_of_an_older_format_must_be_rebuilt(spark, base, tmp_path):
-    """A manifest without the current format (one written before the
-    postings dropped their dl and tf-prefix payloads) is refused by the
-    reader and by a merge alike, before either reads a data file."""
+    """A manifest without the current format (one written before merges
+    appended lexicon rows) is refused by the reader and by a merge alike,
+    before either reads a data file."""
     from lucille_spark.index.merge import merge_index
     from lucille_spark.index.reader import IndexReader
 
@@ -248,7 +253,7 @@ def test_index_of_an_older_format_must_be_rebuilt(spark, base, tmp_path):
         os.path.join(idx, "_meta")))[-1])
     with open(path) as f:
         manifest = json.load(f)
-    assert manifest.pop("format") == snapshot.FORMAT == 2
+    assert manifest.pop("format") == snapshot.FORMAT == 3
     with open(path, "w") as f:
         json.dump(manifest, f)
     with pytest.raises(FileNotFoundError, match="rebuilt"):
@@ -277,11 +282,11 @@ def test_publish_is_no_replace_and_keeps_one_previous_version(tmp_path):
         publish(v1, "c", ["l3"])
     assert snapshot.load(idx) == v2
     v3 = publish(v2, "d", ["l4"])
-    # version 1's manifest and its lexicon are gone (and the racer's
-    # unlisted file); versions 2 and 3 stay whole
+    # version 1's manifest is gone; versions 2 and 3 stay whole, and
+    # publishing deletes no data file
     assert sorted(os.listdir(os.path.join(idx, "_meta"))) == [
         "0000000002.json", "0000000003.json"]
-    assert sorted(os.listdir(lex)) == ["l2", "l4"]
+    assert sorted(os.listdir(lex)) == ["l1", "l2", "l3", "l4"]
     with open(os.path.join(idx, "_meta", "0000000003.json")) as f:
         assert json.load(f) == v3
     assert v3["files"] == {"postings": [], "lexicon": ["l4"],
