@@ -39,8 +39,9 @@ column:
                  max(defaultParallelism, 8) files; merges append files
                  by the same rule (:func:`postings_layout`)
   lexicon/       (field,term,df,cf,n_blocks,max_tfnorm,bound_avgdl),
-                 sorted by (field, term) within each file; a merge
-                 appends its delta's rows (:func:`lexicon_rows`)
+                 sorted by (field, term) within each file, in as
+                 many files as the postings at most; a merge appends
+                 its delta's rows (:func:`lexicon_rows`)
   doc_stats/     (doc_id,doc_ord,dl_<field>...,repo,path,commit,lang,content_sha256)
                  the ONE home of a doc's length per field
   _meta/         one JSON manifest per version (:mod:`snapshot`): the
@@ -434,19 +435,22 @@ def postings_layout(blocks: DataFrame, fields: Sequence[str],
         .sortWithinPartitions("field", "term", "salt", "block_seq"))
 
 
-def lexicon_rows(blocks: DataFrame, one_file: bool = False) -> DataFrame:
+def lexicon_rows(blocks: DataFrame, one_file: bool) -> DataFrame:
     """The lexicon rows of ``blocks``, one per (field, term), for build and
     merge alike. Each column folds across blocks, so ``IndexReader`` folds
-    a term's rows from several commits the same way. ``one_file``
-    coalesces them into one file (narrow: no job added)."""
+    a term's rows from several commits the same way. The files follow the
+    postings rule (:func:`postings_layout`): ONE file when ``one_file``
+    (:func:`one_partition`), else at most ``max(defaultParallelism, 8)``,
+    not one per shuffle partition. Both coalesces are narrow: no job
+    added."""
     lexicon = (blocks.groupBy("field", "term")
                .agg(F.sum("n_docs").cast("long").alias("df"),
                     F.sum("sum_tf").cast("long").alias("cf"),
                     F.count("*").cast("int").alias("n_blocks"),
                     F.max("block_max_tfnorm").alias("max_tfnorm"),
-                    F.min("bound_avgdl").alias("bound_avgdl")))
-    if one_file:
-        lexicon = lexicon.coalesce(1)
+                    F.min("bound_avgdl").alias("bound_avgdl"))
+               .coalesce(1 if one_file else max(
+                   blocks.sparkSession.sparkContext.defaultParallelism, 8)))
     # no reader needs the order (IndexReader sorts at open); it stays as
     # zstd packs sorted terms smaller: the seed-1 perfbench lexicon is
     # 22,077 bytes sorted, 29,680 in hash order, and 22,191 unsorted only
@@ -601,7 +605,8 @@ def build_index(
             ledger.record("postings", -1, t_stage)
         lexicon = lexicon_rows(
             all_blocks if not skip_postings else
-            spark.read.parquet(os.path.join(out_dir, "postings")))
+            spark.read.parquet(os.path.join(out_dir, "postings")),
+            one_partition(spark, fields, totals, docs_per_salt))
         t_stage = time.time()
         write_index_table(lexicon, os.path.join(out_dir, "lexicon"))
 

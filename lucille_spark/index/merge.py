@@ -53,7 +53,7 @@ from lucille_spark.index.ordinals import assign_doc_ord
 def merge_index(
     new_corpus: DataFrame,
     index_dir: str,
-    fields: Sequence[str] = ("content",),
+    fields: Optional[Sequence[str]] = None,
     deletes: DataFrame | None = None,       # df with doc_id column
     store_positions: bool = True,
     block_size: int = BLOCK_SIZE,
@@ -69,6 +69,9 @@ def merge_index(
     offset/sequence column — Indexer.java sendToIndex order), else by a
     deterministic content_sha256 tiebreak.
 
+    ``fields`` None means the manifest's fields; other fields raise
+    ValueError, since the manifest's corpus stats would lose a field.
+
     ``run_id`` None means a fresh id. With the run_id of the latest
     manifest the call is a replay (a re-run micro-batch): it returns that
     commit's ``added``/``tombstoned`` and writes nothing.
@@ -76,6 +79,11 @@ def merge_index(
     spark = new_corpus.sparkSession
     base = snapshot.load(index_dir)
     old_stats = base["stats"]
+    if fields is None:
+        fields = tuple(old_stats)
+    elif set(fields) != set(old_stats):
+        raise ValueError(f"merge fields {sorted(fields)} differ from the "
+                         f"index's {sorted(old_stats)}")
     if run_id == base["run_id"]:
         return {"added": base["added"], "tombstoned": base["tombstoned"],
                 "avgdl": {f: old_stats[f]["avgdl"] for f in fields}}

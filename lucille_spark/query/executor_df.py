@@ -12,7 +12,8 @@ Two scale paths:
 2. :func:`search_batch` — fan a *query set* across executors: each task runs
    the driver-side block-max WAND searcher against the shared index tables
    (the classic shared-nothing search tier: queries are the parallel unit,
-   the index is storage). Arrow-batched, one searcher per executor task.
+   the index is storage). An Arrow query frame, one task per
+   ``QUERIES_PER_TASK`` queries: a small batch is one warm worker's task.
 
 Boolean/phrase predicates are expressed as higher-order array functions
 (``exists``/``array_intersect``) so they stay JVM-side.
@@ -555,33 +556,40 @@ def boolean_match_df(
     return docs.filter(pred).select("doc_id")
 
 
+# Queries per search_batch task. On the 200-doc perfbench index (seed 1,
+# 4 cores) a warm query costs ~4.4 ms inside a task, while a cold task (a
+# Python worker start and a searcher open) adds ~0.3 s: the first 21-query
+# batch after a commit took 0.70 s in one task, a warm one 0.41 s.
+QUERIES_PER_TASK = 64
+
+
 def search_batch(
     spark: SparkSession,
     index_dir: str,
     queries: List[Tuple[str, str]],
     k: int = 10,
     default_field: str = "content",
-    min_queries_per_task: int = 4,
 ) -> DataFrame:
     """Run a query batch distributed: (query_id, rank, doc_id, score).
 
-    One WAND searcher per executor task; queries are the unit of parallelism
-    (the index is shared storage, as in any search tier).
-
-    ``min_queries_per_task`` bounds the cold-searcher fan-out: a cold
-    searcher (lexicon read at open, row groups and doc_stats columns on
-    first use) costs far more than one WAND query, so small batches are
-    grouped rather than spread one query per task — 30 queries open ~8
-    searchers, not 30. Large batches still use every core (partitions =
-    parallelism once the batch is big enough), and warm workers skip the
-    open entirely via the version-keyed cache below.
+    One WAND searcher per Python worker; queries are the unit of
+    parallelism (the index is shared storage, as in any search tier).
+    The queries enter as a local relation built from Arrow (no pickled
+    Python-RDD pass) and fan out to ``min(ceil(len / QUERIES_PER_TASK),
+    defaultParallelism)`` tasks: a small batch is one task with no
+    exchange, a larger one is spread round-robin, however the relation is
+    sliced. Warm workers skip the searcher open via the version-keyed
+    cache below.
     """
     import pandas as pd
+    import pyarrow as pa
 
-    qdf = spark.createDataFrame(queries, "query_id string, query string")
-    n_part = min(
-        max(1, len(queries) // max(min_queries_per_task, 1)),
-        spark.sparkContext.defaultParallelism)
+    qdf = spark.createDataFrame(pa.table({
+        "query_id": pa.array([qid for qid, _ in queries], pa.string()),
+        "query": pa.array([q for _, q in queries], pa.string())}))
+    n_part = min(-(-len(queries) // QUERIES_PER_TASK),
+                 spark.sparkContext.defaultParallelism)
+    qdf = qdf.repartition(n_part) if n_part > 1 else qdf.coalesce(1)
 
     def run(batches):
         from lucille_spark.index import snapshot
@@ -614,5 +622,5 @@ def search_batch(
             yield pd.DataFrame(
                 rows, columns=["query_id", "rank", "doc_id", "score"])
 
-    return qdf.repartition(max(n_part, 1)).mapInPandas(
+    return qdf.mapInPandas(
         run, schema="query_id string, rank int, doc_id string, score double")

@@ -178,7 +178,7 @@ def test_lexicon_files_are_term_sorted(base_index, merged_with_deletes,
                                        small_merged_with_deletes):
     """Every lexicon file of a build and of a merge is sorted by (field,
     term), a merge keeps the files of the version it merges into, and a
-    small merge adds one lexicon file."""
+    small build or merge writes one lexicon file."""
     from lucille_spark.index import snapshot
 
     def files(idx):
@@ -187,7 +187,8 @@ def test_lexicon_files_are_term_sorted(base_index, merged_with_deletes,
     def names(idx):
         return {os.path.basename(p) for p in files(idx)}
 
-    assert len(files(small_merged_with_deletes)) == len(files(small_index)) + 1
+    assert len(files(small_index)) == 1
+    assert len(files(small_merged_with_deletes)) == 2
     for build, merged in ((base_index, merged_with_deletes),
                           (small_index, small_merged_with_deletes)):
         assert names(build) < names(merged)
@@ -195,6 +196,43 @@ def test_lexicon_files_are_term_sorted(base_index, merged_with_deletes,
             rows = pq.read_table(path, columns=["field", "term"]).to_pylist()
             keys = [(r["field"], r["term"]) for r in rows]
             assert keys == sorted(keys), path
+
+
+def test_lexicon_files_follow_the_postings_rule(spark, base_index,
+                                                merged_with_deletes,
+                                                tmp_path):
+    """A salted build and a non-small merge write at most as many lexicon
+    files as postings files, ``max(defaultParallelism, 8)``, however many
+    shuffle partitions the session has, and the same lexicon rows."""
+    from lucille_spark.index import snapshot
+    from lucille_spark.index.builder import build_index
+
+    def rows(idx, manifest=None):
+        paths = snapshot.paths(idx, manifest or snapshot.load(idx),
+                               "lexicon")
+        return paths, sorted(map(tuple, pq.read_table(
+            paths, partitioning=None).to_pandas().itertuples(index=False)))
+
+    limit = max(spark.sparkContext.defaultParallelism, 8)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "24")
+    try:
+        built = str(tmp_path / "base")
+        build_index(_frame(spark, range(N_BASE)), built, block_size=32,
+                    docs_per_salt=64)
+        base = snapshot.load(built)
+        merged = _merge_with_deletes(spark, built, str(tmp_path / "merged"),
+                                     64)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+
+    build_paths, build_rows = rows(built, base)
+    assert 1 < len(build_paths) <= limit
+    assert build_rows == rows(base_index)[1]
+    merge_paths, merge_rows = rows(merged)
+    added = len(merge_paths) - len(build_paths)
+    assert 1 < added <= limit
+    assert merge_rows == rows(merged_with_deletes)[1]
 
 
 def _doc_id(row):

@@ -142,3 +142,43 @@ def test_avgdl_drift_keeps_wand_exact(spark, tmp_path):
             got = s.search(q, k)
             want = s.search_exhaustive(q, k)
             assert got == want, (q, k)
+
+
+def test_default_merge_keeps_the_manifest_fields(spark, tmp_path):
+    """A merge without ``fields`` indexes the manifest's fields: an index
+    built with ``lang`` keeps answering ``lang:`` queries, new docs
+    included, and other fields are refused."""
+    import hashlib
+
+    import numpy as np
+
+    from lucille_spark.corpus import corpus_pdf
+    from lucille_spark.index import snapshot
+    from lucille_spark.index.builder import build_index
+    from lucille_spark.index.merge import merge_index
+    from lucille_spark.query.oracle import OracleIndex
+    from lucille_spark.query.searcher import IndexSearcher
+
+    idx = str(tmp_path / "idx")
+    build_index(spark.createDataFrame(corpus_pdf(np.arange(50))), idx,
+                fields=("content", "lang"), block_size=32)
+    merge_index(spark.createDataFrame(corpus_pdf(np.arange(50, 70))), idx,
+                block_size=32)
+    assert set(snapshot.load(idx)["stats"]) == {"content", "lang"}
+
+    oracle = OracleIndex(
+        [{"id": hashlib.sha256(f"{r.repo}\x00{r.path}\x00{r.commit}"
+                               .encode()).hexdigest(),
+          "content": r.content, "lang": r.lang}
+         for r in corpus_pdf(np.arange(70)).itertuples()],
+        fields=("content", "lang"))
+    searcher = IndexSearcher(idx)
+    for q in ("lang:rust", "lang:go OR content:import",
+              "lang:python AND content:return"):
+        got, want = searcher.search(q, 100), oracle.search(q, 100)
+        assert got and sorted(d for d, _ in got) == sorted(
+            d for d, _ in want), q
+
+    with pytest.raises(ValueError, match="lang"):
+        merge_index(spark.createDataFrame(corpus_pdf(np.arange(70, 75))),
+                    idx, fields=("content",))
