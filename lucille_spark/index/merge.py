@@ -230,10 +230,17 @@ def merge_index(
 
 
 def compact(index_dir: str, live_corpus: DataFrame, out_dir: str,
-            fields: Sequence[str] = ("content",), **kwargs) -> dict:
+            fields: Optional[Sequence[str]] = None, **kwargs) -> dict:
     """Fold tombstones away: full rebuild of the index over the live corpus
     (the Lucene segment-merge equivalent). The caller supplies the live
-    corpus (content is not stored in the index tables)."""
+    corpus (content is not stored in the index tables). ``fields`` follows
+    the :func:`merge_index` rule: None means the manifest's fields."""
     from lucille_spark.index.builder import build_index
 
+    index_fields = tuple(snapshot.load(index_dir)["stats"])
+    if fields is None:
+        fields = index_fields
+    elif set(fields) != set(index_fields):
+        raise ValueError(f"compact fields {sorted(fields)} differ from the "
+                         f"index's {sorted(index_fields)}")
     return build_index(live_corpus, out_dir, fields=fields, **kwargs)

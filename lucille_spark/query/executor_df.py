@@ -575,11 +575,9 @@ def search_batch(
     One WAND searcher per Python worker; queries are the unit of
     parallelism (the index is shared storage, as in any search tier).
     The queries enter as a local relation built from Arrow (no pickled
-    Python-RDD pass) and fan out to ``min(ceil(len / QUERIES_PER_TASK),
-    defaultParallelism)`` tasks: a small batch is one task with no
-    exchange, a larger one is spread round-robin, however the relation is
-    sliced. Warm workers skip the searcher open via the version-keyed
-    cache below.
+    Python-RDD pass) and are coalesced, with no exchange, into
+    ``min(ceil(len / QUERIES_PER_TASK), defaultParallelism)`` tasks. Warm
+    workers skip the searcher open via the version-keyed cache below.
     """
     import pandas as pd
     import pyarrow as pa
@@ -589,7 +587,7 @@ def search_batch(
         "query": pa.array([q for _, q in queries], pa.string())}))
     n_part = min(-(-len(queries) // QUERIES_PER_TASK),
                  spark.sparkContext.defaultParallelism)
-    qdf = qdf.repartition(n_part) if n_part > 1 else qdf.coalesce(1)
+    qdf = qdf.coalesce(max(n_part, 1))
 
     def run(batches):
         from lucille_spark.index import snapshot

@@ -145,9 +145,9 @@ def test_avgdl_drift_keeps_wand_exact(spark, tmp_path):
 
 
 def test_default_merge_keeps_the_manifest_fields(spark, tmp_path):
-    """A merge without ``fields`` indexes the manifest's fields: an index
-    built with ``lang`` keeps answering ``lang:`` queries, new docs
-    included, and other fields are refused."""
+    """A merge or compaction without ``fields`` indexes the manifest's
+    fields: an index built with ``lang`` keeps answering ``lang:``
+    queries, new docs included, and other fields are refused."""
     import hashlib
 
     import numpy as np
@@ -155,7 +155,7 @@ def test_default_merge_keeps_the_manifest_fields(spark, tmp_path):
     from lucille_spark.corpus import corpus_pdf
     from lucille_spark.index import snapshot
     from lucille_spark.index.builder import build_index
-    from lucille_spark.index.merge import merge_index
+    from lucille_spark.index.merge import compact, merge_index
     from lucille_spark.query.oracle import OracleIndex
     from lucille_spark.query.searcher import IndexSearcher
 
@@ -182,3 +182,14 @@ def test_default_merge_keeps_the_manifest_fields(spark, tmp_path):
     with pytest.raises(ValueError, match="lang"):
         merge_index(spark.createDataFrame(corpus_pdf(np.arange(70, 75))),
                     idx, fields=("content",))
+
+    cdir = str(tmp_path / "compact")
+    compact(idx, spark.createDataFrame(corpus_pdf(np.arange(70))), cdir,
+            block_size=32)
+    assert set(snapshot.load(cdir)["stats"]) == {"content", "lang"}
+    got = IndexSearcher(cdir).search("lang:rust", 100)
+    assert got and sorted(d for d, _ in got) == sorted(
+        d for d, _ in searcher.search("lang:rust", 100))
+    with pytest.raises(ValueError, match="lang"):
+        compact(idx, spark.createDataFrame(corpus_pdf(np.arange(70))),
+                str(tmp_path / "compact2"), fields=("content",))

@@ -137,13 +137,11 @@ def main():
         sections.append((
             "Batch search over a built index (search_batch)",
             "The query list is a local relation built from a pyarrow Table "
-            "(no pickled Python-RDD pass). A batch of up to QUERIES_PER_TASK "
-            "queries is coalesced into one task with no exchange, and its "
-            "MapInPandas worker scores the queries with a searcher it "
-            "caches per index version. Only a larger batch adds a "
-            "round-robin exchange, one task per QUERIES_PER_TASK queries up "
-            "to every core. No corpus-sized scan or shuffle appears in the "
-            "plan.",
+            "(no pickled Python-RDD pass), coalesced with no exchange into "
+            "one task per QUERIES_PER_TASK queries up to every core. Each "
+            "MapInPandas worker scores its queries with a searcher it "
+            "caches per index version. No corpus-sized scan or shuffle "
+            "appears in the plan.",
             explain(search_batch(spark, idx, [("q0", "content:merge")],
                                  k=10))))
     finally:
