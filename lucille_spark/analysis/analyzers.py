@@ -18,6 +18,17 @@ UAX#29 segmentation (underscore joins words in UAX#29 via ExtendNumLet,
 which is why ``_`` stays inside tokens: ``ident_foo`` is one term, matching
 how a code corpus wants identifiers kept whole).
 
+Spark lowercases an all-ASCII string byte by byte; any other string goes
+through the JVM's ``String.toLowerCase()`` in the default locale, because
+the engine's sessions switch ICU case mapping off (``session.py``). Only
+letters whose lowercase is ASCII can change a token: ``İ`` (to ``i`` plus
+a combining dot) and the Kelvin sign (to ``k``). Under ``en_US`` that
+matches Python's ``str.lower()`` on the fixtures of
+``tests/test_case_mapping.py`` (``İstanbul``, the Kelvin sign, a final
+sigma, ``ẞ``, ``ﬀ``, ``Ǆ``). A Turkic default locale would lower ``I``
+to the dotless ``ı`` in any string that is not all ASCII, which splits
+the token there.
+
 A ``code`` analyzer additionally splits camelCase / snake_case identifiers
 into sub-tokens while keeping the original (useful for source-code search);
 it is opt-in and kept out of oracle-parity tests.

@@ -465,6 +465,10 @@ def doc_stats_columns(columns: Sequence[str], fields: Sequence[str]) -> list:
         if c in columns] + ["content_sha256"]
 
 
+# session settings a build or merge switches off for its duration
+_JOB_OFF = ("spark.sql.adaptive.enabled", "spark.sql.icu.caseMappings.enabled")
+
+
 @contextmanager
 def _job_scope(spark: SparkSession):
     """Session scope of one build or merge, restored however it ends.
@@ -473,10 +477,15 @@ def _job_scope(spark: SparkSession):
     every shuffle — measured ~50s of pure driver latency on a 100k-doc
     build. Builds and merges handle skew explicitly (salting) and choose
     partition counts statically, so AQE buys nothing: it is off inside
-    the scope. Yields ``cache(df, level=None)``, which persists ``df``
-    and unpersists it when the scope ends, failed or not."""
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    the scope. So is ICU case mapping (``session.py`` says why), so that a
+    build or merge on a session the engine did not make builds no ICU
+    case-mapping table either. Both settings get their previous values
+    back when the scope ends. Yields ``cache(df, level=None)``, which
+    persists ``df`` and unpersists it when the scope ends, failed or
+    not."""
+    before = {k: spark.conf.get(k, "true") for k in _JOB_OFF}
+    for k in _JOB_OFF:
+        spark.conf.set(k, "false")
     cached = []
 
     def cache(df: DataFrame, level=None) -> DataFrame:
@@ -488,7 +497,8 @@ def _job_scope(spark: SparkSession):
     finally:
         for df in cached:
             df.unpersist()
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
+        for k, v in before.items():
+            spark.conf.set(k, v)
 
 
 def build_index(

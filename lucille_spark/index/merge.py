@@ -26,7 +26,8 @@ Mechanics (Lucene-segment-like):
   computed with (``bound_avgdl``); the reader scales bounds by
   max(1, avgdl_now/bound_avgdl) — provably an upper bound (mediant
   inequality), so block-max WAND stays exact across merges.
-- ``compact()`` folds tombstones away with a full rebuild over live docs.
+- ``compact()`` folds tombstones away with a full rebuild over live docs,
+  with the manifest's fields and analyzer.
 """
 
 from __future__ import annotations
@@ -234,13 +235,20 @@ def compact(index_dir: str, live_corpus: DataFrame, out_dir: str,
     """Fold tombstones away: full rebuild of the index over the live corpus
     (the Lucene segment-merge equivalent). The caller supplies the live
     corpus (content is not stored in the index tables). ``fields`` follows
-    the :func:`merge_index` rule: None means the manifest's fields."""
+    the :func:`merge_index` rule: None means the manifest's fields. The
+    rebuild keeps the manifest's analyzer; another raises ValueError."""
     from lucille_spark.index.builder import build_index
 
-    index_fields = tuple(snapshot.load(index_dir)["stats"])
+    base = snapshot.load(index_dir)
+    index_fields = tuple(base["stats"])
     if fields is None:
         fields = index_fields
     elif set(fields) != set(index_fields):
         raise ValueError(f"compact fields {sorted(fields)} differ from the "
                          f"index's {sorted(index_fields)}")
-    return build_index(live_corpus, out_dir, fields=fields, **kwargs)
+    analyzer = kwargs.pop("analyzer", base["analyzer"])
+    if analyzer != base["analyzer"]:
+        raise ValueError(f"compact analyzer {analyzer!r} differs from the "
+                         f"index's {base['analyzer']!r}")
+    return build_index(live_corpus, out_dir, fields=fields,
+                       analyzer=analyzer, **kwargs)

@@ -7,6 +7,22 @@ statically partitioned jobs). Arrow is on: every Python-side op in this
 repo is a vectorized Arrow/pandas UDF — no per-row Python, per BASELINE
 input_hint. maxRecordsPerBatch also bounds the working set of the
 postings encode kernel, which sees one Arrow batch at a time.
+
+Case mapping takes the JVM path (``spark.sql.icu.caseMappings.enabled``
+false). With it on, Spark 4.1's first ``lower()`` or ``upper()`` in a JVM
+runs the class initializer of ``CollationAwareUTF8String``, which calls
+ICU ``UCharacter.toTitleCase`` on all 1,114,112 code points to fill one
+lookup table. The analyzer's ``lower()`` (``analysis/analyzers.py``) is
+the first in every build. On a 4-core host, a JFR allocation profile of a
+cold perfbench search_mix seed-1 run sampled 4,682 MB allocated in the
+JVM, 3,216 MB of it inside that initializer; with the flag off it sampled
+1,437 MB, none of it there. The doc_stats write's first stage, where
+``lower()`` first runs, took 2.33-2.36 s with the table and 0.90-1.22 s
+without: one task fills the table while the others wait on its
+class-init lock. The tokens do not change: ASCII text takes
+``toLowerCaseAscii`` on both paths, and the non-ASCII fixtures of
+``tests/test_case_mapping.py`` lower alike. Builds and merges on a
+session made elsewhere get the same setting from ``builder._job_scope``.
 """
 
 from __future__ import annotations
@@ -29,6 +45,7 @@ def get_spark(app: str = "lucille-spark", cpus: int | None = None,
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.icu.caseMappings.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         # batch-throughput GC beats G1 for shuffle-heavy single-JVM runs

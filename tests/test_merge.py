@@ -193,3 +193,32 @@ def test_default_merge_keeps_the_manifest_fields(spark, tmp_path):
     with pytest.raises(ValueError, match="lang"):
         compact(idx, spark.createDataFrame(corpus_pdf(np.arange(70))),
                 str(tmp_path / "compact2"), fields=("content",))
+
+
+def test_compact_keeps_the_analyzer(spark, tmp_path):
+    """A compaction without ``analyzer`` rebuilds with the manifest's:
+    a ``code`` index keeps matching camelCase sub-tokens, and another
+    analyzer is refused."""
+    from lucille_spark.index import snapshot
+    from lucille_spark.index.builder import build_index
+    from lucille_spark.index.merge import compact
+    from lucille_spark.query.searcher import IndexSearcher
+
+    rows = [("o/r", f"f{i}.py", "c0", "python",
+             "def getUserName(self): return self.name" if i % 4 == 0
+             else "plain words only here")
+            for i in range(20)]
+    corpus = spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, "
+              "content string")
+    idx, cdir = str(tmp_path / "idx"), str(tmp_path / "compact")
+    build_index(corpus, idx, analyzer="code")
+    before = sorted(d for d, _ in IndexSearcher(idx).search("content:user", 20))
+    assert len(before) == 5
+
+    compact(idx, corpus, cdir)
+    assert snapshot.load(cdir)["analyzer"] == "code"
+    assert sorted(
+        d for d, _ in IndexSearcher(cdir).search("content:user", 20)) == before
+    with pytest.raises(ValueError, match="analyzer"):
+        compact(idx, corpus, str(tmp_path / "compact2"), analyzer="standard")
