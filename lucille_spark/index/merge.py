@@ -76,6 +76,19 @@ def merge_index(
     ``run_id`` None means a fresh id. With the run_id of the latest
     manifest the call is a replay (a re-run micro-batch): it returns that
     commit's ``added``/``tombstoned`` and writes nothing.
+
+    ``deletes`` is driver-sized: the merge broadcasts the gone ids whole,
+    so it reads ``deletes`` as one partition, in one task. A frame built
+    from a Python list has ``defaultParallelism`` slices, each a Python
+    task: read slice by slice, three deleted ids forked a Python worker
+    per core; read as one partition, they run in the one worker the build
+    left idle. A caller whose deletes come out of an expensive plan puts
+    an exchange under them (``.distinct()``, as ``StreamingIndexer``
+    does), so the plan below the exchange keeps its parallelism. With the
+    one pool of an engine session (``session.py``) a commit then runs all
+    its Python in one worker; a session the engine did not make
+    (``jobs/build_index_job.py``) keeps a second pool for RDD-path Python,
+    but its deletes still run as one task.
     """
     spark = new_corpus.sparkSession
     base = snapshot.load(index_dir)
@@ -122,7 +135,8 @@ def merge_index(
         # Anti-join the existing tombstones.
         gone_ids = delta.select("doc_id")
         if deletes is not None:
-            gone_ids = gone_ids.unionByName(deletes.select("doc_id"))
+            gone_ids = gone_ids.unionByName(
+                deletes.select("doc_id").coalesce(1))
         tomb_paths = snapshot.paths(index_dir, base, "_tombstones")
         live_stats = doc_stats
         if tomb_paths:

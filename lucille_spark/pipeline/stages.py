@@ -26,6 +26,7 @@ from pyspark.sql.types import StringType
 from lucille_spark.pipeline.conditions import (
     CHILDREN, DROPPED, SKIPPED, Condition, guard_column,
 )
+from lucille_spark.session import arrow_frame
 
 STAGES: Dict[str, type] = {}
 
@@ -545,8 +546,8 @@ class DictionaryLookup(Stage):
 
     def _apply_join(self, df, is_arr: bool):
         spark = df.sparkSession
-        ddf = spark.createDataFrame(list(self.dictionary.items()),
-                                    "_dl_term string, _dl_payload string")
+        ddf = arrow_frame(spark, list(self.dictionary.items()),
+                          "_dl_term string, _dl_payload string")
         if not is_arr:
             res = df.join(F.broadcast(ddf),
                           F.col(self.source) == F.col("_dl_term"), "left")
@@ -1525,9 +1526,9 @@ class ExtractEntities(Stage):
             out_val = payload if self.use_payloads else entry
             for ti, t in enumerate(terms):
                 rows.append((idx, out_val, t, ti, len(terms)))
-        dict_df = spark.createDataFrame(
-            rows, "entry_idx int, out_val string, term string, "
-                  "term_idx int, n_terms int")
+        dict_df = arrow_frame(
+            spark, rows, "entry_idx int, out_val string, term string, "
+                         "term_idx int, n_terms int")
 
         if self.id_col in df.columns:
             base, key = df, self.id_col
@@ -1556,8 +1557,8 @@ class ExtractEntities(Stage):
                                                        entry_terms).items()
                      for cidx in cs]
             if pairs:
-                pair_df = spark.createDataFrame(
-                    pairs, "sub_idx int, container_idx int")
+                pair_df = arrow_frame(
+                    spark, pairs, "sub_idx int, container_idx int")
                 cont = matched.select(F.col("_eid").alias("_ceid"),
                                       F.col("entry_idx").alias("_cidx"))
                 sup = (matched.join(F.broadcast(pair_df),

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from lucille_spark import BM25_B, BM25_K1
 from lucille_spark.analysis import tokenize_col
+from lucille_spark.session import arrow_frame
 
 
 def prepare_docs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -277,7 +278,7 @@ def suggest_batch_df(spark: SparkSession, index_dir: str,
     lex = (spark.read.parquet(*snapshot.paths(
         index_dir, snapshot.load(index_dir), "lexicon"))
         .filter(F.col("field") == field).select("term").distinct())
-    words_df = spark.createDataFrame([(w,) for w in words], "word string")
+    words_df = arrow_frame(spark, [(w,) for w in words], "word string")
     # r7: the length band is an EQUI-join — each word explodes into its
     # 2*max_edits+1 admissible term lengths and the join key is
     # length(term), so the planner picks a BroadcastHashJoin instead of
@@ -580,11 +581,8 @@ def search_batch(
     workers skip the searcher open via the version-keyed cache below.
     """
     import pandas as pd
-    import pyarrow as pa
 
-    qdf = spark.createDataFrame(pa.table({
-        "query_id": pa.array([qid for qid, _ in queries], pa.string()),
-        "query": pa.array([q for _, q in queries], pa.string())}))
+    qdf = arrow_frame(spark, queries, "query_id string, query string")
     n_part = min(-(-len(queries) // QUERIES_PER_TASK),
                  spark.sparkContext.defaultParallelism)
     qdf = qdf.coalesce(max(n_part, 1))

@@ -23,13 +23,35 @@ class-init lock. The tokens do not change: ASCII text takes
 ``toLowerCaseAscii`` on both paths, and the non-ASCII fixtures of
 ``tests/test_case_mapping.py`` lower alike. Builds and merges on a
 session made elsewhere get the same setting from ``builder._job_scope``.
+
+One Python worker pool serves the session. Spark keys its Python
+daemons on the function's environment: SQL Python functions
+(``mapInArrow``, pandas UDFs) add ``SPARK_SIMPLIFIED_TRACEBACK=1`` (from
+``spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled``, on by
+default), while RDD-path functions carry only ``sc.environment``.
+``createDataFrame`` from a Python list runs on the RDD path, so a session
+that ran both kinds kept two ``pyspark.daemon`` processes, whose
+``/proc/<pid>/environ`` differed in that variable alone, apart from the
+secret each daemon factory sets for itself. Setting it as an executor
+environment variable puts it in ``sc.environment``: both keys match, one
+daemon forks the workers of both kinds, and RDD-path errors show the
+same shortened traceback as SQL Python errors. On a 4-core host, at the
+peak of a perfbench live_ingest seed-1 run, the second pool was a daemon
+of 62 MB plus 4 idle workers of 59 MB each (298 MB). With this setting
+and ``merge_index``'s one-partition deletes, the run's tree went from
+1,782 MB (JVM 1,000, driver 270, two pools) to 1,512 MB (JVM 1,037,
+driver 270, one daemon of 62 MB with one worker of 143 MB). A session
+made elsewhere (``jobs/build_index_job.py``) keeps two pools.
+The engine's frames of driver rows (query batches, suggest words,
+streaming metrics rows, stage dictionaries) go through Arrow
+(``arrow_frame``), so they start no Python task at all.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(app: str = "lucille-spark", cpus: int | None = None,
@@ -46,6 +68,8 @@ def get_spark(app: str = "lucille-spark", cpus: int | None = None,
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.icu.caseMappings.enabled", "false")
+        # RDD-path Python gets the variable SQL Python adds: one daemon
+        .config("spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK", "1")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         # batch-throughput GC beats G1 for shuffle-heavy single-JVM runs
@@ -58,3 +82,16 @@ def get_spark(app: str = "lucille-spark", cpus: int | None = None,
     for k, v in extra.items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def arrow_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """A frame of driver-side ``rows`` (tuples in the order of the DDL
+    ``schema``), sent to the JVM as one Arrow table: a local relation, with
+    no pickled Python-RDD pass and no Python task to run it."""
+    import pyarrow as pa
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema)
+    cols = list(zip(*rows)) or [()] * len(struct.names)
+    return spark.createDataFrame(
+        pa.table({n: list(c) for n, c in zip(struct.names, cols)}), struct)

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from lucille_spark.index import snapshot
 from lucille_spark.pipeline import Pipeline
+from lucille_spark.session import arrow_frame
 from lucille_spark.sinks.index_sink import IndexSink
 
 
@@ -78,7 +79,8 @@ class StreamingIngest:
                 self._quarantine(batch_df, batch_id, e)
                 status, n_rows = "failed_quarantined", 0
             if metrics_dir:
-                batch_df.sparkSession.createDataFrame(
+                arrow_frame(
+                    batch_df.sparkSession,
                     [(run_id, int(batch_id), n_rows,
                       time.time() - t0, status)],
                     "run_id string, batch_id long, n_rows long, "
@@ -182,8 +184,10 @@ class StreamingIndexer(StreamingIngest):
             if marker and marker in out.columns:
                 is_del = F.coalesce(
                     F.col(marker).cast("string") == "true", F.lit(False))
+                # distinct: an id-sized exchange under the merge's
+                # one-partition read keeps the pipeline's stage N-way
                 deletes = add_doc_identity(
-                    out.filter(is_del)).select("doc_id")
+                    out.filter(is_del)).select("doc_id").distinct()
                 out = out.filter(~is_del)
             corpus = out.select(*cols)
             if snapshot.latest(index_dir) is None:
@@ -214,7 +218,8 @@ class StreamingIndexer(StreamingIngest):
                                   **{k: v for k, v in merge_kwargs.items()
                                      if k != "analyzer"})
             if metrics_dir:
-                batch_df.sparkSession.createDataFrame(
+                arrow_frame(
+                    batch_df.sparkSession,
                     [(run_id, int(batch_id), int(res["added"]),
                       int(res["tombstoned"]), time.time() - t0, "complete")],
                     "run_id string, batch_id long, n_added long, "
