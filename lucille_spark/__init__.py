@@ -10,7 +10,7 @@ A from-scratch reimplementation of the capabilities of kmwtechnology/lucille
   delta + varbyte compressed posting blocks with block-max metadata
   (``lucille_spark.index``).
 - query plane: Lucene-classic-subset parser, posting intersection/union,
-  BM25 scoring, block-max WAND top-k (``lucille_spark.query``).
+  BM25 scoring, exact block-max top-k (``lucille_spark.query``).
 - training-data ops: dedup (exact / MinHash-LSH / SimHash / n-gram Jaccard),
   ANN similarity search, text analysis (``lucille_spark.ml``).
 """

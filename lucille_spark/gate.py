@@ -13,9 +13,10 @@ value hash, so:
 - averages are expressed as exact-integer-sum / count,
 - decimal-exact sums are used where a float sum's order would differ.
 
-Entries whose Spark side runs the *compressed index + block-max WAND* engine
+Entries whose Spark side runs the *compressed index + block-max top-k*
+engine (``IndexSearcher.search``; the entries keep their ``wand_`` names)
 still get a full SQL oracle (the BM25 formula in SQL) — that is the
-strongest gate this repo has: codecs + salting + WAND vs DuckDB.
+strongest gate this repo has: codecs + salting + the searcher vs DuckDB.
 """
 
 from __future__ import annotations
@@ -264,8 +265,8 @@ def bm25_phrase(spark, sf_dir):
 
 
 # =========================================================================
-# 3. Compressed index + block-max WAND vs the same SQL oracle
-#    (the from-scratch engine end-to-end: build → codecs → WAND)
+# 3. Compressed index + block-max top-k searcher vs the same SQL oracle
+#    (the from-scratch engine end-to-end: build → codecs → search)
 # =========================================================================
 
 _WAND_QUERY_TERMS = ["window", "filter"]
@@ -356,7 +357,8 @@ def bm25_phrase_sloppy(spark, sf_dir):
 
 @register("wand_index_top10", sql=_WAND_SQL)
 def wand_index_top10(spark, sf_dir):
-    """Full engine path: compressed index + block-max WAND, vs SQL BM25."""
+    """Full engine path: compressed index + block-max top-k search, vs
+    SQL BM25."""
     from lucille_spark.query.searcher import IndexSearcher
 
     idx = _ensure_gate_index(spark, sf_dir)
@@ -410,10 +412,10 @@ def wand_prefix_top10(spark, sf_dir):
     """PrefixQuery through the FULL engine path: `content:s*` expands
     against the term-sorted lexicon (row-group-pruned range scan) into a
     scoring boolean OR (MultiTermQuery.SCORING_BOOLEAN_REWRITE) answered
-    by block-max WAND. The oracle derives the SAME expansion relationally
-    (DISTINCT tokens LIKE 's%', ascending, capped) and sums per-doc
-    contributions in term order — matching WAND's cursor-order float
-    summation bit-for-bit."""
+    by the block-max top-k searcher. The oracle derives the SAME expansion
+    relationally (DISTINCT tokens LIKE 's%', ascending, capped) and sums
+    per-doc contributions in term order — matching the searcher's
+    term-order float summation bit-for-bit."""
     from lucille_spark.query.searcher import IndexSearcher
 
     idx = _ensure_gate_index(spark, sf_dir)
@@ -445,7 +447,7 @@ def wand_fuzzy_top10(spark, sf_dir):
     like Lucene's FuzzyQuery top-terms rewrite; plain Levenshtein so
     DuckDB's levenshtein() reproduces the set exactly — Lucene's Damerau
     transpositions are a documented deviation), then scores as a boolean
-    OR under block-max WAND."""
+    OR under block-max top-k search."""
     from lucille_spark.query.searcher import IndexSearcher
 
     idx = _ensure_gate_index(spark, sf_dir)
@@ -465,8 +467,8 @@ def wand_range_top10(spark, sf_dir):
     """TermRangeQuery through the FULL engine path: `content:[filter TO
     key]` expands against the term-sorted lexicon with the bounds pushed
     into the Arrow scan (row-group-pruned range seek), then scores as a
-    boolean OR under block-max WAND — vs the same relational range
-    expansion in SQL."""
+    boolean OR under block-max top-k search — vs the same relational
+    range expansion in SQL."""
     from lucille_spark.query.searcher import IndexSearcher
 
     idx = _ensure_gate_index(spark, sf_dir)
@@ -486,8 +488,9 @@ def wand_wildcard_top10(spark, sf_dir):
     """WildcardQuery through the FULL engine path: `content:s?a*` — the
     literal prefix 's' prunes the lexicon scan to its range, the residual
     `?`/`*` pattern matches via one compiled regex, then the expansion
-    scores as a boolean OR under block-max WAND (matches scan/small/spark
-    on this corpus) — vs the equivalent regexp expansion in SQL."""
+    scores as a boolean OR under block-max top-k search (matches
+    scan/small/spark on this corpus) — vs the equivalent regexp expansion
+    in SQL."""
     from lucille_spark.query.searcher import IndexSearcher
 
     idx = _ensure_gate_index(spark, sf_dir)
@@ -507,8 +510,8 @@ _WAND_BOOST_SQL = _WAND_SQL.replace(
 @register("wand_boosted_top10", sql=_WAND_BOOST_SQL)
 def wand_boosted_top10(spark, sf_dir):
     """Clause boost through the FULL engine path: `window^2 OR filter`
-    parsed to a boosted Term, boost folded into the cursor's idf (score,
-    global max and block-max bounds all scale together, so block-max WAND
+    parsed to a boosted Term, boost folded into the term's idf (its
+    scores and its block-max window bounds scale together, so skipping
     stays exact) — vs the same boosted BM25 in SQL."""
     from lucille_spark.query.searcher import IndexSearcher
 
@@ -2372,7 +2375,7 @@ terms AS (SELECT term FROM cand_df WHERE df0 >= 2),""")
 def mlt_top10(spark, sf_dir):
     """MoreLikeThis through the FULL engine path: like-text's terms rank
     by tf*idf against the index stats, terms under minDocFreq=2 drop,
-    survivors run as a BM25 OR under block-max WAND
+    survivors run as a BM25 OR under block-max top-k search
     (searcher.more_like_this). The like-text here has <= max_query_terms
     distinct terms, so the oracle's selection is exactly the df>=2 filter
     (the tf*idf cap itself is pytest-covered); scoring is the same
@@ -2610,7 +2613,7 @@ GATE_ORDER = [
     # -- scored-plane canaries (kept in-window per VERDICT r4 #1)
     "bm25_single", "bm25_and", "bm25_phrase", "bm25_phrase_sloppy",
     "bm25_fielded",
-    # -- WAND canaries + every term-expansion flavor + r5 grouping
+    # -- top-k searcher canaries + every term-expansion flavor + r5 grouping
     # (wand_prefix_top10 rotated out r6 for suggest_batch_df: the
     #  prefix route is the literal-prefix fast path INSIDE the in-window
     #  wand_wildcard_top10's expansion and stays pytest-covered by the

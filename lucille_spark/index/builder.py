@@ -272,9 +272,9 @@ def _postings_encoder(avgdl: float, block_size: int,
              pa.array(np.maximum.reduceat(tfnorm, blk_starts),
                       type=pa.float64()),
              # avgdl used for this block's score bound; if the corpus
-             # avgdl later shrinks (incremental merges), the reader
-             # scales the bound by avgdl_bound/avgdl_now (provably safe
-             # — see reader.TermCursor._bound_scale)
+             # avgdl later grows (incremental merges), the searcher's
+             # window bound scales it by max(1, avgdl_now/bound_avgdl)
+             # (provably safe — see searcher.IndexSearcher._windows)
              pa.array(np.full(n_blocks, avgdl), type=pa.float64())],
             names=["field", "term", "salt", "block_seq", "first_doc",
                    "last_doc", "n_docs", "sum_tf", "doc_gaps", "tfs",
@@ -648,19 +648,24 @@ def build_index(
 
 
 class _Ledger:
+    """The ``_lineage`` table of one run. It gains a file per recorded
+    stage of every commit, so it is read only when :meth:`done` asks."""
+
     def __init__(self, out_dir: str, run_id: str):
         self.run_id = run_id
         self.path = os.path.join(out_dir, "_lineage")
-        try:  # driver-side pyarrow read of the tiny table, no Spark job
-            rows = ds.dataset(self.path, ignore_prefixes=[".", "_"]) \
-                .to_table().to_pylist()
-        except FileNotFoundError:
-            rows = []  # first run on this index
-        self.done_stages = {r["stage"] for r in rows
-                            if r["run_id"] == run_id
-                            and r["status"] == "complete"}
+        self.done_stages = None
 
     def done(self, stage: str) -> bool:
+        if self.done_stages is None:
+            try:  # driver-side pyarrow read of the tiny table, no Spark job
+                rows = ds.dataset(self.path, ignore_prefixes=[".", "_"]) \
+                    .to_table().to_pylist()
+            except FileNotFoundError:
+                rows = []  # first run on this index
+            self.done_stages = {r["stage"] for r in rows
+                                if r["run_id"] == self.run_id
+                                and r["status"] == "complete"}
         return stage in self.done_stages
 
     def record(self, stage: str, n_rows: int, started: float) -> None:
@@ -674,5 +679,6 @@ class _Ledger:
             "finished_at": pa.array([float(now)], pa.float64()),
             "seconds": pa.array([now - started], pa.float64()),
         }), self.path, mode="append")
-        self.done_stages.add(stage)
+        if self.done_stages is not None:
+            self.done_stages.add(stage)
 

@@ -23,9 +23,9 @@ Mechanics (Lucene-segment-like):
   replay: it returns that commit's counts and writes nothing. Delta docs
   are tokenized with the analyzer the manifest records.
 - avgdl drift safety: blocks record the avgdl their score bounds were
-  computed with (``bound_avgdl``); the reader scales bounds by
-  max(1, avgdl_now/bound_avgdl) — provably an upper bound (mediant
-  inequality), so block-max WAND stays exact across merges.
+  computed with (``bound_avgdl``); the searcher's window bound scales
+  them by max(1, avgdl_now/bound_avgdl) — provably an upper bound
+  (mediant inequality), so block-max skipping stays exact across merges.
 - ``compact()`` folds tombstones away with a full rebuild over live docs,
   with the manifest's fields and analyzer.
 """

@@ -1,4 +1,4 @@
-"""Driver-side index reader: lexicon lookups + lazily-decoded block cursors.
+"""Driver-side index reader: lexicon lookups and a term's posting blocks.
 
 Opens one index version, the latest manifest (``snapshot.load``), reads
 each row group of the files it lists at most once, and answers every
@@ -33,10 +33,8 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
-from lucille_spark import BM25_B, BM25_K1
 from lucille_spark.index import codecs, snapshot
 
-SENTINEL = 1 << 62
 # how a term's lexicon rows fold: as builder.lexicon_rows folds blocks
 _FOLD = {"df": "sum", "cf": "sum", "n_blocks": "sum", "max_tfnorm": "max",
          "bound_avgdl": "min"}
@@ -116,13 +114,6 @@ class IndexReader:
 
     def version(self) -> str:
         return str(self.manifest["version"])
-
-    def has_tombstone(self, doc_ord: int) -> bool:
-        t = self.tombstones
-        if t.size == 0:
-            return False
-        i = int(np.searchsorted(t, doc_ord))
-        return i < t.size and int(t[i]) == doc_ord
 
     def avgdl(self, field: str = "content") -> float:
         return float(self.stats[field]["avgdl"])
@@ -287,7 +278,9 @@ class IndexReader:
     def blocks(self, field: str, term: str) -> pa.Table:
         """All block rows for a term, ordered by first_doc: its slice of
         every postings row group whose footer min/max admit (field, term),
-        each row group read once per reader."""
+        each row group read once per reader. The blocks cover disjoint
+        ordinal ranges (a salt is a doc_ord range bucket, and a merge
+        appends ordinals above the span), so last_doc is ascending too."""
         schema, groups = self._postings
         parts = []
         for path, g, fstats, tstats in groups:
@@ -304,15 +297,17 @@ class IndexReader:
         t = pa.concat_tables(parts)
         return t.take(pc.sort_indices(t["first_doc"]))
 
-    def decode_term_flat(self, field: str, term: str, positions: bool = True):
+    def decode_term_flat(self, field: str, term: str, positions: bool = True,
+                         blocks: Optional[pa.Table] = None):
         """(doc_ords, tfs, flat_positions, lens) — decoded with ONE vbyte
         pass per column: every payload format in this index is
         block-concatenable by construction (doc and position gap streams
         restart with an absolute value per block and per doc, undone by a
         grouped cumsum; tfs are self-delimiting and are the position
         counts), so a term's whole posting list decodes in ~4 NumPy calls
-        regardless of block count."""
-        b = self.blocks(field, term)
+        regardless of block count. ``blocks``, a run of the term's
+        :meth:`blocks` rows, decodes those rows in place of all of them."""
+        b = self.blocks(field, term) if blocks is None else blocks
         empty = np.empty(0, dtype=np.uint64)
         if b.num_rows == 0:
             return empty, empty, empty, np.empty(0, np.int64)
@@ -351,111 +346,3 @@ class IndexReader:
         ids = self._doc_column("doc_id")
         return {o: ids[o] for o in map(int, ords) if ids[o] is not None}
 
-
-class TermCursor:
-    """Block-at-a-time cursor with skipping: blocks are only decoded when the
-    cursor actually lands in them (next_geq skips whole blocks via the
-    first_doc/last_doc fences, the skip-list equivalent)."""
-
-    def __init__(self, reader: IndexReader, field: str, term: str,
-                 boost: float = 1.0):
-        self.field, self.term = field, term
-        # clause boost folds into idf: score(), max_score and the
-        # block-max bounds all scale together, so WAND stays exact
-        self.idf = reader.idf(field, term) * boost
-        # df counts dead postings until a compaction, so after merges it
-        # can pass the live N and turn idf negative: every contribution
-        # is then below 0, which bounds them (idf * max_tfnorm would not)
-        self._bound_idf = max(self.idf, 0.0)
-        info = reader.term_info(field, term)
-        self.df = info["df"] if info else 0
-        self.avgdl = reader.avgdl(field)
-        self._dl = reader.doc_lengths(field)
-        # Score bounds were computed with the avgdl at encode time. If the
-        # corpus avgdl has since GROWN (incremental merges with longer
-        # docs), actual tfnorms can exceed stored bounds by at most
-        # avgdl_now/avgdl_bound (mediant inequality on
-        # tf/(tf + k1(1-b+b*dl/a))), so scale bounds up by that factor;
-        # a shrunken avgdl only makes stored bounds looser (still valid).
-        lex_scale = 1.0
-        if info and info.get("bound_avgdl"):
-            lex_scale = max(1.0, self.avgdl / float(info["bound_avgdl"]))
-        self.max_score = (self._bound_idf * float(info["max_tfnorm"])
-                          * lex_scale if info else 0.0)
-        b = reader.blocks(field, term)
-        self._nblocks = b.num_rows
-        self._last = b["last_doc"].to_numpy()
-        self._bmax = b["block_max_tfnorm"].to_numpy() * np.maximum(
-            1.0, self.avgdl / b["bound_avgdl"].to_numpy())
-        self._gaps = b["doc_gaps"].to_pylist()
-        self._block_tfs = b["tfs"].to_pylist()
-        self.bi = -1
-        self.pos = 0
-        self._docs = self._tfs = None
-        self.doc = SENTINEL
-        if self._nblocks:
-            self._load(0)
-
-    def _load(self, bi: int):
-        self.bi = bi
-        self._docs = codecs.decode_block_docs(self._gaps[bi]).astype(np.int64)
-        self._tfs = codecs.vbyte_decode(self._block_tfs[bi]).astype(np.int64)
-        self.pos = 0
-        self.doc = int(self._docs[0])
-
-    def next(self):
-        if self.doc == SENTINEL:
-            return SENTINEL
-        self.pos += 1
-        if self.pos < len(self._docs):
-            self.doc = int(self._docs[self.pos])
-        elif self.bi + 1 < self._nblocks:
-            self._load(self.bi + 1)
-        else:
-            self.doc = SENTINEL
-        return self.doc
-
-    def next_geq(self, target: int):
-        if self.doc >= target:
-            return self.doc
-        # skip whole blocks using fences (no decode)
-        if self._last[self.bi] < target:
-            nxt = int(np.searchsorted(self._last, target, side="left"))
-            if nxt >= self._nblocks:
-                self.doc = SENTINEL
-                return SENTINEL
-            self._load(nxt)
-        # binary search within the (now decoded) block
-        i = int(np.searchsorted(self._docs, target, side="left", sorter=None))
-        if i >= len(self._docs):  # can't happen given fences, but be safe
-            return self.next_geq(target + 1)
-        self.pos = i
-        self.doc = int(self._docs[i])
-        return self.doc
-
-    def score(self) -> float:
-        tf = float(self._tfs[self.pos])
-        dl = float(self._dl[self.doc])
-        return self.idf * (tf / (tf + BM25_K1 * (1.0 - BM25_B
-                                                 + BM25_B * dl / self.avgdl)))
-
-    def block_max_score_at(self, target: int) -> float:
-        """Upper bound on score for any doc >= current in the block covering
-        target (shallow pointer move — metadata only, no decode)."""
-        if self.doc == SENTINEL:
-            return 0.0
-        bi = self.bi
-        if self._last[bi] < target:
-            bi = int(np.searchsorted(self._last, target, side="left"))
-            if bi >= self._nblocks:
-                return 0.0
-        return self._bound_idf * float(self._bmax[bi])
-
-    def block_last_at(self, target: int) -> int:
-        """last_doc fence of the block that covers/follows target."""
-        bi = self.bi
-        if self._last[bi] < target:
-            bi = int(np.searchsorted(self._last, target, side="left"))
-            if bi >= self._nblocks:
-                return SENTINEL
-        return int(self._last[bi])

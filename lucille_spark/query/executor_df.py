@@ -10,7 +10,7 @@ Two scale paths:
    it is also what the DuckDB oracle mirrors for the correctness gate.
 
 2. :func:`search_batch` — fan a *query set* across executors: each task runs
-   the driver-side block-max WAND searcher against the shared index tables
+   the driver-side block-max top-k searcher against the shared index tables
    (the classic shared-nothing search tier: queries are the parallel unit,
    the index is storage). An Arrow query frame, one task per
    ``QUERIES_PER_TASK`` queries: a small batch is one warm worker's task.
@@ -573,7 +573,7 @@ def search_batch(
 ) -> DataFrame:
     """Run a query batch distributed: (query_id, rank, doc_id, score).
 
-    One WAND searcher per Python worker; queries are the unit of
+    One ``IndexSearcher`` per Python worker; queries are the unit of
     parallelism (the index is shared storage, as in any search tier).
     The queries enter as a local relation built from Arrow (no pickled
     Python-RDD pass) and are coalesced, with no exchange, into

@@ -3,7 +3,7 @@
 The reference delegates ranked retrieval to Solr/ES/OpenSearch (all
 Lucene 9.11.1 — ``/root/reference/lucille-parent/pom.xml:48``); Lucille
 itself never scores. This oracle takes Lucene's place as the golden
-contract: the Spark DataFrame executor and the block-max WAND engine must
+contract: the Spark DataFrame executor and the block-max top-k engine must
 both return *rank-identical* top-k (docIDs and scores) to it.
 
 Scoring (Lucene BM25Similarity defaults, boost=1, exact dl — we skip

@@ -29,7 +29,7 @@ the remaining SHOULD clauses become optional score-only contributors —
 ``a +b c`` matches exactly the docs containing ``b``, scored over all
 three. In an AND context ``+`` is a no-op (already required).
 The AST is engine-neutral; executors live in ``oracle.py`` (NumPy),
-``executor_df.py`` (DataFrame), ``wand.py`` (block-max WAND).
+``executor_df.py`` (DataFrame), ``searcher.py`` (block-max top-k).
 """
 
 from __future__ import annotations

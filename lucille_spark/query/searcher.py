@@ -1,16 +1,13 @@
 """Driver-side ranked retrieval over the compressed index.
 
-Three physical strategies, all rank-identical to the exhaustive NumPy oracle
+One exact evaluator, rank-identical to the exhaustive NumPy oracle
 (tie-break: score desc, doc_id asc — and doc_ord order IS doc_id order by
-construction, see ordinals.py):
-
-- pure disjunctions  -> Block-Max WAND (Ding & Suel, SIGIR'11): pivot-based
-  skipping on global term upper bounds, refined with per-block max scores,
-  whole blocks skipped without decompression.
-- pure conjunctions  -> leapfrog intersection over block cursors with
-  block-max pruning.
-- anything else (phrases, negations, nested boolean) -> boolean-filter the
-  candidate set, then score candidates exhaustively.
+construction, see ordinals.py): boolean-filter the candidates over lazy-
+complement doc sets, then score them vectorized, a handful of NumPy passes
+per query term. A query with more postings than one window holds is
+scored in windows of the ordinal span cut at block boundaries, with a
+running top-k; a window whose block-max bound (Ding & Suel, SIGIR'11)
+cannot beat the k-th score is skipped without decoding a block.
 
 The reference delegates all of this to Lucene inside Solr/ES/OpenSearch
 (SURVEY.md §2.9); the query grammar contract is MatchQuery.java:85-92.
@@ -18,24 +15,22 @@ The reference delegates all of this to Lucene inside Solr/ES/OpenSearch
 
 from __future__ import annotations
 
-import heapq
 import math
 from typing import Dict, List, Optional, Tuple
 
 import numpy as np
 
 from lucille_spark import BM25_B, BM25_K1
-from lucille_spark.index.reader import SENTINEL, IndexReader, TermCursor
+from lucille_spark.index.reader import IndexReader
 from lucille_spark.query.parser import (
     And, MatchAll, Must, Not, Or, Phrase, Term, expand_prefixes, parse,
     positive_terms,
 )
 
-# strategy switch for pure disjunctions/conjunctions (see search()): total
-# postings across the query's terms at or below this bound use the exact
-# vectorized decode-and-score path; above it, block-max WAND / leapfrog
-# cursor skipping. ~4M postings decode+score in well under 100 ms; the
-# cursor walk's Python-loop constant only pays for itself past that.
+# postings of one scoring window (see search()): a query whose terms hold
+# at most this many is one pass over the whole ordinal span; a larger one
+# is cut into windows of about this many. ~4M postings decode and score
+# in well under 100 ms, and bound the arrays a query holds at once.
 VEC_POSTINGS_MAX = 1 << 22
 
 
@@ -83,22 +78,54 @@ class DocSet:
         return DocSet(np.intersect1d(self.arr, o.arr, assume_unique=True),
                       True)
 
-    def materialize(self, span: int,
-                    tombstones: Optional[np.ndarray] = None) -> np.ndarray:
-        """Concrete sorted ordinal array over universe [0, span), minus
-        tombstones. Allocates O(span) ONLY for negated (pure-NOT) sets."""
+    def materialize(self, hi: int, tombstones: Optional[np.ndarray] = None,
+                    lo: int = 0) -> np.ndarray:
+        """Concrete sorted ordinal array over the window [lo, hi) (the
+        ordinal span when ``hi`` is the span and ``lo`` 0), minus
+        tombstones. Allocates O(hi - lo) ONLY for negated (pure-NOT)
+        sets."""
         if self.neg:
             drop = self.arr
             if tombstones is not None and tombstones.size:
                 drop = np.union1d(drop, tombstones)
-            mask = np.ones(span, dtype=bool)
-            inb = drop[(drop >= 0) & (drop < span)]
-            mask[inb] = False
-            return np.flatnonzero(mask).astype(np.int64)
-        out = self.arr
+            mask = np.ones(hi - lo, dtype=bool)
+            mask[drop[(drop >= lo) & (drop < hi)] - lo] = False
+            return np.flatnonzero(mask).astype(np.int64) + lo
+        out = self.arr[np.searchsorted(self.arr, lo):
+                       np.searchsorted(self.arr, hi)]
         if tombstones is not None and tombstones.size:
             out = np.setdiff1d(out, tombstones, assume_unique=True)
         return out
+
+
+class _Window:
+    """The ordinals [lo, hi) one evaluation matches and scores, and what
+    it decodes there: by default the whole span, from each term's blocks
+    as the reader holds them; a window of :meth:`IndexSearcher._windows`
+    holds, per term, the run of its blocks that overlaps it, and the
+    window's score ``bound``. Each term decodes at most once per window:
+    a decode with positions also serves one without."""
+
+    __slots__ = ("reader", "lo", "hi", "blocks", "bound", "_decoded")
+
+    def __init__(self, reader: IndexReader, lo: int = 0,
+                 hi: Optional[int] = None, blocks: Optional[dict] = None,
+                 bound: float = 0.0):
+        self.reader = reader
+        self.lo = lo
+        self.hi = reader.ord_span() if hi is None else hi
+        self.blocks = blocks
+        self.bound = bound
+        self._decoded = {}
+
+    def decode(self, field: str, term: str, positions: bool = False):
+        hit = self._decoded.get((field, term))
+        if hit is None or (positions and not hit[0]):
+            out = self.reader.decode_term_flat(
+                field, term, positions,
+                None if self.blocks is None else self.blocks[field, term])
+            hit = self._decoded[field, term] = (positions, out)
+        return hit[1]
 
 
 class IndexSearcher:
@@ -114,9 +141,7 @@ class IndexSearcher:
         """Parse + rewrite multi-term nodes (Prefix/Fuzzy/Wildcard/
         TermRange) against the lexicon (scoring boolean rewrite; prefix,
         range and wildcard-with-literal-prefix seeks are slices of the
-        sorted lexicon, fuzzy a banded closest-first scan). Every query
-        parses first, so this also starts its decode memo."""
-        self._decoded = {}
+        sorted lexicon, fuzzy a banded closest-first scan)."""
         node = parse(query, self.default_field)
         return expand_prefixes(node, self.reader.terms_with_prefix,
                                fuzzy_expander=self.reader.terms_fuzzy,
@@ -125,43 +150,74 @@ class IndexSearcher:
 
     # ------------------------------------------------------------------ API
     def search(self, query: str, k: int = 10) -> List[Tuple[str, float]]:
-        """BM25 top-k [(doc_id, score)] using the fastest applicable strategy.
+        """BM25 top-k [(doc_id, score)], exactly :meth:`search_exhaustive`'s.
 
-        Pure disjunctions/conjunctions pick between two EXACT strategies by
-        posting volume: below ``VEC_POSTINGS_MAX`` total postings, decoding
-        everything and scoring vectorized (:meth:`_score_candidates` — a
-        handful of NumPy passes) beats the cursor-based WAND/leapfrog
-        walk, whose per-doc Python-loop overhead dominates small and
-        mid-sized indexes (r7 A/B: hot-term OR over 50k docs 103 ms ->
-        ~10 ms; identical results — same float accumulation order, same
-        (score desc, ord asc) tie-break, and adding an absent term's 0.0
-        is an IEEE identity). Above the bound, block-max WAND / leapfrog
-        skipping wins and keeps the asymptotics for 100 TB-scale indexes."""
+        A query whose terms' postings (lexicon df, negated and phrase terms
+        included) total at most ``VEC_POSTINGS_MAX`` is one window: the
+        whole ordinal span, decoded and scored in one vectorized pass. A
+        larger query runs :meth:`_windows` in ascending ordinal order,
+        keeping a running top-k. Once k hits are held, a window whose
+        bound is at or below the k-th score is skipped undecoded: the
+        bound sums each term's bound in the order the scores sum, so it
+        stays at or above any score in the window in float arithmetic, and
+        the window's ordinals lose every tie to the hits held."""
         node = self._parse(query)
-        shape = _classify(node)
-        if shape in ("or", "and", "term"):
-            terms = [node] if shape == "term" else node_terms(node)
-            infos = [self.reader.term_info(t.field, t.text) for t in terms]
-            if sum(i["df"] for i in infos if i) <= VEC_POSTINGS_MAX:
-                return self._resolve(self._score_candidates(node, k))
-        if shape == "or":
-            hits = self._wand_or(
-                [TermCursor(self.reader, t.field, t.text, boost=t.boost)
-                 for t in node_terms(node)], k)
-        elif shape == "and":
-            hits = self._leapfrog_and(
-                [TermCursor(self.reader, t.field, t.text, boost=t.boost)
-                 for t in node_terms(node)], k)
-        elif shape == "term":
-            hits = self._wand_or([TermCursor(self.reader, node.field,
-                                             node.text, boost=node.boost)],
-                                 k)
-        else:
-            hits = self._score_candidates(node, k)
-        return self._resolve(hits)
+        terms = _leaf_terms(node)
+        if sum(i["df"] for i in (self.reader.term_info(*t) for t in terms)
+               if i) <= VEC_POSTINGS_MAX:
+            return self._resolve(self._score_candidates(node, k))
+        top: List[Tuple[int, float]] = []
+        for win in self._windows(node, terms):
+            if len(top) == k and win.bound <= top[-1][1]:
+                continue
+            top = sorted(top + self._score_candidates(node, k, win),
+                         key=lambda h: (-h[1], h[0]))[:k]
+        return self._resolve(top)
+
+    def _windows(self, node, terms):
+        """The windows of the ordinal span, ascending, cut at the terms'
+        block first_doc values so that each window's blocks start on about
+        ``VEC_POSTINGS_MAX`` postings (a window also decodes the one block
+        per term that crosses its start). Each term's blocks are read once:
+        they cover disjoint ascending ranges (``IndexReader.blocks``), so
+        the ones overlapping a window are one run of them, found by two
+        searchsorted. A window's ``bound`` sums, over the positive terms in
+        scoring order, max(idf * boost, 0) times the largest block bound in
+        the term's run; a block bound is its block_max_tfnorm scaled by
+        max(1, avgdl / bound_avgdl), which covers an avgdl grown since the
+        block was encoded. Negative idf is bounded by 0."""
+        blocks = {t: self.reader.blocks(*t) for t in terms}
+        first = np.concatenate([b["first_doc"].to_numpy()
+                                for b in blocks.values()])
+        n = np.concatenate([b["n_docs"].to_numpy()
+                            for b in blocks.values()]).astype(np.int64)
+        order = np.argsort(first, kind="stable")
+        first, n = first[order], n[order]
+        part = (np.cumsum(n) - n) // VEC_POSTINGS_MAX
+        edges = np.unique(np.concatenate(
+            [[0], first[1:][np.diff(part) > 0], [self.reader.ord_span()]]))
+        lo, hi = edges[:-1], edges[1:]
+        runs = {t: (np.searchsorted(b["last_doc"].to_numpy(), lo),
+                    np.searchsorted(b["first_doc"].to_numpy(), hi))
+                for t, b in blocks.items()}
+        bound = np.zeros(lo.size)
+        for t in positive_terms(node):
+            b = blocks[t.field, t.text]
+            bmax = b["block_max_tfnorm"].to_numpy() * np.maximum(
+                1.0, self.reader.avgdl(t.field) / b["bound_avgdl"].to_numpy())
+            peak = np.array([bmax[i:j].max(initial=0.0)
+                             for i, j in zip(*runs[t.field, t.text])])
+            bound += max(self.reader.idf(t.field, t.text) * t.boost,
+                         0.0) * peak
+        for w in range(lo.size):
+            yield _Window(self.reader, int(lo[w]), int(hi[w]),
+                          {t: b.slice(runs[t][0][w],
+                                      runs[t][1][w] - runs[t][0][w])
+                           for t, b in blocks.items()}, float(bound[w]))
 
     def search_exhaustive(self, query: str, k: int = 10) -> List[Tuple[str, float]]:
-        """Decode-everything reference path (cross-check for WAND)."""
+        """Decode-everything reference path: one window, no skipping
+        (the cross-check for :meth:`search`)."""
         node = self._parse(query)
         return self._resolve(self._score_candidates(node, k))
 
@@ -189,7 +245,7 @@ class IndexSearcher:
           fields, documented-expensive for high-cardinality text (exactly
           Lucene's cost model for enum faceting without doc values)."""
         node = self._parse(query)
-        matches = self._matching(node).materialize(
+        matches = self._matching(node, _Window(self.reader)).materialize(
             self.reader.ord_span(), self.tombstones)
         if matches.size == 0:
             return []
@@ -311,7 +367,7 @@ class IndexSearcher:
     def match(self, query: str) -> List[str]:
         """Percolator-style boolean matching: sorted doc_ids."""
         node = self._parse(query)
-        ords = self._matching(node).materialize(
+        ords = self._matching(node, _Window(self.reader)).materialize(
             self.reader.ord_span(), self.tombstones).tolist()
         id_map = self.reader.doc_ids_for_ords(ords)
         return sorted(id_map[o] for o in ords)
@@ -320,107 +376,8 @@ class IndexSearcher:
         id_map = self.reader.doc_ids_for_ords([d for d, _ in hits])
         return [(id_map[d], s) for d, s in hits]
 
-    # ------------------------------------------------------- WAND (pure OR)
-    def _wand_or(self, cursors: List[TermCursor], k: int):
-        cursors = [c for c in cursors if c.df > 0]
-        heap: List[Tuple[float, int]] = []  # (score, -doc_ord) min-heap
-        theta = -math.inf
-        active = list(cursors)
-        while True:
-            active = [c for c in active if c.doc != SENTINEL]
-            if not active:
-                break
-            order = sorted(active, key=lambda c: c.doc)
-            acc, pivot_idx = 0.0, None
-            for i, c in enumerate(order):
-                acc += c.max_score
-                if acc > theta:
-                    pivot_idx = i
-                    break
-            if pivot_idx is None:
-                break  # even the sum of all remaining UBs can't beat theta
-            pivot = order[pivot_idx].doc
-            # extend the pivot group over every cursor tied at the pivot doc:
-            # they all contribute to its score, so they must be inside the
-            # skip bound (otherwise a multi-term doc gets pruned on a
-            # single term's block max)
-            while (pivot_idx + 1 < len(order)
-                   and order[pivot_idx + 1].doc == pivot):
-                pivot_idx += 1
-            leads = order[: pivot_idx + 1]
-            ub = sum(c.block_max_score_at(pivot) for c in leads)
-            if len(heap) >= k and ub <= theta:
-                fence = min(c.block_last_at(pivot) for c in leads) + 1
-                if pivot_idx + 1 < len(order):
-                    fence = min(fence, order[pivot_idx + 1].doc)
-                fence = max(fence, pivot + 1)
-                adv = max(leads, key=lambda c: c.max_score)
-                adv.next_geq(fence)
-                continue
-            if order[0].doc == pivot:
-                # full eval — accumulate in ORIGINAL term order so the float
-                # sum matches the oracle bit-for-bit
-                if not self.reader.has_tombstone(pivot):
-                    s = 0.0
-                    for c in cursors:
-                        if c.doc == pivot:
-                            s += c.score()
-                    theta = _heap_offer(heap, k, s, pivot, theta)
-                # advance EVERY cursor sitting at pivot — including ones
-                # beyond pivot_idx; leaving them would re-evaluate the doc
-                # later with a partial score and poison the heap
-                for c in order:
-                    if c.doc == pivot:
-                        c.next()
-            else:
-                adv = max((c for c in leads if c.doc < pivot),
-                          key=lambda c: c.max_score)
-                adv.next_geq(pivot)
-        return _heap_to_hits(heap)
-
-    # --------------------------------------------------- leapfrog (pure AND)
-    def _leapfrog_and(self, cursors: List[TermCursor], k: int):
-        cursors_eval = list(cursors)  # fixed order for float determinism
-        if any(c.df == 0 for c in cursors):
-            return []
-        heap: List[Tuple[float, int]] = []
-        theta = -math.inf
-        d = max(c.doc for c in cursors)
-        while d < SENTINEL:
-            aligned = True
-            for c in cursors:
-                nd = c.next_geq(d)
-                if nd != d:
-                    d = nd
-                    aligned = False
-                    break
-            if not aligned:
-                continue
-            if len(heap) >= k:
-                ub = sum(c.block_max_score_at(d) for c in cursors)
-                if ub <= theta:
-                    fence = min(c.block_last_at(d) for c in cursors) + 1
-                    d = max(fence, d + 1)
-                    continue
-            if not self.reader.has_tombstone(d):
-                s = 0.0
-                for c in cursors_eval:
-                    s += c.score()
-                theta = _heap_offer(heap, k, s, d, theta)
-            d = d + 1
-        return _heap_to_hits(heap)
-
-    # ----------------------------------------- general boolean + exhaustive
-    def _decode(self, field: str, term: str, positions: bool = False):
-        """``reader.decode_term_flat`` at most once per query and term: a
-        decode with positions also serves one without them."""
-        hit = self._decoded.get((field, term))
-        if hit is None or (positions and not hit[0]):
-            out = self.reader.decode_term_flat(field, term, positions)
-            hit = self._decoded[field, term] = (positions, out)
-        return hit[1]
-
-    def _matching(self, node) -> DocSet:
+    # ------------------------------------------- boolean match + scoring
+    def _matching(self, node, win: _Window) -> DocSet:
         """Boolean evaluation over lazy-complement DocSets. NOT never
         builds a range(n_docs) universe: negation just flips the complement
         flag, and the algebra pushes it into setdiffs. Crucially the
@@ -429,20 +386,20 @@ class IndexSearcher:
         after incremental merges and would silently drop freshly merged
         high-ordinal docs from NOT results."""
         if isinstance(node, Term):
-            docs = self._decode(node.field, node.text)[0]
+            docs = win.decode(node.field, node.text)[0]
             return DocSet(np.asarray(docs, dtype=np.int64))
         if isinstance(node, MatchAll):
             return ~DocSet.empty()   # the lazy universe
         if isinstance(node, Phrase):
-            return self._phrase_docs(node)
+            return self._phrase_docs(node, win)
         if isinstance(node, Not):
-            return ~self._matching(node.child)
+            return ~self._matching(node.child, win)
         if isinstance(node, Must):
-            return self._matching(node.child)
+            return self._matching(node.child, win)
         if isinstance(node, And):
             res: Optional[DocSet] = None
             for c in node.children:
-                s = self._matching(c)
+                s = self._matching(c, win)
                 res = s if res is None else res & s
                 if res.arr.size == 0 and not res.neg:
                     return DocSet.empty()
@@ -461,33 +418,33 @@ class IndexSearcher:
             res: Optional[DocSet] = None
             if musts:
                 for c in musts:
-                    s = self._matching(c)
+                    s = self._matching(c, win)
                     res = s if res is None else res & s
             else:
                 for c in shoulds:
-                    s = self._matching(c)
+                    s = self._matching(c, win)
                     res = s if res is None else res | s
             if res is None:
                 # pure-negative OR: everything except the negated sets
                 res = DocSet.empty()
                 res = ~res  # universe
             for c in neg:
-                res = res & ~self._matching(c.child)
+                res = res & ~self._matching(c.child, win)
             return res
         raise TypeError(f"unknown node {node!r}")
 
-    def _phrase_docs(self, p: Phrase) -> DocSet:
+    def _phrase_docs(self, p: Phrase, win: _Window) -> DocSet:
         """Positional phrase match, vectorized: each distinct term is
-        decoded once (the query's memo) to flat (doc, pos) arrays, and
+        decoded once (the window's memo) to flat (doc, pos) arrays, and
         adjacency is one searchsorted probe per term over sorted
         (doc*MAXPOS + pos) keys — no per-document python loop. Sloppy
         phrases (slop > 0) route to the window matcher."""
         if p.slop:
-            return self._phrase_docs_sloppy(p)
+            return self._phrase_docs_sloppy(p, win)
         terms = list(p.terms)
         decoded = {}
         for t in set(terms):
-            docs, _, flat, lens = self._decode(p.field, t, positions=True)
+            docs, _, flat, lens = win.decode(p.field, t, positions=True)
             if docs.size == 0:
                 return DocSet.empty()
             flat_docs = np.repeat(docs.astype(np.int64), lens)
@@ -511,7 +468,7 @@ class IndexSearcher:
                 return DocSet.empty()
         return DocSet(np.unique(keys // MAXPOS))
 
-    def _phrase_docs_sloppy(self, p: Phrase) -> DocSet:
+    def _phrase_docs_sloppy(self, p: Phrase, win: _Window) -> DocSet:
         """Sloppy phrase (`"a b"~N`): a doc matches when occurrences
         p_0..p_{n-1} exist with span width max(p_i - i) - min(p_i - i)
         <= slop (Phrase docstring; slop=0 would be exact adjacency).
@@ -522,7 +479,7 @@ class IndexSearcher:
         n = len(p.terms)
         per, cand = [], None
         for i, t in enumerate(p.terms):
-            docs, _, flat, lens = self._decode(p.field, t, positions=True)
+            docs, _, flat, lens = win.decode(p.field, t, positions=True)
             if docs.size == 0:
                 return DocSet.empty()
             fd = np.repeat(docs.astype(np.int64), lens)
@@ -551,18 +508,22 @@ class IndexSearcher:
                 out.append(doc)
         return DocSet(np.asarray(out, dtype=np.int64))
 
-    def _score_candidates(self, node, k: int):
+    def _score_candidates(self, node, k: int,
+                          win: Optional[_Window] = None):
         """Vectorized candidate scoring: per positive term, one np.searchsorted
         maps its postings onto the sorted candidate array and accumulates
         BM25 contributions (in term order, so float summation matches the
-        oracle); tie-break via lexsort on (-score, doc_ord)."""
-        cand = self._matching(node).materialize(
-            self.reader.ord_span(), self.tombstones)
+        oracle); tie-break via lexsort on (-score, doc_ord). Candidates
+        are the matches in ``win`` (None: the whole span)."""
+        if win is None:
+            win = _Window(self.reader)
+        cand = self._matching(node, win).materialize(win.hi, self.tombstones,
+                                                     win.lo)
         if cand.size == 0:
             return []
         scores = np.zeros(cand.size, dtype=np.float64)
         for t in positive_terms(node):
-            docs, tfs, _, _ = self._decode(t.field, t.text)
+            docs, tfs, _, _ = win.decode(t.field, t.text)
             if docs.size == 0:
                 continue
             docs = docs.astype(np.int64)
@@ -607,37 +568,18 @@ def _sloppy_window_exists(qs, labels, n: int, slop: int) -> bool:
     return False
 
 
-def _heap_offer(heap, k, score, doc, theta):
-    """Min-heap of (score, -doc): root is the worst hit (lowest score, and
-    among equals the LARGEST doc — earlier docs win ties)."""
-    entry = (score, -doc)
-    if len(heap) < k:
-        heapq.heappush(heap, entry)
-        return heap[0][0] if len(heap) == k else theta
-    if entry > heap[0]:
-        heapq.heapreplace(heap, entry)
-    return heap[0][0]
-
-
-def _heap_to_hits(heap) -> List[Tuple[int, float]]:
-    return [(-nd, s) for s, nd in sorted(heap, key=lambda e: (-e[0], -e[1]))]
-
-
-def _classify(node) -> str:
+def _leaf_terms(node) -> List[Tuple[str, str]]:
+    """Unique (field, term) of every Term and phrase term in ``node``,
+    negated ones included: the terms :meth:`IndexSearcher._matching`
+    decodes."""
     if isinstance(node, Term):
-        return "term"
-    if isinstance(node, Or) and all(isinstance(c, Term) for c in node.children):
-        return "or"
-    if isinstance(node, And) and all(isinstance(c, Term) for c in node.children):
-        return "and"
-    return "general"
-
-
-def node_terms(node) -> List[Term]:
-    """Unique Term children in order (duplicates score once, like the oracle)."""
-    seen, out = set(), []
-    for c in node.children:
-        if isinstance(c, Term) and c not in seen:
-            seen.add(c)
-            out.append(c)
-    return out
+        out = [(node.field, node.text)]
+    elif isinstance(node, Phrase):
+        out = [(node.field, t) for t in node.terms]
+    elif isinstance(node, (Not, Must)):
+        out = _leaf_terms(node.child)
+    elif isinstance(node, (And, Or)):
+        out = [t for c in node.children for t in _leaf_terms(c)]
+    else:  # MatchAll
+        out = []
+    return list(dict.fromkeys(out))

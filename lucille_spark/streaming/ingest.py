@@ -197,8 +197,7 @@ class StreamingIndexer(StreamingIngest):
                 # the ordinal join-back and double postings.
                 from pyspark.sql import Window
 
-                from lucille_spark.index.builder import (add_doc_identity,
-                                                         build_index)
+                from lucille_spark.index.builder import build_index
 
                 ident = add_doc_identity(corpus)
                 w = Window.partitionBy("doc_id").orderBy(
@@ -206,9 +205,10 @@ class StreamingIndexer(StreamingIngest):
                 corpus = (ident.withColumn("_rn", F.row_number().over(w))
                           .filter(F.col("_rn") == 1)
                           .drop("_rn", "doc_id", "content_sha256"))
-                build_index(corpus, index_dir, fields=fields,
-                            run_id=f"{run_id}-b{batch_id}", **merge_kwargs)
-                res = {"added": -1, "tombstoned": 0}
+                stats = build_index(corpus, index_dir, fields=fields,
+                                    run_id=f"{run_id}-b{batch_id}",
+                                    **merge_kwargs)
+                res = {"added": stats["n_docs"], "tombstoned": 0}
             else:
                 # the merge tokenizes with the analyzer the manifest
                 # records; a replayed batch_id is a no-op replay

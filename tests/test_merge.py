@@ -102,16 +102,48 @@ def test_upsert_and_delete(spark, base_corpus, tmp_path):
     assert victim[1]["doc_id"] not in s.match("content:if")
 
 
-def test_avgdl_drift_keeps_wand_exact(spark, tmp_path):
+def test_merge_reads_no_lineage_file(spark, tmp_path, monkeypatch):
+    """A merge appends its one ``_lineage`` row without reading the
+    table, which gains a file per stage of every commit."""
+    import os
+
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    from lucille_spark.corpus import corpus_df
+    from lucille_spark.index.merge import merge_index
+
+    idx = _build(spark, corpus_df(spark, 60, partitions=2),
+                 str(tmp_path / "idx"))
+    assert os.listdir(os.path.join(idx, "_lineage"))
+    lineage_reads = []
+
+    def watch(fn):
+        def read(source, *args, **kwargs):
+            if "_lineage" in str(source):
+                lineage_reads.append(source)
+            return fn(source, *args, **kwargs)
+        return read
+
+    monkeypatch.setattr(ds, "dataset", watch(ds.dataset))
+    monkeypatch.setattr(pq, "read_table", watch(pq.read_table))
+    delta = corpus_df(spark, 70, partitions=1).filter("repo like 'org1/%'")
+    merge_index(delta, idx, fields=("content",), block_size=32,
+                docs_per_salt=64)
+    assert lineage_reads == []
+
+
+def test_avgdl_drift_keeps_wand_exact(spark, tmp_path, monkeypatch):
     """Merge a batch of much LONGER docs (avgdl grows => stored block-max
     bounds would under-estimate without the bound_avgdl scaling) and check
-    WAND stays rank-identical to exhaustive scoring."""
+    that search at a window budget small enough to cut every query into
+    many skippable windows stays rank-identical to exhaustive scoring."""
     import numpy as np
     import pandas as pd
 
+    import lucille_spark.query.searcher as S
     from lucille_spark.index.builder import build_index
     from lucille_spark.index.merge import merge_index
-    from lucille_spark.query.searcher import IndexSearcher
 
     rng = np.random.default_rng(5)
     vocab = [f"w{i}" for i in range(15)]
@@ -134,10 +166,12 @@ def test_avgdl_drift_keeps_wand_exact(spark, tmp_path):
     merge_index(mk(200, 200, 400, "long"), idx, fields=("content",),
                 block_size=16, docs_per_salt=48)
 
-    s = IndexSearcher(idx)
+    monkeypatch.setattr(S, "VEC_POSTINGS_MAX", 16)
+    s = S.IndexSearcher(idx)
     for q in ["content:w0 OR content:w1", "content:w2 OR content:w5",
               "content:w0 AND content:w3",
-              "content:w1 OR content:w4 OR content:w7"]:
+              "content:w1 OR content:w4 OR content:w7",
+              "content:w7", "content:w7 AND content:w1"]:
         for k in (3, 10, 25):
             got = s.search(q, k)
             want = s.search_exhaustive(q, k)

@@ -260,3 +260,6 @@ def test_streaming_indexer_live_search(spark, tmp_path):
     assert len(s.search("content:fresh", 10)) == 1      # add visible
     m = spark.read.parquet(str(tmp_path / "metrics"))
     assert m.count() >= 2
+    rows = m.orderBy("batch_id").collect()
+    assert [r["n_added"] for r in rows] == [2, 2]
+    assert [r["n_tombstoned"] for r in rows] == [0, 2]

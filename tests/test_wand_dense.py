@@ -1,9 +1,10 @@
-"""Adversarial WAND coverage: dense vocabulary (df ~ 0.5-0.9N) makes most
-cursors tie on most docs and keeps theta tight — the regime where the
-pivot-group/skip-fence bugs live (one was caught at sf0.1 by the gate:
-a doc tied across cursors was pruned on a single term's block max).
+"""Adversarial top-k coverage: dense vocabulary (df ~ 0.5-0.9N) makes
+most terms tie on most docs and keeps the k-th score tight — the regime
+where block-max pruning bugs live (one was caught at sf0.1 by the gate:
+a doc tied across terms was pruned on a single term's block max).
 
-Randomized query sweep, WAND vs exhaustive vs pure-Python oracle.
+Randomized query sweep, windowed search vs one window vs the pure-Python
+oracle.
 """
 
 import math
@@ -76,17 +77,56 @@ def test_dense_rank_identity(dense_index, dense_oracle, k):
             assert math.isclose(gs, ws, rel_tol=1e-9), (q, k)
 
 
+# a window budget that cuts every query of the sweep into many windows
+SMALL_BUDGET = 40
+
+
 def test_strategy_identity_vectorized_vs_wand(dense_index, monkeypatch):
-    """r7: search() picks decode-and-score below VEC_POSTINGS_MAX and
-    WAND/leapfrog above it — both must return identical ranked hits
-    (same docs, bit-equal scores). Force each strategy over the same
-    query sweep."""
+    """search() scores a query in one window below VEC_POSTINGS_MAX and
+    in block-bounded windows with skipping above it — both must return
+    identical ranked hits (same docs, bit-equal scores). Force each over
+    the same query sweep."""
     import lucille_spark.query.searcher as S
 
     for q in _queries():
         for k in (1, 10, 50):
             monkeypatch.setattr(S, "VEC_POSTINGS_MAX", 1 << 62)
-            vec = S.IndexSearcher(dense_index[0]).search(q, k=k)
-            monkeypatch.setattr(S, "VEC_POSTINGS_MAX", 0)
-            wand = S.IndexSearcher(dense_index[0]).search(q, k=k)
-            assert vec == wand, (q, k)
+            one = S.IndexSearcher(dense_index[0]).search(q, k=k)
+            monkeypatch.setattr(S, "VEC_POSTINGS_MAX", SMALL_BUDGET)
+            windowed = S.IndexSearcher(dense_index[0]).search(q, k=k)
+            assert one == windowed, (q, k)
+
+
+def test_small_budget_skips_windows_undecoded(dense_index, dense_oracle,
+                                              monkeypatch):
+    """At a small budget a term query is cut into many windows, and once
+    k hits are held the windows whose block-max bound cannot beat the
+    k-th score are skipped: never decoded. The answer still equals the
+    one-window answer and the oracle's."""
+    import lucille_spark.query.searcher as S
+
+    q, k = "content:w3", 3
+    one = S.IndexSearcher(dense_index[0]).search(q, k=k)
+    monkeypatch.setattr(S, "VEC_POSTINGS_MAX", SMALL_BUDGET)
+    searcher = S.IndexSearcher(dense_index[0])
+    node = searcher._parse(q)
+    n_windows = len(list(searcher._windows(node, [("content", "w3")])))
+    decoded = []
+    flat = searcher.reader.decode_term_flat
+
+    def record(field, term, positions=True, blocks=None):
+        decoded.append(blocks)
+        return flat(field, term, positions, blocks)
+
+    monkeypatch.setattr(searcher.reader, "decode_term_flat", record)
+    got = searcher.search(q, k=k)
+    assert n_windows > 3
+    # one decode per evaluated window, each of that window's blocks only
+    assert 0 < len(decoded) < n_windows
+    n_blocks = searcher.reader.blocks("content", "w3").num_rows
+    assert all(0 < b.num_rows < n_blocks for b in decoded)
+    assert got == one
+    want = dense_oracle.search(q, k=k)
+    assert [d for d, _ in got] == [d for d, _ in want]
+    for (_, gs), (_, ws) in zip(got, want):
+        assert math.isclose(gs, ws, rel_tol=1e-9)
