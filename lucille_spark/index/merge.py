@@ -108,8 +108,12 @@ def merge_index(
         t0 = time.time()
 
         # everything old comes from the manifest: the corpus stats, the
-        # ordinal high-water mark, and exactly the files of its version
-        doc_stats = spark.read.parquet(
+        # ordinal high-water mark, and exactly the files of its version.
+        # Its tables are read with the schema the merge uses, which spares
+        # each read a schema-inference job over a file footer.
+        doc_stats = spark.read.schema(", ".join(
+            ["doc_id string", "doc_ord long"]
+            + [f"dl_{f} long" for f in fields])).parquet(
             *snapshot.paths(index_dir, base, "doc_stats"))
         max_ord = base["ord_span"] - 1
 
@@ -140,7 +144,8 @@ def merge_index(
         tomb_paths = snapshot.paths(index_dir, base, "_tombstones")
         live_stats = doc_stats
         if tomb_paths:
-            dead = spark.read.parquet(*tomb_paths).select("doc_ord").distinct()
+            dead = (spark.read.schema("doc_ord long").parquet(*tomb_paths)
+                    .distinct())
             live_stats = doc_stats.join(dead, "doc_ord", "left_anti")
         # localCheckpoint: the tombstones feed the stats job and their own
         # write below; checkpointing makes both see one materialization.
@@ -179,9 +184,12 @@ def merge_index(
         # REJECTED on measurement: the SinglePartition exchange it forces
         # under the postings plan made the 100-doc postings write 16-20 s vs
         # 3.2-3.6 s with the bucketed path.)
-        delta = assign_doc_ord(delta, "doc_id")
-        delta = delta.withColumn("doc_ord",
-                                 F.col("doc_ord") + F.lit(max_ord + 1))
+        # Persisted, as build_index persists its docs: the postings write
+        # materializes it, and the doc_stats append reads it instead of
+        # running the ordinal jobs again.
+        unordered = delta
+        delta = cache(assign_doc_ord(delta, "doc_id").withColumn(
+            "doc_ord", F.col("doc_ord") + F.lit(max_ord + 1)))
 
         # live corpus stats: subtract tombstoned dls, add delta dls
         stats, avgdl_by_field = {}, {}
@@ -220,6 +228,8 @@ def merge_index(
 
         append(postings_layout(blocks, fields, totals, docs_per_salt),
                "postings")
+        # the ordered delta is materialized now; its input is not needed
+        unordered.unpersist()
 
         # one doc_stats, tombstone and lexicon file for a small delta:
         # coalesce over the cached delta, the checkpoint and the blocks

@@ -45,18 +45,51 @@ made elsewhere (``jobs/build_index_job.py``) keeps two pools.
 The engine's frames of driver rows (query batches, suggest words,
 streaming metrics rows, stage dictionaries) go through Arrow
 (``arrow_frame``), so they start no Python task at all.
+
+Tungsten pages are small (``spark.buffer.pageSize``, ``page_size``).
+Spark's own rule sizes a page as execution memory / cores / 16, 1-64 MB:
+8 MB in perfbench's 2g, 4-core session, 64 MB at the 8g default. Every
+hash-aggregate task takes one page for its fast hash map, even over an
+empty partition, and builds and commits run many such tasks over
+driver-sized data, so those pages were mostly heap garbage that grew the
+driver's committed heap (CHANGES.md has the JFR, GC-log and ``/proc``
+figures). ``get_spark`` takes the smallest power of two, at least Spark's
+1 MB floor, at which ``TaskMemoryManager``'s 8,192-page table covers the
+whole driver heap: 1 MB up to an 8g driver, 4 MB at 24g. A task's pages
+then cannot run out before its memory does, and a record larger than a
+page still gets a page of its own size. A session made elsewhere
+(``jobs/build_index_job.py`` under spark-submit) keeps Spark's rule,
+which suits executors whose tasks hold partition-sized data.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
+
+
+def page_size(driver_memory: str) -> str:
+    """``spark.buffer.pageSize`` for a driver heap of ``driver_memory`` (a
+    Spark size such as ``8g``; a bare number is MiB): the smallest power of
+    two, at least 1 MB, whose 8,192 pages (``TaskMemoryManager``'s page
+    table) cover the heap."""
+    m = re.fullmatch(r"(\d+)([kmgt]?)b?", driver_memory.strip().lower())
+    if m is None:
+        raise ValueError(f"not a Spark memory size: {driver_memory!r}")
+    mib = int(m[1]) * 1024 ** "kmgt".index(m[2] or "m") / 1024
+    mb = 1
+    while mb * 8192 < mib:
+        mb *= 2
+    return f"{mb}m"
 
 
 def get_spark(app: str = "lucille-spark", cpus: int | None = None,
               shuffle_partitions: int | None = None, **extra) -> SparkSession:
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    driver_mem = extra.pop("spark.driver.memory",
+                           os.environ.get("SPARK_DRIVER_MEM", "8g"))
     shuffle = shuffle_partitions or max(cpus, 8)
     b = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -71,13 +104,16 @@ def get_spark(app: str = "lucille-spark", cpus: int | None = None,
         # RDD-path Python gets the variable SQL Python adds: one daemon
         .config("spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK", "1")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", driver_mem)
         # batch-throughput GC beats G1 for shuffle-heavy single-JVM runs
         .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
         # higher-ratio shuffle compression = fewer bytes through the
         # memory-bandwidth-capped path (BENCH.md) — ~12% on the build
         .config("spark.io.compression.codec", "zstd")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "100000")
+        # a hash aggregate over a handful of rows takes one small page,
+        # not execution memory / cores / 16 (docstring)
+        .config("spark.buffer.pageSize", page_size(driver_mem))
     )
     for k, v in extra.items():
         b = b.config(k, v)

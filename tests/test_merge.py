@@ -256,3 +256,40 @@ def test_compact_keeps_the_analyzer(spark, tmp_path):
         d for d, _ in IndexSearcher(cdir).search("content:user", 20)) == before
     with pytest.raises(ValueError, match="analyzer"):
         compact(idx, corpus, str(tmp_path / "compact2"), analyzer="standard")
+
+
+def test_a_commit_runs_at_most_9_spark_jobs(spark, tmp_path):
+    """A perfbench-sized commit: a 200-doc build, then 45 new docs, 12
+    upserts and 3 deletes. The merge reads the manifest's tables with
+    their schema (no schema-inference job) and persists its ordered delta
+    (no second run of the ordinal jobs for the doc_stats append): without
+    both this commit ran 12 jobs."""
+    import hashlib
+
+    import numpy as np
+    import pandas as pd
+
+    from lucille_spark.corpus import corpus_pdf
+    from lucille_spark.index.builder import build_index
+    from lucille_spark.index.merge import merge_index
+
+    idx = str(tmp_path / "idx")
+    base = corpus_pdf(np.arange(200))
+    build_index(spark.createDataFrame(base), idx)
+    up = base.iloc[:12].copy()
+    up["content"] = corpus_pdf(np.arange(1045, 1057))["content"].to_numpy()
+    rows = spark.createDataFrame(pd.concat(
+        [corpus_pdf(np.arange(1000, 1045)), up], ignore_index=True))
+    gone = [hashlib.sha256(f"{r.repo}\x00{r.path}\x00{r.commit}".encode())
+            .hexdigest() for r in base.iloc[12:15].itertuples()]
+    deletes = spark.createDataFrame([(d,) for d in gone], "doc_id string")
+
+    sc = spark.sparkContext
+    sc.setJobGroup("commit-jobs", "commit-jobs")
+    try:
+        res = merge_index(rows, idx, deletes=deletes)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert (res["added"], res["tombstoned"]) == (57, 15)
+    jobs = sc.statusTracker().getJobIdsForGroup("commit-jobs")
+    assert len(jobs) <= 9, len(jobs)
