@@ -37,7 +37,7 @@ it is opt-in and kept out of oracle-parity tests.
 from __future__ import annotations
 
 import re
-from typing import List
+from typing import Callable, List
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -86,6 +86,15 @@ def tokenize_code_col(col: Column) -> Column:
         raw, lambda t: F.when(F.size(parts(t)) > 1, parts(t))
         .otherwise(F.array().cast("array<string>"))))
     return F.concat(tokenize_col(col), subs)
+
+
+def tokenizer(name: str) -> Callable[[Column], Column]:
+    """The Spark tokenizer of analyzer ``name``: ``standard`` or ``code``.
+    Any other name raises ValueError, so no index records an analyzer it
+    was not built with."""
+    if name not in ("standard", "code"):
+        raise ValueError(f"unknown analyzer {name!r}: standard or code")
+    return tokenize_code_col if name == "code" else tokenize_col
 
 
 def code_subtokens_py(token: str) -> List[str]:

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from lucille_spark import BM25_B, BM25_K1
 from lucille_spark.analysis import duckdb_tokens_sql, tokenize_col
+from lucille_spark.index import snapshot
 from lucille_spark.query.executor_df import bm25_query_df, phrase_pred
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -319,8 +320,11 @@ ORDER BY raw_score DESC, doc_id LIMIT 10
 
 
 def _gate_index_dir(sf_dir: str) -> str:
+    """The gate's cached index of ``sf_dir``, one per index format, so a
+    cache of another format is never resumed."""
     tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:10]
-    return os.path.join(tempfile.gettempdir(), f"lucille_gate_idx_v6_{tag}")
+    return os.path.join(tempfile.gettempdir(),
+                        f"lucille_gate_idx_f{snapshot.FORMAT}_{tag}")
 
 
 def _ensure_gate_index(spark, sf_dir: str) -> str:

@@ -22,12 +22,12 @@ Dataflow (all DataFrame; Python appears only in Arrow-vectorized UDFs):
        in one vectorized pass (lexsort, per-doc tf/positions runs) and
        carries the batch's last group into the next batch, emitting
        128-doc blocks: delta+varbyte doc gaps, varbyte tfs, optional
-       varbyte position gaps, block_max_tf/tfnorm
+       varbyte position gaps, block_max_tfnorm
     -> postings write (postings_layout): as the encode left it when every
        field is one partition, else repartitionByRange(field, term)
        + sortWithinPartitions                            [small indexes:
                                                           no exchange]
-    -> lexicon = lexicon_rows(blocks): groupBy(field,term)  [tiny shuffle]
+    -> lexicon = lexicon_rows(blocks): df per (field,term)  [tiny shuffle]
 
 Output tables (parquet dir layout), every one written by
 :func:`write_index_table`: zstd pages, no statistics on the opaque postings
@@ -38,10 +38,9 @@ column:
                  tokens, else range-partitioned on (field, term) into
                  max(defaultParallelism, 8) files; merges append files
                  by the same rule (:func:`postings_layout`)
-  lexicon/       (field,term,df,cf,n_blocks,max_tfnorm,bound_avgdl),
-                 sorted by (field, term) within each file, in as
-                 many files as the postings at most; a merge appends
-                 its delta's rows (:func:`lexicon_rows`)
+  lexicon/       (field,term,df), sorted by (field, term) within each
+                 file, in as many files as the postings at most; a
+                 merge appends its delta's rows (:func:`lexicon_rows`)
   doc_stats/     (doc_id,doc_ord,dl_<field>...,repo,path,commit,lang,content_sha256)
                  the ONE home of a doc's length per field
   _meta/         one JSON manifest per version (:mod:`snapshot`): the
@@ -61,6 +60,9 @@ That is the trade-off of Lucene's norms: per-posting lengths cost one
 value per (term, doc), about 48 KB of the 231 KB postings of the 200-doc
 perfbench corpus, while the array costs one per doc and fits any index a
 single driver can search (10^8 ordinals are 400 MB per field).
+
+Each stored column has a reader (format 4): the lexicon holds only df,
+and a block only what the decoder and the block-max windows read.
 """
 
 from __future__ import annotations
@@ -81,15 +83,14 @@ from pyspark.sql import functions as F
 
 from lucille_spark import BLOCK_SIZE, BM25_B, BM25_K1
 from lucille_spark.analysis import tokenize_col
-from lucille_spark.analysis.analyzers import tokenize_code_col
+from lucille_spark.analysis.analyzers import tokenizer
 from lucille_spark.index import codecs, snapshot
 from lucille_spark.index.ordinals import assign_doc_ord
 
 POSTINGS_SCHEMA = (
     "field string, term string, salt int, block_seq int, first_doc long, "
-    "last_doc long, n_docs int, sum_tf long, doc_gaps binary, tfs binary, "
-    "positions binary, block_max_tf int, block_max_tfnorm double, "
-    "bound_avgdl double"
+    "last_doc long, n_docs int, doc_gaps binary, tfs binary, "
+    "positions binary, block_max_tfnorm double, bound_avgdl double"
 )
 
 
@@ -180,7 +181,7 @@ def _postings_encoder(avgdl: float, block_size: int,
     column, sliced per block (codecs.vbyte is per-value independent, so
     segment slicing equals per-block encoding), give the 128-doc blocks:
     delta+varbyte doc gaps, varbyte tfs, optional varbyte position gaps,
-    block_max_tf/tfnorm. ``dl`` enters only the tfnorm bounds: the reader
+    block_max_tfnorm. ``dl`` enters only the tfnorm bounds: the reader
     takes a posting's dl from doc_stats. No Python call per group."""
     k1, b = BM25_K1, BM25_B
 
@@ -265,10 +266,7 @@ def _postings_encoder(avgdl: float, block_size: int,
              pa.array(d_r[blk_ends - 1], type=pa.int64()),
              pa.array((blk_ends - blk_starts).astype(np.int32),
                       type=pa.int32()),
-             pa.array(np.add.reduceat(tf_r, blk_starts), type=pa.int64()),
              doc_gaps_arr, tfs_arr, pos_arr,
-             pa.array(np.maximum.reduceat(tf_r, blk_starts)
-                      .astype(np.int32), type=pa.int32()),
              pa.array(np.maximum.reduceat(tfnorm, blk_starts),
                       type=pa.float64()),
              # avgdl used for this block's score bound; if the corpus
@@ -277,9 +275,8 @@ def _postings_encoder(avgdl: float, block_size: int,
              # (provably safe — see searcher.IndexSearcher._windows)
              pa.array(np.full(n_blocks, avgdl), type=pa.float64())],
             names=["field", "term", "salt", "block_seq", "first_doc",
-                   "last_doc", "n_docs", "sum_tf", "doc_gaps", "tfs",
-                   "positions", "block_max_tf", "block_max_tfnorm",
-                   "bound_avgdl"])
+                   "last_doc", "n_docs", "doc_gaps", "tfs", "positions",
+                   "block_max_tfnorm", "bound_avgdl"])
 
     def kernel(batches):
         carry = []
@@ -436,25 +433,20 @@ def postings_layout(blocks: DataFrame, fields: Sequence[str],
 
 
 def lexicon_rows(blocks: DataFrame, one_file: bool) -> DataFrame:
-    """The lexicon rows of ``blocks``, one per (field, term), for build and
-    merge alike. Each column folds across blocks, so ``IndexReader`` folds
-    a term's rows from several commits the same way. The files follow the
+    """The lexicon rows of ``blocks``, one (field, term, df) per term, for
+    build and merge alike. ``IndexReader`` sums a term's df over the rows
+    of several commits as this sums it over blocks. The files follow the
     postings rule (:func:`postings_layout`): ONE file when ``one_file``
     (:func:`one_partition`), else at most ``max(defaultParallelism, 8)``,
     not one per shuffle partition. Both coalesces are narrow: no job
     added."""
     lexicon = (blocks.groupBy("field", "term")
-               .agg(F.sum("n_docs").cast("long").alias("df"),
-                    F.sum("sum_tf").cast("long").alias("cf"),
-                    F.count("*").cast("int").alias("n_blocks"),
-                    F.max("block_max_tfnorm").alias("max_tfnorm"),
-                    F.min("bound_avgdl").alias("bound_avgdl"))
+               .agg(F.sum("n_docs").cast("long").alias("df"))
                .coalesce(1 if one_file else max(
                    blocks.sparkSession.sparkContext.defaultParallelism, 8)))
     # no reader needs the order (IndexReader sorts at open); it stays as
-    # zstd packs sorted terms smaller: the seed-1 perfbench lexicon is
-    # 22,077 bytes sorted, 29,680 in hash order, and 22,191 unsorted only
-    # because the aggregate keeps its term-sorted input's order. No job.
+    # zstd packs sorted terms smaller: the format-3 seed-1 perfbench
+    # lexicon was 22,077 bytes sorted, 29,680 in hash order. No job.
     return lexicon.sortWithinPartitions("field", "term")
 
 
@@ -522,9 +514,11 @@ def build_index(
     ``analyzer``: "standard" (Lucene StandardAnalyzer contract — the
     oracle-parity default) or "code" (adds camelCase/snake_case sub-tokens
     for identifier search over source corpora; query terms are analyzed
-    with the standard analyzer and match sub-tokens directly).
+    with the standard analyzer and match sub-tokens directly). Any other
+    name raises ValueError.
     """
     spark = corpus.sparkSession
+    tok_fn = tokenizer(analyzer)
     ledger = _Ledger(out_dir, run_id)
     if resume and ledger.done("lexicon"):  # recorded once published
         stats = snapshot.load(out_dir)["stats"]
@@ -548,7 +542,6 @@ def build_index(
         # the ordinal bucket-count pass; docs (with doc_ord attached)
         # materializes on the doc_stats write, so the ordinal window shuffle
         # runs exactly once.
-        tok_fn = tokenize_code_col if analyzer == "code" else tokenize_col
         ident = cache(add_doc_identity(corpus))
         docs = assign_doc_ord(ident, "doc_id")
         for f_name in fields:

@@ -37,18 +37,31 @@ import time
 import uuid
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from lucille_spark import BLOCK_SIZE
-from lucille_spark.analysis import tokenize_col
-from lucille_spark.analysis.analyzers import tokenize_code_col
+from lucille_spark.analysis.analyzers import tokenizer
 from lucille_spark.index import snapshot
 from lucille_spark.index.builder import (
     _job_scope, _Ledger, add_doc_identity, doc_stats_columns, lexicon_rows,
     one_partition, postings_blocks, postings_layout, write_index_table,
 )
 from lucille_spark.index.ordinals import assign_doc_ord
+
+
+def last_writes(docs: DataFrame,
+                order_col: Optional[str] = None) -> DataFrame:
+    """One row per doc_id of ``docs`` (which carry ``add_doc_identity``'s
+    columns), the last write: the highest ``order_col`` when given (a
+    source offset or sequence; nulls lose), else the highest
+    content_sha256, a deterministic tiebreak. Repeated ids would
+    multiply rows through the ordinal join-back and double postings."""
+    w = Window.partitionBy("doc_id").orderBy(
+        F.col(order_col).desc_nulls_last() if order_col
+        else F.col("content_sha256").desc())
+    return (docs.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1).drop("_rn"))
 
 
 def merge_index(
@@ -65,10 +78,9 @@ def merge_index(
     """Upsert ``new_corpus`` rows (and apply ``deletes``) into the index.
 
     Duplicate doc_ids WITHIN the batch collapse to one row before ordinal
-    assignment (otherwise the ordinal join-back would multiply rows and
-    double postings): last write wins by ``order_col`` when given (a source
-    offset/sequence column — Indexer.java sendToIndex order), else by a
-    deterministic content_sha256 tiebreak.
+    assignment (:func:`last_writes`): last write wins by ``order_col`` when
+    given (a source offset/sequence column — Indexer.java sendToIndex
+    order), else by a deterministic content_sha256 tiebreak.
 
     ``fields`` None means the manifest's fields; other fields raise
     ValueError, since the manifest's corpus stats would lose a field.
@@ -102,8 +114,7 @@ def merge_index(
         return {"added": base["added"], "tombstoned": base["tombstoned"],
                 "avgdl": {f: old_stats[f]["avgdl"] for f in fields}}
     run_id = run_id or f"merge-{uuid.uuid4().hex[:12]}"
-    tok_fn = (tokenize_code_col if base["analyzer"] == "code"
-              else tokenize_col)
+    tok_fn = tokenizer(base["analyzer"])
     with _job_scope(spark) as cache:
         t0 = time.time()
 
@@ -119,12 +130,7 @@ def merge_index(
 
         # delta rows (ordinals attached AFTER the stats job below, so the
         # batch size can pick the cheap ordinal path)
-        delta = add_doc_identity(new_corpus)
-        order_expr = (F.col(order_col).desc_nulls_last() if order_col
-                      else F.col("content_sha256").desc())
-        w = Window.partitionBy("doc_id").orderBy(order_expr)
-        delta = (delta.withColumn("_rn", F.row_number().over(w))
-                 .filter(F.col("_rn") == 1).drop("_rn"))
+        delta = last_writes(add_doc_identity(new_corpus), order_col)
         for f_name in fields:
             delta = delta.withColumn(
                 f"dl_{f_name}",

@@ -10,8 +10,7 @@ its first hex digits (content-derived → partition-independent), count docs
 per bucket, cumsum the counts into bucket base offsets (tiny driver-side
 array), then ``doc_ord = base[bucket] + rank_within_bucket(order by doc_id)``.
 Buckets are uniformly sized by construction, so the per-bucket sort windows
-are balanced; at 10^12 docs raise ``bucket_hex_digits`` so each bucket stays
-executor-sized (5 hex digits → ~1M buckets → ~1M docs/bucket).
+are balanced.
 """
 
 from __future__ import annotations
@@ -20,21 +19,25 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def assign_doc_ord(df: DataFrame, id_col: str = "doc_id",
-                   bucket_hex_digits: int = 3,
-                   broadcast_ords: bool = True) -> DataFrame:
+# Scale note: 3 hex digits give 4,096 buckets; at 10^12 docs 5 digits
+# (~1M buckets of ~1M docs) keep each bucket executor-sized, and the
+# (doc_id, doc_ord) map outgrows a broadcast: drop the F.broadcast below
+# and Catalyst picks a shuffle join, still id-sized data plus one pass of
+# the wide rows.
+BUCKET_HEX_DIGITS = 3
+
+
+def assign_doc_ord(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Add a dense ``doc_ord`` long column, ordered by (bucket, doc_id).
 
     The rank window runs on a NARROW (doc_id-only) projection — Catalyst
     prunes the scan — so the corpus's wide rows are never shuffled for
     ordinal assignment. The (doc_id, doc_ord) map is then attached with a
     broadcast join (ids are ~70B/row; fine into the tens of millions of
-    docs). At 10^12 docs flip ``broadcast_ords=False``: both sides hash on
-    doc_id and Catalyst picks a shuffle join — still only id-sized data
-    plus one pass of the wide rows. Raises ValueError when an id repeats.
+    docs). Raises ValueError when an id repeats.
     """
     spark = df.sparkSession
-    bucket = F.conv(F.substring(F.col(id_col), 1, bucket_hex_digits), 16, 10
+    bucket = F.conv(F.substring(F.col(id_col), 1, BUCKET_HEX_DIGITS), 16, 10
                     ).cast("long")
     narrow = df.select(F.col(id_col)).withColumn("_bucket", bucket)
     # a repeated id would get an ordinal per row and multiply in the join
@@ -57,6 +60,4 @@ def assign_doc_ord(df: DataFrame, id_col: str = "doc_id",
                                 ).cast("long"))
         .select(id_col, "doc_ord")
     )
-    if broadcast_ords:
-        ords = F.broadcast(ords)
-    return df.join(ords, id_col)
+    return df.join(F.broadcast(ords), id_col)

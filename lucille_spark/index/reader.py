@@ -4,8 +4,8 @@ Opens one index version, the latest manifest (``snapshot.load``), reads
 each row group of the files it lists at most once, and answers every
 lookup with a binary search and a slice — no scan predicate, no Spark
 job — as Lucene's terms dictionary points into the postings (SURVEY.md
-§2.9). The lexicon is read whole at open, a term's rows from several
-commits folded into one as Lucene's ``termStatistics`` sums a term over
+§2.9). The lexicon is read whole at open, a term's df summed over the
+commits that wrote it as Lucene's ``termStatistics`` sums a term over
 segments, and sorted by (field, term). A postings row group is read when
 a lookup first needs it, picked by its footer min/max on field and term;
 every postings file is sorted by (field, term)
@@ -34,10 +34,6 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 from lucille_spark.index import codecs, snapshot
-
-# how a term's lexicon rows fold: as builder.lexicon_rows folds blocks
-_FOLD = {"df": "sum", "cf": "sum", "n_blocks": "sum", "max_tfnorm": "max",
-         "bound_avgdl": "min"}
 
 
 class _SortedRows:
@@ -79,15 +75,12 @@ class IndexReader:
         self.stats = m["stats"]
         # one threaded read of every file (no partition columns from the
         # path): a merge adds lexicon files, and a read per file is 3x
-        # slower at 21 files
-        rows = pq.read_table(self._files("lexicon"), partitioning=None)
-        folded = rows.group_by(["field", "term"]).aggregate(
-            list(_FOLD.items()))
-        lexicon = pa.table(
-            [folded[f"{c}_{_FOLD[c]}" if c in _FOLD else c]
-             for c in rows.column_names], names=rows.column_names
-        ).cast(rows.schema)
-        self._lexicon = _SortedRows(lexicon.sort_by(
+        # slower at 21 files. A term's df sums its commits' rows.
+        folded = pq.read_table(self._files("lexicon"), partitioning=None) \
+            .group_by(["field", "term"]).aggregate([("df", "sum")])
+        self._lexicon = _SortedRows(pa.table(
+            [folded["field"], folded["term"], folded["df_sum"]],
+            names=["field", "term", "df"]).sort_by(
             [("field", "ascending"), ("term", "ascending")]))
         self._row_groups: Dict = {}
         self._doc_columns: Dict = {}

@@ -18,8 +18,9 @@ lists, so they see one whole version.
 
 Every table is append-only: a merge's manifest lists the old files plus
 the new ones, and a merge deletes no data file. It adds the lexicon rows
-of its own delta blocks; ``IndexReader`` folds the rows of one (field,
-term) at open, as Lucene sums a term's statistics across segments.
+of its own delta blocks; ``IndexReader`` sums the df of one (field,
+term) over its rows at open, as Lucene sums a term's statistics across
+segments.
 Publishing version ``v`` deletes only the manifests older than ``v - 1``.
 A reader therefore keeps its version through any number of merges,
 whether it has opened yet or not (a build over an existing index
@@ -44,7 +45,9 @@ TABLES = ("postings", "lexicon", "doc_stats", "_tombstones")
 # 2: postings carry no per-posting doc length (doc_stats holds it) and the
 # positions stream no per-doc tf prefix (the tfs column holds it)
 # 3: a merge appends lexicon rows, so a term may have one row per commit
-FORMAT = 3
+# 4: the lexicon is (field, term, df) and postings lack sum_tf and
+# block_max_tf: no column that no reader reads
+FORMAT = 4
 META = "_meta"
 _MANIFEST = re.compile(r"^(\d+)\.json$")
 

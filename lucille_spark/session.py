@@ -12,17 +12,13 @@ Case mapping takes the JVM path (``spark.sql.icu.caseMappings.enabled``
 false). With it on, Spark 4.1's first ``lower()`` or ``upper()`` in a JVM
 runs the class initializer of ``CollationAwareUTF8String``, which calls
 ICU ``UCharacter.toTitleCase`` on all 1,114,112 code points to fill one
-lookup table. The analyzer's ``lower()`` (``analysis/analyzers.py``) is
-the first in every build. On a 4-core host, a JFR allocation profile of a
-cold perfbench search_mix seed-1 run sampled 4,682 MB allocated in the
-JVM, 3,216 MB of it inside that initializer; with the flag off it sampled
-1,437 MB, none of it there. The doc_stats write's first stage, where
-``lower()`` first runs, took 2.33-2.36 s with the table and 0.90-1.22 s
-without: one task fills the table while the others wait on its
-class-init lock. The tokens do not change: ASCII text takes
-``toLowerCaseAscii`` on both paths, and the non-ASCII fixtures of
-``tests/test_case_mapping.py`` lower alike. Builds and merges on a
-session made elsewhere get the same setting from ``builder._job_scope``.
+lookup table (CHANGES.md has the allocation and timing figures), while
+the other tasks of that stage wait on its class-init lock. The
+analyzer's ``lower()`` (``analysis/analyzers.py``) is the first in every
+build. The tokens do not change: ASCII text takes ``toLowerCaseAscii`` on
+both paths, and the non-ASCII fixtures of ``tests/test_case_mapping.py``
+lower alike. Builds and merges on a session made elsewhere get the same
+setting from ``builder._job_scope``.
 
 One Python worker pool serves the session. Spark keys its Python
 daemons on the function's environment: SQL Python functions
@@ -30,18 +26,14 @@ daemons on the function's environment: SQL Python functions
 ``spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled``, on by
 default), while RDD-path functions carry only ``sc.environment``.
 ``createDataFrame`` from a Python list runs on the RDD path, so a session
-that ran both kinds kept two ``pyspark.daemon`` processes, whose
-``/proc/<pid>/environ`` differed in that variable alone, apart from the
-secret each daemon factory sets for itself. Setting it as an executor
-environment variable puts it in ``sc.environment``: both keys match, one
-daemon forks the workers of both kinds, and RDD-path errors show the
-same shortened traceback as SQL Python errors. On a 4-core host, at the
-peak of a perfbench live_ingest seed-1 run, the second pool was a daemon
-of 62 MB plus 4 idle workers of 59 MB each (298 MB). With this setting
-and ``merge_index``'s one-partition deletes, the run's tree went from
-1,782 MB (JVM 1,000, driver 270, two pools) to 1,512 MB (JVM 1,037,
-driver 270, one daemon of 62 MB with one worker of 143 MB). A session
-made elsewhere (``jobs/build_index_job.py``) keeps two pools.
+that ran both kinds kept two ``pyspark.daemon`` processes, each with its
+own workers. Setting the variable as an executor environment variable
+puts it in ``sc.environment``: both keys match, one daemon forks the
+workers of both kinds, and RDD-path errors show the same shortened
+traceback as SQL Python errors. This holds while the two environments
+differ in that variable alone, apart from the secret each daemon factory
+sets for itself (CHANGES.md has the ``/proc`` figures). A session made
+elsewhere (``jobs/build_index_job.py``) keeps two pools.
 The engine's frames of driver rows (query batches, suggest words,
 streaming metrics rows, stage dictionaries) go through Arrow
 (``arrow_frame``), so they start no Python task at all.

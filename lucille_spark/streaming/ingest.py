@@ -175,8 +175,9 @@ class StreamingIndexer(StreamingIngest):
         merge_kwargs = self.merge_kwargs
 
         def process(batch_df: DataFrame, batch_id: int):
-            from lucille_spark.index.builder import add_doc_identity
-            from lucille_spark.index.merge import merge_index
+            from lucille_spark.index.builder import (add_doc_identity,
+                                                     build_index)
+            from lucille_spark.index.merge import last_writes, merge_index
 
             t0 = time.time()
             out = pipeline.finish(batch_df)
@@ -191,23 +192,14 @@ class StreamingIndexer(StreamingIngest):
                 out = out.filter(~is_del)
             corpus = out.select(*cols)
             if snapshot.latest(index_dir) is None:
-                # bootstrap: the first microbatch creates the index.
-                # Dedup per doc_id first (merge_index does this itself for
-                # later batches): duplicate ids would multiply rows through
-                # the ordinal join-back and double postings.
-                from pyspark.sql import Window
-
-                from lucille_spark.index.builder import build_index
-
-                ident = add_doc_identity(corpus)
-                w = Window.partitionBy("doc_id").orderBy(
-                    F.col("content_sha256").desc())
-                corpus = (ident.withColumn("_rn", F.row_number().over(w))
-                          .filter(F.col("_rn") == 1)
-                          .drop("_rn", "doc_id", "content_sha256"))
+                # bootstrap: the first microbatch creates the index, its
+                # repeated ids resolved by merge_index's last-write rule
+                kw = dict(merge_kwargs)
+                corpus = last_writes(add_doc_identity(corpus),
+                                     kw.pop("order_col", None)) \
+                    .drop("doc_id", "content_sha256")
                 stats = build_index(corpus, index_dir, fields=fields,
-                                    run_id=f"{run_id}-b{batch_id}",
-                                    **merge_kwargs)
+                                    run_id=f"{run_id}-b{batch_id}", **kw)
                 res = {"added": stats["n_docs"], "tombstoned": 0}
             else:
                 # the merge tokenizes with the analyzer the manifest

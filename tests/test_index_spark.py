@@ -88,6 +88,21 @@ def test_build_refuses_repeated_doc_ids(spark, tmp_path):
     assert snapshot.latest(out) is None
 
 
+def test_build_refuses_an_unknown_analyzer(spark, tmp_path):
+    """An analyzer name other than standard or code raises before
+    anything is written, instead of indexing with the standard analyzer
+    and recording the unknown name."""
+    from lucille_spark.corpus import corpus_pdf
+    from lucille_spark.index import snapshot
+    from lucille_spark.index.builder import build_index
+
+    out = str(tmp_path / "idx")
+    with pytest.raises(ValueError, match="unknown analyzer 'Code'"):
+        build_index(spark.createDataFrame(corpus_pdf(list(range(5)))), out,
+                    analyzer="Code")
+    assert snapshot.latest(out) is None
+
+
 def test_corpus_stats_match_oracle(index_dir, oracle):
     from lucille_spark.index import snapshot
 
@@ -97,31 +112,43 @@ def test_corpus_stats_match_oracle(index_dir, oracle):
                         rel_tol=1e-12)
 
 
+def _oracle_cf(oracle, field):
+    return {t: sum(len(v) for v in p.values())
+            for t, p in oracle.postings[field].items()}
+
+
 def test_lexicon_matches_oracle(spark, index_dir, oracle):
+    from lucille_spark.index.reader import IndexReader
+
     lex = spark.read.parquet(f"{index_dir}/lexicon")
+    assert lex.columns == ["field", "term", "df"]
     rows = lex.filter("field = 'content'").collect()
     lex_df = {r["term"]: r["df"] for r in rows}
     oracle_df = {t: len(p) for t, p in oracle.postings["content"].items()}
     assert lex_df == oracle_df
-    lex_cf = {r["term"]: r["cf"] for r in rows}
-    oracle_cf = {t: sum(len(v) for v in p.values())
-                 for t, p in oracle.postings["content"].items()}
-    assert lex_cf == oracle_cf
+    # cf is stored nowhere: it is the sum of a term's decoded tfs
+    rd = IndexReader(index_dir)
+    cf = {t: int(rd.decode_term_flat("content", t, positions=False)[1].sum())
+          for t in lex_df}
+    assert cf == _oracle_cf(oracle, "content")
 
 
-def test_salting_engaged(spark, index_dir):
+def test_salting_engaged(spark, index_dir, oracle):
     # hot terms (cf > docs_per_salt=64) must be split across >1 salt
     from pyspark.sql import functions as F
 
     post = spark.read.parquet(f"{index_dir}/postings")
-    salted = (post.groupBy("field", "term")
-              .agg(F.countDistinct("salt").alias("n_salts"),
-                   F.sum("sum_tf").alias("cf")))
-    hot = salted.filter("cf > 130").collect()
+    assert not {"sum_tf", "block_max_tf"} & set(post.columns)
+    n_salts = {(r["field"], r["term"]): r["n_salts"] for r in
+               post.groupBy("field", "term")
+               .agg(F.countDistinct("salt").alias("n_salts")).collect()}
+    cf = {(f, t): c for f in oracle.postings
+          for t, c in _oracle_cf(oracle, f).items()}
+    assert set(n_salts) == set(cf)
+    hot = [k for k, c in cf.items() if c > 130]
     assert hot, "corpus should have hot terms"
-    assert all(r["n_salts"] > 1 for r in hot)
-    cold = salted.filter("cf <= 64").collect()
-    assert all(r["n_salts"] == 1 for r in cold)
+    assert all(n_salts[k] > 1 for k in hot)
+    assert all(n_salts[k] == 1 for k, c in cf.items() if c <= 64)
 
 
 @pytest.mark.parametrize("query", QUERIES)

@@ -161,7 +161,7 @@ def test_postings_layout_routes(spark):
     from lucille_spark.index.builder import POSTINGS_SCHEMA, postings_layout
 
     blocks = spark.createDataFrame(
-        [("content", t, 0, 0, 0, 0, 1, 1, b"", b"", None, 1, 0.5, 1.0)
+        [("content", t, 0, 0, 0, 0, 1, b"", b"", None, 0.5, 1.0)
          for t in ("a", "b")], POSTINGS_SCHEMA)
 
     def plan(totals, docs_per_salt):

@@ -61,7 +61,7 @@ def test_kernel_blocks_decode_to_truth():
     truth = _truth(df)
     assert set(zip(got["term"], got["salt"])) == set(truth)
     assert (got["field"] == "content").all()
-    assert "dls" not in got.columns
+    assert not {"dls", "sum_tf", "block_max_tf"} & set(got.columns)
     for key, blocks in got.groupby(["term", "salt"]):
         blocks = blocks.sort_values("block_seq")
         assert list(blocks["block_seq"]) == list(range(len(blocks)))
@@ -74,7 +74,6 @@ def test_kernel_blocks_decode_to_truth():
             flat, _ = codecs.decode_positions_flat(r.positions, btfs)
             assert bdocs.size == r.n_docs <= BLOCK
             assert (r.first_doc, r.last_doc) == (bdocs[0], bdocs[-1])
-            assert r.sum_tf == btfs.sum() and r.block_max_tf == btfs.max()
             bdls = np.array([dl_of[d] for d in bdocs], dtype=np.int64)
             tfnorm = btfs / (btfs + BM25_K1 * (1 - BM25_B + BM25_B * bdls
                                                / 10.0))

@@ -54,7 +54,10 @@ def test_merge_skips_hot_pass_keeps_results(spark, tmp_path):
     def lexicon(idx):  # the merged version's terms, as a reader folds them
         rd = IndexReader(idx)
         terms = rd.terms_with_prefix("content", "", limit=1 << 30)
-        return pd.DataFrame([rd.term_info("content", t) for t in terms])
+        # cf: the sum of the term's decoded tfs (the lexicon stores df)
+        return pd.DataFrame([{**rd.term_info("content", t), "cf": int(
+            rd.decode_term_flat("content", t, positions=False)[1].sum())}
+            for t in terms])
 
     la, lb = lexicon(a), lexicon(b)
     # identical term statistics; block counts may differ only via salting

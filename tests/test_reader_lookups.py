@@ -59,22 +59,13 @@ def _read(idx, table):
 
 @pytest.fixture(scope="module")
 def lexicon(index):
-    """Each (field, term)'s lexicon row, folded from its postings rows."""
+    """Each (field, term)'s lexicon row, its df folded from its postings
+    rows."""
     by_field = defaultdict(dict)
     for r in _read(index, "postings").to_pylist():
-        row = by_field[r["field"]].get(r["term"])
-        if row is None:
-            by_field[r["field"]][r["term"]] = {
-                "field": r["field"], "term": r["term"], "df": r["n_docs"],
-                "cf": r["sum_tf"], "n_blocks": 1,
-                "max_tfnorm": r["block_max_tfnorm"],
-                "bound_avgdl": r["bound_avgdl"]}
-        else:
-            row["df"] += r["n_docs"]
-            row["cf"] += r["sum_tf"]
-            row["n_blocks"] += 1
-            row["max_tfnorm"] = max(row["max_tfnorm"], r["block_max_tfnorm"])
-            row["bound_avgdl"] = min(row["bound_avgdl"], r["bound_avgdl"])
+        row = by_field[r["field"]].setdefault(r["term"], {
+            "field": r["field"], "term": r["term"], "df": 0})
+        row["df"] += r["n_docs"]
     return by_field
 
 

@@ -253,7 +253,7 @@ def test_index_of_an_older_format_must_be_rebuilt(spark, base, tmp_path):
         os.path.join(idx, "_meta")))[-1])
     with open(path) as f:
         manifest = json.load(f)
-    assert manifest.pop("format") == snapshot.FORMAT == 3
+    assert manifest.pop("format") == snapshot.FORMAT == 4
     with open(path, "w") as f:
         json.dump(manifest, f)
     with pytest.raises(FileNotFoundError, match="rebuilt"):
@@ -262,6 +262,24 @@ def test_index_of_an_older_format_must_be_rebuilt(spark, base, tmp_path):
         merge_index(spark.createDataFrame(corpus_pdf(np.arange(
             N_BASE, N_BASE + 5))), idx, **KW)
     assert snapshot.latest(idx) == manifest  # the merge published nothing
+
+
+def test_a_format_3_index_must_be_rebuilt(base, tmp_path):
+    """A format-3 manifest (its lexicon rows carried cf, n_blocks,
+    max_tfnorm and bound_avgdl) is refused with the rebuild message."""
+    from lucille_spark.index.reader import IndexReader
+
+    idx = _copy(base, tmp_path)
+    path = os.path.join(idx, "_meta", sorted(os.listdir(
+        os.path.join(idx, "_meta")))[-1])
+    with open(path) as f:
+        manifest = json.load(f)
+    with open(path, "w") as f:
+        json.dump({**manifest, "format": 3}, f)
+    for open_ in (snapshot.load, IndexReader):
+        with pytest.raises(FileNotFoundError,
+                           match="no format-4 index manifest.*rebuilt"):
+            open_(idx)
 
 
 def test_publish_is_no_replace_and_keeps_one_previous_version(tmp_path):
@@ -339,3 +357,58 @@ def test_streaming_indexer_code_analyzer_every_batch(spark, tmp_path):
     assert snapshot.load(idx)["analyzer"] == "code"
     assert len(s.search("content:beta", 5)) == 1
     assert len(s.search("content:qux", 5)) == 1
+
+
+def test_streaming_indexer_first_batch_keeps_the_last_write(spark,
+                                                            tmp_path):
+    """The bootstrap batch resolves a repeated id by ``order_col`` as
+    merge_index does for later batches: the higher ``seq`` wins in
+    batch 0, and batch 1 merges with the same rule."""
+    from lucille_spark.index.builder import add_doc_identity
+    from lucille_spark.pipeline import Pipeline
+    from lucille_spark.query.searcher import IndexSearcher
+    from lucille_spark.streaming import StreamingIndexer
+
+    inbox = tmp_path / "inbox"
+    inbox.mkdir()
+    idx = str(tmp_path / "live")
+    cols = ("repo", "path", "commit", "lang", "content", "seq")
+    schema = ("repo string, path string, commit string, lang string, "
+              "content string, seq long")
+    indexer = StreamingIndexer(
+        spark, Pipeline([]), index_dir=idx,
+        checkpoint_dir=str(tmp_path / "chk"), corpus_cols=cols,
+        order_col="seq")
+
+    def doc(path, content, seq):
+        return {"repo": "o/r", "path": path, "commit": "c0", "lang": "py",
+                "content": content, "seq": seq}
+
+    def batch(n, docs):
+        (inbox / f"b{n}.jsonl").write_text(
+            "".join(json.dumps(d) + "\n" for d in docs))
+        indexer.from_json_files(str(inbox), schema)
+
+    # a repeated id's rows disagree on content; each batch has two ids
+    # whose seq winners are opposite contents, so no content_sha256
+    # order picks both winners
+    ids = {p: add_doc_identity(spark.createDataFrame(
+        [("o/r", p, "c0", "")], "repo string, path string, commit string, "
+        "content string")).first()["doc_id"] for p in ("a.py", "b.py",
+                                                       "c.py")}
+
+    def found(q):
+        return [d for d, _ in IndexSearcher(idx).search(f"content:{q}", 10)]
+
+    batch(0, [doc("a.py", "apple", 2), doc("a.py", "zebra", 1),
+              doc("b.py", "apple", 1), doc("b.py", "zebra", 2)])
+    assert snapshot.load(idx)["stats"]["content"]["n_docs"] == 2
+    assert found("apple") == [ids["a.py"]]
+    assert found("zebra") == [ids["b.py"]]
+    batch(1, [doc("a.py", "kiwi", 3), doc("a.py", "melon", 1),
+              doc("c.py", "kiwi", 1), doc("c.py", "melon", 3)])
+    assert snapshot.load(idx)["stats"]["content"]["n_docs"] == 3
+    assert found("kiwi") == [ids["a.py"]]
+    assert found("zebra") == [ids["b.py"]]
+    assert found("melon") == [ids["c.py"]]
+    assert found("apple") == []
