@@ -10,8 +10,10 @@
 
 On a cluster the same code path runs unchanged: `local[N]` in the sandbox,
 N executors under YARN/K8s in production (executors replace the reference's
-Worker JVMs — SURVEY.md §3.3). `--resume` skips the build if the run's
-lineage row is already complete (idempotent re-submits).
+Worker JVMs — SURVEY.md §3.3). `--resume` re-runs a crashed build of the
+same `--run-id`: the stages its `_lineage` rows record are not run again,
+and the version lists the files they staged; a build of that run-id that
+already published writes nothing (idempotent re-submits).
 
 Package the library with:  cd /root/repo && zip -r lucille_spark.zip lucille_spark
 """

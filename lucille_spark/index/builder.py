@@ -29,6 +29,13 @@ Dataflow (all DataFrame; Python appears only in Arrow-vectorized UDFs):
                                                           no exchange]
     -> lexicon = lexicon_rows(blocks): df per (field,term)  [tiny shuffle]
 
+A build and a merge are one commit (:func:`_commit`): a build commits
+its corpus onto an empty base, a merge its delta onto the latest
+version. The doc count and token totals are observed on the ordinal
+pass, the tombstoned ones on the tombstone write, so the corpus stats
+take no job of their own. Every table is appended, and the version lists
+the base's files plus exactly the files the commit staged.
+
 Output tables (parquet dir layout), every one written by
 :func:`write_index_table`: zstd pages, no statistics on the opaque postings
 payload columns (doc_gaps, tfs, positions), min/max kept on every other
@@ -48,7 +55,8 @@ column:
                  sees, its ord_span, analyzer and per-field corpus stats
                  (n_docs, avgdl, total_terms). Publishing it is the
                  commit; readers open exactly the files it lists.
-  _lineage/      per-stage build provenance (checkpoint/resume)
+  _lineage/      a row per stage of every commit, with the files it
+                 staged (metrics; a crashed build's resume)
 Merges add _tombstones/ (doc_ord) through the same writer.
 
 Each fact is stored once (format 2). A posting's tf lives in ``tfs`` and
@@ -71,14 +79,16 @@ import os
 import time
 import uuid
 from contextlib import contextmanager
-from typing import Optional, Sequence
+from itertools import chain
+from typing import Callable, Optional, Sequence
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from lucille_spark import BLOCK_SIZE, BM25_B, BM25_K1
@@ -99,7 +109,7 @@ POSTINGS_SCHEMA = (
 PAYLOAD_COLUMNS = ("doc_gaps", "tfs", "positions")
 
 
-def write_index_table(data, path: str, mode: str = "overwrite") -> list:
+def write_index_table(data, path: str) -> list:
     """The one writer of every index table, so every table gets the same
     parquet options whatever the session config says: zstd pages, and no
     min/max or size statistics on the :data:`PAYLOAD_COLUMNS`. Every other
@@ -112,12 +122,13 @@ def write_index_table(data, path: str, mode: str = "overwrite") -> list:
     ``_lineage`` rows, which pyarrow appends directly: launching a Spark
     job for a 1-row table costs ~0.3-0.5 s of scheduling per write.
 
+    Every write appends: it deletes no file a published version lists.
     Returns the names of the data files the write added, from a listing
     of ``path`` before and after it: what a commit lists for the table
     (:mod:`snapshot`)."""
     before = snapshot.data_files(path)
     if not isinstance(data, pa.Table):
-        w = (data.write.mode(mode).option("compression", "zstd")
+        w = (data.write.mode("append").option("compression", "zstd")
              .option("parquet.column.statistics.enabled", "true")
              .option("parquet.size.statistics.enabled", "false"))
         for col in PAYLOAD_COLUMNS:
@@ -326,8 +337,8 @@ def postings_blocks(docs, fields, avgdl_by_field, ord_span,
                     tok_fn=None, block_size=BLOCK_SIZE,
                     docs_per_salt=1 << 17, store_positions=True,
                     totals_by_field=None):
-    """The salted single-shuffle postings construction (shared by the full
-    build and the incremental merge). ``ord_span`` is the doc_ord range the
+    """The salted single-shuffle postings construction of every commit
+    (:func:`_commit`). ``ord_span`` is the doc_ord range the
     input covers (used only for salt-range bucketing). Requires dl_<field>
     columns on ``docs``.
 
@@ -401,8 +412,8 @@ def postings_blocks(docs, fields, avgdl_by_field, ord_span,
 
 def postings_layout(blocks: DataFrame, fields: Sequence[str],
                     totals_by_field: dict, docs_per_salt: int) -> DataFrame:
-    """The one postings write rule, shared by :func:`build_index` and
-    ``merge.merge_index``: lays ``blocks`` (from :func:`postings_blocks`)
+    """The one postings write rule of every commit (:func:`_commit`):
+    lays ``blocks`` (from :func:`postings_blocks`)
     out for :func:`write_index_table`, term-sorted, so row-group min/max
     on term prunes lookups within a file and across files.
 
@@ -423,7 +434,8 @@ def postings_layout(blocks: DataFrame, fields: Sequence[str],
     build. With the blocks persisted the sample pass is the ONLY full
     computation — it materializes the cache (reservoir sampling touches
     every partition) — and the range+sort+write replays from the cache.
-    Both callers persist ``blocks``; their lexicon aggregates reuse it."""
+    :func:`_commit` persists ``blocks``; its lexicon aggregate reuses
+    it."""
     spark = blocks.sparkSession
     if one_partition(spark, fields, totals_by_field, docs_per_salt):
         return blocks
@@ -506,6 +518,12 @@ def build_index(
 ) -> dict:
     """Build the full index at ``out_dir``; returns corpus-level stats.
 
+    A build is the first commit (:func:`_commit`) of ``corpus``: its base
+    is empty, with no files, no docs and ord_span 0. Into a directory that
+    already holds an index it publishes the version after the latest one,
+    listing only its own files and deleting none, so a reader of the
+    previous version keeps answering. A repeated doc id raises ValueError.
+
     ``docs_per_salt`` bounds the largest single sort group: any term whose
     document frequency exceeds it is split into doc_ord-range salts. At a
     real 100 TB run keep the default (~131k postings per group ≈ a few MB);
@@ -516,117 +534,172 @@ def build_index(
     for identifier search over source corpora; query terms are analyzed
     with the standard analyzer and match sub-tokens directly). Any other
     name raises ValueError.
-    """
-    spark = corpus.sparkSession
-    tok_fn = tokenizer(analyzer)
-    ledger = _Ledger(out_dir, run_id)
-    if resume and ledger.done("lexicon"):  # recorded once published
-        stats = snapshot.load(out_dir)["stats"]
-        return {"n_docs": stats[fields[0]]["n_docs"],
-                "avgdl": {f: stats[f]["avgdl"] for f in fields},
-                "fields": list(fields), "out_dir": out_dir}
 
-    with _job_scope(spark) as cache:
+    ``resume=True`` re-runs a crashed build of the same ``run_id``: the
+    stages it recorded in ``_lineage`` are not run again, and the version
+    lists the files they staged. A build of that run_id that already
+    published writes nothing.
+    """
+    latest = snapshot.latest(out_dir)
+    ledger = _Ledger(out_dir, run_id, resume)
+    # published: its lexicon row, written after the publish, or the
+    # latest manifest (a crash between the two) says so
+    published = "lexicon" in ledger.staged or (
+        latest is not None and latest["run_id"] == run_id)
+    if not (resume and published):
         # Input-skew guard (guide §2.5: one big unsplittable file →
-        # repartition immediately after the read): a small corpus parquet is
-        # often a single row group, so every narrow map stage (sha256,
+        # repartition immediately after the read): a small corpus parquet
+        # is often a single row group, so every narrow map stage (sha256,
         # tokenize, explode) would run on ONE core. No-op when the scan is
         # already parallel.
         from lucille_spark.corpus import spread_small_input
 
-        corpus = spread_small_input(corpus)
+        latest = _commit(
+            add_doc_identity(spread_small_input(corpus)), out_dir,
+            {"version": latest["version"] if latest else 0, "ord_span": 0,
+             "files": {t: [] for t in snapshot.TABLES},
+             "stats": {f: {"n_docs": 0, "total_terms": 0} for f in fields}},
+            fields, ledger, analyzer=analyzer,
+            store_positions=store_positions, block_size=block_size,
+            docs_per_salt=docs_per_salt)
+    stats = latest["stats"]
+    return {"n_docs": stats[fields[0]]["n_docs"],
+            "avgdl": {f: stats[f]["avgdl"] for f in fields},
+            "fields": list(fields), "out_dir": out_dir}
 
-        # Cache discipline: persist ONLY narrow-ish data (source columns +
-        # ids, never token arrays — caching 100s of tokens/doc costs more
-        # than re-running the codegen'd lower+split). ident materializes on
-        # the ordinal bucket-count pass; docs (with doc_ord attached)
-        # materializes on the doc_stats write, so the ordinal window shuffle
-        # runs exactly once.
-        ident = cache(add_doc_identity(corpus))
-        docs = assign_doc_ord(ident, "doc_id")
-        for f_name in fields:
-            docs = docs.withColumn(
-                f"dl_{f_name}", F.size(tok_fn(F.col(f_name))).cast("long"))
-        docs = cache(docs)
 
-        # --- doc_stats + corpus stats ------------------------------------
-        stat_cols = doc_stats_columns(corpus.columns, fields)
+def _commit(rows: DataFrame, index_dir: str, base: dict,
+            fields: Sequence[str], ledger: "_Ledger", *, analyzer: str,
+            store_positions: bool, block_size: int, docs_per_salt: int,
+            tombstones: Optional[Callable[[DataFrame], DataFrame]] = None
+            ) -> dict:
+    """Commit ``rows`` (``add_doc_identity``'s columns, one row per
+    doc_id) as the version after ``base`` and return its manifest: the one
+    write path of :func:`build_index`, whose base is empty, and of
+    ``merge.merge_index``, whose base is the latest version.
+
+    Its stages, each recorded in ``_lineage`` with the files it staged:
+    ``doc_stats`` (dl columns, ordinals above the base's ord_span),
+    ``corpus_stats`` (the tombstones, then the live corpus stats),
+    ``postings`` and ``lexicon``. ``tombstones`` maps the batch's doc_id
+    frame to the base's docs it supersedes, as (doc_ord, dl_<field>...).
+    Every table is appended through :func:`write_index_table`, and the
+    manifest lists the base's files plus exactly the files this commit
+    staged. The corpus stats are observed on the ordinal pass and the
+    tombstone write, with no job of their own. A stage the ``ledger``
+    already holds (a resumed build) is not run again: its recorded files
+    are listed. The lexicon row is recorded once the version is
+    published."""
+    spark = rows.sparkSession
+    tok_fn = tokenizer(analyzer)
+    staged = ledger.staged
+    resumed = set(staged)
+
+    def append(stage, table, data):
+        staged[stage] = [f"{table}/{name}" for name in
+                         write_index_table(data, os.path.join(index_dir,
+                                                              table))]
+
+    def observed(df):
+        """``df`` observing its row count and per-field token totals, and
+        a getter of them that waits for the first job that runs it."""
+        obs = Observation()
+
+        def get():
+            m = obs.get
+            return int(m["n"]), {f: int(m[f"total_{f}"] or 0)
+                                 for f in fields}
+        return df.observe(obs, F.count(F.lit(1)).alias("n"), *[
+            F.sum(f"dl_{f}").alias(f"total_{f}") for f in fields]), get
+
+    with _job_scope(spark) as cache:
+        # Cache discipline: persist ONLY narrow-ish data (source columns,
+        # ids and lengths, never token arrays — caching 100s of tokens/doc
+        # costs more than re-running the codegen'd lower+split). ident
+        # materializes on the ordinal bucket-count pass, which observes the
+        # batch's counts on the way; docs (with doc_ord attached)
+        # materializes on the doc_stats write, so the ordinal window
+        # shuffle runs exactly once.
+        ident, added = observed(rows.withColumns({
+            f"dl_{f}": F.size(tok_fn(F.col(f))).cast("long")
+            for f in fields}))
+        ident = cache(ident)
+        # fresh ordinals above the base's. A global-window rank gives the
+        # same ordinals for a small batch, but the SinglePartition exchange
+        # it forces under the postings plan made a 100-doc postings write
+        # 16-20 s against 3.2-3.6 s on this bucketed path.
+        docs = cache(assign_doc_ord(ident, "doc_id").withColumn(
+            "doc_ord", F.col("doc_ord") + F.lit(base["ord_span"])))
+        n_added, totals = added()
+        # one doc_stats, tombstone and lexicon file for a small batch:
+        # coalesce over the caches and the blocks is narrow, no job added
+        small = one_partition(spark, fields, totals, docs_per_salt)
+
+        def rows_of(df):
+            return df.coalesce(1) if small else df
+
         t_stage = time.time()
-        obs = None
-        if not (resume and ledger.done("doc_stats")):
-            # the corpus stats (N + per-field token sums) ride the doc_stats
-            # write job as observed metrics — one full pass over the docs
-            # cache instead of two (guide §1.2: fewer passes). Exact integer
-            # count/sum, so the values equal the old separate agg.
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            write_index_table(
-                docs.observe(obs, F.count(F.lit(1)).alias("n"),
-                             *[F.sum(f"dl_{f}").alias(f"total_{f}")
-                               for f in fields]).select(*stat_cols),
-                os.path.join(out_dir, "doc_stats"))
-            ledger.record("doc_stats", -1, t_stage)
+        if "doc_stats" not in resumed:
+            append("doc_stats", "doc_stats", rows_of(docs.select(
+                *doc_stats_columns(rows.columns, fields))))
+            ledger.record("doc_stats", n_added, t_stage)
         # the docs cache is materialized now; ident is no longer needed
         ident.unpersist()
 
         t_stage = time.time()
-        # metrics observed during the doc_stats write; the separate agg job
-        # runs only on the resume path that skipped that write
-        agg = obs.get if obs is not None else docs.agg(
-            F.count("*").alias("n"),
-            *[F.sum(f"dl_{f}").alias(f"total_{f}")
-              for f in fields]).collect()[0]
-        n_docs = int(agg["n"])
-        totals = {f: int(agg[f"total_{f}"] or 0) for f in fields}
-        # exact integer sum / count: avgdl bit-identical at any parallelism
-        avgdl_by_field = {f: totals[f] / n_docs if n_docs else 0.0
-                          for f in fields}
-        if not (resume and ledger.done("corpus_stats")):
-            ledger.record("corpus_stats", n_docs, t_stage)
+        n_dead, dead = 0, dict.fromkeys(fields, 0)
+        if tombstones is not None:
+            gone, counted = observed(tombstones(docs.select("doc_id")))
+            append("corpus_stats", "_tombstones",
+                   rows_of(gone.select("doc_ord")))
+            n_dead, dead = counted()
+            if not n_dead:  # Spark writes one file even for no rows
+                for path in staged.pop("corpus_stats"):
+                    os.remove(os.path.join(index_dir, path))
+        # live corpus stats: subtract tombstoned dls, add the batch's.
+        # Exact integer sum / count: avgdl bit-identical at any parallelism
+        stats = {}
+        for f in fields:
+            n = base["stats"][f]["n_docs"] - n_dead + n_added
+            total = base["stats"][f]["total_terms"] - dead[f] + totals[f]
+            stats[f] = {"n_docs": n, "avgdl": total / n if n else 0.0,
+                        "total_terms": total}
+        if "corpus_stats" not in resumed:
+            ledger.record("corpus_stats", n, t_stage)
 
         # --- postings per field (ONE corpus-sized shuffle per field) ------
+        ord_span = base["ord_span"] + n_added
         t_stage = time.time()
-        skip_postings = resume and ledger.done("postings")
-        all_blocks = None if skip_postings else postings_blocks(
-            docs, fields, avgdl_by_field, n_docs, tok_fn=tok_fn,
-            block_size=block_size, docs_per_salt=docs_per_salt,
-            store_positions=store_positions, totals_by_field=totals)
-
-        if not skip_postings:
+        if "postings" in resumed:
+            blocks = spark.read.schema(POSTINGS_SCHEMA).parquet(*[
+                os.path.join(index_dir, p) for p in staged["postings"]])
+        else:
             # MEMORY_AND_DISK: at 100 TB the encoded blocks are index-sized
             # (a fraction of the corpus) and spill to executor disk — still
             # strictly cheaper than encoding twice. The lexicon aggregate
             # below reuses the cache, and so does the range route's
             # boundary-sampling job (see postings_layout).
-            from pyspark import StorageLevel
-
-            all_blocks = cache(all_blocks, StorageLevel.MEMORY_AND_DISK)
-            write_index_table(
-                postings_layout(all_blocks, fields, totals, docs_per_salt),
-                os.path.join(out_dir, "postings"))
+            blocks = cache(postings_blocks(
+                docs, fields, {f: stats[f]["avgdl"] for f in fields},
+                ord_span, tok_fn=tok_fn, block_size=block_size,
+                docs_per_salt=docs_per_salt, store_positions=store_positions,
+                totals_by_field=totals), StorageLevel.MEMORY_AND_DISK)
+            append("postings", "postings",
+                   postings_layout(blocks, fields, totals, docs_per_salt))
             ledger.record("postings", -1, t_stage)
-        lexicon = lexicon_rows(
-            all_blocks if not skip_postings else
-            spark.read.parquet(os.path.join(out_dir, "postings")),
-            one_partition(spark, fields, totals, docs_per_salt))
-        t_stage = time.time()
-        write_index_table(lexicon, os.path.join(out_dir, "lexicon"))
 
-        # the commit: every table was overwritten (or, resumed, written by
-        # this run), so its directory holds exactly this version's files.
-        # A build over an existing index publishes the version after it.
-        snapshot.publish(
-            out_dir, snapshot.latest(out_dir), run_id=run_id, ord_span=n_docs,
-            analyzer=analyzer,
-            stats={f: {"n_docs": n_docs, "avgdl": avgdl_by_field[f],
-                       "total_terms": totals[f]} for f in fields},
-            files={t: snapshot.data_files(os.path.join(out_dir, t))
-                   for t in ("postings", "lexicon", "doc_stats")},
-            added=n_docs, tombstoned=0)
-        ledger.record("lexicon", n_docs, t_stage)
-        return {"n_docs": n_docs, "avgdl": avgdl_by_field,
-                "fields": list(fields), "out_dir": out_dir}
+        t_stage = time.time()
+        append("lexicon", "lexicon", lexicon_rows(blocks, one_file=small))
+        files = {t: list(base["files"][t]) for t in snapshot.TABLES}
+        for path in chain.from_iterable(staged.values()):
+            table, name = path.split("/")
+            files[table].append(name)
+        manifest = snapshot.publish(
+            index_dir, base, run_id=ledger.run_id, ord_span=ord_span,
+            analyzer=analyzer, stats=stats, files=files, added=n_added,
+            tombstoned=n_dead)
+        ledger.record("lexicon", n_added, t_stage)
+        return manifest
 
 
 # --- lineage / metrics / resume ---------------------------------------------
@@ -634,34 +707,37 @@ def build_index(
 # Mirrors the reference's two checkpoint mechanisms: Kafka offset commits
 # (core/Worker.java:188-197) and the FileConnector state DB
 # (connector/FileConnectorStateManager.java:1-315). Granularity here is the
-# STAGE (each stage's parquet overwrite is atomic via the commit protocol);
+# STAGE (each stage's files are listed in its lineage row once written);
 # WITHIN a stage, per-partition recovery is Spark's native task retry.
 # ``resume=True`` + same run_id skips stages whose lineage row is complete,
 # and the whole build once its manifest is published.
 
 
 class _Ledger:
-    """The ``_lineage`` table of one run. It gains a file per recorded
-    stage of every commit, so it is read only when :meth:`done` asks."""
+    """The ``_lineage`` table of one run: a row per stage of every commit,
+    naming the files (``table/name``) the stage staged. It gains a file
+    per row, so it is read only to resume a build: ``staged`` maps each
+    stage of this run to its files, those recorded before plus those this
+    run records."""
 
-    def __init__(self, out_dir: str, run_id: str):
+    def __init__(self, out_dir: str, run_id: str, resume: bool = False):
         self.run_id = run_id
         self.path = os.path.join(out_dir, "_lineage")
-        self.done_stages = None
-
-    def done(self, stage: str) -> bool:
-        if self.done_stages is None:
+        rows = []
+        if resume:
             try:  # driver-side pyarrow read of the tiny table, no Spark job
                 rows = ds.dataset(self.path, ignore_prefixes=[".", "_"]) \
                     .to_table().to_pylist()
             except FileNotFoundError:
-                rows = []  # first run on this index
-            self.done_stages = {r["stage"] for r in rows
-                                if r["run_id"] == self.run_id
-                                and r["status"] == "complete"}
-        return stage in self.done_stages
+                pass  # first run on this index
+        # a row without files was written before stages listed them
+        self.staged = {r["stage"]: r["files"] for r in rows
+                       if r["run_id"] == run_id
+                       and r["status"] == "complete"
+                       and r.get("files") is not None}
 
     def record(self, stage: str, n_rows: int, started: float) -> None:
+        """Append the row of ``stage``, naming its ``staged`` files."""
         now = time.time()
         write_index_table(pa.table({
             "run_id": pa.array([self.run_id], pa.string()),
@@ -671,7 +747,6 @@ class _Ledger:
             "started_at": pa.array([float(started)], pa.float64()),
             "finished_at": pa.array([float(now)], pa.float64()),
             "seconds": pa.array([now - started], pa.float64()),
-        }), self.path, mode="append")
-        if self.done_stages is not None:
-            self.done_stages.add(stage)
-
+            "files": pa.array([self.staged.get(stage, [])],
+                              pa.list_(pa.string())),
+        }), self.path)

@@ -7,7 +7,8 @@ committed it, the ordinal span, the analyzer, the per-field corpus stats,
 the commit's ``added``/``tombstoned`` counts, and the visible data files
 of every table in :data:`TABLES`.
 
-Writers (``builder.build_index``, ``merge.merge_index``) stage data
+Writers (``builder.build_index``, ``merge.merge_index``, both through
+``builder._commit``) stage data
 files into the table directories, where nothing lists them yet, and then
 :func:`publish` the manifest with a no-replace link: the one atomic step
 of a build or merge. A crash before it leaves the previous version
@@ -16,15 +17,17 @@ a second writer racing for the same version fails instead of
 overwriting. Readers open :func:`load` and read exactly the files it
 lists, so they see one whole version.
 
-Every table is append-only: a merge's manifest lists the old files plus
-the new ones, and a merge deletes no data file. It adds the lexicon rows
-of its own delta blocks; ``IndexReader`` sums the df of one (field,
-term) over its rows at open, as Lucene sums a term's statistics across
-segments.
+Every table is append-only, and no commit deletes a data file: a
+merge's manifest lists the old files plus the new ones, and a build into
+a directory that holds an index lists only its own files. A merge adds
+the lexicon rows of its own delta blocks; ``IndexReader`` sums the df of
+one (field, term) over its rows at open, as Lucene sums a term's
+statistics across segments.
 Publishing version ``v`` deletes only the manifests older than ``v - 1``.
-A reader therefore keeps its version through any number of merges,
-whether it has opened yet or not (a build over an existing index
-overwrites its tables).
+A reader therefore keeps its version through any number of commits,
+rebuilds included, whether it has opened yet or not. Files that no kept
+manifest lists stay on disk until a vacuum deletes them (ROADMAP
+direction 1).
 
 One writer at a time is the model; publishing is what makes a racing
 second writer fail. Every manifest records the index :data:`FORMAT` its

@@ -173,6 +173,22 @@ def test_postings_layout_routes(spark):
     assert "rangepartitioning" in plan({}, 64)  # an unknown total
 
 
+def test_doc_stats_files_follow_the_postings_rule(spark, small_index,
+                                                  base_index):
+    """A small build writes its doc_stats as one file, as it writes its
+    postings and lexicon; a salted build writes one per partition of its
+    spread input."""
+    from lucille_spark.corpus import spread_small_input
+    from lucille_spark.index import snapshot
+
+    def files(idx):
+        return len(snapshot.load(idx)["files"]["doc_stats"])
+
+    assert files(small_index) == 1
+    assert files(base_index) == spread_small_input(
+        _frame(spark, range(N_BASE))).rdd.getNumPartitions() > 1
+
+
 def test_lexicon_files_are_term_sorted(base_index, merged_with_deletes,
                                        small_index,
                                        small_merged_with_deletes):

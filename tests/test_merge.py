@@ -103,8 +103,8 @@ def test_upsert_and_delete(spark, base_corpus, tmp_path):
 
 
 def test_merge_reads_no_lineage_file(spark, tmp_path, monkeypatch):
-    """A merge appends its one ``_lineage`` row without reading the
-    table, which gains a file per stage of every commit."""
+    """A merge appends its ``_lineage`` rows, one per stage, without
+    reading the table, which gains a file per stage of every commit."""
     import os
 
     import pyarrow.dataset as ds
@@ -293,3 +293,24 @@ def test_a_commit_runs_at_most_9_spark_jobs(spark, tmp_path):
     assert (res["added"], res["tombstoned"]) == (57, 15)
     jobs = sc.statusTracker().getJobIdsForGroup("commit-jobs")
     assert len(jobs) <= 9, len(jobs)
+
+
+def test_a_build_runs_at_most_6_spark_jobs(spark, tmp_path):
+    """The build under the commit above: 200 docs from a frame of driver
+    rows. Its corpus stats are observed on the ordinal pass, with no job
+    of their own."""
+    import numpy as np
+
+    from lucille_spark.corpus import corpus_pdf
+    from lucille_spark.index.builder import build_index
+
+    corpus = spark.createDataFrame(corpus_pdf(np.arange(200)))
+    sc = spark.sparkContext
+    sc.setJobGroup("build-jobs", "build-jobs")
+    try:
+        stats = build_index(corpus, str(tmp_path / "idx"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert stats["n_docs"] == 200
+    jobs = sc.statusTracker().getJobIdsForGroup("build-jobs")
+    assert len(jobs) <= 6, len(jobs)

@@ -88,15 +88,20 @@ def test_resume_noop_when_complete(spark, tmp_path):
 
 
 def test_lineage_metrics_rows(spark, tmp_path):
+    """A build and a merge record the same stages, one row each."""
     import lucille_spark.index.builder as B
     from lucille_spark.corpus import corpus_df
+    from lucille_spark.index.merge import merge_index
 
     out = str(tmp_path / "idx3")
     B.build_index(corpus_df(spark, 200, partitions=3), out,
                   fields=("content",), run_id="r9")
+    merge_index(corpus_df(spark, 20, partitions=1), out, run_id="m9")
     lin = spark.read.parquet(f"{out}/_lineage").toPandas()
-    stages = set(lin[lin.run_id == "r9"].stage)
-    assert stages == {"doc_stats", "corpus_stats", "postings", "lexicon"}
+    for run_id in ("r9", "m9"):
+        stages = sorted(lin[lin.run_id == run_id].stage)
+        assert stages == ["corpus_stats", "doc_stats", "lexicon",
+                          "postings"], run_id
     assert (lin.seconds >= 0).all()
     assert (lin.status == "complete").all()
 

@@ -9,9 +9,11 @@ import json
 import math
 import os
 import shutil
+import time
 
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 
 from lucille_spark.corpus import corpus_pdf
@@ -19,8 +21,8 @@ from lucille_spark.index import snapshot
 from test_index_storage import (N_BASE, N_NEW, QUERIES, UPDATED,
                                 _oracle_after_deletes)
 
-# merge_index's table writes, in order; the manifest is published last
-WRITES = ("postings", "doc_stats", "_tombstones", "lexicon")
+# a commit's table writes, in order; the manifest is published last
+WRITES = ("doc_stats", "_tombstones", "postings", "lexicon")
 ALL_QUERIES = QUERIES + [f"content:{UPDATED.split()[0]}"]
 KW = {"block_size": 32, "docs_per_salt": 64}
 
@@ -89,7 +91,7 @@ def merged(spark, base, tmp_path_factory):
 @pytest.mark.parametrize("step", [*WRITES, "manifest"])
 def test_crash_after_each_merge_write(spark, base, base_topk, merged,
                                       tmp_path, monkeypatch, step):
-    import lucille_spark.index.merge as merge_mod
+    import lucille_spark.index.builder as builder
 
     idx = _copy(base, tmp_path)
     version = snapshot.load(idx)["version"]
@@ -100,16 +102,18 @@ def test_crash_after_each_merge_write(spark, base, base_topk, merged,
 
         monkeypatch.setattr(snapshot.os, "link", link)
     else:
-        real = merge_mod.write_index_table
+        real = builder.write_index_table
 
         def write(data, path, *args, **kwargs):
             out = real(data, path, *args, **kwargs)
+            if os.path.basename(path) == "_lineage":  # a stage's row
+                return out
             written.append(os.path.basename(path))
             if len(written) == WRITES.index(step) + 1:
                 raise RuntimeError(f"crash after the {step} write")
             return out
 
-        monkeypatch.setattr(merge_mod, "write_index_table", write)
+        monkeypatch.setattr(builder, "write_index_table", write)
     with pytest.raises((RuntimeError, OSError), match="crash"):
         _merge(spark, idx)
     monkeypatch.undo()
@@ -118,8 +122,9 @@ def test_crash_after_each_merge_write(spark, base, base_topk, merged,
     # the crash left staged files behind, but no reader sees them
     m = snapshot.load(idx)
     assert m["version"] == version
-    assert len(snapshot.data_files(os.path.join(idx, "postings"))) > len(
-        m["files"]["postings"])
+    table = "postings" if step == "manifest" else step
+    assert len(snapshot.data_files(os.path.join(idx, table))) > len(
+        m["files"][table])
     assert os.listdir(os.path.join(idx, "_meta")) == [
         f"{version:010d}.json"]
     assert _topk(idx) == base_topk
@@ -138,8 +143,12 @@ def test_crash_after_publish_keeps_the_new_version(spark, base, merged,
 
     idx = _copy(base, tmp_path)
 
-    def record(self, *args):
-        raise RuntimeError("crash after the publish")
+    real = builder._Ledger.record
+
+    def record(self, stage, *args):  # the lexicon row follows the publish
+        if stage == "lexicon":
+            raise RuntimeError("crash after the publish")
+        return real(self, stage, *args)
 
     monkeypatch.setattr(builder._Ledger, "record", record)
     with pytest.raises(RuntimeError, match="crash"):
@@ -230,6 +239,81 @@ def test_reader_keeps_its_version_through_two_commits(spark, base,
             loaded.reader.term_info("content", term)
     for q in ALL_QUERIES:
         assert raced.search(q, 10) == loaded.search(q, 10), q
+
+
+def test_reader_keeps_its_version_through_a_rebuild(spark, tmp_path):
+    """A build into a directory that holds an index appends its files
+    and lists only its own, so a reader opened on the previous version
+    keeps answering as that version did, and the new version answers the
+    new corpus as a build into an empty directory does."""
+    from lucille_spark.index.builder import build_index
+    from lucille_spark.query.searcher import IndexSearcher
+
+    idx = str(tmp_path / "idx")
+    build_index(spark.createDataFrame(corpus_pdf(np.arange(200))), idx,
+                run_id="a")
+    old = IndexSearcher(idx)  # reads its postings on its first search
+    before = _topk(idx)
+    rebuilt = corpus_pdf(np.arange(1000, 1200))
+    build_index(spark.createDataFrame(rebuilt), idx, run_id="b")
+    assert {q: old.search(q, 10) for q in ALL_QUERIES} == before
+    fresh = str(tmp_path / "fresh")
+    build_index(spark.createDataFrame(rebuilt), fresh, run_id="b")
+    manifest = snapshot.load(idx)
+    assert (manifest["version"], manifest["run_id"]) == (2, "b")
+    assert manifest["stats"] == snapshot.load(fresh)["stats"]
+    assert _topk(idx) == _topk(fresh)
+
+
+def _rows(idx, table):
+    return sorted(map(tuple, pq.read_table(
+        snapshot.paths(idx, snapshot.load(idx), table),
+        partitioning=None).to_pandas().itertuples(index=False)))
+
+
+def test_resume_after_a_crash_before_the_publish(spark, tmp_path,
+                                                 monkeypatch):
+    """A build that crashed in its lexicon write, before its publish,
+    resumes: the doc_stats and postings files its stages staged are
+    listed untouched, the crashed attempt's lexicon file is listed
+    nowhere, and the rows equal a clean build's."""
+    import lucille_spark.index.builder as builder
+
+    corpus = spark.createDataFrame(corpus_pdf(np.arange(N_BASE)))
+    idx = str(tmp_path / "idx")
+    real = builder.write_index_table
+
+    def write(data, path):
+        out = real(data, path)
+        if os.path.basename(path) == "lexicon":
+            raise RuntimeError("crash after the lexicon write")
+        return out
+
+    monkeypatch.setattr(builder, "write_index_table", write)
+    with pytest.raises(RuntimeError, match="crash"):
+        builder.build_index(corpus, idx, run_id="r1", **KW)
+    monkeypatch.undo()
+    assert snapshot.latest(idx) is None
+    orphans = snapshot.data_files(os.path.join(idx, "lexicon"))
+    assert orphans
+
+    def mtimes(table):
+        return {n: os.stat(os.path.join(idx, table, n)).st_mtime
+                for n in snapshot.data_files(os.path.join(idx, table))}
+
+    staged = {t: mtimes(t) for t in ("doc_stats", "postings")}
+    time.sleep(1.1)
+    builder.build_index(corpus, idx, run_id="r1", resume=True, **KW)
+    manifest = snapshot.load(idx)
+    for table, before in staged.items():
+        assert mtimes(table) == before, table
+        assert manifest["files"][table] == sorted(before), table
+    assert not orphans & set(manifest["files"]["lexicon"])
+    clean = str(tmp_path / "clean")
+    builder.build_index(corpus, clean, run_id="r2", **KW)
+    for table in ("postings", "lexicon", "doc_stats"):
+        assert _rows(idx, table) == _rows(clean, table), table
+    assert manifest["stats"] == snapshot.load(clean)["stats"]
 
 
 def test_index_without_manifest_must_be_rebuilt(base, tmp_path):
