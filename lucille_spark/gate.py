@@ -24,7 +24,7 @@ from __future__ import annotations
 import hashlib
 import os
 import tempfile
-from typing import Callable, Dict, Sequence
+from typing import Callable, Dict, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -338,6 +338,22 @@ def _ensure_gate_index(spark, sf_dir: str) -> str:
     return out
 
 
+def _searcher_top10(spark, sf_dir: str, query: Optional[str] = None,
+                    like_text: Optional[str] = None) -> DataFrame:
+    """The top 10 of ``query`` (or of MoreLikeThis on ``like_text``)
+    from the searcher over the gate index of ``sf_dir``, as the
+    (doc_id, rank, score) rows of the searcher entries' oracles."""
+    from lucille_spark.query.searcher import IndexSearcher
+
+    searcher = IndexSearcher(_ensure_gate_index(spark, sf_dir))
+    hits = (searcher.search(query, k=10) if like_text is None
+            else searcher.more_like_this(like_text, k=10))
+    rows = [(doc_id, i + 1, round(score, 4))
+            for i, (doc_id, score) in enumerate(hits)]
+    return spark.createDataFrame(rows,
+                                 "doc_id string, rank long, score double")
+
+
 _SLOPPY_COND = (
     "len(list_filter(range(1, len(toks) + 1), i -> toks[i] = 'order'"
     " AND len(list_filter(range(greatest(1, i - 1),"
@@ -363,13 +379,7 @@ def bm25_phrase_sloppy(spark, sf_dir):
 def wand_index_top10(spark, sf_dir):
     """Full engine path: compressed index + block-max top-k search, vs
     SQL BM25."""
-    from lucille_spark.query.searcher import IndexSearcher
-
-    idx = _ensure_gate_index(spark, sf_dir)
-    hits = IndexSearcher(idx).search("content:window OR content:filter", k=10)
-    rows = [(doc_id, i + 1, round(score, 4))
-            for i, (doc_id, score) in enumerate(hits)]
-    return spark.createDataFrame(rows, "doc_id string, rank long, score double")
+    return _searcher_top10(spark, sf_dir, "content:window OR content:filter")
 
 
 _WAND_PREFIX_SQL = f"""
@@ -420,13 +430,7 @@ def wand_prefix_top10(spark, sf_dir):
     relationally (DISTINCT tokens LIKE 's%', ascending, capped) and sums
     per-doc contributions in term order — matching the searcher's
     term-order float summation bit-for-bit."""
-    from lucille_spark.query.searcher import IndexSearcher
-
-    idx = _ensure_gate_index(spark, sf_dir)
-    hits = IndexSearcher(idx).search("content:s*", k=10)
-    rows = [(doc_id, i + 1, round(score, 4))
-            for i, (doc_id, score) in enumerate(hits)]
-    return spark.createDataFrame(rows, "doc_id string, rank long, score double")
+    return _searcher_top10(spark, sf_dir, "content:s*")
 
 
 _WAND_FUZZY_SQL = _WAND_PREFIX_SQL.replace(
@@ -452,13 +456,7 @@ def wand_fuzzy_top10(spark, sf_dir):
     DuckDB's levenshtein() reproduces the set exactly — Lucene's Damerau
     transpositions are a documented deviation), then scores as a boolean
     OR under block-max top-k search."""
-    from lucille_spark.query.searcher import IndexSearcher
-
-    idx = _ensure_gate_index(spark, sf_dir)
-    hits = IndexSearcher(idx).search("content:vektor~2", k=10)
-    rows = [(doc_id, i + 1, round(score, 4))
-            for i, (doc_id, score) in enumerate(hits)]
-    return spark.createDataFrame(rows, "doc_id string, rank long, score double")
+    return _searcher_top10(spark, sf_dir, "content:vektor~2")
 
 
 _WAND_RANGE_SQL = _WAND_PREFIX_SQL.replace(
@@ -473,13 +471,7 @@ def wand_range_top10(spark, sf_dir):
     into the Arrow scan (row-group-pruned range seek), then scores as a
     boolean OR under block-max top-k search — vs the same relational
     range expansion in SQL."""
-    from lucille_spark.query.searcher import IndexSearcher
-
-    idx = _ensure_gate_index(spark, sf_dir)
-    hits = IndexSearcher(idx).search("content:[filter TO key]", k=10)
-    rows = [(doc_id, i + 1, round(score, 4))
-            for i, (doc_id, score) in enumerate(hits)]
-    return spark.createDataFrame(rows, "doc_id string, rank long, score double")
+    return _searcher_top10(spark, sf_dir, "content:[filter TO key]")
 
 
 _WAND_WILDCARD_SQL = _WAND_PREFIX_SQL.replace(
@@ -495,13 +487,7 @@ def wand_wildcard_top10(spark, sf_dir):
     scores as a boolean OR under block-max top-k search (matches
     scan/small/spark on this corpus) — vs the equivalent regexp expansion
     in SQL."""
-    from lucille_spark.query.searcher import IndexSearcher
-
-    idx = _ensure_gate_index(spark, sf_dir)
-    hits = IndexSearcher(idx).search("content:s?a*", k=10)
-    rows = [(doc_id, i + 1, round(score, 4))
-            for i, (doc_id, score) in enumerate(hits)]
-    return spark.createDataFrame(rows, "doc_id string, rank long, score double")
+    return _searcher_top10(spark, sf_dir, "content:s?a*")
 
 
 _WAND_BOOST_SQL = _WAND_SQL.replace(
@@ -517,28 +503,14 @@ def wand_boosted_top10(spark, sf_dir):
     parsed to a boosted Term, boost folded into the term's idf (its
     scores and its block-max window bounds scale together, so skipping
     stays exact) — vs the same boosted BM25 in SQL."""
-    from lucille_spark.query.searcher import IndexSearcher
-
-    idx = _ensure_gate_index(spark, sf_dir)
-    hits = IndexSearcher(idx).search(
-        "content:window^2 OR content:filter", k=10)
-    rows = [(doc_id, i + 1, round(score, 4))
-            for i, (doc_id, score) in enumerate(hits)]
-    return spark.createDataFrame(rows, "doc_id string, rank long, score double")
+    return _searcher_top10(spark, sf_dir, "content:window^2 OR content:filter")
 
 
 @register("wand_conjunctive_top10",
           sql=_WAND_SQL.replace("tf_0 > 0 OR tf_1 > 0",
                                 "tf_0 > 0 AND tf_1 > 0"))
 def wand_conjunctive_top10(spark, sf_dir):
-    from lucille_spark.query.searcher import IndexSearcher
-
-    idx = _ensure_gate_index(spark, sf_dir)
-    hits = IndexSearcher(idx).search(
-        "content:window AND content:filter", k=10)
-    rows = [(doc_id, i + 1, round(score, 4))
-            for i, (doc_id, score) in enumerate(hits)]
-    return spark.createDataFrame(rows, "doc_id string, rank long, score double")
+    return _searcher_top10(spark, sf_dir, "content:window AND content:filter")
 
 
 # =========================================================================
@@ -2384,13 +2356,7 @@ def mlt_top10(spark, sf_dir):
     distinct terms, so the oracle's selection is exactly the df>=2 filter
     (the tf*idf cap itself is pytest-covered); scoring is the same
     boolean rewrite every multi-term query uses."""
-    from lucille_spark.query.searcher import IndexSearcher
-
-    idx = _ensure_gate_index(spark, sf_dir)
-    hits = IndexSearcher(idx).more_like_this(" ".join(_MLT_TERMS), k=10)
-    rows = [(doc_id, i + 1, round(score, 4))
-            for i, (doc_id, score) in enumerate(hits)]
-    return spark.createDataFrame(rows, "doc_id string, rank long, score double")
+    return _searcher_top10(spark, sf_dir, like_text=" ".join(_MLT_TERMS))
 
 
 @register("facet_counts", sql="""

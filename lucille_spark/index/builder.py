@@ -21,8 +21,9 @@ Dataflow (all DataFrame; Python appears only in Arrow-vectorized UDFs):
        The kernel encodes each Arrow batch's complete (term, salt) groups
        in one vectorized pass (lexsort, per-doc tf/positions runs) and
        carries the batch's last group into the next batch, emitting
-       128-doc blocks: delta+varbyte doc gaps, varbyte tfs, optional
-       varbyte position gaps, block_max_tfnorm
+       128-doc blocks: first/last doc, n_docs, block_max_tfnorm and the
+       doc_gaps/tfs/positions payload, coded by codecs.py alone. A block
+       stores no salt: a term's blocks are ordered by first_doc
     -> postings write (postings_layout): as the encode left it when every
        field is one partition, else repartitionByRange(field, term)
        + sortWithinPartitions                            [small indexes:
@@ -70,7 +71,9 @@ perfbench corpus, while the array costs one per doc and fits any index a
 single driver can search (10^8 ordinals are 400 MB per field).
 
 Each stored column has a reader (format 4): the lexicon holds only df,
-and a block only what the decoder and the block-max windows read.
+and a block only what the decoder and the block-max windows read. Format
+5 drops the salt and block sequence number of a block, which no reader
+read, and :mod:`codecs` is the one home of the block payload layout.
 """
 
 from __future__ import annotations
@@ -98,9 +101,9 @@ from lucille_spark.index import codecs, snapshot
 from lucille_spark.index.ordinals import assign_doc_ord
 
 POSTINGS_SCHEMA = (
-    "field string, term string, salt int, block_seq int, first_doc long, "
-    "last_doc long, n_docs int, doc_gaps binary, tfs binary, "
-    "positions binary, block_max_tfnorm double, bound_avgdl double"
+    "field string, term string, first_doc long, last_doc long, n_docs int, "
+    "doc_gaps binary, tfs binary, positions binary, "
+    "block_max_tfnorm double, bound_avgdl double"
 )
 
 
@@ -157,23 +160,6 @@ def add_doc_identity(corpus: DataFrame) -> DataFrame:
     ).withColumn("content_sha256", F.sha2(F.col("content").cast("binary"), 256))
 
 
-def _binary_from_segments(data, offsets):
-    """pyarrow binary array over contiguous byte segments WITHOUT a per-row
-    Python loop (guide §4.2: re-slice one data buffer by computing a new
-    offsets array). ``offsets`` is int64 of len n+1 into ``data``; binary
-    offsets are int32, so a batch whose payload reaches 2 GiB fails loudly
-    instead of wrapping."""
-    if offsets[-1] >= 1 << 31:
-        raise OverflowError(
-            f"binary payload of {int(offsets[-1])} bytes exceeds the int32 "
-            "offsets of one Arrow batch")
-    off32 = offsets.astype(np.int32)
-    return pa.Array.from_buffers(
-        pa.binary(), off32.size - 1,
-        [None, pa.py_buffer(np.ascontiguousarray(off32)),
-         pa.py_buffer(np.ascontiguousarray(data))])
-
-
 def _postings_encoder(avgdl: float, block_size: int,
                       store_positions: bool, field: str = "content"):
     """mapInArrow kernel over RAW TOKEN OCCURRENCES (term, salt, doc_ord,
@@ -188,12 +174,11 @@ def _postings_encoder(avgdl: float, block_size: int,
 
     One encode is a single vectorized pass over all of its groups: one
     lexsort + run-length boundaries give the per-doc (tf, positions), and
-    reduceat block aggregates plus ONE batch vbyte encode per payload
-    column, sliced per block (codecs.vbyte is per-value independent, so
-    segment slicing equals per-block encoding), give the 128-doc blocks:
-    delta+varbyte doc gaps, varbyte tfs, optional varbyte position gaps,
-    block_max_tfnorm. ``dl`` enters only the tfnorm bounds: the reader
-    takes a posting's dl from doc_stats. No Python call per group."""
+    reduceat block aggregates plus ONE :func:`codecs.encode_segments` per
+    payload column (its layout is :mod:`codecs`'s) give the 128-doc blocks
+    of each group and their block_max_tfnorm. ``dl`` enters only the
+    tfnorm bounds: the reader takes a posting's dl from doc_stats. No
+    Python call per group."""
     k1, b = BM25_K1, BM25_B
 
     def encode(tbl: "pa.Table") -> "pa.RecordBatch":
@@ -231,39 +216,18 @@ def _postings_encoder(avgdl: float, block_size: int,
         blk_starts = np.flatnonzero(blk_new)
         blk_ends = np.append(blk_starts[1:], nr)
         n_blocks = blk_starts.size
-        blk_gid = g_id[blk_starts]
-        first_blk_of_g = np.flatnonzero(new_group[blk_starts])
-        block_seq = np.arange(n_blocks) - first_blk_of_g[blk_gid]
+        n_docs = blk_ends - blk_starts
 
         # int64 arrays through numpy true_divide -> float64
         tfnorm = tf_r / (tf_r + k1 * (1.0 - b + b * dl_r / avgdl))
 
-        du = d_r.astype(np.uint64)
-        gaps = np.empty(nr, dtype=np.uint64)
-        gaps[0] = du[0]
-        np.subtract(du[1:], du[:-1], out=gaps[1:])
-        gaps[blk_starts] = du[blk_starts]  # absolute restart per block
-
-        def vb_blocks(vals, starts):
-            data = np.frombuffer(codecs.vbyte_encode(vals), dtype=np.uint8)
-            byte_off = np.concatenate(
-                ([0], np.cumsum(codecs.vbyte_nbytes(vals))))
-            return _binary_from_segments(
-                data, np.append(byte_off[starts], data.size))
-
-        doc_gaps_arr = vb_blocks(gaps, blk_starts)
-        tfs_arr = vb_blocks(tf_r.astype(np.uint64), blk_starts)
-
+        doc_gaps_arr = codecs.encode_segments(
+            codecs.restart_deltas(d_r, n_docs), n_docs)
+        tfs_arr = codecs.encode_segments(tf_r, n_docs)
         if store_positions:
-            # block positions stream = delta-positions per doc run, vbyte
-            # (codecs.encode_positions_flat) — one encode for the whole
-            # batch, sliced at each block's first occurrence
-            pu = p_s.astype(np.uint64)
-            deltas = np.empty(n, dtype=np.uint64)
-            deltas[0] = pu[0]
-            np.subtract(pu[1:], pu[:-1], out=deltas[1:])
-            deltas[run_starts] = pu[run_starts]  # absolute per doc run
-            pos_arr = vb_blocks(deltas, run_starts[blk_starts])
+            pos_arr = codecs.encode_segments(
+                codecs.restart_deltas(p_s, tf_r),
+                np.add.reduceat(tf_r, blk_starts))
         else:
             pos_arr = pa.nulls(n_blocks, pa.binary())
 
@@ -271,12 +235,9 @@ def _postings_encoder(avgdl: float, block_size: int,
             [pa.array(np.full(n_blocks, field, dtype=object),
                       type=pa.string()),
              pc.take(dictionary, pa.array(c_r[blk_starts])),
-             pa.array(s_r[blk_starts].astype(np.int32), type=pa.int32()),
-             pa.array(block_seq.astype(np.int32), type=pa.int32()),
              pa.array(d_r[blk_starts], type=pa.int64()),
              pa.array(d_r[blk_ends - 1], type=pa.int64()),
-             pa.array((blk_ends - blk_starts).astype(np.int32),
-                      type=pa.int32()),
+             pa.array(n_docs.astype(np.int32), type=pa.int32()),
              doc_gaps_arr, tfs_arr, pos_arr,
              pa.array(np.maximum.reduceat(tfnorm, blk_starts),
                       type=pa.float64()),
@@ -285,9 +246,9 @@ def _postings_encoder(avgdl: float, block_size: int,
              # window bound scales it by max(1, avgdl_now/bound_avgdl)
              # (provably safe — see searcher.IndexSearcher._windows)
              pa.array(np.full(n_blocks, avgdl), type=pa.float64())],
-            names=["field", "term", "salt", "block_seq", "first_doc",
-                   "last_doc", "n_docs", "doc_gaps", "tfs", "positions",
-                   "block_max_tfnorm", "bound_avgdl"])
+            names=["field", "term", "first_doc", "last_doc", "n_docs",
+                   "doc_gaps", "tfs", "positions", "block_max_tfnorm",
+                   "bound_avgdl"])
 
     def kernel(batches):
         carry = []
@@ -419,14 +380,16 @@ def postings_layout(blocks: DataFrame, fields: Sequence[str],
 
     When :func:`encode_partitions` gives every field ONE partition, the
     encode output already is one partition per field, sorted by (field,
-    term, salt, block_seq), and it is written as it is: one file per
+    term, first_doc), and it is written as it is: one file per
     field, no boundary-sampling job, no range exchange. At the perfbench
     seed-1 corpus (200 docs) that writes postings of 231,238 bytes in one
     file instead of 279,828 in 8 (2,910 instead of 23,164 footer bytes).
 
     Otherwise (some field has more than ``docs_per_salt`` tokens, or an
     unknown total) the blocks are range-partitioned on (field, term) into
-    ``max(defaultParallelism, 8)`` files, each sorted within. That
+    ``max(defaultParallelism, 8)`` files, each sorted within by (field,
+    term, first_doc): the encode's (term, salt) order, as a term's salts
+    are disjoint doc_ord ranges in ascending order. That
     repartitionByRange runs a BOUNDARY-SAMPLING job over its child first,
     and the job recomputes the whole encode stage unless ``blocks`` is
     persisted (the shuffle map side is reused, the post-shuffle vbyte
@@ -441,7 +404,7 @@ def postings_layout(blocks: DataFrame, fields: Sequence[str],
         return blocks
     return (blocks.repartitionByRange(
         max(spark.sparkContext.defaultParallelism, 8), "field", "term")
-        .sortWithinPartitions("field", "term", "salt", "block_seq"))
+        .sortWithinPartitions("field", "term", "first_doc"))
 
 
 def lexicon_rows(blocks: DataFrame, one_file: bool) -> DataFrame:
@@ -631,6 +594,10 @@ def _commit(rows: DataFrame, index_dir: str, base: dict,
         docs = cache(assign_doc_ord(ident, "doc_id").withColumn(
             "doc_ord", F.col("doc_ord") + F.lit(base["ord_span"])))
         n_added, totals = added()
+        if not (n_added or base["ord_span"]):
+            # a first commit of no docs would publish a version with no
+            # lexicon or postings file, which no reader opens
+            raise ValueError("build_index needs at least one document")
         # one doc_stats, tombstone and lexicon file for a small batch:
         # coalesce over the caches and the blocks is narrow, no job added
         small = one_partition(spark, fields, totals, docs_per_salt)
@@ -638,8 +605,10 @@ def _commit(rows: DataFrame, index_dir: str, base: dict,
         def rows_of(df):
             return df.coalesce(1) if small else df
 
+        # a commit of no docs (deletes only) stages no doc_stats, postings
+        # or lexicon file, as it stages no empty tombstone file
         t_stage = time.time()
-        if "doc_stats" not in resumed:
+        if "doc_stats" not in resumed and n_added:
             append("doc_stats", "doc_stats", rows_of(docs.select(
                 *doc_stats_columns(rows.columns, fields))))
             ledger.record("doc_stats", n_added, t_stage)
@@ -673,7 +642,7 @@ def _commit(rows: DataFrame, index_dir: str, base: dict,
         if "postings" in resumed:
             blocks = spark.read.schema(POSTINGS_SCHEMA).parquet(*[
                 os.path.join(index_dir, p) for p in staged["postings"]])
-        else:
+        elif n_added:
             # MEMORY_AND_DISK: at 100 TB the encoded blocks are index-sized
             # (a fraction of the corpus) and spill to executor disk — still
             # strictly cheaper than encoding twice. The lexicon aggregate
@@ -689,7 +658,8 @@ def _commit(rows: DataFrame, index_dir: str, base: dict,
             ledger.record("postings", -1, t_stage)
 
         t_stage = time.time()
-        append("lexicon", "lexicon", lexicon_rows(blocks, one_file=small))
+        if n_added:
+            append("lexicon", "lexicon", lexicon_rows(blocks, one_file=small))
         files = {t: list(base["files"][t]) for t in snapshot.TABLES}
         for path in chain.from_iterable(staged.values()):
             table, name = path.split("/")

@@ -1,4 +1,6 @@
-"""Vectorized posting-list compression codecs (NumPy, no per-element Python).
+"""The postings block payload: the one module that knows how a block's
+``doc_gaps``, ``tfs`` and ``positions`` are coded (NumPy, no per-element
+Python).
 
 Delta-encoded docID gaps + variable-byte (VByte) coding, the classic
 inverted-index block format (Manning/Raghavan/Schuetze IR ch.5; same family
@@ -11,27 +13,33 @@ bit of a byte is 1 on every byte except the last byte of a value ("more"
 flag inverted relative to some conventions — the *terminator* byte has
 high bit 0).
 
-Positions layout: per doc, its first position absolute, then gaps. The
-stream holds no per-doc count: that count is the doc's tf, which the tfs
-column already stores, and every decode passes the tfs back as ``lens``.
+Payload layout, per block:
+  doc_gaps   the block's doc ordinals as restart deltas
+             (:func:`restart_deltas`): the first absolute, then gaps
+  tfs        the block's tfs, as they are
+  positions  each doc's positions as restart deltas, the doc's first
+             position absolute; the stream holds no per-doc count, since
+             that count is the doc's tf, stored in ``tfs``
+each vbyte-coded. Every stream restarts at its block's head, so a run
+of blocks decodes in one pass (:func:`decode_segments`, then
+:func:`restart_sums` with the blocks' n_docs or the tfs as counts).
 
-All encode/decode paths are vectorized NumPy so they can run inside Arrow
-pandas UDFs without per-row Python overhead (BASELINE input_hint).
+The builder's encode kernel codes a whole Arrow batch of blocks with one
+:func:`encode_segments` per column; the reader decodes a term's blocks
+with one :func:`decode_segments` per column.
 """
 
 from __future__ import annotations
 
 import numpy as np
-
-_MASKS = None
+import pyarrow as pa
 
 
 def vbyte_nbytes(values: np.ndarray) -> np.ndarray:
     """Encoded byte length per value (vectorized): ceil(bits(v)/7), min 1.
-    Exposed so batch encoders can slice one big :func:`vbyte_encode` result
-    into per-block segments without re-encoding (vbyte is per-value
-    independent, so the concatenation of segment encodings equals the
-    encoding of the concatenated values)."""
+    :func:`encode_segments` cuts one :func:`vbyte_encode` result into
+    segments with it: vbyte codes each value alone, so the concatenation
+    of segment encodings equals the encoding of the concatenated values."""
     v = np.ascontiguousarray(values, dtype=np.uint64)
     nbytes = np.ones(v.shape, dtype=np.int64)
     tmp = v >> np.uint64(7)
@@ -88,90 +96,62 @@ def vbyte_decode(data: bytes) -> np.ndarray:
     return out
 
 
-def delta_encode(sorted_ids: np.ndarray) -> np.ndarray:
-    """Strictly-increasing uint64 ids -> first id + gaps (gap of first = id)."""
-    a = np.ascontiguousarray(sorted_ids, dtype=np.uint64)
-    if a.size == 0:
-        return a
-    out = np.empty_like(a)
-    out[0] = a[0]
-    np.subtract(a[1:], a[:-1], out=out[1:])
+def _heads(counts: np.ndarray) -> np.ndarray:
+    """Index of the first value of each non-empty segment of ``counts``
+    consecutive values."""
+    counts = np.asarray(counts, dtype=np.int64)
+    return (np.cumsum(counts) - counts)[counts > 0]
+
+
+def restart_deltas(values: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """``values`` as gaps to the value before, restarting with the absolute
+    value at the head of every segment; the segments are consecutive runs
+    of ``counts`` values. Doc ordinals restart per block (counts: n_docs),
+    positions per doc (counts: the tfs). uint64 arithmetic wraps, so any
+    values survive :func:`restart_sums`."""
+    v = np.ascontiguousarray(values, dtype=np.uint64)
+    out = np.empty_like(v)
+    if v.size:
+        out[0] = v[0]
+        np.subtract(v[1:], v[:-1], out=out[1:])
+        heads = _heads(counts)
+        out[heads] = v[heads]
     return out
 
 
-def delta_decode(gaps: np.ndarray) -> np.ndarray:
-    g = np.ascontiguousarray(gaps, dtype=np.uint64)
-    return np.cumsum(g, dtype=np.uint64)
+def restart_sums(deltas: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Inverse of :func:`restart_deltas`: one cumsum over all segments,
+    less the running sum before each segment's head."""
+    d = np.ascontiguousarray(deltas, dtype=np.uint64)
+    if d.size == 0:
+        return d
+    counts = np.asarray(counts, dtype=np.int64)
+    sums = np.cumsum(d, dtype=np.uint64)
+    heads = _heads(counts)
+    return sums - np.repeat(sums[heads] - d[heads], counts[counts > 0])
 
 
-def encode_block_docs(doc_ords: np.ndarray) -> bytes:
-    """Sorted doc ordinals -> delta+vbyte bytes."""
-    return vbyte_encode(delta_encode(doc_ords))
+def encode_segments(values: np.ndarray, counts: np.ndarray) -> pa.Array:
+    """``values`` vbyte-coded, one binary per segment of ``counts``
+    consecutive values (a zero count gives an empty binary): one encode
+    for all segments, cut at their byte offsets without a per-row Python
+    loop. Binary offsets are int32, so a payload that reaches 2 GiB raises
+    OverflowError instead of wrapping."""
+    v = np.ascontiguousarray(values, dtype=np.uint64)
+    data = np.frombuffer(vbyte_encode(v), dtype=np.uint8)
+    byte_off = np.concatenate(([0], np.cumsum(vbyte_nbytes(v))))
+    ends = np.cumsum(counts, dtype=np.int64)
+    offsets = byte_off[np.concatenate(([0], ends))]
+    if offsets[-1] >= 1 << 31:
+        raise OverflowError(
+            f"binary payload of {int(offsets[-1])} bytes exceeds the int32 "
+            "offsets of one Arrow batch")
+    return pa.Array.from_buffers(
+        pa.binary(), offsets.size - 1,
+        [None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(data)])
 
 
-def decode_block_docs(data: bytes) -> np.ndarray:
-    return delta_decode(vbyte_decode(data))
-
-
-def encode_block_tfs(tfs: np.ndarray) -> bytes:
-    return vbyte_encode(np.asarray(tfs, dtype=np.uint64))
-
-
-def decode_block_tfs(data: bytes) -> np.ndarray:
-    return vbyte_decode(data)
-
-
-def encode_positions_flat(flat: np.ndarray, lens: np.ndarray) -> bytes:
-    """Delta-positions stream from a flat sorted-position array and per-doc
-    lengths: each doc's positions restart with an absolute value, then
-    gaps. The stream holds no per-doc length: those are the tfs, stored
-    once in their own column, and every decode passes them back."""
-    lens = np.ascontiguousarray(lens, dtype=np.int64)
-    flat = np.ascontiguousarray(flat, dtype=np.uint64)
-    if flat.size == 0:
-        return b""
-    deltas = np.empty(flat.size, dtype=np.uint64)
-    deltas[0] = flat[0]
-    np.subtract(flat[1:], flat[:-1], out=deltas[1:])
-    starts = (np.cumsum(lens) - lens)[lens > 0]
-    deltas[starts] = flat[starts]  # absolute per doc
-    return vbyte_encode(deltas)
-
-
-def encode_positions(positions_per_doc: list) -> bytes:
-    """Per-doc sorted position arrays -> delta-positions stream.
-
-    Fully vectorized: one flat concatenation + segment-wise delta encoding
-    (no per-doc NumPy calls). The index build does not call this: its
-    encode kernel writes the same stream for a whole batch of blocks at
-    once, and this per-block form is the reference the tests check."""
-    lens = np.fromiter((len(p) for p in positions_per_doc), dtype=np.int64,
-                       count=len(positions_per_doc))
-    if int(lens.sum()) == 0:
-        return b""
-    flat = np.concatenate([np.asarray(p, dtype=np.uint64)
-                           for p in positions_per_doc if len(p)])
-    return encode_positions_flat(flat, lens)
-
-
-def decode_positions_flat(data: bytes, lens: np.ndarray):
-    """Inverse of encode_positions, vectorized -> (flat_positions, lens).
-    ``lens`` are the per-doc position counts, i.e. the tfs stored beside
-    the stream: one grouped cumsum undoes the per-doc restarts."""
-    lens = np.ascontiguousarray(lens, dtype=np.int64)
-    deltas = vbyte_decode(data)
-    if deltas.size == 0:
-        return deltas, lens
-    abs_ = np.cumsum(deltas, dtype=np.uint64)
-    nz = lens > 0
-    starts = (np.cumsum(lens) - lens)[nz]
-    corr = np.repeat(abs_[starts] - deltas[starts], lens[nz])
-    return abs_ - corr, lens
-
-
-def decode_positions(data: bytes, lens: np.ndarray) -> list:
-    """Inverse of encode_positions -> list of uint64 arrays, one per doc."""
-    if len(lens) == 0:
-        return []
-    flat, lens = decode_positions_flat(data, lens)
-    return np.split(flat, np.cumsum(lens)[:-1])
+def decode_segments(segments) -> np.ndarray:
+    """The values of a run of segments (a binary array or column), in
+    order: the segments joined and vbyte-decoded in one call."""
+    return vbyte_decode(b"".join(segments.to_pylist()))

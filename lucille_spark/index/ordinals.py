@@ -52,7 +52,9 @@ def assign_doc_ord(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
             "unique ids. For last-wins ingest of repeated ids use "
             "merge_index(order_col=...).")
     counts["base"] = counts["count"].cumsum().shift(fill_value=0)
-    bases = spark.createDataFrame(counts[["_bucket", "base"]])
+    # the schema spares an empty batch (a delete-only commit) inference
+    bases = spark.createDataFrame(counts[["_bucket", "base"]],
+                                  "_bucket long, base long")
     w = Window.partitionBy("_bucket").orderBy(id_col)
     ords = (
         narrow.join(F.broadcast(bases), "_bucket")

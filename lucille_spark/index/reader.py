@@ -292,29 +292,25 @@ class IndexReader:
 
     def decode_term_flat(self, field: str, term: str, positions: bool = True,
                          blocks: Optional[pa.Table] = None):
-        """(doc_ords, tfs, flat_positions, lens) — decoded with ONE vbyte
-        pass per column: every payload format in this index is
-        block-concatenable by construction (doc and position gap streams
-        restart with an absolute value per block and per doc, undone by a
-        grouped cumsum; tfs are self-delimiting and are the position
-        counts), so a term's whole posting list decodes in ~4 NumPy calls
-        regardless of block count. ``blocks``, a run of the term's
-        :meth:`blocks` rows, decodes those rows in place of all of them."""
+        """(doc_ords, tfs, flat_positions, lens) — decoded with ONE
+        :func:`codecs.decode_segments` per column: every payload stream
+        restarts at its block's head (:mod:`codecs`), and the tfs are the
+        position counts, so a term's whole posting list decodes in a few
+        NumPy calls regardless of block count. ``blocks``, a run of the
+        term's :meth:`blocks` rows, decodes those rows in place of all of
+        them."""
         b = self.blocks(field, term) if blocks is None else blocks
         empty = np.empty(0, dtype=np.uint64)
         if b.num_rows == 0:
             return empty, empty, empty, np.empty(0, np.int64)
-        counts = b["n_docs"].to_numpy().astype(np.int64)
-        gaps = codecs.vbyte_decode(b"".join(b["doc_gaps"].to_pylist()))
-        abs_ = np.cumsum(gaps, dtype=np.uint64)
-        starts = np.cumsum(counts) - counts
-        corr = np.repeat(abs_[starts] - gaps[starts], counts)
-        docs = abs_ - corr
-        tfs = codecs.vbyte_decode(b"".join(b["tfs"].to_pylist()))
+        docs = codecs.restart_sums(codecs.decode_segments(b["doc_gaps"]),
+                                   b["n_docs"].to_numpy())
+        tfs = codecs.decode_segments(b["tfs"])
         flat, lens = empty, np.empty(0, np.int64)
         if positions and b["positions"].null_count == 0:
-            flat, lens = codecs.decode_positions_flat(
-                b"".join(b["positions"].to_pylist()), tfs)
+            lens = tfs.astype(np.int64)
+            flat = codecs.restart_sums(codecs.decode_segments(b["positions"]),
+                                       lens)
         return docs, tfs, flat, lens
 
     def doc_values(self, field: str,

@@ -50,7 +50,8 @@ TABLES = ("postings", "lexicon", "doc_stats", "_tombstones")
 # 3: a merge appends lexicon rows, so a term may have one row per commit
 # 4: the lexicon is (field, term, df) and postings lack sum_tf and
 # block_max_tf: no column that no reader reads
-FORMAT = 4
+# 5: postings lack salt and block_seq; codecs.py owns the payload
+FORMAT = 5
 META = "_meta"
 _MANIFEST = re.compile(r"^(\d+)\.json$")
 

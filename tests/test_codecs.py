@@ -1,4 +1,5 @@
-"""Round-trip property tests for the posting-list codecs (SURVEY.md §5)."""
+"""Round-trip tests for the vbyte codec (SURVEY.md §5); the block payload
+as a whole is property-tested in test_codecs_property."""
 
 import numpy as np
 import pytest
@@ -38,22 +39,36 @@ def test_vbyte_encoding_is_compact():
     assert len(codecs.vbyte_encode(small)) == 1000  # all < 128 → 1 byte each
 
 
+def _roundtrip(values, counts):
+    """Restart-delta ``values`` over segments of ``counts``, vbyte-code one
+    binary per segment, and decode the run of them back."""
+    values = np.asarray(values, dtype=np.uint64)
+    binaries = codecs.encode_segments(
+        codecs.restart_deltas(values, counts), counts)
+    return codecs.restart_sums(codecs.decode_segments(binaries), counts)
+
+
 @pytest.mark.parametrize("seed", range(4))
 def test_delta_roundtrip(seed):
     rng = _rng(seed + 100)
     ids = np.unique(rng.integers(0, 1 << 40, 3000).astype(np.uint64))
-    np.testing.assert_array_equal(
-        codecs.delta_decode(codecs.delta_encode(ids)), ids)
+    np.testing.assert_array_equal(_roundtrip(ids, [ids.size]), ids)
 
 
 def test_block_docs_roundtrip():
     ids = np.array([3, 7, 8, 100, 10_000_000_000], dtype=np.uint64)
-    data = codecs.encode_block_docs(ids)
-    np.testing.assert_array_equal(codecs.decode_block_docs(data), ids)
+    blob = codecs.encode_segments(
+        codecs.restart_deltas(ids, [ids.size]), [ids.size])[0].as_py()
+    np.testing.assert_array_equal(
+        codecs.restart_sums(codecs.vbyte_decode(blob), [ids.size]), ids)
 
 
 def test_positions_roundtrip():
     pos = [[0, 5, 9], [2], [], [1, 2, 3, 1000]]
-    data = codecs.encode_positions(pos)
-    back = codecs.decode_positions(data, [len(p) for p in pos])
+    tfs = np.array([len(p) for p in pos], dtype=np.int64)
+    flat = [x for p in pos for x in p]
+    data = codecs.vbyte_encode(codecs.restart_deltas(
+        np.array(flat, dtype=np.uint64), tfs))
+    back = np.split(codecs.restart_sums(codecs.vbyte_decode(data), tfs),
+                    np.cumsum(tfs)[:-1])
     assert [list(map(int, p)) for p in back] == pos

@@ -134,21 +134,40 @@ def test_lexicon_matches_oracle(spark, index_dir, oracle):
 
 
 def test_salting_engaged(spark, index_dir, oracle):
-    # hot terms (cf > docs_per_salt=64) must be split across >1 salt
-    from pyspark.sql import functions as F
+    # hot terms (cf > docs_per_salt=64) must be split across >1 salt: a
+    # salt is the doc_ord range bucket floor(doc_ord * ceil(cf/64) /
+    # ord_span), blocks store no salt, and the kernel cuts each salt's docs
+    # into 32-doc blocks of their own, so a term's blocks are exactly the
+    # 32-doc cuts of each of its salts
+    import numpy as np
+
+    from lucille_spark.index.reader import IndexReader
 
     post = spark.read.parquet(f"{index_dir}/postings")
-    assert not {"sum_tf", "block_max_tf"} & set(post.columns)
-    n_salts = {(r["field"], r["term"]): r["n_salts"] for r in
-               post.groupBy("field", "term")
-               .agg(F.countDistinct("salt").alias("n_salts")).collect()}
+    assert not ({"sum_tf", "block_max_tf", "salt", "block_seq"}
+                & set(post.columns))
+    terms = {(r["field"], r["term"]) for r in
+             post.select("field", "term").distinct().collect()}
     cf = {(f, t): c for f in oracle.postings
           for t, c in _oracle_cf(oracle, f).items()}
-    assert set(n_salts) == set(cf)
+    assert terms == set(cf)
+    rd = IndexReader(index_dir)
+    n_salts, cut_at_salts = {}, 0
+    for (f, t), c in cf.items():
+        docs = rd.decode_term_flat(f, t, positions=False)[0].astype(np.int64)
+        salts = docs * (-(-c // 64) if c > 64 else 1) // rd.ord_span()
+        n_salts[f, t] = np.unique(salts).size
+        want = [n for s in np.unique(salts)
+                for n in np.diff(np.append(
+                    np.arange(0, (salts == s).sum(), 32), (salts == s).sum()))]
+        assert rd.blocks(f, t)["n_docs"].to_pylist() == want, (f, t)
+        cut_at_salts += want != [n for n in np.diff(np.append(
+            np.arange(0, docs.size, 32), docs.size))]
     hot = [k for k, c in cf.items() if c > 130]
     assert hot, "corpus should have hot terms"
     assert all(n_salts[k] > 1 for k in hot)
     assert all(n_salts[k] == 1 for k, c in cf.items() if c <= 64)
+    assert cut_at_salts, "some salt boundary must cut a block short"
 
 
 @pytest.mark.parametrize("query", QUERIES)

@@ -136,9 +136,8 @@ def test_small_build_is_one_term_sorted_file(small_index):
     bounds = [t for r in ranges for t in r]
     assert bounds == sorted(bounds)
     rows = pq.read_table(files[0], columns=[
-        "field", "term", "salt", "block_seq"]).to_pylist()
-    keys = [(r["field"], r["term"], r["salt"], r["block_seq"])
-            for r in rows]
+        "field", "term", "first_doc"]).to_pylist()
+    keys = [(r["field"], r["term"], r["first_doc"]) for r in rows]
     assert keys == sorted(keys)
 
 
@@ -161,7 +160,7 @@ def test_postings_layout_routes(spark):
     from lucille_spark.index.builder import POSTINGS_SCHEMA, postings_layout
 
     blocks = spark.createDataFrame(
-        [("content", t, 0, 0, 0, 0, 1, b"", b"", None, 0.5, 1.0)
+        [("content", t, 0, 0, 1, b"", b"", None, 0.5, 1.0)
          for t in ("a", "b")], POSTINGS_SCHEMA)
 
     def plan(totals, docs_per_salt):

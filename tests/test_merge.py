@@ -314,3 +314,73 @@ def test_a_build_runs_at_most_6_spark_jobs(spark, tmp_path):
     assert stats["n_docs"] == 200
     jobs = sc.statusTracker().getJobIdsForGroup("build-jobs")
     assert len(jobs) <= 6, len(jobs)
+
+
+def test_a_delete_only_commit(spark, tmp_path):
+    """A commit of deletes and no docs (a streaming micro-batch of delete
+    markers): it tombstones the deleted docs and stages nothing but its
+    tombstone file, and no query returns a deleted doc."""
+    import hashlib
+
+    import numpy as np
+
+    from lucille_spark.corpus import corpus_pdf
+    from lucille_spark.index import snapshot
+    from lucille_spark.index.builder import build_index
+    from lucille_spark.index.merge import merge_index
+    from lucille_spark.query.searcher import IndexSearcher
+
+    idx = str(tmp_path / "idx")
+    base = corpus_pdf(np.arange(200))
+    frame = spark.createDataFrame(base)
+    build_index(frame, idx)
+    gone = [hashlib.sha256(f"{r.repo}\x00{r.path}\x00{r.commit}".encode())
+            .hexdigest() for r in base.iloc[5:8].itertuples()]
+    queries = ["content:test", "content:if",
+               "content:return OR content:import", "content:import*"]
+    s = IndexSearcher(idx)
+    before = {q: ({d for d, _ in s.search(q, 1000)}, set(s.match(q)))
+              for q in queries}
+    # every deleted doc was an answer before
+    assert set(gone) <= set().union(*(hits | matched
+                                      for hits, matched in before.values()))
+    manifest = snapshot.load(idx)
+
+    res = merge_index(frame.limit(0), idx, deletes=spark.createDataFrame(
+        [(d,) for d in gone], "doc_id string"))
+    assert {k: res[k] for k in ("added", "tombstoned")} == {
+        "added": 0, "tombstoned": 3}
+    after = snapshot.load(idx)
+    added = {t: set(after["files"][t]) - set(manifest["files"][t])
+             for t in snapshot.TABLES}
+    assert {t: len(names) for t, names in added.items() if names} == {
+        "_tombstones": 1}
+    assert all(set(manifest["files"][t]) <= set(after["files"][t])
+               for t in snapshot.TABLES)
+    assert after["stats"]["content"]["n_docs"] == \
+        manifest["stats"]["content"]["n_docs"] - 3
+    s = IndexSearcher(idx)
+    for q in queries:
+        assert not set(gone) & {d for d, _ in s.search(q, 1000)}, q
+        assert not set(gone) & set(s.match(q)), q
+
+
+def test_a_build_of_no_docs_raises(spark, tmp_path):
+    """A build is a commit, and a commit of no docs stages no postings or
+    lexicon file, so a build of none would publish a version that no
+    reader opens: it raises and publishes nothing."""
+    import os
+
+    import numpy as np
+
+    from lucille_spark.corpus import corpus_pdf
+    from lucille_spark.index import snapshot
+    from lucille_spark.index.builder import build_index
+
+    idx = str(tmp_path / "idx")
+    frame = spark.createDataFrame(corpus_pdf(np.arange(3)))
+    with pytest.raises(ValueError, match="at least one document"):
+        build_index(frame.limit(0), idx)
+    assert snapshot.latest(idx) is None
+    assert not any(snapshot.data_files(os.path.join(idx, t))
+                   for t in snapshot.TABLES)

@@ -1,8 +1,9 @@
 """The postings encode kernel, without Spark: fed a (term, salt)-sorted
 occurrence table in small Arrow batches, it must encode every group whole
-(carrying groups across batch edges) and its blocks must decode to the
-per-(term, salt, doc) truth computed directly with NumPy. Blocks carry no
-doc lengths: their tfnorm bounds must match the truth's dl."""
+(carrying groups across batch edges) and its blocks, ordered by
+(term, first_doc), must decode to the per-(term, salt, doc) truth computed
+directly with NumPy. Blocks carry no doc lengths and no salt: their tfnorm
+bounds must match the truth's dl, and their cuts the truth's salts."""
 
 import numpy as np
 import pandas as pd
@@ -11,8 +12,7 @@ import pytest
 
 from lucille_spark import BM25_B, BM25_K1
 from lucille_spark.index import codecs
-from lucille_spark.index.builder import (
-    _binary_from_segments, _postings_encoder)
+from lucille_spark.index.builder import POSTINGS_SCHEMA, _postings_encoder
 
 BATCH = 7
 BLOCK = 4
@@ -59,19 +59,30 @@ def test_kernel_blocks_decode_to_truth():
     ).to_pandas()
 
     truth = _truth(df)
-    assert set(zip(got["term"], got["salt"])) == set(truth)
+    assert list(got.columns) == [
+        c.split()[0] for c in POSTINGS_SCHEMA.split(", ")]
     assert (got["field"] == "content").all()
-    assert not {"dls", "sum_tf", "block_max_tf"} & set(got.columns)
-    for key, blocks in got.groupby(["term", "salt"]):
-        blocks = blocks.sort_values("block_seq")
-        assert list(blocks["block_seq"]) == list(range(len(blocks)))
-        want = truth[key]
+    got = got.sort_values(["term", "first_doc"])
+    assert set(got["term"]) == {term for term, _ in truth}
+    for term, blocks in got.groupby("term"):
+        # a term's blocks cut every BLOCK docs of each of its salts
+        want = [p for key in sorted(truth) if key[0] == term
+                for p in truth[key]]
+        assert list(blocks["n_docs"]) == [
+            n for key in sorted(truth) if key[0] == term
+            for n in np.diff(np.append(
+                np.arange(0, len(truth[key]), BLOCK), len(truth[key])))]
+        assert (blocks["first_doc"].to_numpy()[1:]
+                > blocks["last_doc"].to_numpy()[:-1]).all()
         dl_of = {d: dl for d, _, dl in want}
         docs, tfs, positions = [], [], []
         for r in blocks.itertuples():
-            bdocs = codecs.decode_block_docs(r.doc_gaps).astype(np.int64)
-            btfs = codecs.decode_block_tfs(r.tfs).astype(np.int64)
-            flat, _ = codecs.decode_positions_flat(r.positions, btfs)
+            # each block decodes alone: its streams restart at its head
+            bdocs = codecs.restart_sums(codecs.vbyte_decode(r.doc_gaps),
+                                        [r.n_docs]).astype(np.int64)
+            btfs = codecs.vbyte_decode(r.tfs).astype(np.int64)
+            flat = codecs.restart_sums(codecs.vbyte_decode(r.positions),
+                                       btfs)
             assert bdocs.size == r.n_docs <= BLOCK
             assert (r.first_doc, r.last_doc) == (bdocs[0], bdocs[-1])
             bdls = np.array([dl_of[d] for d in bdocs], dtype=np.int64)
@@ -89,9 +100,13 @@ def test_kernel_blocks_decode_to_truth():
             np.testing.assert_array_equal(got_p, want_p)
 
 
-def test_binary_offsets_past_int32_raise():
-    data = np.zeros(4, dtype=np.uint8)
-    with pytest.raises(OverflowError):
-        _binary_from_segments(data, np.array([0, 2, 1 << 31], np.int64))
-    arr = _binary_from_segments(data, np.array([0, 1, 4], np.int64))
+def test_binary_offsets_past_int32_raise(monkeypatch):
+    values = np.zeros(4, dtype=np.uint64)
+    arr = codecs.encode_segments(values, [1, 3])
     assert arr.to_pylist() == [b"\x00", b"\x00" * 3]
+    # three values that code to 1 GiB each, without allocating the bytes
+    monkeypatch.setattr(codecs, "vbyte_encode", lambda v: b"\x00" * v.size)
+    monkeypatch.setattr(codecs, "vbyte_nbytes",
+                        lambda v: np.full(v.size, 1 << 30, np.int64))
+    with pytest.raises(OverflowError):
+        codecs.encode_segments(values[:3], [1, 2])

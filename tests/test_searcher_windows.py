@@ -81,7 +81,7 @@ def test_dense_rank_identity(dense_index, dense_oracle, k):
 SMALL_BUDGET = 40
 
 
-def test_strategy_identity_vectorized_vs_wand(dense_index, monkeypatch):
+def test_one_window_equals_windows(dense_index, monkeypatch):
     """search() scores a query in one window below VEC_POSTINGS_MAX and
     in block-bounded windows with skipping above it — both must return
     identical ranked hits (same docs, bit-equal scores). Force each over

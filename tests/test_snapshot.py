@@ -337,7 +337,7 @@ def test_index_of_an_older_format_must_be_rebuilt(spark, base, tmp_path):
         os.path.join(idx, "_meta")))[-1])
     with open(path) as f:
         manifest = json.load(f)
-    assert manifest.pop("format") == snapshot.FORMAT == 4
+    assert manifest.pop("format") == snapshot.FORMAT == 5
     with open(path, "w") as f:
         json.dump(manifest, f)
     with pytest.raises(FileNotFoundError, match="rebuilt"):
@@ -348,9 +348,9 @@ def test_index_of_an_older_format_must_be_rebuilt(spark, base, tmp_path):
     assert snapshot.latest(idx) == manifest  # the merge published nothing
 
 
-def test_a_format_3_index_must_be_rebuilt(base, tmp_path):
-    """A format-3 manifest (its lexicon rows carried cf, n_blocks,
-    max_tfnorm and bound_avgdl) is refused with the rebuild message."""
+def _refused_as_format(base, tmp_path, format_):
+    """A copy of ``base`` whose manifest says ``format_`` is refused with
+    the rebuild message by every opener."""
     from lucille_spark.index.reader import IndexReader
 
     idx = _copy(base, tmp_path)
@@ -359,11 +359,23 @@ def test_a_format_3_index_must_be_rebuilt(base, tmp_path):
     with open(path) as f:
         manifest = json.load(f)
     with open(path, "w") as f:
-        json.dump({**manifest, "format": 3}, f)
+        json.dump({**manifest, "format": format_}, f)
     for open_ in (snapshot.load, IndexReader):
-        with pytest.raises(FileNotFoundError,
-                           match="no format-4 index manifest.*rebuilt"):
+        with pytest.raises(FileNotFoundError, match=(
+                f"no format-{snapshot.FORMAT} index manifest.*rebuilt")):
             open_(idx)
+
+
+def test_a_format_3_index_must_be_rebuilt(base, tmp_path):
+    """A format-3 manifest (its lexicon rows carried cf, n_blocks,
+    max_tfnorm and bound_avgdl) is refused with the rebuild message."""
+    _refused_as_format(base, tmp_path, 3)
+
+
+def test_a_format_4_index_must_be_rebuilt(base, tmp_path):
+    """A format-4 manifest (its postings carried salt and block_seq) is
+    refused with the rebuild message."""
+    _refused_as_format(base, tmp_path, 4)
 
 
 def test_publish_is_no_replace_and_keeps_one_previous_version(tmp_path):

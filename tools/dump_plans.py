@@ -90,8 +90,8 @@ def main():
         "Shown with docs_per_salt just under the field's token total, so "
         "the token-total rule picks the shuffle-partition route, and the "
         "write (postings_layout) adds Exchange rangepartitioning(field, "
-        "term, max(defaultParallelism, 8)) -> Sort [field, term, salt, "
-        "block_seq]: one term range per file. That range exchange runs a "
+        "term, max(defaultParallelism, 8)) -> Sort [field, term, "
+        "first_doc]: one term range per file. That range exchange runs a "
         "boundary-sampling job, which is why build_index persists the "
         "encoded blocks between the two (the persist is left out here so "
         "the whole pipeline shows in one plan). The doc_ord assignment "
